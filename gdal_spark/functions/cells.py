@@ -146,9 +146,3 @@ def with_footprint_cells(
 
 def pack_cell_py(res: int, tx: int, ty: int) -> int:
     return (res << RES_SHIFT) | (tx << TX_SHIFT) | ty
-
-
-def lonlat_cell_py(lon: float, lat: float, res: int) -> int:
-    tx, ty = M.lonlat_to_tile_py(lon, lat, res)
-    n = (1 << res) - 1
-    return pack_cell_py(res, max(0, min(n, tx)), max(0, min(n, ty)))

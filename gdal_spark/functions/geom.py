@@ -161,12 +161,6 @@ def wkb_area(wkb_buf: bytes) -> float:
     return sum(polygon_area(rings) for rings in W.polygon_rings(wkb_buf) if rings)
 
 
-def bbox_intersects(
-    a: tuple[float, float, float, float], b: tuple[float, float, float, float]
-) -> bool:
-    return not (a[2] < b[0] or b[2] < a[0] or a[3] < b[1] or b[3] < a[1])
-
-
 def clip_ring_to_box(
     ring: np.ndarray, xmin: float, ymin: float, xmax: float, ymax: float
 ) -> np.ndarray | None:

@@ -168,13 +168,6 @@ def envi_decode(data: bytes, hdr_text: str) -> tuple[np.ndarray, tuple, float | 
 HGT_VOID = -32768.0
 
 
-def hgt_tile_name(lon_sw: int, lat_sw: int) -> str:
-    return (
-        f"{'N' if lat_sw >= 0 else 'S'}{abs(lat_sw):02d}"
-        f"{'E' if lon_sw >= 0 else 'W'}{abs(lon_sw):03d}.hgt"
-    )
-
-
 def hgt_encode(arr: np.ndarray) -> bytes:
     n = arr.shape[0]
     if arr.shape != (n, n):

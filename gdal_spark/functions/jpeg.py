@@ -200,13 +200,6 @@ def _rgb_to_ycbcr(arr: np.ndarray) -> np.ndarray:
     return np.stack([y, cb, cr], axis=-1)
 
 
-def _ycbcr_to_rgb(y: np.ndarray, cb: np.ndarray, cr: np.ndarray) -> np.ndarray:
-    r = y + 1.402 * (cr - 128.0)
-    g = y - 0.344136286 * (cb - 128.0) - 0.714136286 * (cr - 128.0)
-    b = y + 1.772 * (cb - 128.0)
-    return np.clip(np.round(np.stack([r, g, b], axis=-1)), 0, 255).astype(np.uint8)
-
-
 def _component_blocks(plane: np.ndarray, qtab: np.ndarray) -> np.ndarray:
     """(nby, nbx, 64) quantized zigzag coefficients for one plane."""
     h, w = plane.shape

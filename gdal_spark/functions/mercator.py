@@ -91,18 +91,6 @@ def tms_to_xyz(ty_tms: Column, zoom: Column | int) -> Column:
     return F.pow(F.lit(2.0), z.cast("double")).cast("long") - F.lit(1) - ty_tms
 
 
-def tile_bounds_meters(
-    tx: Column, ty: Column, zoom: Column | int
-) -> tuple[Column, Column, Column, Column]:
-    """Mercator-meter bounds of a TMS tile."""
-    res = resolution(zoom)
-    minx = tx.cast("double") * F.lit(float(TILE_SIZE)) * res - F.lit(ORIGIN_SHIFT)
-    miny = ty.cast("double") * F.lit(float(TILE_SIZE)) * res - F.lit(ORIGIN_SHIFT)
-    maxx = (tx.cast("double") + F.lit(1.0)) * F.lit(float(TILE_SIZE)) * res - F.lit(ORIGIN_SHIFT)
-    maxy = (ty.cast("double") + F.lit(1.0)) * F.lit(float(TILE_SIZE)) * res - F.lit(ORIGIN_SHIFT)
-    return minx, miny, maxx, maxy
-
-
 def quadkey(tx: Column, ty_tms: Column, zoom: int) -> Column:
     """Microsoft QuadTree key of a TMS tile at a FIXED zoom (string).
 

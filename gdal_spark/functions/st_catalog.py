@@ -544,12 +544,6 @@ def _union_cascaded(buf: bytes):
 # --------------------------------------------------------------------------
 
 
-def _u1(fn, ret):
-    def wrapped(col: pd.Series) -> pd.Series:
-        return col.map(lambda v: None if v is None else fn(bytes(v)))
-    return wrapped, ret
-
-
 CATALOG: dict[str, tuple] = {}
 
 

@@ -113,7 +113,7 @@ def _candidates(
     # exactly-once pairs WITHOUT a dedup shuffle: a pair discovered in
     # several shared cells is kept only in the cell containing the
     # lower-left corner of the bbox intersection (reference-point rule,
-    # same as spatial_join.py:353 — a Column filter, not dropDuplicates)
+    # same as spatial_join's intersects path — a Column filter, not dropDuplicates)
     ref_cell = C.lonlat_cell(
         F.greatest(F.col("axmin"), F.col("bxmin")),
         F.greatest(F.col("aymin"), F.col("bymin")),

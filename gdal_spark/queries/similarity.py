@@ -345,22 +345,6 @@ def _band_key(bits: list, b: int) -> F.Column:
     return s.cast("int")
 
 
-def _bit_sql(i: int) -> str:
-    if i < DIM:
-        e = f"emb[{i + 1}]"
-    else:
-        k = i - DIM
-        e = f"(emb[{k + 1}] + emb[{(k + 1) % DIM + 1}])"
-    return f"({e} >= 0.0)"
-
-
-def _band_key_sql(b: int) -> str:
-    return " + ".join(
-        f"(CASE WHEN {_bit_sql(b * BAND_BITS + j)} THEN {1 << j} ELSE 0 END)"
-        for j in range(BAND_BITS)
-    )
-
-
 def _augmented(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embeddings plus deterministic planted near-duplicates: for every
     vector v, a copy v + 0.15*reverse(v) under vec_id+10000 (cosine vs the

@@ -99,15 +99,6 @@ def parse_header(data: bytes) -> dict:
     return info
 
 
-def _read_marker(data, pos, no1):
-    marker = 0
-    while True:
-        b, pos = _getc(data, pos, no1)
-        marker = marker * 128 + (b & 0x7F)
-        if not b & 0x80:
-            return marker, pos
-
-
 def line_offsets(data: bytes, info: dict) -> list[int]:
     """Per-row data offsets from the tail index table; falls back to a
     sequential scan when the table is invalid (bsb_read.c:470-575)."""

@@ -478,16 +478,6 @@ def gtx_decode(data: bytes) -> tuple[np.ndarray, dict]:
     return out, {"gt": gt, "nodata": GTX_NODATA}
 
 
-def gtx_encode(arr: np.ndarray, gt: tuple) -> bytes:
-    h, w = arr.shape
-    dlat = -gt[5]
-    dlon = gt[1]
-    lat0 = gt[3] + gt[5] * h + dlat * 0.5
-    lon0 = gt[0] + dlon * 0.5
-    hdr = struct.pack(">4dii", lat0, lon0, dlat, dlon, h, w)
-    return hdr + np.ascontiguousarray(arr[::-1]).astype(">f4").tobytes()
-
-
 # ---------------------------------------------------------------------------
 # BYN (Natural Resources Canada vertical grids) — frmts/raw/byndataset.cpp
 # ---------------------------------------------------------------------------

@@ -165,11 +165,5 @@ class SNAPTiff:
         }
 
 
-def snap_tiff_identify(h: bytes) -> bool:
-    """TIFF magic is cheap; the DIMAP tag requires the IFD, so this is
-    a best-effort prefilter used by identify_driver."""
-    return h[:4] in (b"II*\x00", b"MM\x00*")
-
-
 def snap_tiff_open(data: bytes) -> SNAPTiff:
     return SNAPTiff(data)

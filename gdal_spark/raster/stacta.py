@@ -21,12 +21,6 @@ import numpy as np
 __all__ = ["stacta_open"]
 
 
-def _matrix_list(tms: dict) -> list[dict]:
-    return sorted(tms.get("tileMatrix", tms.get("tileMatrices", [])),
-                  key=lambda m: float(m.get("scaleDenominator", 0)),
-                  reverse=True)
-
-
 def stacta_open(json_text: str | bytes, read, zoom: int | None = None
                 ) -> tuple[np.ndarray, dict]:
     """``read(href) -> bytes`` resolves tile hrefs (template-expanded,

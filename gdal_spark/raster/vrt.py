@@ -195,14 +195,6 @@ def _source_band(arr: np.ndarray, band: int) -> np.ndarray:
 # --------------------------------------------------------------------------
 
 
-def _nearest(win: np.ndarray, oh: int, ow: int) -> np.ndarray:
-    """RasterIO nearest (gcore/rasterio.cpp center-sample convention)."""
-    h, w = win.shape
-    sy = ((np.arange(oh) + 0.5) * h / oh).astype(np.int64).clip(0, h - 1)
-    sx = ((np.arange(ow) + 0.5) * w / ow).astype(np.int64).clip(0, w - 1)
-    return win[sy[:, None], sx[None, :]]
-
-
 def _averaged(win: np.ndarray, oh: int, ow: int, sxoff: float, syoff: float,
               sxsize: float, sysize: float,
               nodata: float | None) -> tuple[np.ndarray, np.ndarray]:

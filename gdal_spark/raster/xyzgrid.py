@@ -327,10 +327,6 @@ def xyz_decode(data: bytes | str, column_order: str = "AUTO"
                  "organization": "columns" if col_org else "rows"}
 
 
-def _c17g(v: float) -> str:
-    return "%.17g" % v
-
-
 def xyz_encode(arr: np.ndarray, gt: tuple, column_separator: str = " ",
                add_header_line: bool = False,
                decimal_precision: int | None = None,

@@ -206,39 +206,6 @@ def parse_gpx(text: str) -> dict[str, list[dict]]:
     return layers
 
 
-def read_gpx(spark, paths, layer: str = "waypoints"):
-    """Distributed GPX reader: one file per task (the GML/WFS pattern),
-    emitting (path, fid, wkt, fields-json)."""
-    import json
-
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("path", T.StringType()),
-            T.StructField("fid", T.LongType()),
-            T.StructField("wkt", T.StringType()),
-            T.StructField("fields", T.StringType()),
-        ]
-    )
-    if isinstance(paths, str):
-        paths = [paths]
-    pdf = spark.createDataFrame([(p,) for p in paths], "path string")
-
-    def run(batches):
-        for b in batches:
-            rows = []
-            for p in b["path"]:
-                feats = parse_gpx(open(p, encoding="utf-8").read())[layer]
-                for fid, f in enumerate(feats):
-                    wkt = f.pop("wkt", None)
-                    rows.append((p, fid, wkt, json.dumps(f, sort_keys=True)))
-            yield pd.DataFrame(rows, columns=["path", "fid", "wkt", "fields"])
-
-    return pdf.mapInPandas(run, schema)
-
-
 # ---------------------------------------------------------------------------
 # Write path (ogrgpxlayer.cpp WriteFeature paths, :1380-1610)
 # ---------------------------------------------------------------------------

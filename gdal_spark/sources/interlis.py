@@ -328,34 +328,3 @@ def itf_read(itf_text: str, imd_text: str) -> dict:
                 })
             layers[f"{topic}__{hname}"] = hfeats
     return layers
-
-
-def read_itf(spark, itf_path: str, imd_path: str, layer: str):
-    """Distributed entry: one Interlis layer -> DataFrame."""
-    with open(itf_path) as fh:
-        itf = fh.read()
-    with open(imd_path) as fh:
-        imd = fh.read()
-    feats = itf_read(itf, imd).get(layer, [])
-    rows = []
-    for f in feats:
-        geom = None
-        # prefer polygonized area, then any geometry
-        g = f["geoms"].get(
-            next((k for k in f["geoms"] if k.endswith("_poly")), None),
-            None) or next(iter(f["geoms"].values()), None)
-        if g is not None:
-            kind, payload = g
-            if kind == "Point":
-                geom = f"POINT ({payload[0]:.10g} {payload[1]:.10g})"
-            elif kind == "LineString":
-                pts = ", ".join(f"{x:.10g} {y:.10g}" for x, y in payload)
-                geom = f"LINESTRING ({pts})"
-            elif kind == "Polygon":
-                rings = ", ".join(
-                    "(" + ", ".join(f"{x:.10g} {y:.10g}" for x, y in rg)
-                    + ")" for rg in payload)
-                geom = f"POLYGON ({rings})"
-        rows.append((geom, {k: str(v) for k, v in f["fields"].items()
-                            if v is not None}))
-    return spark.createDataFrame(rows, "wkt string, fields map<string,string>")

@@ -120,18 +120,6 @@ class LVBAGLayer:
         return [f[0] for f in self.fields]
 
 
-def _gml_rings(poly_el):
-    rings = []
-    for sub in poly_el.iter():
-        t = _strip(sub.tag)
-        if t in ("posList", "pos"):
-            vals = [float(v) for v in (sub.text or "").split()]
-            dim = 3 if "3" == (sub.get("srsDimension") or "") else 2
-            rings.append([(vals[i], vals[i + 1])
-                          for i in range(0, len(vals) - 1, dim)])
-    return rings
-
-
 def _parse_geometry(geom_el):
     """-> (wkt, epsg) for Polygon / Point / MultiSurface children."""
     for sub in geom_el.iter():

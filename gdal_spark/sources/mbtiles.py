@@ -43,12 +43,6 @@ def longlat_to_mercator(lon: float, lat: float) -> tuple[float, float]:
     return x, y
 
 
-def mercator_to_longlat(x: float, y: float) -> tuple[float, float]:
-    lon = x / SPHERICAL_RADIUS / math.pi * 180
-    lat = 2 * (math.atan(math.exp(y / SPHERICAL_RADIUS)) - math.pi / 4) / math.pi * 180
-    return lon, lat
-
-
 def _decode_tile(blob: bytes) -> np.ndarray:
     """PNG/JPEG tile -> (h, w) or (h, w, bands) uint8 via magic sniff."""
     from gdal_spark.functions.codecs import decode_image

@@ -261,22 +261,3 @@ def add_elements(h: SelafinHeader, rings,
         h.connectivity = np.concatenate(
             [h.connectivity, np.array(ids, np.int64)])
         h.n_elements += 1
-
-
-def read_selafin(spark, path: str, step: int = 0, elements: bool = False):
-    """Distributed entry: one node/element layer -> DataFrame."""
-    with open(path, "rb") as fh:
-        h = selafin_read(fh.read())
-    if elements:
-        rows = []
-        for ring, fields in element_features(h, step):
-            pts = ", ".join(f"{x:.10g} {y:.10g}" for x, y in ring)
-            rows.append((f"POLYGON (({pts}))",
-                         {k: str(v) for k, v in fields.items()}))
-        return spark.createDataFrame(
-            rows, "wkt string, fields map<string,string>")
-    rows = [
-        (f"POINT ({x:.10g} {y:.10g})", {k: str(v) for k, v in fields.items()})
-        for x, y, fields in point_features(h, step)
-    ]
-    return spark.createDataFrame(rows, "wkt string, fields map<string,string>")

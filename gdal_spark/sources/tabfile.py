@@ -547,27 +547,3 @@ def _geom_to_wkt(geom) -> str:
 
 def tab_read(files: dict) -> list[dict]:
     return TabFile(files).features()
-
-
-def read_tab(spark, base_path: str):
-    """Distributed entry: a .tab fileset -> DataFrame(wkt, fields map).
-
-    ``base_path`` is the path without extension (case-insensitive
-    sibling lookup, matching the reference's AdjustCaseSensitiveFilename).
-    """
-    import os
-
-    d = os.path.dirname(base_path) or "."
-    stem = os.path.basename(base_path)
-    files = {}
-    for n in os.listdir(d):
-        root, ext = os.path.splitext(n)
-        if root.lower() == stem.lower() and ext.lower().lstrip(".") in (
-                "tab", "dat", "map", "id"):
-            mode = "r" if ext.lower() == ".tab" else "rb"
-            with open(os.path.join(d, n), mode) as fh:
-                files[ext.lower().lstrip(".")] = fh.read()
-    feats = tab_read(files)
-    rows = [(f["wkt"], {k: str(v) for k, v in f["fields"].items()
-                        if v is not None}) for f in feats]
-    return spark.createDataFrame(rows, "wkt string, fields map<string,string>")

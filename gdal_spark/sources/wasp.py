@@ -395,19 +395,3 @@ def _collinear_overlap(a0, a1, b0, b1, eps: float = 1e-9):
     if hi - lo <= eps:
         return None
     return a0 + lo * d, a0 + hi * d
-
-
-def read_wasp(spark, path: str):
-    """Distributed entry: .map -> DataFrame(wkt, fields map).
-
-    The parse itself is driver-side (a .map is one small text file); the
-    result is a DataFrame so it joins the engine's relational surface.
-    """
-    with open(path, "r", encoding="latin-1") as fh:
-        feats, meta = wasp_read(fh.read())
-    rows = []
-    for f in feats:
-        pts = ", ".join(f"{x:.10g} {y:.10g} 0" for x, y in f["coords"])
-        wkt = f"LINESTRING Z ({pts})"
-        rows.append((wkt, {k: str(v) for k, v in f.items() if k != "coords"}))
-    return spark.createDataFrame(rows, "wkt string, fields map<string,string>")

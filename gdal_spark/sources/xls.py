@@ -380,15 +380,3 @@ def _infer(col: list) -> str:
     if kinds <= {_dt.date, _dt.datetime, _dt.time}:
         return "datetime"  # mixed temporal cells promote (freexl parity)
     return "string"
-
-
-def read_xls(spark, path: str, sheet: str | None = None,
-             headers: bool = True):
-    """Distributed entry: one worksheet -> DataFrame(fields map)."""
-    with open(path, "rb") as fh:
-        book = xls_read(fh.read(), headers=headers)
-    name = sheet or next(iter(book))
-    sh = book[name]
-    rows = [({k: str(v) for k, v in r.items() if v is not None},)
-            for r in sh["rows"]]
-    return spark.createDataFrame(rows, "fields map<string,string>")

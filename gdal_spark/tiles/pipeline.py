@@ -74,10 +74,6 @@ TILE_SCHEMA = T.StructType(
 )
 
 
-def tile_bounds_py(tx: int, ty: int, tz: int) -> tuple[float, float, float, float]:
-    return M.tile_bounds_meters_py(tx, ty, tz)
-
-
 def max_zoom_for(images: DataFrame) -> int:
     """ZoomForPixelSize on the finest image resolution (gdal2tiles.py:505,
     2477 max-zoom rule), computed driver-side from one tiny agg."""

@@ -4,6 +4,7 @@ oracle, kNN paths, driver-contract integrity."""
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -11,6 +12,7 @@ from gdal_spark import datagen
 from gdal_spark.functions import cells as C
 from gdal_spark.functions import geom
 from gdal_spark.functions import mercator as M
+from gdal_spark.functions import wkb
 from gdal_spark.operators import knn as KNN
 from gdal_spark.operators import spatial_join as SJ
 
@@ -93,11 +95,10 @@ def test_footprint_column_twin_matches_numpy(spark):
 # ---------------------------------------------------------------- spatial join
 
 
-def _expected_pip_counts(n_imgs, n_polys):
+def _expected_pip_counts(n_imgs, pp):
     fp = datagen.footprint_np(np.arange(n_imgs))
     cx = (fp["lon_min"] + fp["lon_max"]) / 2
     cy = (fp["lat_min"] + fp["lat_max"]) / 2
-    pp = datagen.polygons_pdf(n_polys)
     out = {}
     for _, r in pp.iterrows():
         m = geom.points_in_wkb(cx, cy, r["wkb"])
@@ -106,16 +107,72 @@ def _expected_pip_counts(n_imgs, n_polys):
     return out
 
 
-@pytest.mark.parametrize("broadcast,salt", [(True, 0), (False, 0), (False, 4)])
-def test_spatial_join_center_within(spark, broadcast, salt):
+def _star(cx, cy, n, r_out, r_in):
+    """n-vertex star-shaped ring, radii alternating r_out/r_in: n edges,
+    none horizontal."""
+    ang = 0.1 + 2 * np.pi * np.arange(n) / n
+    r = np.where(np.arange(n) % 2 == 0, r_out, r_in)
+    return np.c_[cx + r * np.cos(ang), cy + r * np.sin(ang)]
+
+
+def _pip_polygons(polyset):
+    """Polygon sets around the unroll cap: `over_cap`'s widest polygon
+    exceeds it (the pip_udf fallback); `at_cap`'s widest has exactly the
+    cap, so the shorter ones leave NULL edge slots."""
+    if polyset == "datagen":
+        return datagen.polygons_pdf(16)
+    cap = SJ.UNROLL_MAX_EDGES
+    if polyset == "over_cap":
+        polys = [
+            [_star(12, 44, cap + 12, 5, 2.5)],  # over the datagen hot box
+            [_star(-60, 10, 2 * cap, 40, 20)],
+            [_star(100, -30, cap + 1, 35, 15)],
+            [_star(40, 30, 40, 35, 20), _star(40, 30, 12, 12, 6)],  # holed
+        ]
+    else:
+        polys = [
+            [_star(12, 44, cap, 5, 2.5)],
+            [_star(-60, 10, 7, 40, 20)],
+            [_star(40, 30, 9, 35, 20), _star(40, 30, 5, 12, 6)],  # holed
+            [np.array([[75.0, -55], [125, -55], [125, -5], [75, -5]])],
+        ]
+    rows = []
+    for i, rings in enumerate(polys):
+        buf = wkb.write_polygon(rings)
+        rows.append((i, buf, *wkb.bbox(buf)))
+    pp = pd.DataFrame(rows, columns=["poly_id", "wkb", "xmin", "ymin", "xmax", "ymax"])
+    widest = max(len(SJ.prepared_edges(b)) for b in pp["wkb"])
+    assert (widest > cap) if polyset == "over_cap" else (widest == cap)
+    return pp
+
+
+_PIP_PATHS = [(True, 0), (False, 0), (False, 4)]
+
+
+@pytest.mark.parametrize(
+    "polyset,broadcast,salt",
+    [pytest.param("datagen", b, s, id=f"{b}-{s}") for b, s in _PIP_PATHS]
+    + [
+        pytest.param(p, b, s, id=f"{p}-{b}-{s}")
+        for p in ("over_cap", "at_cap")
+        for b, s in _PIP_PATHS
+    ],
+)
+def test_spatial_join_center_within(spark, polyset, broadcast, salt):
     imgs = datagen.with_footprint(datagen.images_df(spark, 300, with_pixels=False))
-    polys = datagen.polygons_df(spark, 16)
+    pp = _pip_polygons(polyset)
+    polys = spark.createDataFrame(
+        pp[["poly_id", "wkb", "xmin", "ymin", "xmax", "ymax"]],
+        "poly_id long, wkb binary, xmin double, ymin double, xmax double, ymax double",
+    )
     j = SJ.spatial_join(
         imgs, polys, res=5, predicate="center_within",
         broadcast_polygons=broadcast, salt=salt,
     )
     got = {r.poly_id: r.n_images for r in SJ.count_per_polygon(j).collect()}
-    assert got == _expected_pip_counts(300, 16)
+    exp = _expected_pip_counts(300, pp)
+    assert exp
+    assert got == exp
 
 
 def test_spatial_join_intersects(spark):

@@ -17,9 +17,9 @@ probes across the replicas (spatial_join salt param); AQE skew-join
 splits oversized partitions after the map stage.
 
 kernel=codegen is the production JVM unrolled-parity PIP (pair cost a
-few ns); kernel=arrow forces the Arrow-batched Python fallback
-(keep_wkb=True path) that stands in for any expensive per-pair kernel
-(heavy geometry, Python predicates).
+few ns); kernel=arrow forces pip_udf, the Arrow-batched Python fallback
+that polygons wider than spatial_join.UNROLL_MAX_EDGES take, standing in
+for any expensive per-pair kernel (heavy geometry, Python predicates).
 """
 
 import os
@@ -41,9 +41,9 @@ def run_one(cores: str, n: int, salt: int, kernel: str, aqe: str) -> None:
     spark.conf.set("spark.sql.adaptive.skewJoin.enabled",
                    "true" if aqe == "on" else "false")
     if kernel == "arrow":
-        # force the Arrow-batched fallback (the path complex polygons
-        # take): make every polygon exceed the unroll threshold
-        SJ._UNROLL_MAX_EDGES = 0
+        # force the pip_udf fallback (the path wide polygons take): make
+        # every polygon exceed the unroll cap
+        SJ.UNROLL_MAX_EDGES = 0
 
     def run(nn):
         imgs = datagen.with_footprint(
