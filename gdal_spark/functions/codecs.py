@@ -7,9 +7,13 @@ Arrow-batched UDFs (mapInPandas), so each executor decodes its partition's
 rows without any driver-side involvement.
 
 This container has no Python image libraries (no Pillow/cv2), so the
-core formats are pure-numpy re-derivations; HEIF/AVIF alone delegate
-to the system libheif/libavif via ctypes (functions/extcodecs.py),
-exactly as the reference's frmts/heif + frmts/avif do:
+core formats are pure-numpy re-derivations.  Native libraries are bound
+via ctypes (functions/extcodecs.py), as the reference's frmts/heif,
+frmts/avif and frmts/webp link them: HEIF/AVIF decode only through
+libheif/libavif (quarantined as unsupported_codec without them), and
+WebP decodes through libwebp first, falling back to the pure-Python
+decoder (webp.py/vp8.py, kept as the parity oracle) whenever libwebp is
+absent or refuses a stream, so a row's status never depends on it:
 
   * "png"  — a real, spec-compliant PNG codec in numpy + zlib (8-bit RGB,
     filter 0 rows). Lossless: round-trips bit-exact.
@@ -303,9 +307,14 @@ def _lerc_decode(data: bytes) -> np.ndarray:
 
 
 def _webp_decode(data: bytes) -> np.ndarray:
-    from gdal_spark.functions.webp import webp_decode
+    """libwebp first; the pure-Python decoder (the parity oracle) when
+    libwebp is absent or refuses the bitstream, so every row keeps the
+    status the pure-Python decoder gives it."""
+    from gdal_spark.functions.extcodecs import webp_decode_native
+    from gdal_spark.functions.webp import image_chunk, webp_decode
 
-    return webp_decode(data)
+    out = webp_decode_native(*image_chunk(data))
+    return webp_decode(data) if out is None else out
 
 
 def _webp_encode(arr: np.ndarray) -> bytes:
@@ -354,7 +363,7 @@ DECODERS = {
     "nitf": _nitf_decode,
     "dted": _dted_decode,
     "usgsdem": _usgsdem_decode,
-    "webp": _webp_decode,  # VP8L lossless + VP8 lossy (RFC 6386)
+    "webp": _webp_decode,  # libwebp, else VP8L + VP8 (RFC 6386) in Python
     "lerc": _lerc_decode,  # standalone Lerc2 blob (read-only, like MRF-LERC)
     # external-library delegation (reference: frmts/heif, frmts/avif);
     # raise ExternalCodecUnavailable -> quarantine when the lib is absent
@@ -400,8 +409,8 @@ def encode_image(arr: np.ndarray, fmt: str) -> bytes:
 # quarantine classification: a 100 TB corpus run must DEGRADE measurably on
 # codecs this environment cannot decode (avif/heif/jxl/jp2 need external
 # libraries the reference links: frmts/heif, frmts/jpegxl, frmts/openjpeg;
-# WebP ALPH/animation likewise), not error out or lump them with corrupt
-# bytes.  Plain lossy VP8 and lossless VP8L WebP DO decode (webp.py/vp8.py).
+# WebP animation likewise), not error out or lump them with corrupt
+# bytes.  Lossy VP8 (+ ALPH) and lossless VP8L WebP DO decode.
 # --------------------------------------------------------------------------
 
 #: formats the registry knows OF (magic-identifiable) but cannot decode

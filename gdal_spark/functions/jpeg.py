@@ -118,25 +118,25 @@ def _canonical_codes(bits: list[int], vals: list[int]) -> dict[int, tuple[int, i
     return out
 
 
-class _HuffLUT:
-    """16-bit peek lookup: lut[peek16] = (length << 8) | symbol, as a plain
-    Python list (scalar list indexing is ~5x faster than numpy here)."""
-
-    __slots__ = ("lut",)
-
-    def __init__(self, bits: list[int], vals: list[int]):
-        arr = np.zeros(1 << 16, dtype=np.int32)
-        code = 0
-        k = 0
-        for length in range(1, 17):
-            for _ in range(bits[length - 1]):
-                lo = code << (16 - length)
-                hi = lo + (1 << (16 - length))
-                arr[lo:hi] = (length << 8) | vals[k]
-                code += 1
-                k += 1
-            code <<= 1
-        self.lut = arr.tolist()
+def _huff_lut(bits: bytes, vals: bytes) -> list[int]:
+    """16-bit peek lookup for one DHT table: lut[peek16] = (length << 8)
+    | symbol, as a plain Python list (scalar list indexing is ~5x faster
+    than numpy here).  Canonical codes left-aligned to 16 bits tile the
+    table contiguously from 0, so it is each symbol's run in code order,
+    stopped once full (over-subscribed tables) and zero-padded.  Each
+    run divides every earlier one, so none crosses the end."""
+    if len(bits) < 16 or len(vals) < sum(bits):
+        raise IndexError("JPEG: truncated DHT table")
+    lut: list[int] = []
+    syms = iter(vals)
+    for length in range(1, 17):
+        run = 1 << (16 - length)
+        for _ in range(bits[length - 1]):
+            if len(lut) >= 1 << 16:
+                break
+            lut += [(length << 8) | next(syms)] * run
+    lut += [0] * ((1 << 16) - len(lut))
+    return lut
 
 
 def _quality_tables(quality: int) -> tuple[np.ndarray, np.ndarray]:
@@ -587,7 +587,7 @@ def jpeg_decode(data: bytes, force_color: str | None = None) -> np.ndarray:
     if data[:2] != b"\xff\xd8":
         raise ValueError("not a JPEG (missing SOI)")
     qtabs: dict[int, np.ndarray] = {}
-    huffs: dict[tuple[int, int], _HuffLUT] = {}
+    huffs: dict[tuple[int, int], list[int]] = {}
     comps: list[_Component] = []
     h = w = 0
     restart = 0
@@ -625,10 +625,9 @@ def jpeg_decode(data: bytes, force_color: str | None = None) -> np.ndarray:
             p = 0
             while p < len(payload):
                 tc, th = payload[p] >> 4, payload[p] & 0x0F
-                bits = list(payload[p + 1 : p + 17])
+                bits = payload[p + 1 : p + 17]
                 nv = sum(bits)
-                vals = list(payload[p + 17 : p + 17 + nv])
-                huffs[(tc, th)] = _HuffLUT(bits, vals)
+                huffs[(tc, th)] = _huff_lut(bits, payload[p + 17 : p + 17 + nv])
                 p += 17 + nv
         elif marker in (0xC0, 0xC1, 0xC2):  # baseline / ext seq / progressive
             progressive = marker == 0xC2
@@ -786,7 +785,7 @@ def _decode_scan(order, segments, huffs, restart, h, w) -> None:
     pred = [0] * len(order)
     # per-component flat block lists; reshaped into coeff arrays at the end
     flat: list[list] = [[] for _ in order]
-    luts = [(huffs[(0, c.td)].lut, huffs[(1, c.ta)].lut) for c in order]
+    luts = [(huffs[(0, c.td)], huffs[(1, c.ta)]) for c in order]
     nblk = [c.h * c.v for c in order]
     for m in range(n_mcu):
         if restart and m and m % restart == 0:
@@ -928,7 +927,7 @@ def _decode_scan_lossless(order, segments, huffs, restart, h, w,
     if any(c.h != 1 or c.v != 1 for c in order):
         raise ValueError("subsampled lossless JPEG not supported")
     nc = len(order)
-    luts = [huffs[(0, c.td)].lut for c in order]
+    luts = [huffs[(0, c.td)] for c in order]
     planes = [np.zeros((h, w), np.int32) for _ in order]
     default = 1 << (precision - pt - 1)
     seg_i = 0
@@ -1075,8 +1074,8 @@ def _decode_scan_prog(order, comps, segments, huffs, restart, h, w,
     br = _PBits(segments[0])
     preds = [0] * len(order)
     eobrun = 0
-    dcluts = [huffs[(0, c.td)].lut if ss == 0 else None for c in order]
-    acl = huffs[(1, order[0].ta)].lut if ss > 0 else None
+    dcluts = [huffs[(0, c.td)] if ss == 0 else None for c in order]
+    acl = huffs[(1, order[0].ta)] if ss > 0 else None
 
     for m in range(units):
         if restart and m and m % restart == 0:

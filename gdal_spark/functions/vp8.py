@@ -928,7 +928,7 @@ def vp8_decode_yuv(data: bytes):
                 plane[cby : cby + 8, cbx : cbx + 8] = np.clip(
                     out, 0, 255).astype(np.uint8)
 
-    if f.filter_level > 0 or f.seg_enabled:
+    if f.filter_level > 0:  # libwebp: frame level 0 => no filter at all
         _loop_filter(f, Y, U, V, mb_levels, mb_skip_lf)
 
     w, h = f.width, f.height

@@ -2,9 +2,10 @@
 lossy VP8 payloads routed to the RFC 6386 decoder in vp8.py.
 
 The reference's WEBP driver (frmts/webp/webpdataset.cpp) links libwebp
-for both VP8 (lossy) and VP8L (lossless) payloads.  Both now decode
-here without libwebp; only ALPH (extended-container alpha plane) and
-animation stay on the quarantine path (``unsupported_codec``).  VP8L
+for both VP8 (lossy) and VP8L (lossless) payloads.  Both decode here
+without libwebp, ALPH alpha planes included; only animation stays on
+the quarantine path (``unsupported_codec``).  The codec registry tries
+libwebp first and keeps this decoder as the fallback and oracle.  VP8L
 is fully self-contained (all entropy codes are carried in the stream),
 so this module re-derives it from the public "WebP Lossless Bitstream
 Specification":
@@ -43,8 +44,8 @@ __all__ = ["webp_decode", "webp_encode", "UnsupportedWebPError"]
 
 
 class UnsupportedWebPError(ValueError):
-    """Well-formed WebP whose payload needs an external codec (VP8
-    lossy / ALPH): route to quarantine, not to corrupt."""
+    """Well-formed WebP this codec does not decode (animation): route
+    to quarantine, not to corrupt."""
 
 
 # --------------------------------------------------------------------------
@@ -679,8 +680,10 @@ def alph_decode(payload: bytes, w: int, h: int) -> np.ndarray:
     return out.astype(np.uint8)
 
 
-def webp_decode(data: bytes) -> np.ndarray:
-    data = bytes(data)
+def image_chunk(data: bytes) -> tuple[bytes, bytes, bytes | None]:
+    """The chunk webp_decode decodes: (fourcc ``VP8 ``/``VP8L``, its
+    payload, the payload of the last ALPH chunk before it or None).
+    Raises what webp_decode raises on the container itself."""
     if len(data) < 12 or data[:4] != b"RIFF" or data[8:12] != b"WEBP":
         raise ValueError("not a WebP (RIFF) file")
     pos = 12
@@ -689,17 +692,8 @@ def webp_decode(data: bytes) -> np.ndarray:
         fourcc = data[pos : pos + 4]
         (size,) = struct.unpack_from("<I", data, pos + 4)
         payload = data[pos + 8 : pos + 8 + size]
-        if fourcc == b"VP8L":
-            return vp8l_decode(payload)
-        if fourcc == b"VP8 ":
-            from gdal_spark.functions.vp8 import vp8_decode
-
-            rgb = vp8_decode(payload)
-            if alph is None:
-                return rgb
-            h, w = rgb.shape[:2]
-            alpha = alph_decode(alph, w, h)
-            return np.dstack([rgb, alpha])
+        if fourcc in (b"VP8L", b"VP8 "):
+            return fourcc, payload, alph
         if fourcc in (b"ANIM", b"ANMF"):
             raise UnsupportedWebPError("WebP animation not decoded")
         if fourcc == b"ALPH":
@@ -707,6 +701,19 @@ def webp_decode(data: bytes) -> np.ndarray:
         # VP8X and metadata chunks: skip to the next chunk (padded to 2)
         pos += 8 + size + (size & 1)
     raise ValueError("WebP: no image chunk found")
+
+
+def webp_decode(data: bytes) -> np.ndarray:
+    fourcc, payload, alph = image_chunk(bytes(data))
+    if fourcc == b"VP8L":
+        return vp8l_decode(payload)
+    from gdal_spark.functions.vp8 import vp8_decode
+
+    rgb = vp8_decode(payload)
+    if alph is None:
+        return rgb
+    h, w = rgb.shape[:2]
+    return np.dstack([rgb, alph_decode(alph, w, h)])
 
 
 # --------------------------------------------------------------------------

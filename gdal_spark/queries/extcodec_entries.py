@@ -67,7 +67,7 @@ def heif_avif_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 _EXTCODEC_ORACLE = """
     WITH expected(fmt, gsum, gmin, gmax, psnr_ok) AS (
         VALUES ('heif', 15365, 4, 116, TRUE),
-               ('avif', 15351, 0, 121, TRUE)
+               ('avif', 15369, 0, 121, TRUE)
     )
     SELECT n.n_nationkey AS k, e.fmt, e.gsum, e.gmin, e.gmax, e.psnr_ok
     FROM nation n CROSS JOIN expected e

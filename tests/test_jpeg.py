@@ -103,3 +103,40 @@ def test_restart_markers():
     segs_end, segs = jpeg._split_scan(b"\x12\xff\x00\x34\xff\xd0\x56\xff\xd9", 0)
     assert segs == [b"\x12\xff\x34", b"\x56"]
     assert segs_end == 7
+
+
+def _numpy_huff_lut(bits, vals) -> list[int]:
+    """Reference construction: each canonical code's slice of the
+    16-bit peek table, written into a zeroed numpy array."""
+    arr = np.zeros(1 << 16, dtype=np.int32)
+    code = 0
+    k = 0
+    for length in range(1, 17):
+        for _ in range(bits[length - 1]):
+            lo = code << (16 - length)
+            arr[lo : lo + (1 << (16 - length))] = (length << 8) | vals[k]
+            code += 1
+            k += 1
+        code <<= 1
+    return arr.tolist()
+
+
+def test_huffman_lut_runs_equal_numpy_construction():
+    import random
+
+    tables = [(jpeg._DC_BITS, jpeg._DC_VALS), (jpeg._AC_BITS, jpeg._AC_VALS),
+              (jpeg._PDC_BITS, jpeg._PDC_VALS)]
+    rng = random.Random(11)
+    for _ in range(400):
+        # small counts give complete/incomplete tables; a few large ones
+        # over-subscribe the code space
+        bits = [rng.choice((0, 1, 2, 3, 5, 40, 255)) if rng.random() < 0.2
+                else rng.randrange(4) for _ in range(16)]
+        tables.append((bits, [rng.randrange(256) for _ in range(sum(bits))]))
+    for bits, vals in tables:
+        lut = jpeg._huff_lut(bytes(bits), bytes(vals))
+        assert lut == _numpy_huff_lut(bits, vals)
+    with pytest.raises(IndexError):
+        jpeg._huff_lut(bytes(jpeg._DC_BITS[:15]), bytes(jpeg._DC_VALS))
+    with pytest.raises(IndexError):
+        jpeg._huff_lut(bytes(jpeg._DC_BITS), bytes(jpeg._DC_VALS[:-1]))

@@ -17,20 +17,66 @@ Gates:
 
 from __future__ import annotations
 
+import ctypes
 import hashlib
-import os
 
 import numpy as np
 import pytest
 
 from gdal_spark.functions import codecs as C
+from gdal_spark.functions import extcodecs as X
 from gdal_spark.functions import vp8 as V
 from gdal_spark.functions.checksum import checksum_image
 from gdal_spark.functions.webp import UnsupportedWebPError, webp_decode
 from gdal_spark.functions.webp_fixtures import ALPHA_WEBP, LOSSY_WEBP
 
 REF = "/root/reference/autotest/gdrivers/data/webp/"
-_LIBWEBP = "/lib/x86_64-linux-gnu/libwebp.so.7"
+
+needs_libwebp = pytest.mark.skipif(not X.webp_available(),
+                                   reason="system libwebp not present")
+_U8P = ctypes.POINTER(ctypes.c_uint8)
+_IP = ctypes.POINTER(ctypes.c_int)
+# the libwebp encoder and planar decoder, for parity pins only
+_LIBWEBP_TEST_SYMBOLS = (
+    ("WebPEncodeRGB", ctypes.c_size_t,
+     (ctypes.c_char_p, ctypes.c_int, ctypes.c_int, ctypes.c_int,
+      ctypes.c_float, ctypes.POINTER(_U8P))),
+    ("WebPDecodeYUV", _U8P,
+     (ctypes.c_char_p, ctypes.c_size_t, _IP, _IP, ctypes.POINTER(_U8P),
+      ctypes.POINTER(_U8P), _IP, _IP)),
+    ("WebPDecodeRGB", _U8P, (ctypes.c_char_p, ctypes.c_size_t, _IP, _IP)),
+    ("WebPFree", None, (ctypes.c_void_p,)),
+)
+
+
+def _libwebp():
+    return X.bind(X._WEBP_SO, _LIBWEBP_TEST_SYMBOLS)
+
+
+def libwebp_encode(img: np.ndarray, q: float) -> bytes:
+    """Lossy WebP of an (h, w, 3) uint8 image by the system libwebp."""
+    lib = _libwebp()
+    h, w, _ = img.shape
+    out = _U8P()
+    n = lib.WebPEncodeRGB(np.ascontiguousarray(img).tobytes(), w, h,
+                          w * 3, q, ctypes.byref(out))
+    assert n > 0
+    try:
+        return bytes(np.ctypeslib.as_array(out, (n,)))
+    finally:
+        lib.WebPFree(out)
+
+
+def parity_images() -> list[np.ndarray]:
+    """A gradient, noise and a flat patch at odd sizes."""
+    rng = np.random.default_rng(99)
+    yy, xx = np.mgrid[0:70, 0:90]
+    return [
+        np.stack([(yy * 3) % 256, (xx * 5) % 256, ((xx + yy) * 2) % 256],
+                 -1).astype(np.uint8),
+        rng.integers(0, 256, (33, 51, 3), dtype=np.uint8),
+        np.full((17, 17, 3), 200, np.uint8),
+    ]
 
 # 64x64, 4 token partitions, libwebp method=0/partitions=2 encode of
 # the (y*4, x*4, (x^y)*3) gradient
@@ -152,70 +198,42 @@ def test_hostile_bytes_raise_valueerror():
             V.vp8_decode(bytes(n))
 
 
-@pytest.mark.skipif(not os.path.exists(_LIBWEBP),
-                    reason="system libwebp not present")
+@needs_libwebp
 def test_libwebp_parity_yuv_and_rgb():
     """Byte-exact YUV planes AND RGB output vs the library the
     reference driver links, across filter types and odd sizes."""
-    import ctypes
-
-    lib = ctypes.CDLL(_LIBWEBP)
-    lib.WebPEncodeRGB.restype = ctypes.c_size_t
-    lib.WebPEncodeRGB.argtypes = [
-        ctypes.c_char_p, ctypes.c_int, ctypes.c_int, ctypes.c_int,
-        ctypes.c_float, ctypes.POINTER(ctypes.POINTER(ctypes.c_uint8))]
-    lib.WebPDecodeYUV.restype = ctypes.POINTER(ctypes.c_uint8)
-    lib.WebPDecodeYUV.argtypes = [
-        ctypes.c_char_p, ctypes.c_size_t,
-        ctypes.POINTER(ctypes.c_int), ctypes.POINTER(ctypes.c_int),
-        ctypes.POINTER(ctypes.POINTER(ctypes.c_uint8)),
-        ctypes.POINTER(ctypes.POINTER(ctypes.c_uint8)),
-        ctypes.POINTER(ctypes.c_int), ctypes.POINTER(ctypes.c_int)]
-    lib.WebPDecodeRGB.restype = ctypes.POINTER(ctypes.c_uint8)
-    lib.WebPDecodeRGB.argtypes = [
-        ctypes.c_char_p, ctypes.c_size_t,
-        ctypes.POINTER(ctypes.c_int), ctypes.POINTER(ctypes.c_int)]
-
-    def enc(img, q):
-        h, w, _ = img.shape
-        out = ctypes.POINTER(ctypes.c_uint8)()
-        n = lib.WebPEncodeRGB(np.ascontiguousarray(img).tobytes(), w, h,
-                              w * 3, q, ctypes.byref(out))
-        assert n > 0
-        return bytes(np.ctypeslib.as_array(out, (n,)))
+    lib = _libwebp()
 
     def dec_yuv(data):
         w = ctypes.c_int(); h = ctypes.c_int()
         st = ctypes.c_int(); ust = ctypes.c_int()
-        up = ctypes.POINTER(ctypes.c_uint8)()
-        vp = ctypes.POINTER(ctypes.c_uint8)()
+        up = _U8P()
+        vp = _U8P()
         yp = lib.WebPDecodeYUV(data, len(data), ctypes.byref(w),
                                ctypes.byref(h), ctypes.byref(up),
                                ctypes.byref(vp), ctypes.byref(st),
                                ctypes.byref(ust))
-        W, H, S, US = w.value, h.value, st.value, ust.value
-        cw, ch = (W + 1) // 2, (H + 1) // 2
-        return (np.ctypeslib.as_array(yp, (H, S))[:, :W].copy(),
-                np.ctypeslib.as_array(up, (ch, US))[:, :cw].copy(),
-                np.ctypeslib.as_array(vp, (ch, US))[:, :cw].copy())
+        try:
+            W, H, S, US = w.value, h.value, st.value, ust.value
+            cw, ch = (W + 1) // 2, (H + 1) // 2
+            return (np.ctypeslib.as_array(yp, (H, S))[:, :W].copy(),
+                    np.ctypeslib.as_array(up, (ch, US))[:, :cw].copy(),
+                    np.ctypeslib.as_array(vp, (ch, US))[:, :cw].copy())
+        finally:
+            lib.WebPFree(yp)  # one allocation holds Y, U and V
 
     def dec_rgb(data):
         w = ctypes.c_int(); h = ctypes.c_int()
         p = lib.WebPDecodeRGB(data, len(data), ctypes.byref(w),
                               ctypes.byref(h))
-        return np.ctypeslib.as_array(p, (h.value, w.value, 3)).copy()
+        try:
+            return np.ctypeslib.as_array(p, (h.value, w.value, 3)).copy()
+        finally:
+            lib.WebPFree(p)
 
-    rng = np.random.default_rng(99)
-    yy, xx = np.mgrid[0:70, 0:90]
-    images = [
-        np.stack([(yy * 3) % 256, (xx * 5) % 256, ((xx + yy) * 2) % 256],
-                 -1).astype(np.uint8),
-        rng.integers(0, 256, (33, 51, 3), dtype=np.uint8),
-        np.full((17, 17, 3), 200, np.uint8),
-    ]
-    for img in images:
+    for img in parity_images():
         for q in (10.0, 75.0, 95.0):
-            data = enc(img, q)
+            data = libwebp_encode(img, q)
             payload = _vp8_payload(data)
             Y, U, Vv, _info = V.vp8_decode_yuv(payload)
             Yr, Ur, Vr = dec_yuv(data)
@@ -225,8 +243,18 @@ def test_libwebp_parity_yuv_and_rgb():
             assert np.array_equal(V.yuv_to_rgb(Y, U, Vv), dec_rgb(data))
 
 
-@pytest.mark.skipif(not os.path.exists(_LIBWEBP),
-                    reason="system libwebp not present")
+def _loaded_libwebp_path() -> str:
+    """File the loader mapped for the bound libwebp (dlopen searched
+    the soname)."""
+    X.webp_available()
+    with open("/proc/self/maps") as maps:
+        for line in maps:
+            if f"/{X._WEBP_SO}" in line:  # the soname or its versioned file
+                return line.split(maxsplit=5)[5].strip()
+    pytest.skip("libwebp mapping not listed in /proc/self/maps")
+
+
+@needs_libwebp
 def test_committed_tables_match_library():
     """The committed RFC 6386 tables must equal the normative constants
     carried by the system libwebp build (tools/extract_vp8_tables.py)."""
@@ -235,7 +263,7 @@ def test_committed_tables_match_library():
     sys.path.insert(0, "/root/repo/tools")
     from extract_vp8_tables import extract
 
-    t = extract(_LIBWEBP)
+    t = extract(_loaded_libwebp_path())
     from gdal_spark.functions import vp8_tables as TBL
 
     assert t["COEFF_PROBS"] == [p for a in TBL.COEFF_PROBS for b in a
@@ -246,3 +274,28 @@ def test_committed_tables_match_library():
                                    for b in a for p in b]
     assert t["DC_QLOOKUP"] == list(TBL.DC_QLOOKUP)
     assert t["AC_QLOOKUP"] == list(TBL.AC_QLOOKUP)
+
+
+def test_loop_filter_skipped_at_frame_level_zero(monkeypatch):
+    """libwebp filters nothing when the frame-header filter_level is 0,
+    even with segmentation carrying absolute per-segment LF levels."""
+    payload = _vp8_payload(MULTIPART_VP8_WEBP)
+    parse = V._parse_frame
+
+    def level0(seg_lf):
+        def patched(data):
+            f = parse(data)
+            # absolute per-segment values, same quantizers as the stream
+            f.seg_quant = [q if f.seg_abs else f.y_ac_qi + q
+                           for q in f.seg_quant]
+            f.seg_enabled, f.seg_abs, f.seg_lf = 1, 1, [seg_lf] * 4
+            f.filter_level, f.lf_delta_enabled = 0, 0
+            return f
+        return patched
+
+    monkeypatch.setattr(V, "_parse_frame", level0(0))
+    plain = V.vp8_decode_yuv(payload)[:3]
+    monkeypatch.setattr(V, "_parse_frame", level0(40))
+    seg = V.vp8_decode_yuv(payload)[:3]
+    for a, b in zip(plain, seg):
+        assert np.array_equal(a, b)
