@@ -154,10 +154,10 @@ def _hdr(buf: bytes, pos: int):
     order, gtype = struct.unpack_from("<BI", buf, pos)
     if order != 1:
         raise ValueError("big-endian WKB not supported")
-    if gtype >= 3000:
+    if gtype >= 2000:  # ISO M / ZM (and EWKB flag bits): no M reader
         raise ValueError(f"unsupported WKB dimensionality {gtype}")
     base = gtype % 1000 if gtype >= 1000 else gtype & 0xFF
-    ndim = 3 if 1000 <= gtype < 2000 else 2
+    ndim = 3 if gtype >= 1000 else 2
     return base, ndim, pos + 5
 
 

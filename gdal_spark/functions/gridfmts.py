@@ -1,24 +1,23 @@
-"""Single-band geo-grid format drivers: AAIGrid, XYZ, ENVI, SRTM HGT.
+"""Single-band geo-grid format drivers: XYZ and SRTM HGT, plus the
+distributed grid loader.
 
 The image codecs (functions/codecs.py) carry (h, w, 3) uint8 RGB; DEM
 and measurement rasters travel as single-band float grids WITH their
-georeferencing, so these four drivers share a different contract:
+georeferencing, so these drivers share a different contract:
 
     decode -> (arr float64 (h, w), geotransform 6-tuple, nodata | None)
-    encode(arr, gt, nodata) -> bytes (+ sidecar text for ENVI)
+    encode(arr, gt[, nodata]) -> bytes
 
 Formats (reference drivers):
-  * "aaigrid" — Arc/Info ASCII Grid (frmts/aaigrid/aaigriddataset.cpp):
-    ncols/nrows/xllcorner/yllcorner/cellsize/NODATA_value header +
-    whitespace-separated cell values, row-major north-down.
   * "xyz" — ASCII x y z triples (frmts/xyz/xyzdataset.cpp): one cell per
     line, grid shape re-inferred from the distinct coordinate steps.
-  * "envi" — ENVI flat binary + .hdr sidecar (frmts/raw/envidataset.cpp):
-    here data type 5 (float64) / 4 (float32), bsq, both byte orders on
-    read, LE on write; geotransform via "map info".
   * "hgt" — SRTM height tiles (frmts/srtmhgt/srtmhgtdataset.cpp):
     big-endian int16, n x n square (3601/1201/or any), void = -32768,
     SW corner from an N51E007-style tile name, 1-degree extent.
+
+AAIGrid and ENVI are raster/asciigrid.py and raster/envi.py;
+read_grid_files() reads them through those drivers (AAIGrid with the
+Float64 open option, so text values come back bit-exact).
 
 Like the image codecs these are pure-numpy byte<->array functions, so
 they ride any Arrow-batched ingest stage; read_grid_files() is the
@@ -32,48 +31,6 @@ import math
 import re
 
 import numpy as np
-
-# --------------------------------------------------------------------------
-# AAIGrid
-# --------------------------------------------------------------------------
-
-
-def aaigrid_encode(arr: np.ndarray, gt: tuple, nodata: float | None = None) -> bytes:
-    h, w = arr.shape
-    if abs(gt[1]) != abs(gt[5]):
-        raise ValueError("AAIGrid requires square cells")
-    lines = [
-        f"ncols        {w}",
-        f"nrows        {h}",
-        f"xllcorner    {gt[0]!r}",
-        f"yllcorner    {gt[3] + h * gt[5]!r}",
-        f"cellsize     {gt[1]!r}",
-    ]
-    if nodata is not None:
-        lines.append(f"NODATA_value  {nodata!r}")
-    body = "\n".join(" ".join(repr(float(v)) for v in row) for row in arr)
-    return ("\n".join(lines) + "\n" + body + "\n").encode("ascii")
-
-
-def aaigrid_decode(data: bytes) -> tuple[np.ndarray, tuple, float | None]:
-    txt = data.decode("ascii")
-    toks = txt.split()
-    hdr: dict[str, float] = {}
-    i = 0
-    while i + 1 < len(toks) and toks[i][0].isalpha():
-        hdr[toks[i].lower()] = float(toks[i + 1])
-        i += 2
-    w, h = int(hdr["ncols"]), int(hdr["nrows"])
-    cell = hdr["cellsize"]
-    x0 = hdr.get("xllcorner", hdr.get("xllcenter", 0.0) - cell / 2.0)
-    yll = hdr.get("yllcorner", hdr.get("yllcenter", 0.0) - cell / 2.0)
-    nodata = hdr.get("nodata_value")
-    vals = np.array(toks[i :], dtype=np.float64)
-    if len(vals) != w * h:
-        raise ValueError(f"AAIGrid body has {len(vals)} values, expected {w * h}")
-    gt = (x0, cell, 0.0, yll + h * cell, 0.0, -cell)
-    return vals.reshape(h, w), gt, nodata
-
 
 # --------------------------------------------------------------------------
 # XYZ
@@ -108,57 +65,6 @@ def xyz_decode(data: bytes) -> tuple[np.ndarray, tuple, float | None]:
     arr[ri, ci] = pts[:, 2]
     gt = (xs[0] - dx / 2.0, dx, 0.0, ys[-1] + dy / 2.0, 0.0, -dy)
     return arr, gt, None
-
-
-# --------------------------------------------------------------------------
-# ENVI (binary + .hdr sidecar text)
-# --------------------------------------------------------------------------
-
-_ENVI_DTYPES = {4: np.dtype("f4"), 5: np.dtype("f8"), 2: np.dtype("i2"), 12: np.dtype("u2"), 3: np.dtype("i4")}
-
-
-def envi_encode(arr: np.ndarray, gt: tuple, nodata: float | None = None) -> tuple[bytes, str]:
-    """-> (raw bytes, .hdr sidecar text); float64 LE bsq."""
-    h, w = arr.shape
-    hdr = [
-        "ENVI",
-        f"samples = {w}",
-        f"lines   = {h}",
-        "bands   = 1",
-        "header offset = 0",
-        "file type = ENVI Standard",
-        "data type = 5",
-        "interleave = bsq",
-        "byte order = 0",
-        f"map info = {{Arbitrary, 1, 1, {gt[0]!r}, {gt[3]!r}, {gt[1]!r}, {abs(gt[5])!r}}}",
-    ]
-    if nodata is not None:
-        hdr.append(f"data ignore value = {nodata!r}")
-    return arr.astype("<f8").tobytes(), "\n".join(hdr) + "\n"
-
-
-def envi_decode(data: bytes, hdr_text: str) -> tuple[np.ndarray, tuple, float | None]:
-    kv = {}
-    for m in re.finditer(r"^([a-z ]+?)\s*=\s*(\{[^}]*\}|.+)$", hdr_text, re.M | re.I):
-        kv[m.group(1).strip().lower()] = m.group(2).strip()
-    w = int(kv["samples"])
-    h = int(kv["lines"])
-    dt = _ENVI_DTYPES[int(kv["data type"])]
-    if int(kv.get("byte order", "0")) == 1:
-        dt = dt.newbyteorder(">")
-    off = int(kv.get("header offset", "0"))
-    arr = np.frombuffer(data, dtype=dt, count=w * h, offset=off).reshape(h, w)
-    gt = (0.0, 1.0, 0.0, 0.0, 0.0, -1.0)
-    mi = kv.get("map info")
-    if mi:
-        parts = [p.strip() for p in mi.strip("{}").split(",")]
-        px, py = float(parts[1]), float(parts[2])
-        ex, ny = float(parts[3]), float(parts[4])
-        cx, cy = float(parts[5]), float(parts[6])
-        # map info anchors pixel (px, py) 1-based at (ex, ny)
-        gt = (ex - (px - 1) * cx, cx, 0.0, ny + (py - 1) * cy, 0.0, -cy)
-    nod = kv.get("data ignore value")
-    return arr.astype(np.float64), gt, (float(nod) if nod else None)
 
 
 # --------------------------------------------------------------------------
@@ -227,12 +133,20 @@ def read_grid_files(spark, files: list[tuple[str, str]], num_partitions: int | N
             for r in pdf.itertuples(index=False):
                 raw = open(r.path, "rb").read()
                 if r.fmt == "aaigrid":
-                    arr, gt, nod = aaigrid_decode(raw)
+                    from gdal_spark.raster.asciigrid import aaig_decode
+
+                    arr, meta = aaig_decode(raw, datatype="Float64")
+                    gt, nod = meta["gt"], meta["nodata"]
                 elif r.fmt == "xyz":
                     arr, gt, nod = xyz_decode(raw)
                 elif r.fmt == "envi":
+                    from gdal_spark.raster.envi import envi_decode
+
                     hdr = open(os.path.splitext(r.path)[0] + ".hdr").read()
-                    arr, gt, nod = envi_decode(raw, hdr)
+                    arr, meta = envi_decode(hdr, raw)
+                    arr = arr if arr.ndim == 2 else arr[:, :, 0]
+                    gt = meta.get("gt", (0.0, 1.0, 0.0, 0.0, 0.0, -1.0))
+                    nod = meta.get("nodata")
                 elif r.fmt == "hgt":
                     arr, gt, nod = hgt_decode(raw, os.path.basename(r.path))
                 elif r.fmt == "nc":

@@ -27,9 +27,11 @@ from gdal_spark.functions import geodesic as GEOD
 from gdal_spark.functions import geom as G
 from gdal_spark.functions import polyclip as PC
 from gdal_spark.functions import wkb as W
+from gdal_spark.functions.wkt import from_wkt
 
 # --------------------------------------------------------------------------
-# WKT I/O (POINT / LINESTRING / POLYGON / MULTIPOLYGON, 2-D)
+# WKT output (POINT / LINESTRING / POLYGON / MULTIPOLYGON, 2-D); the
+# reader is functions/wkt.from_wkt
 # --------------------------------------------------------------------------
 
 
@@ -55,66 +57,6 @@ def wkt_from_wkb(buf: bytes) -> str:
         )
         return f"MULTIPOLYGON ({polys})"
     raise ValueError(f"unsupported type {gtype}")
-
-
-def wkb_from_wkt(txt: str) -> bytes:
-    s = txt.strip()
-    kind, _, body = s.partition("(")
-    kind = kind.strip().upper()
-    body = "(" + body
-
-    def parse_pts(chunk: str) -> np.ndarray:
-        pts = []
-        for pair in chunk.split(","):
-            x, y = pair.split()
-            pts.append((float(x), float(y)))
-        return np.array(pts)
-
-    def split_groups(inner: str) -> list[str]:
-        """Split 'a),(b' style top-level groups of one nesting level."""
-        groups, depth, cur = [], 0, []
-        for ch in inner:
-            if ch == "(":
-                depth += 1
-                if depth == 1:
-                    cur = []
-                    continue
-            elif ch == ")":
-                depth -= 1
-                if depth == 0:
-                    groups.append("".join(cur))
-                    continue
-            if depth >= 1:
-                cur.append(ch)
-        return groups
-
-    if kind == "POINT":
-        inner = body.strip()[1:-1]
-        x, y = inner.split()
-        return W.write_point(float(x), float(y))
-    if kind == "LINESTRING":
-        return W.write_linestring(parse_pts(body.strip()[1:-1]))
-    if kind == "POLYGON":
-        rings = [parse_pts(g) for g in split_groups(body.strip()[1:-1])]
-        return W.write_polygon(rings)
-    if kind == "MULTIPOLYGON":
-        inner = body.strip()[1:-1]
-        polys, depth, cur = [], 0, []
-        for ch in inner:
-            if ch == "(":
-                depth += 1
-                if depth == 1:
-                    cur = []
-                    continue
-            elif ch == ")":
-                depth -= 1
-                if depth == 0:
-                    polys.append("".join(cur))
-                    continue
-            if depth >= 1:
-                cur.append(ch)
-        return W.write_multipolygon([[parse_pts(g) for g in split_groups(p)] for p in polys])
-    raise ValueError(f"unsupported WKT kind {kind}")
 
 
 # --------------------------------------------------------------------------
@@ -581,7 +523,10 @@ def register_all(spark: SparkSession) -> None:
 
     @pandas_udf(T.BinaryType())
     def geomfromtext(col: pd.Series) -> pd.Series:
-        return col.map(lambda v: None if v is None else bytearray(wkb_from_wkt(v)))
+        def one(v):
+            buf = None if v is None else from_wkt(v)  # "... EMPTY" -> NULL
+            return None if buf is None else bytearray(buf)
+        return col.map(one)
     spark.udf.register("ST_GeomFromText", geomfromtext)
 
     @pandas_udf(T.BinaryType())

@@ -10,7 +10,8 @@ re-parse), matching the convention of queries/rat_entries.py's
 OGR_GEOM_WKT field.
 
 Supported: POINT, LINESTRING, POLYGON, MULTIPOLYGON, MULTIPOINT,
-MULTILINESTRING, 2-D, plus EMPTY; curved ISO kinds (CIRCULARSTRING,
+MULTILINESTRING, GEOMETRYCOLLECTION, 2-D, plus POINT Z / LINESTRING Z
+and EMPTY (-> None); curved ISO kinds (CIRCULARSTRING,
 COMPOUNDCURVE, CURVEPOLYGON, MULTICURVE, MULTISURFACE) parse to the
 curved WKB types of functions/curves.py (linearize with
 curves.linearize_wkb / SQL ST_CurveToLine).
@@ -57,31 +58,30 @@ def to_wkt(buf: bytes) -> str:
     raise ValueError(f"unsupported geometry type {gtype}")
 
 
-_NUM = r"[-+]?[0-9]*\.?[0-9]+(?:[eE][-+]?[0-9]+)?"
-_PAIR_RE = re.compile(rf"({_NUM})\s+({_NUM})")
+def _tuples(txt: str) -> list[list[float]]:
+    """'(x y[ z], ...)' -> one float list per comma-separated tuple. Every
+    token goes through float(), so a malformed vertex raises ValueError
+    (and nan / inf parse)."""
+    return [[float(v) for v in t.split()]
+            for t in txt.strip().strip("()").split(",")]
 
 
 def _parse_pairs(txt: str) -> np.ndarray:
-    pts = [(float(a), float(b)) for a, b in _PAIR_RE.findall(txt)]
+    pts = _tuples(txt)
+    if any(len(p) != 2 for p in pts):
+        raise ValueError(f"expected x y tuples: {txt[:40]!r}")
     return np.asarray(pts, dtype=np.float64)
-
-
-_TRIPLE_RE = re.compile(rf"({_NUM})\s+({_NUM})\s+({_NUM})")
 
 
 def _parse_triples(txt: str, force: bool = False):
     """(N,3) array when EVERY comma-separated tuple carries 3 numbers
     (the importFromWkt 2.5D detection), else None."""
-    tuples = [t.strip() for t in txt.strip().lstrip("(").rstrip(")").split(",")]
-    out = []
-    for t in tuples:
-        m = _TRIPLE_RE.fullmatch(t.strip())
-        if m is None:
-            if force:
-                raise ValueError(f"expected x y z tuple: {t!r}")
-            return None
-        out.append((float(m.group(1)), float(m.group(2)), float(m.group(3))))
-    return np.asarray(out, dtype=np.float64)
+    pts = _tuples(txt)
+    if all(len(p) == 3 for p in pts):
+        return np.asarray(pts, dtype=np.float64)
+    if force:
+        raise ValueError(f"expected x y z tuples: {txt[:40]!r}")
+    return None
 
 
 def _split_groups(body: str) -> list[str]:
@@ -108,7 +108,7 @@ def from_wkt(txt: str) -> bytes | None:
     kind, body = m.group(1).upper(), m.group(2).strip()
     if body.upper().startswith("Z"):  # "POINT Z (...)" ISO form
         kind, body = kind + "Z", body[1:].strip()
-    if body == "EMPTY":
+    if body.upper() == "EMPTY":
         return None
     if kind == "POINT":
         trip = _parse_triples(body)
@@ -134,6 +134,17 @@ def from_wkt(txt: str) -> bytes | None:
             for p in _split_groups(body[1:-1])
         ]
         return W.write_multipolygon(polys)
+    if kind == "MULTIPOINT":  # members "(x y)" or bare "x y"
+        return W.write_multipoint(
+            _parse_pairs(body.replace("(", "").replace(")", "")))
+    if kind == "MULTILINESTRING":
+        return W.write_multilinestring(
+            [_parse_pairs(g) for g in _split_groups(body[1:-1])])
+    if kind == "GEOMETRYCOLLECTION":
+        members = [from_wkt(g) for g in _split_top(body[1:-1])]
+        if None in members:
+            raise ValueError("EMPTY GEOMETRYCOLLECTION member")
+        return W.write_collection(members)
     if kind in ("CIRCULARSTRING", "CIRCULARSTRINGZ"):
         from gdal_spark.functions import curves as CV
 

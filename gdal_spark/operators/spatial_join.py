@@ -164,7 +164,7 @@ def spatial_join(
     poly_bbox: tuple[str, str, str, str] = ("xmin", "ymin", "xmax", "ymax"),
     left_key: str = "image_id",
     poly_key: str = "poly_id",
-    broadcast_polygons: bool | None = None,
+    broadcast_polygons: bool = False,
     salt: int = 0,
     carry: list[str] | None = None,
     keep_wkb: bool = False,
@@ -174,9 +174,11 @@ def spatial_join(
     Returns left rows + matching polygon key columns (inner, 1:N across
     polygons, each pair exactly once).
 
-    broadcast_polygons: None = let Catalyst/AQE decide (autoBroadcast
-    threshold); True = force broadcast (dims <= ~64MB: no shuffle at all);
-    False = shuffle path, optionally salted `salt` ways for hot cells.
+    broadcast_polygons: True = force broadcast (dims <= ~64MB: no shuffle
+    at all; the driver prepares the polygon side once); False = no hint —
+    the cell join is planned as a shuffle join, optionally salted `salt`
+    ways for hot cells, though Catalyst/AQE may still broadcast the
+    polygon side when it is under spark.sql.autoBroadcastJoinThreshold.
 
     Exactly-once pairs WITHOUT a dedup shuffle:
       * center_within probes a point, which lies in exactly one cell —

@@ -101,14 +101,16 @@ def grid_format_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
 
     from gdal_spark.functions import gridfmts as GF
+    from gdal_spark.raster.asciigrid import aaig_decode, aaig_encode
+    from gdal_spark.raster.envi import envi_encode
 
     r, c = np.meshgrid(np.arange(GRID_H), np.arange(GRID_W), indexing="ij")
     dem = ((r * 37 + c * 101) % 97) * 0.25
     gt = (500.0, 2.0, 0.0, 800.0, 0.0, -2.0)
     root = tempfile.mkdtemp(prefix="grid_chain_")
-    a, agt, _ = GF.aaigrid_decode(GF.aaigrid_encode(dem, gt))
-    x, xgt, _ = GF.xyz_decode(GF.xyz_encode(a, agt))
-    raw, hdr = GF.envi_encode(x, xgt)
+    a, ameta = aaig_decode(aaig_encode(dem, gt), datatype="Float64")
+    x, xgt, _ = GF.xyz_decode(GF.xyz_encode(a, ameta["gt"]))
+    hdr, raw = envi_encode(x, xgt)
     p = os.path.join(root, "chain.dat")
     open(p, "wb").write(raw)
     open(os.path.join(root, "chain.hdr"), "w").write(hdr)
@@ -273,32 +275,37 @@ _MBT_ORACLE = """
 def xml_format_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """KML -> GPX interchange (ogr/ogrsf_frmts/kml, gpx drivers): nation
     points written as KML placemarks, parsed back, re-written as GPX
-    waypoints, parsed back and ingested with the distributed XML loader;
-    the oracle recomputes name + coordinates straight from the table."""
-    import numpy as np
-
+    waypoints and ingested with the distributed XML loader; the oracle
+    recomputes name + coordinates straight from the table."""
     from gdal_spark.functions import wkb as W
-    from gdal_spark.sources import xml_formats as XF
+    from gdal_spark.functions.wkt import from_wkt
+    from gdal_spark.sources import gpx as GPX
+    from gdal_spark.sources import kml as KML
 
     n = load(spark, sf_dir, "nation").select("n_nationkey", "n_name").collect()
     feats = [
         {
-            "layer": "placemarks",
-            "wkb": W.write_point(
+            "name": r["n_name"],
+            "wkt": "POINT (%r %r)" % (
                 (r["n_nationkey"] % 12) * 30.0 - 180.0 + 0.25,
                 (r["n_nationkey"] % 7) * 25.0 - 87.5 + 0.125,
             ),
-            "name": r["n_name"],
         }
         for r in sorted(n, key=lambda r: r["n_nationkey"])
     ]
+    kml = KML.write_kml(
+        [{"name": "nations", "fields": [("name", "string")], "features": feats}]
+    )
+    back = KML.parse_kml(kml)[0]["features"]
+    wpts = []
+    for f in back:
+        x, y = W.parse(from_wkt(f["wkt"]))[1]
+        wpts.append({"lon": x, "lat": y, "name": f["Name"]})
     root = tempfile.mkdtemp(prefix="xmlfmt_")
-    kml = os.path.join(root, "nations.kml")
-    XF.write_kml(feats, kml)
-    back = XF.parse_kml(open(kml, "rb").read())
     gpx = os.path.join(root, "nations.gpx")
-    XF.write_gpx(back, gpx)
-    df = XF.read_xml_features(spark, [gpx])
+    with open(gpx, "w", encoding="utf-8") as fh:
+        fh.write(GPX.write_gpx(waypoints=wpts))
+    df = KML.read_xml_features(spark, [gpx])
     xy = _point_xy(F.col("wkb"))
     return df.select(
         "name",

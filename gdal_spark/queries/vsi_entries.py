@@ -44,7 +44,7 @@ def vsi_chain_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from gdal_spark.functions.gridfmts import aaigrid_decode, aaigrid_encode
+        from gdal_spark.raster.asciigrid import aaig_decode, aaig_encode
         from gdal_spark.sources import vsi
 
         for pdf in batches:
@@ -57,12 +57,14 @@ def vsi_chain_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
                 zbuf = io.BytesIO()
                 with zipfile.ZipFile(zbuf, "w") as z:
                     z.writestr(
-                        "grid.asc.gz", gzip.compress(aaigrid_encode(grid, gt))
+                        "grid.asc.gz",
+                        gzip.compress(aaig_encode(grid, gt).encode("ascii")),
                     )
                 mem = f"/vsimem/q{k}.zip"
                 vsi.vsi_write(mem, zbuf.getvalue())
                 chained = f"/vsigzip/{{/vsizip/{mem}/grid.asc.gz}}"
-                arr, gt2, _ = aaigrid_decode(vsi.vsi_read(chained))
+                arr, meta = aaig_decode(vsi.vsi_read(chained), datatype="Float64")
+                gt2 = meta["gt"]
                 vsi.vsi_unlink(mem)
                 rows.append(
                     (

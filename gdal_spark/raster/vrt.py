@@ -169,11 +169,14 @@ def default_open(path: str) -> np.ndarray:
 
         a = nc_to_raster(raw)[0]
         return a[0] if a.shape[0] == 1 else np.moveaxis(a, 0, -1)
-    if ext in (".asc", ".xyz"):
-        from gdal_spark.functions import gridfmts as GF
+    if ext == ".asc":
+        from gdal_spark.raster.asciigrid import aaig_decode
 
-        dec = GF.aaigrid_decode if ext == ".asc" else GF.xyz_decode
-        return dec(raw)[0]
+        return aaig_decode(raw, datatype="Float64")[0]
+    if ext == ".xyz":
+        from gdal_spark.functions.gridfmts import xyz_decode
+
+        return xyz_decode(raw)[0]
     from gdal_spark.functions.codecs import decode_image
 
     fmt = {".png": "png", ".jpg": "jpeg", ".jpeg": "jpeg", ".gif": "gif",

@@ -45,7 +45,7 @@ def _luma(arr: np.ndarray) -> np.ndarray:
 
 
 def zonal_stats(images: DataFrame, polygons: DataFrame, res: int = 5,
-                broadcast_polygons: bool | None = None) -> DataFrame:
+                broadcast_polygons: bool = False) -> DataFrame:
     """images: canonical table + footprint cols; polygons: poly_id/wkb/bbox.
 
     Returns (poly_id, zcount, zmin, zmax, zmean, zstd) over the pixels of

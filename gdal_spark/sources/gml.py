@@ -342,7 +342,7 @@ def parse_gml_features(data: bytes) -> list[dict]:
 
 def read_gml(spark, files: list[str]):
     """GML/WFS files -> (path, layer, fid, wkt, fields map) DataFrame;
-    one file per task row, the xml_formats.read_xml_features shape."""
+    one file per task row, the kml.read_xml_features shape."""
     from pyspark.sql import types as T
 
     sch = T.StructType(

@@ -22,12 +22,20 @@ Layer names come from the <name> child ("Layer #N" fallback,
 are the layer node's DIRECT Placemark children (kmlnode.cpp:479-493)
 carrying Name, description, ExtendedData/SchemaData SimpleData fields,
 and the classified geometry as WKT.
+
+read_xml_features is the distributed GPX/KML loader over these readers
+and gpx.parse_gpx: one file per task row, 2-D WKB rows. Both formats
+are small-file interchange containers, so the distributed shape is
+many files per task, not byte-range splitting of one file.
 """
 
 from __future__ import annotations
 
 import re
 import xml.etree.ElementTree as ET
+
+from gdal_spark.functions.wkt import from_wkt
+from gdal_spark.sources.gpx import parse_gpx
 
 _CONTAINERS = ("Folder", "Document", "kml")
 _FEATURE_CONTAINERS = (
@@ -200,8 +208,7 @@ def _geom_wkt(node: _Node, want_z: bool) -> str | None:
     return None
 
 
-def _placemark_geom(pm: _Node) -> str | None:
-    want_z = pm.b25d
+def _placemark_geom(pm: _Node, want_z: bool) -> str | None:
     if pm.type in ("Point", "LineString", "Polygon"):
         for ch in pm.children:
             if ch.name == pm.type:
@@ -268,9 +275,10 @@ def _simple_data_fields(pm: _Node) -> dict:
     return out
 
 
-def parse_kml(text: str) -> list[dict]:
-    """-> [{'name': layer_name, 'features': [{'Name', 'description',
-    'wkt', fields...}]}] in the reference's layer order."""
+def _layers(text) -> list[tuple[str, list[_Node]]]:
+    """-> [(layer name, its Placemark nodes)] in the reference's layer
+    order; Placemarks without geometry are dropped unless the whole file
+    is Empty."""
     root = ET.fromstring(text)
     trunk = _Node(root)
     if trunk.name != "kml":
@@ -296,22 +304,84 @@ def parse_kml(text: str) -> list[dict]:
             nm = f"{nm} (#{seen[nm]})"
         else:
             seen[nm] = 1
-        feats = []
-        for ch in node.children:
-            if ch.name != "Placemark":
-                continue
-            wkt = _placemark_geom(ch)
-            if wkt is None and not only_empty:
-                continue
-            f = {
-                "Name": ch.name_element(),
-                "description": ch.description_element(),
-                "wkt": wkt,
-            }
-            f.update(_simple_data_fields(ch))
-            feats.append(f)
-        out.append({"name": nm, "features": feats})
+        out.append((nm, [
+            ch for ch in node.children
+            if ch.name == "Placemark"
+            and (only_empty or _placemark_geom(ch, False) is not None)
+        ]))
     return out
+
+
+def parse_kml(text: str) -> list[dict]:
+    """-> [{'name': layer_name, 'features': [{'Name', 'description',
+    'wkt', fields...}]}] in the reference's layer order."""
+    return [
+        {"name": nm, "features": [
+            {"Name": pm.name_element(),
+             "description": pm.description_element(),
+             "wkt": _placemark_geom(pm, pm.b25d),
+             **_simple_data_fields(pm)}
+            for pm in pms
+        ]}
+        for nm, pms in _layers(text)
+    ]
+
+
+# ---------------------------------------------------------------------------
+# Distributed GPX/KML loader
+# ---------------------------------------------------------------------------
+
+
+def xml_features(raw: bytes) -> list[dict]:
+    """One GPX or KML file (format sniffed from the root element) ->
+    [{'layer', 'wkb', 'name', 'ele'}] with 2-D WKB. GPX rows are the
+    waypoints, routes and tracks layers of gpx.parse_gpx; KML rows are
+    every feature of every layer, under the layer's name. An EMPTY
+    geometry gives wkb None; one from_wkt cannot encode raises
+    ValueError."""
+    if _strip(ET.fromstring(raw).tag) == "gpx":
+        layers = parse_gpx(raw)
+        feats = [(lyr, f.get("name"), f.get("ele"), f["wkt"])
+                 for lyr in ("waypoints", "routes", "tracks")
+                 for f in layers[lyr]]
+    else:
+        feats = [(nm, pm.name_element() or None, None,
+                  _placemark_geom(pm, False))
+                 for nm, pms in _layers(raw) for pm in pms]
+    return [{"layer": lyr, "wkb": None if wkt is None else from_wkt(wkt),
+             "name": name, "ele": ele}
+            for lyr, name, ele, wkt in feats]
+
+
+def read_xml_features(spark, files: list[str],
+                      num_partitions: int | None = None):
+    """[(gpx|kml files)] -> (path, layer, fid, wkb, name, ele); fid numbers
+    a file's rows. One file per task row; a file that fails to decode
+    raises ValueError naming it."""
+    import pandas as pd
+
+    cols = ["path", "layer", "fid", "wkb", "name", "ele"]
+    fdf = spark.createDataFrame([(p,) for p in files], "path: string")
+    if num_partitions:
+        fdf = fdf.repartition(num_partitions)
+
+    def run(batches):
+        for pdf in batches:
+            rows = []
+            for path in pdf["path"]:
+                with open(path, "rb") as fh:
+                    raw = fh.read()
+                try:
+                    feats = xml_features(raw)
+                except ValueError as e:
+                    raise ValueError(f"{path}: {e}") from e
+                rows += [(path, f["layer"], i, f["wkb"], f["name"], f["ele"])
+                         for i, f in enumerate(feats)]
+            yield pd.DataFrame(rows, columns=cols)
+
+    return fdf.mapInPandas(
+        run, "path string, layer string, fid long, wkb binary, "
+        "name string, ele double")
 
 
 # ---------------------------------------------------------------------------

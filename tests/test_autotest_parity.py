@@ -17,7 +17,8 @@ import numpy as np
 import pytest
 
 from gdal_spark.functions import checksum as CK
-from gdal_spark.functions import gridfmts, tiff
+from gdal_spark.functions import tiff
+from gdal_spark.raster.asciigrid import aaig_decode
 from gdal_spark.raster import morph
 
 ALG_DATA = "/root/reference/autotest/alg/data"
@@ -28,8 +29,8 @@ pytestmark = pytest.mark.skipif(
 
 
 def _read_grd(name: str) -> np.ndarray:
-    arr, _, _ = gridfmts.aaigrid_decode(
-        open(os.path.join(ALG_DATA, name), "rb").read()
+    arr, _ = aaig_decode(
+        open(os.path.join(ALG_DATA, name), "rb").read(), datatype="Float64"
     )
     return arr.astype(np.int32)
 

@@ -8,6 +8,7 @@ step geometry properties."""
 from __future__ import annotations
 
 import math
+import struct
 
 import numpy as np
 import pytest
@@ -108,6 +109,17 @@ def test_wkb_circularstring_z():
     # z interpolated monotonically between endpoint values
     assert pts[0, 2] == 10 and pts[-1, 2] == 30
     assert (np.diff(pts[:, 2]) > 0).all()
+
+
+@pytest.mark.parametrize("gtype", [2008, 3008])  # CIRCULARSTRING M / ZM
+def test_wkb_measured_curve_rejected(gtype):
+    ndim = 3 if gtype < 3000 else 4
+    coords = np.array([[0, 0, 5, 1], [1, 1, 6, 1], [2, 0, 7, 1]], float)[:, :ndim]
+    buf = struct.pack("<BII", 1, gtype, 3) + coords.astype("<f8").tobytes()
+    with pytest.raises(ValueError, match="dimensionality"):
+        CV.linearize_wkb(buf)
+    with pytest.raises(ValueError, match="dimensionality"):
+        CV.has_curve_geometry(buf)
 
 
 def test_wkb_compoundcurve():

@@ -1,6 +1,7 @@
-"""Geo-grid format drivers (functions/gridfmts.py): AAIGrid, XYZ, ENVI,
-SRTM HGT — round-trips, georeferencing, nodata, the distributed loader,
-and cross-format conversion."""
+"""Geo-grid formats: AAIGrid (raster/asciigrid.py), ENVI (raster/envi.py),
+XYZ and SRTM HGT (functions/gridfmts.py) — round-trips, georeferencing,
+nodata, the distributed loader, a VRT over an .asc source, and
+cross-format conversion."""
 
 from __future__ import annotations
 
@@ -8,6 +9,9 @@ import numpy as np
 import pytest
 
 from gdal_spark.functions import gridfmts as GF
+from gdal_spark.raster import vrt as V
+from gdal_spark.raster.asciigrid import aaig_decode, aaig_encode
+from gdal_spark.raster.envi import envi_decode, envi_encode
 
 rng = np.random.default_rng(11)
 
@@ -21,8 +25,9 @@ def dem():
 
 def test_aaigrid_roundtrip(dem):
     arr, gt = dem
-    raw = GF.aaigrid_encode(arr, gt, nodata=-9999.0)
-    back, gt2, nod = GF.aaigrid_decode(raw)
+    raw = aaig_encode(arr, gt, nodata=-9999.0)
+    back, meta = aaig_decode(raw, datatype="Float64")
+    gt2, nod = meta["gt"], meta["nodata"]
     np.testing.assert_array_equal(back, arr)
     np.testing.assert_allclose(gt2, gt, atol=1e-12)
     assert nod == -9999.0
@@ -30,7 +35,8 @@ def test_aaigrid_roundtrip(dem):
 
 def test_aaigrid_foreign_header_variants():
     txt = b"""ncols 3\nnrows 2\nxllcenter 10.5\nyllcenter 20.5\ncellsize 1.0\n1 2 3\n4 5 6\n"""
-    arr, gt, nod = GF.aaigrid_decode(txt)
+    arr, meta = aaig_decode(txt, datatype="Float64")
+    gt, nod = meta["gt"], meta["nodata"]
     assert arr.shape == (2, 3) and arr[1, 2] == 6.0
     assert gt[0] == 10.0 and gt[3] == 22.0  # center -> corner conversion
     assert nod is None
@@ -46,8 +52,9 @@ def test_xyz_roundtrip(dem):
 
 def test_envi_roundtrip_and_big_endian(dem):
     arr, gt = dem
-    raw, hdr = GF.envi_encode(arr, gt, nodata=-1.0)
-    back, gt2, nod = GF.envi_decode(raw, hdr)
+    hdr, raw = envi_encode(arr, gt, nodata=-1.0)
+    back, meta = envi_decode(hdr, raw)
+    gt2, nod = meta["gt"], meta["nodata"]
     np.testing.assert_array_equal(back, arr)
     np.testing.assert_allclose(gt2, gt, atol=1e-12)
     assert nod == -1.0
@@ -56,7 +63,7 @@ def test_envi_roundtrip_and_big_endian(dem):
     hdr_be = hdr.replace("data type = 5", "data type = 4").replace(
         "byte order = 0", "byte order = 1"
     )
-    back2, _, _ = GF.envi_decode(be, hdr_be)
+    back2, _ = envi_decode(hdr_be, be)
     np.testing.assert_allclose(back2, arr, atol=1e-2)
 
 
@@ -84,10 +91,11 @@ def test_hgt_roundtrip_and_georef():
 
 def test_cross_format_conversion_preserves_values(dem):
     arr, gt = dem
-    a, agt, _ = GF.aaigrid_decode(GF.aaigrid_encode(arr, gt))
-    x, xgt, _ = GF.xyz_decode(GF.xyz_encode(a, agt))
-    raw, hdr = GF.envi_encode(x, xgt)
-    e, egt, _ = GF.envi_decode(raw, hdr)
+    a, ameta = aaig_decode(aaig_encode(arr, gt), datatype="Float64")
+    x, xgt, _ = GF.xyz_decode(GF.xyz_encode(a, ameta["gt"]))
+    hdr, raw = envi_encode(x, xgt)
+    e, emeta = envi_decode(hdr, raw)
+    egt = emeta["gt"]
     np.testing.assert_array_equal(e, arr)
     np.testing.assert_allclose(egt, gt, atol=1e-9)
 
@@ -96,12 +104,12 @@ def test_read_grid_files_distributed(spark, tmp_path, dem):
     arr, gt = dem
     files = []
     p1 = str(tmp_path / "a.asc")
-    open(p1, "wb").write(GF.aaigrid_encode(arr, gt, nodata=-9999.0))
+    open(p1, "w").write(aaig_encode(arr, gt, nodata=-9999.0))
     files.append((p1, "aaigrid"))
     p2 = str(tmp_path / "b.xyz")
     open(p2, "wb").write(GF.xyz_encode(arr, gt))
     files.append((p2, "xyz"))
-    raw, hdr = GF.envi_encode(arr, gt)
+    hdr, raw = envi_encode(arr, gt)
     p3 = str(tmp_path / "c.dat")
     open(p3, "wb").write(raw)
     open(str(tmp_path / "c.hdr"), "w").write(hdr)
@@ -123,3 +131,22 @@ def test_read_grid_files_distributed(spark, tmp_path, dem):
     got = np.frombuffer(bytes(r["data"]), "<f8").reshape(r["h"], r["w"])
     np.testing.assert_array_equal(got, sq)
     assert rows["aaigrid"]["nodata"] == -9999.0
+
+
+def test_vrt_asc_source_renders_float64_grid(tmp_path, dem):
+    arr, gt = dem
+    open(str(tmp_path / "dem.asc"), "w").write(aaig_encode(arr, gt))
+    h, w = arr.shape
+    xml = f"""<VRTDataset rasterXSize="{w}" rasterYSize="{h}">
+  <VRTRasterBand dataType="Float64" band="1">
+    <SimpleSource>
+      <SourceFilename relativeToVRT="1">dem.asc</SourceFilename>
+      <SourceBand>1</SourceBand>
+      <SrcRect xOff="0" yOff="0" xSize="{w}" ySize="{h}"/>
+      <DstRect xOff="0" yOff="0" xSize="{w}" ySize="{h}"/>
+    </SimpleSource>
+  </VRTRasterBand>
+</VRTDataset>"""
+    out = V.render_vrt(xml, str(tmp_path))
+    assert out.shape == (1, h, w) and out.dtype == np.float64
+    np.testing.assert_array_equal(out[0], arr)

@@ -10,19 +10,20 @@ from gdal_spark import datagen
 from gdal_spark.functions import geom as G
 from gdal_spark.functions import st_catalog as ST
 from gdal_spark.functions import wkb as W
+from gdal_spark.functions.wkt import from_wkt
 
 
 class TestWkt:
     def test_roundtrip_point_line(self):
         p = W.write_point(1.5, -2.25)
-        assert ST.wkb_from_wkt(ST.wkt_from_wkb(p)) == p
+        assert from_wkt(ST.wkt_from_wkb(p)) == p
         ls = W.write_linestring(np.array([[0, 0], [1, 2], [3, 1.5]]))
-        assert ST.wkb_from_wkt(ST.wkt_from_wkb(ls)) == ls
+        assert from_wkt(ST.wkt_from_wkb(ls)) == ls
 
     def test_roundtrip_polygons(self):
         for r in datagen.polygons_pdf(10).itertuples(index=False):
             buf = bytes(r.wkb)
-            back = ST.wkb_from_wkt(ST.wkt_from_wkb(buf))
+            back = from_wkt(ST.wkt_from_wkb(buf))
             assert G.wkb_area(back) == pytest.approx(G.wkb_area(buf), rel=1e-9)
             assert W.bbox(back) == pytest.approx(W.bbox(buf), rel=1e-9)
 
@@ -31,7 +32,7 @@ class TestWkt:
             [[np.array([[0, 0], [2, 0], [2, 2], [0, 2]])],
              [np.array([[5, 5], [7, 5], [7, 7], [5, 7]])]]
         )
-        back = ST.wkb_from_wkt(ST.wkt_from_wkb(mp))
+        back = from_wkt(ST.wkt_from_wkb(mp))
         assert G.wkb_area(back) == pytest.approx(8.0)
 
 

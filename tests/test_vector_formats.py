@@ -46,6 +46,35 @@ def test_wkt_parses_foreign_formatting():
     assert WT.from_wkt("POLYGON EMPTY") is None
 
 
+@pytest.mark.parametrize("txt", [
+    "LINESTRING (0 0, 1 x, 2 2)",
+    "POINT (1 2x)",
+    "POLYGON ((0 0, 1 0, 1 1, 0 0 0))",
+    "MULTIPOINT ((0 0), (1))",
+])
+def test_wkt_malformed_vertex_raises(txt):
+    with pytest.raises(ValueError):
+        WT.from_wkt(txt)
+
+
+def test_wkt_nan_inf_and_z_point():
+    x, y = W.parse(WT.from_wkt("POINT (nan inf)"))[1]
+    assert np.isnan(x) and y == np.inf
+    assert W.parse(WT.from_wkt("POINT (1 2 3)")) == (W.WKB_POINT_Z, (1.0, 2.0, 3.0))
+
+
+def test_wkt_multi_and_collection_kinds():
+    pts = np.array([[0.0, 1.0], [2.5, -3.0]])
+    assert WT.from_wkt("MULTIPOINT ((0 1),(2.5 -3))") == W.write_multipoint(pts)
+    assert WT.from_wkt("MULTIPOINT (0 1, 2.5 -3)") == W.write_multipoint(pts)
+    lines = [np.array([[2, 1], [2.5, 1.5]]), np.array([[3.0, 2.0]])]
+    assert (WT.from_wkt("MULTILINESTRING ((2 1,2.5 1.5),(3 2))")
+            == W.write_multilinestring(lines))
+    gc = WT.from_wkt("GEOMETRYCOLLECTION (POINT (1 2),LINESTRING (0 0,1 1))")
+    assert gc == W.write_collection(
+        [W.write_point(1, 2), W.write_linestring(np.array([[0, 0], [1, 1]]))])
+
+
 # ---- fixture -------------------------------------------------------------
 
 
