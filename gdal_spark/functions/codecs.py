@@ -118,7 +118,8 @@ def png_decode(data: bytes) -> np.ndarray:
     """8-bit PNG decode, all color types + Adam7 interlace (frmts/png
     parity): 0 gray -> (h, w); 2 RGB -> (h, w, 3); 3 palette -> expanded
     (h, w, 3); 4 gray+alpha -> (h, w, 2); 6 RGBA -> (h, w, 4)."""
-    assert data[:8] == PNG_SIG, "not a PNG"
+    if data[:8] != PNG_SIG:
+        raise ValueError("not a PNG")
     pos = 8
     w = h = ctype = interlace = None
     plte = None
@@ -130,9 +131,12 @@ def png_decode(data: bytes) -> np.ndarray:
         pos += 12 + length
         if tag == b"IHDR":
             w, h, depth, ctype, _, _, interlace = struct.unpack(">IIBBBBB", payload)
-            assert depth in (8, 16), "unsupported PNG bit depth"
-            assert ctype in (0, 2, 3, 4, 6), f"unsupported PNG color type {ctype}"
-            assert not (depth == 16 and ctype == 3), "16-bit palette PNG"
+            if depth not in (8, 16):
+                raise ValueError("unsupported PNG bit depth")
+            if ctype not in (0, 2, 3, 4, 6):
+                raise ValueError(f"unsupported PNG color type {ctype}")
+            if depth == 16 and ctype == 3:
+                raise ValueError("16-bit palette PNG")
         elif tag == b"PLTE":
             plte = np.frombuffer(payload, dtype=np.uint8).reshape(-1, 3)
         elif tag == b"IDAT":
@@ -164,7 +168,8 @@ def png_decode(data: bytes) -> np.ndarray:
             return out16.reshape(h, w)
         return out16.reshape(h, w, nsamp)
     if ctype == 3:
-        assert plte is not None, "palette PNG without PLTE"
+        if plte is None:
+            raise ValueError("palette PNG without PLTE")
         return plte[out.reshape(h, w)]
     if nsamp == 1:
         return out.reshape(h, w)

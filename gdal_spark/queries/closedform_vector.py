@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from gdal_spark.operators import layer_algebra as LA
-from gdal_spark.queries.spatial_sql import _box_wkb_udf
+from gdal_spark.queries.spatial_sql import box_wkb_udf
 from gdal_spark.sources.tables import load
 
 
@@ -40,7 +40,7 @@ def _a_boxes(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n_nationkey").alias("poly_id"),
         x0.alias("xmin"), y0.alias("ymin"),
         (x0 + 8.0).alias("xmax"), (y0 + 8.0).alias("ymax"),
-    ).withColumn("wkb", _box_wkb_udf("xmin", "ymin", "xmax", "ymax"))
+    ).withColumn("wkb", box_wkb_udf("xmin", "ymin", "xmax", "ymax"))
 
 
 def _b_boxes(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -50,7 +50,7 @@ def _b_boxes(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("r_regionkey").alias("poly_id"),
         x0.alias("xmin"), F.lit(3.0).alias("ymin"),
         (x0 + 7.0).alias("xmax"), F.lit(37.0).alias("ymax"),
-    ).withColumn("wkb", _box_wkb_udf("xmin", "ymin", "xmax", "ymax"))
+    ).withColumn("wkb", box_wkb_udf("xmin", "ymin", "xmax", "ymax"))
 
 
 _AB_OVERLAP_SQL = """
@@ -190,7 +190,7 @@ def zonal_pixel_boxes(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n_nationkey").alias("poly_id"),
         (kd + 2.5 / 16).alias("xmin"), F.lit(40.0 + 3.5 / 16).alias("ymin"),
         (kd + 10.5 / 16).alias("xmax"), F.lit(40.0 + 12.5 / 16).alias("ymax"),
-    ).withColumn("wkb", _box_wkb_udf("xmin", "ymin", "xmax", "ymax"))
+    ).withColumn("wkb", box_wkb_udf("xmin", "ymin", "xmax", "ymax"))
 
     out = Z.zonal_stats(imgs, polys, res=4, broadcast_polygons=True)
     return out.select(

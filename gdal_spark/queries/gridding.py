@@ -20,8 +20,6 @@ Reference coverage:
 
 from __future__ import annotations
 
-import struct
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -36,6 +34,7 @@ from gdal_spark.queries.spatial_sql import (
     PHI_LON,
     PHI_LAT,
     _lon_lat_cols,
+    box_wkb_udf,
     _lonlat_sql,
 )
 from gdal_spark.sources.tables import load
@@ -230,17 +229,6 @@ def _hilbert_oracle() -> str:
 # --------------------------------------------------------------------------
 
 
-@pandas_udf(T.BinaryType())
-def _box_wkb(xmin: pd.Series, ymin: pd.Series, xmax: pd.Series, ymax: pd.Series) -> pd.Series:
-    def mk(x0, y0, x1, y1):
-        ring = [(x0, y0), (x1, y0), (x1, y1), (x0, y1), (x0, y0)]
-        out = [struct.pack("<BII", 1, 3, 1), struct.pack("<I", 5)]
-        out += [struct.pack("<dd", x, y) for x, y in ring]
-        return b"".join(out)
-
-    return pd.Series([mk(a, b, c, d) for a, b, c, d in zip(xmin, ymin, xmax, ymax)])
-
-
 # disjoint grid: cell (k mod 10, k div 10) * 20, box size <= 12 < 20
 _BOX_COLS = """
     cast(n_nationkey % 10 as double) * 20.0 AS bx,
@@ -263,7 +251,7 @@ def dissolve_boxes(spark: SparkSession, sf_dir: str) -> DataFrame:
     bh = F.lit(4.0) + (F.col("n_nationkey") % 17).cast("double") / 4.0
     boxes = n.select(
         F.col("n_regionkey").alias("rkey"),
-        _box_wkb(bx, by, bx + bw, by + bh).alias("wkb"),
+        box_wkb_udf(bx, by, bx + bw, by + bh).alias("wkb"),
     )
     out = dissolve(boxes, ["rkey"])
     return out.select("rkey", "n_parts", F.round("area", 4).alias("area_r"))
@@ -301,7 +289,7 @@ def ogr_special_fields(spark: SparkSession, sf_dir: str) -> DataFrame:
     boxes = n.select(
         F.col("n_nationkey").alias("fid"),
         F.col("n_name").alias("name"),
-        _box_wkb(bx, by, bx + bw, by + bh).alias("wkb"),
+        box_wkb_udf(bx, by, bx + bw, by + bh).alias("wkb"),
     )
     return boxes.select(
         "fid", "name", F.round(_wkb_area_udf("wkb"), 6).alias("ogr_geom_area")

@@ -16,6 +16,7 @@ from pyspark.sql import types as T
 from gdal_spark import datagen
 from gdal_spark.functions import wkb as W
 from gdal_spark.operators import layer_algebra as LA
+from gdal_spark.queries.spatial_sql import box_wkb_udf
 
 NA, NB = 12, 10
 
@@ -132,20 +133,6 @@ SPARK["st_sql_functions"] = st_sql_functions
 # engine kernels get a full value-hash gate, not just rows-only evidence.
 # --------------------------------------------------------------------------
 
-import struct as _struct
-
-
-@F.pandas_udf(T.BinaryType())
-def _box_wkb_udf(x0: pd.Series, y0: pd.Series, x1: pd.Series, y1: pd.Series) -> pd.Series:
-    def mk(a, b, c, d):
-        ring = [(a, b), (c, b), (c, d), (a, d), (a, b)]
-        out = [_struct.pack("<BII", 1, 3, 1), _struct.pack("<I", 5)]
-        out += [_struct.pack("<dd", x, y) for x, y in ring]
-        return b"".join(out)
-
-    return pd.Series([mk(*t) for t in zip(x0, y0, x1, y1)])
-
-
 # grid: col = k%5, row = k//5, cell pitch 10; even k -> w=10 (edge-touch
 # with the right neighbor), odd k -> w=12 (overlap); h=10 everywhere
 # (vertical neighbors always edge-touch; diagonals corner-touch or
@@ -177,7 +164,7 @@ def st_sql_functions_box(spark: SparkSession, sf_dir: str) -> DataFrame:
     y1 = y0 + 10.0
     boxes = n.select(
         k.alias("k"), x0.alias("x0"), y0.alias("y0"), x1.alias("x1"), y1.alias("y1"),
-        _box_wkb_udf(x0, y0, x1, y1).alias("wkb"),
+        box_wkb_udf(x0, y0, x1, y1).alias("wkb"),
     )
     boxes.createOrReplaceTempView("st_boxes_q")
     return spark.sql(

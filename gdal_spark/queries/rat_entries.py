@@ -202,7 +202,7 @@ def ogr_style_fields(spark: SparkSession, sf_dir: str) -> DataFrame:
     OGR feature-style BRUSH/PEN syntax with a deterministic per-feature
     fill colour (Knuth-hash of the FID); geometry text goes WKB->WKT
     through the engine's parser, not string templating from the fixture."""
-    from gdal_spark.queries.gridding import _box_wkb
+    from gdal_spark.queries.spatial_sql import box_wkb_udf
 
     n = load(spark, sf_dir, "nation")
     k = F.col("n_nationkey")
@@ -219,7 +219,7 @@ def ogr_style_fields(spark: SparkSession, sf_dir: str) -> DataFrame:
     boxes = n.select(
         k.alias("fid"),
         style.alias("ogr_style"),
-        _box_wkb(bx, by, bx + bw, by + bh).alias("wkb"),
+        box_wkb_udf(bx, by, bx + bw, by + bh).alias("wkb"),
     )
     parsed = boxes.withColumn("g", _wkb_to_wkt_udf("wkb"))
     return parsed.select(

@@ -13,8 +13,6 @@ tile edge — probability ~0 with irrational multipliers (verified at sf0.01).
 
 from __future__ import annotations
 
-import struct
-
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -22,6 +20,7 @@ from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
 from gdal_spark.functions import mercator as M
+from gdal_spark.functions import wkb as W
 from gdal_spark.operators import knn as KNN
 from gdal_spark.operators import spatial_join as SJ
 from gdal_spark.sources.tables import load
@@ -121,19 +120,15 @@ def _tile_assignment_oracle() -> str:
 
 
 @pandas_udf(T.BinaryType())
-def _box_wkb_udf(
+def box_wkb_udf(
     xmin: pd.Series, ymin: pd.Series, xmax: pd.Series, ymax: pd.Series
 ) -> pd.Series:
-    def mk(x0, y0, x1, y1):
-        ring = [(x0, y0), (x1, y0), (x1, y1), (x0, y1), (x0, y0)]
-        out = [struct.pack("<BII", 1, 3, 1), struct.pack("<I", 5)]
-        for x, y in ring:
-            out.append(struct.pack("<dd", x, y))
-        return b"".join(out)
-
-    return pd.Series(
-        [mk(a, b, c, d) for a, b, c, d in zip(xmin, ymin, xmax, ymax)]
-    )
+    """Axis-aligned box -> WKB POLYGON, one closed counter-clockwise ring
+    starting at (xmin, ymin)."""
+    return pd.Series([
+        W.write_polygon([[(x0, y0), (x1, y0), (x1, y1), (x0, y1), (x0, y0)]])
+        for x0, y0, x1, y1 in zip(xmin, ymin, xmax, ymax)
+    ])
 
 
 def _nation_boxes(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -147,7 +142,7 @@ def _nation_boxes(spark: SparkSession, sf_dir: str) -> DataFrame:
         ymin.alias("ymin"),
         (xmin + F.lit(6.0) + k).alias("xmax"),
         (ymin + F.lit(4.0) + k / 2.0).alias("ymax"),
-    ).withColumn("wkb", _box_wkb_udf("xmin", "ymin", "xmax", "ymax"))
+    ).withColumn("wkb", box_wkb_udf("xmin", "ymin", "xmax", "ymax"))
 
 
 NATION_BOX_SQL = """

@@ -24,6 +24,8 @@ import struct
 
 import numpy as np
 
+from gdal_spark.raster.rawband import raw_read, raw_write
+
 __all__ = [
     "envi_parse_header", "envi_decode", "envi_encode", "envi_stats_decode",
 ]
@@ -118,10 +120,10 @@ def _rpc_dict(val: str) -> dict:
     return out
 
 
-def envi_decode(hdr_text: str, data: bytes, check_file_size: bool = True
-                ) -> tuple[np.ndarray, dict]:
-    """-> (HxW or HxWxB array, meta). Truncated files are zero-padded to
-    the declared size (the RAW_CHECK_FILE_SIZE=YES read path)."""
+def envi_decode(hdr_text: str, data: bytes) -> tuple[np.ndarray, dict]:
+    """-> (HxW or HxWxB array, meta). Truncated files read as zeros past
+    EOF (GDAL's sparse-ENVI rule) through `rawband.raw_read`, which
+    rejects claims over MAX_RAW_BYTES."""
     hdr = envi_parse_header(hdr_text)
     w = int(hdr["samples"])
     h = int(hdr["lines"])
@@ -132,28 +134,10 @@ def envi_decode(hdr_text: str, data: bytes, check_file_size: bool = True
     bo = ">" if hdr.get("byte_order", "0").strip() == "1" else "<"
     if code not in _DTYPES:
         raise ValueError(f"unsupported ENVI data type {code}")
-    dt = np.dtype(_DTYPES[code]).newbyteorder(bo)
-
     if hdr.get("file_compression", "0").strip() == "1":
         data = gzip.decompress(data)
-    body = data[off:]
-    want = w * h * nb * dt.itemsize
-    if len(body) < want:
-        if not check_file_size:
-            raise ValueError("ENVI file truncated")
-        body = body + b"\x00" * (want - len(body))
-    flat = np.frombuffer(body[:want], dt)
-
-    if interleave == "bip":
-        arr = flat.reshape(h, w, nb)
-    elif interleave == "bil":
-        arr = flat.reshape(h, nb, w).transpose(0, 2, 1)
-    else:  # bsq
-        arr = flat.reshape(nb, h, w).transpose(1, 2, 0)
-    arr = np.ascontiguousarray(arr).astype(
-        np.dtype(_DTYPES[code]).newbyteorder("="), copy=False)
-    if nb == 1:
-        arr = arr[:, :, 0]
+    arr = raw_read(data, h, w, nb, np.dtype(_DTYPES[code]).newbyteorder(bo),
+                   interleave if interleave in ("bil", "bip") else "bsq", off)
 
     meta: dict = {"interleave": interleave.upper(),
                   "dtype": np.dtype(_DTYPES[code]).name}
@@ -237,16 +221,11 @@ def envi_encode(arr: np.ndarray, gt: tuple | None = None,
         arr = arr[:, :, None]
     h, w, nb = arr.shape
     code = _CODES[arr.dtype.newbyteorder("=")]
-    bo = ">" if byte_order else "<"
-    cast = arr.astype(arr.dtype.newbyteorder(bo), copy=False)
     il = interleave.lower()
-    if il == "bip":
-        body = np.ascontiguousarray(cast).tobytes()
-    elif il == "bil":
-        body = np.ascontiguousarray(cast.transpose(0, 2, 1)).tobytes()
-    else:
+    if il not in ("bil", "bip"):
         il = "bsq"
-        body = np.ascontiguousarray(cast.transpose(2, 0, 1)).tobytes()
+    body = raw_write(arr, arr.dtype.newbyteorder(">" if byte_order else "<"),
+                     il)
 
     lines = ["ENVI"]
     lines.append("description = {\n%s}"

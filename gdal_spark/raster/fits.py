@@ -21,6 +21,8 @@ import math
 
 import numpy as np
 
+from gdal_spark.raster.rawband import raw_read, raw_write
+
 __all__ = ["fits_parse_cards", "fits_decode", "fits_encode"]
 
 _IGNORED = {
@@ -171,8 +173,8 @@ def fits_decode(data: bytes, hdu: int | None = None
     nb = int(_parse_value(cards["NAXIS3"])) if naxis == 3 else 1
     if bitpix not in _BITPIX_DT:
         raise ValueError(f"unknown BITPIX {bitpix}")
-    dt = np.dtype(_BITPIX_DT[bitpix])
-    raw = np.frombuffer(data, dt, w * h * nb, dstart).reshape(nb, h, w)
+    raw = raw_read(data, h, w, nb, _BITPIX_DT[bitpix], "bsq", dstart,
+                   zero_fill=False)
 
     bzero = float(_parse_value(cards["BZERO"])) if "BZERO" in cards else 0.0
     bscale = float(_parse_value(cards["BSCALE"])) if "BSCALE" in cards else 1.0
@@ -185,11 +187,10 @@ def fits_decode(data: bytes, hdu: int | None = None
         arr = (raw.astype(np.int64) + 2147483648).astype(np.uint32)
         offset, scale = 0.0, 1.0
     else:
-        arr = raw.astype(dt.newbyteorder("="))
+        arr = raw
         offset, scale = bzero, bscale
 
-    arr = arr[:, ::-1, :]  # FITS rows start at the bottom left
-    arr = np.ascontiguousarray(arr[0] if nb == 1 else arr.transpose(1, 2, 0))
+    arr = np.ascontiguousarray(arr[::-1])  # FITS rows start at the bottom left
 
     meta: dict = {"dtype": arr.dtype.name, "n_hdus": len(hdus)}
     if offset != 0.0 or scale != 1.0:
@@ -270,7 +271,6 @@ def fits_encode(arr: np.ndarray, nodata: float | None = None,
     header = b"".join(cards)
     header += b" " * ((2880 - len(header) % 2880) % 2880)
 
-    body = np.ascontiguousarray(
-        store[::-1].transpose(2, 0, 1)).tobytes()
+    body = raw_write(store[::-1], store.dtype, "bsq")
     body += b"\x00" * ((2880 - len(body) % 2880) % 2880)
     return header + body

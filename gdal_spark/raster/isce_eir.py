@@ -18,6 +18,8 @@ import xml.etree.ElementTree as ET
 
 import numpy as np
 
+from gdal_spark.raster.rawband import raw_read, raw_write
+
 __all__ = ["isce_decode", "isce_encode", "eir_decode"]
 
 _ISCE_DT = {
@@ -59,18 +61,10 @@ def isce_decode(data: bytes, xml_text: str) -> tuple[np.ndarray, dict]:
     if code is None:
         raise ValueError(f"unsupported ISCE DATA_TYPE {dt_name}")
     bo = ">" if props.get("BYTE_ORDER", "l").lower().startswith("b") else "<"
-    dt = np.dtype(bo + code)
     scheme = props.get("SCHEME", "BIP").upper()
-    flat = np.frombuffer(data, dt, w * h * nb)
-    if scheme == "BIL":
-        arr = flat.reshape(h, nb, w).transpose(0, 2, 1)
-    elif scheme == "BSQ":
-        arr = flat.reshape(nb, h, w).transpose(1, 2, 0)
-    else:  # BIP
-        arr = flat.reshape(h, w, nb)
-    arr = np.ascontiguousarray(arr).astype(dt.newbyteorder("="), copy=False)
-    if nb == 1:
-        arr = arr[:, :, 0]
+    arr = raw_read(data, h, w, nb, bo + code,
+                   scheme if scheme in ("BIL", "BSQ") else "BIP",
+                   zero_fill=False)
     meta: dict = {"metadata": props, "scheme": scheme}
     c1 = coords.get("Coordinate1")
     c2 = coords.get("Coordinate2")
@@ -87,8 +81,7 @@ def isce_encode(arr: np.ndarray, gt: tuple | None = None,
         arr = arr[:, :, None]
     h, w, nb = arr.shape
     dt_name = _GDAL2ISCE[arr.dtype.newbyteorder("=").name]
-    body = np.ascontiguousarray(arr).astype(
-        arr.dtype.newbyteorder("<")).tobytes()
+    body = raw_write(arr, arr.dtype.newbyteorder("<"), "bip")
 
     def prop(name, value):
         return ('    <property name="%s">\n        <value>%s</value>\n'
@@ -134,17 +127,9 @@ def eir_decode(hdr_text: str, data: bytes) -> tuple[np.ndarray, dict]:
     if code is None:
         raise ValueError(f"unsupported EIR DATATYPE {dt_name}")
     bo = ">" if kv.get("BYTE_ORDER", "LSB").upper() == "MSB" else "<"
-    dt = np.dtype(bo + code)
     off = int(kv.get("DATA_OFFSET", "0"))
     fmt = kv.get("FORMAT", "BIL").upper()
-    flat = np.frombuffer(data, dt, w * h * nb, off)
-    if fmt == "BIP":
-        arr = flat.reshape(h, w, nb)
-    elif fmt == "BSQ":
-        arr = flat.reshape(nb, h, w).transpose(1, 2, 0)
-    else:  # BIL
-        arr = flat.reshape(h, nb, w).transpose(0, 2, 1)
-    arr = np.ascontiguousarray(arr).astype(dt.newbyteorder("="), copy=False)
-    if nb == 1:
-        arr = arr[:, :, 0]
+    arr = raw_read(data, h, w, nb, bo + code,
+                   fmt if fmt in ("BIP", "BSQ") else "BIL", off,
+                   zero_fill=False)
     return arr, {"format": fmt, "pixel_files": kv.get("PIXEL_FILES")}

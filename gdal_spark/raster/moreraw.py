@@ -22,6 +22,8 @@ import struct
 
 import numpy as np
 
+from gdal_spark.raster.rawband import raw_read, raw_write
+
 __all__ = [
     "ers_parse_header", "ers_decode", "roipac_decode", "genbin_decode",
     "rraster_decode", "rraster_encode", "sigdem_decode", "sigdem_encode",
@@ -160,16 +162,10 @@ def ers_decode(header_text: str, data: bytes) -> tuple[np.ndarray, dict]:
         raise ValueError(f"ERS cell type {celltype!r} not supported")
     bo = ">" if kv.get("byteorder", "LSBFirst").lower().startswith("msb") \
         else "<"
-    dt = np.dtype(bo + base)
-    off = int(kv.get("headeroffset", "0"))
-    total = w * h * nb
-    need = off + total * dt.itemsize
-    if len(data) < need:  # placeholder/truncated data files read as zero
-        data = data + b"\x00" * (need - len(data))
-    arr = np.frombuffer(data, dt, total, off).reshape(h, nb, w)
-    out = np.ascontiguousarray(arr.transpose(0, 2, 1))
-    if nb == 1:
-        out = out[:, :, 0]
+    # placeholder/truncated data files read as zeros (bounded by
+    # rawband.MAX_RAW_BYTES)
+    out = raw_read(data, h, w, nb, bo + base, "bil",
+                   int(kv.get("headeroffset", "0")))
     meta: dict = {}
     if "rasterinfo.nullcellvalue" in kv:
         meta["nodata"] = float(kv["rasterinfo.nullcellvalue"])
@@ -189,7 +185,7 @@ def ers_decode(header_text: str, data: bytes) -> tuple[np.ndarray, dict]:
         pass
     meta["datum"] = kv.get("coordinatespace.datum", "")
     meta["projection"] = kv.get("coordinatespace.projection", "")
-    return out.astype(dt.newbyteorder("=")), meta
+    return out, meta
 
 
 # ---------------------------------------------------------------------------
@@ -221,25 +217,15 @@ def roipac_decode(rsc_text: str, data: bytes, ext: str
     if ext not in _ROIPAC_TYPES:
         raise ValueError(f"ROI_PAC extension {ext!r} not supported")
     base, nb = _ROIPAC_TYPES[ext]
-    dt = np.dtype(base)
-    total = w * h * nb
-    need = total * dt.itemsize
-    if len(data) < need:
-        data = data + b"\x00" * (need - len(data))
-    arr = np.frombuffer(data, dt, total)
-    if nb == 2:  # RMG: per line, band-1 row then band-2 row
-        out = arr.reshape(h, 2, w).transpose(0, 2, 1)
-        out = np.ascontiguousarray(out)
-    else:
-        out = arr.reshape(h, w)
+    # RMG (nb == 2): per line, band-1 row then band-2 row
+    out = raw_read(data, h, w, nb, base, "bil")
     meta: dict = {k.lower(): v for k, v in kv.items()}
     if "X_FIRST" in kv:
         meta["gt"] = (
             float(kv["X_FIRST"]), float(kv.get("X_STEP", "1")), 0.0,
             float(kv["Y_FIRST"]), 0.0, float(kv.get("Y_STEP", "-1")),
         )
-    return out.astype(dt.newbyteorder("=")) if out.dtype.kind != "c" \
-        else out, meta
+    return out, meta
 
 
 # ---------------------------------------------------------------------------
@@ -255,7 +241,8 @@ _GENBIN_TYPES = {
 def genbin_decode(hdr_text: str, data: bytes) -> tuple[np.ndarray, dict]:
     """Generic binary: 'KEY: value' header; BSQ/BIL/BIP interleave.
     BYTE_ORDER 'NA' or 'M' reads big-endian (the reference treats only
-    'I'/'L*' as little-endian). Truncated data zero-pads."""
+    'I'/'L*' as little-endian). Truncated data reads as zeros through
+    `rawband.raw_read` (bounded by MAX_RAW_BYTES)."""
     kv = {}
     for line in hdr_text.splitlines():
         if ":" in line:
@@ -271,27 +258,15 @@ def genbin_decode(hdr_text: str, data: bytes) -> tuple[np.ndarray, dict]:
         raise ValueError(f"GenBin datatype {kv.get('DATATYPE')!r}")
     border = kv.get("BYTE_ORDER", "NA").upper()
     bo = "<" if border.startswith("I") or border.startswith("L") else ">"
-    dt = np.dtype(bo + base)
-    total = w * h * nb
-    need = total * dt.itemsize
-    if len(data) < need:
-        data = data + b"\x00" * (need - len(data))
-    arr = np.frombuffer(data, dt, total)
     inter = kv.get("INTERLEAVING", "BSQ").upper()
-    if nb == 1:
-        out = arr.reshape(h, w)
-    elif inter == "BIL":
-        out = np.ascontiguousarray(arr.reshape(h, nb, w).transpose(0, 2, 1))
-    elif inter == "BIP":
-        out = arr.reshape(h, w, nb)
-    else:
-        out = np.ascontiguousarray(arr.reshape(nb, h, w).transpose(1, 2, 0))
+    out = raw_read(data, h, w, nb, bo + base,
+                   inter if inter in ("BIL", "BIP") else "BSQ")
     meta: dict = {k.lower(): v for k, v in kv.items()}
     if "UL_X_COORDINATE" in kv and "PIXEL_WIDTH" in kv:
         pw, ph = float(kv["PIXEL_WIDTH"]), float(kv["PIXEL_HEIGHT"])
         meta["gt"] = (float(kv["UL_X_COORDINATE"]), pw, 0.0,
                       float(kv["UL_Y_COORDINATE"]), 0.0, -ph)
-    return out.astype(dt.newbyteorder("=")), meta
+    return out, meta
 
 
 # ---------------------------------------------------------------------------
@@ -321,17 +296,10 @@ def rraster_decode(grd_text: str, gri: bytes) -> tuple[np.ndarray, dict]:
     if base is None:
         raise ValueError(f"RRASTER datatype {kv['datatype']!r}")
     bo = ">" if kv.get("byteorder", "little").lower() == "big" else "<"
-    dt = np.dtype(bo + base)
-    arr = np.frombuffer(gri, dt, w * h * nb)
     order = kv.get("bandorder", "BIL").upper()
-    if nb == 1:
-        out = arr.reshape(h, w)
-    elif order == "BIL":
-        out = np.ascontiguousarray(arr.reshape(h, nb, w).transpose(0, 2, 1))
-    elif order == "BIP":
-        out = arr.reshape(h, w, nb)
-    else:
-        out = np.ascontiguousarray(arr.reshape(nb, h, w).transpose(1, 2, 0))
+    out = raw_read(gri, h, w, nb, bo + base,
+                   order if order in ("BIL", "BIP") else "BSQ",
+                   zero_fill=False)
     xmin, xmax = float(kv["xmin"]), float(kv["xmax"])
     ymin, ymax = float(kv["ymin"]), float(kv["ymax"])
     meta: dict = {
@@ -341,7 +309,7 @@ def rraster_decode(grd_text: str, gri: bytes) -> tuple[np.ndarray, dict]:
     nod = kv.get("nodatavalue", "NA")
     if nod not in ("", "NA"):
         meta["nodata"] = float(nod)
-    return out.astype(dt.newbyteorder("=")), meta
+    return out, meta
 
 
 def rraster_encode(arr: np.ndarray, gt: tuple | None = None,
@@ -356,7 +324,6 @@ def rraster_encode(arr: np.ndarray, gt: tuple | None = None,
         np.dtype(np.uint8): "u1", np.dtype(np.int16): "i2",
         np.dtype(np.int32): "i4", np.dtype(np.float32): "f4",
     }.get(arr.dtype, "f8")
-    dt = np.dtype("<" + base)
     if gt is None:
         gt = (0.0, 1.0, 0.0, float(h), 0.0, -1.0)
     xmin, xmax = gt[0], gt[0] + gt[1] * w
@@ -386,10 +353,7 @@ def rraster_encode(arr: np.ndarray, gt: tuple | None = None,
         "[description]",
         "layername=band",
     ]) + "\n"
-    body = np.ascontiguousarray(
-        arr3.transpose(0, 2, 1).astype(dt)
-    ).tobytes()
-    return grd, body
+    return grd, raw_write(arr, "<" + base, "bil")
 
 
 # ---------------------------------------------------------------------------
@@ -514,16 +478,12 @@ def byn_decode(data: bytes) -> tuple[np.ndarray, dict]:
         dt = np.dtype(bo + "i4")
     else:
         raise ValueError(f"BYN nSizeOf {sizeof}")
-    total = rows * cols
-    need = 80 + total * dt.itemsize
-    if len(data) < need:
-        data = data + b"\x00" * (need - len(data))
-    arr = np.frombuffer(data, dt, total, 80).reshape(rows, cols)
+    arr = raw_read(data, rows, cols, 1, dt, "bsq", 80)
     gt = ((w_ - dlo / 2.0) / 3600.0, dlo / 3600.0, 0.0,
           (n + dla / 2.0) / 3600.0, 0.0, -dla / 3600.0)
     meta = {"gt": gt, "factor": factor, "vdatum": vdatum,
             "nodata": 32767.0 if sizeof == 2 else 9999.0 * (factor or 1.0)}
-    return arr.astype(dt.newbyteorder("=")), meta
+    return arr, meta
 
 
 # ---------------------------------------------------------------------------
@@ -637,13 +597,8 @@ def ace2_decode(data: bytes, filename: str) -> tuple[np.ndarray, dict]:
     if size is None:
         size = int((len(data) // dt.itemsize) ** 0.5)
         cell = 15.0 / size  # 15-degree tiles
-    total = size * size
-    need = total * dt.itemsize
-    if len(data) < need:
-        data = data + b"\x00" * (need - len(data))
-    arr = np.frombuffer(data, dt, total).reshape(size, size)
     gt = (float(lon), cell, 0.0, lat + size * cell, 0.0, -cell)
-    return arr.astype(dt.newbyteorder("=")), {"gt": gt}
+    return raw_read(data, size, size, 1, dt, "bsq"), {"gt": gt}
 
 
 # ---------------------------------------------------------------------------
@@ -653,7 +608,8 @@ def ace2_decode(data: bytes, filename: str) -> tuple[np.ndarray, dict]:
 def snodas_decode(hdr_text: str, dat: bytes | None
                   ) -> tuple[np.ndarray, dict]:
     """SNODAS: 'Key: value' header; int16 big-endian .dat named by
-    'Data file pathname'. A missing/placeholder .dat reads as zeros."""
+    'Data file pathname'. A missing/placeholder .dat reads as zeros
+    through `rawband.raw_read` (bounded by MAX_RAW_BYTES)."""
     kv = {}
     for line in hdr_text.splitlines():
         if ":" in line:
@@ -668,12 +624,7 @@ def snodas_decode(hdr_text: str, dat: bytes | None
     dx = float(kv["x-axis resolution"])
     dy = float(kv["y-axis resolution"])
     nodata = float(kv.get("no data value", "-9999"))
-    total = w * h
-    body = dat or b""
-    need = total * 2
-    if len(body) < need:
-        body = body + b"\x00" * (need - len(body))
-    arr = np.frombuffer(body, ">i2", total).reshape(h, w).astype("=i2")
+    arr = raw_read(dat or b"", h, w, 1, ">i2", "bsq")
     meta = {
         "gt": (xmin, dx, 0.0, ymax, 0.0, -dy),
         "nodata": nodata,
@@ -692,7 +643,8 @@ def snodas_decode(hdr_text: str, dat: bytes | None
 def ndf_read(header_text: str, files: dict[str, bytes]
              ) -> tuple[list[np.ndarray], dict]:
     """NDF: 'KEY=VALUE;' header; bands via BANDn_FILENAME (or .In
-    extension fallback); BYTE BSQ pixels. Short band files zero-pad."""
+    extension fallback); BYTE BSQ pixels. Short band files read as zeros
+    through `rawband.raw_read` (bounded by MAX_RAW_BYTES)."""
     kv = {}
     for line in header_text.splitlines():
         line = line.strip().rstrip(";")
@@ -711,11 +663,7 @@ def ndf_read(header_text: str, files: dict[str, bytes]
         key = lower.get(name.lower()) if name else None
         if key is None:
             continue
-        raw = files[key]
-        need = w * h
-        if len(raw) < need:
-            raw = raw + b"\x00" * (need - len(raw))
-        bands.append(np.frombuffer(raw, np.uint8, need).reshape(h, w))
+        bands.append(raw_read(files[key], h, w, 1, np.uint8, "bsq"))
     if not bands:
         raise ValueError("NDF: no band files found")
     return bands, kv
@@ -962,12 +910,7 @@ def lcp_decode(data: bytes) -> tuple[np.ndarray, dict]:
         slots += [6, 7, 8]
     if have_ground:
         slots += [9, 10]
-    nb = len(slots)
-    total = w * h * nb
-    need = 7316 + total * 2
-    if len(data) < need:
-        data = data + b"\x00" * (need - len(data))
-    arr = np.frombuffer(data, "<i2", total, 7316).reshape(h, w, nb)
+    arr = raw_read(data, h, w, len(slots), "<i2", "bip", 7316)
     meta: dict = {
         "gt": (west, cellx, 0.0, north, 0.0, -celly),
         "LATITUDE": str(lat),
@@ -1009,4 +952,4 @@ def lcp_decode(data: bytes) -> tuple[np.ndarray, dict]:
         md[f"{pfx}_FILE"] = fname
         bands_md.append(md)
     meta["bands"] = bands_md
-    return np.ascontiguousarray(arr).astype("=i2"), meta
+    return arr, meta

@@ -23,6 +23,8 @@ import struct
 
 import numpy as np
 
+from gdal_spark.raster.rawband import raw_layout, raw_read
+
 __all__ = ["odl_parse", "pds_open", "isis2_open", "isis3_open"]
 
 
@@ -123,24 +125,12 @@ def _pds_dtype(sample_type: str, bits: int) -> np.dtype:
     return np.dtype(f"{bo}{kind}{size}")
 
 
-def _reshape_bands(arr: np.ndarray, h: int, w: int, nb: int,
-                   storage: str) -> np.ndarray:
-    if nb == 1:
-        return arr.reshape(h, w)
-    s = storage.upper()
-    if s.startswith("LINE"):  # LINE_INTERLEAVED == BIL
-        return np.ascontiguousarray(
-            arr.reshape(h, nb, w).transpose(0, 2, 1))
-    if s.startswith("SAMPLE"):  # SAMPLE_INTERLEAVED == BIP
-        return arr.reshape(h, w, nb)
-    return np.ascontiguousarray(arr.reshape(nb, h, w).transpose(1, 2, 0))
-
-
 def pds_open(data: bytes, siblings: dict[str, bytes] | None = None,
              proj_offset_shift: float = 0.5) -> tuple[np.ndarray, dict]:
     """PDS3 attached or detached-label image. `siblings` supplies
     detached data files by (case-insensitive) name. Truncated imagery
-    zero-pads. Returns (array, meta{gt, scale, offset, nodata, ...})."""
+    reads as zeros through `rawband.raw_read` (bounded by MAX_RAW_BYTES).
+    Returns (array, meta{gt, scale, offset, nodata, ...})."""
     head = data[:32768].decode("latin-1", "replace")
     if "PDS_VERSION_ID" not in head and "NJPL1I" not in head \
             and "CCSD" not in head:
@@ -180,23 +170,20 @@ def pds_open(data: bytes, siblings: dict[str, bytes] | None = None,
     bits = int(_num(kv.get("IMAGE.SAMPLE_BITS"), 8))
     stype = kv.get("IMAGE.SAMPLE_TYPE", "UNSIGNED_INTEGER")
     dt = _pds_dtype(stype, bits)
+    storage = kv.get("IMAGE.BAND_STORAGE_TYPE", "BAND_SEQUENTIAL").upper()
+    layout = "bil" if storage.startswith("LINE") else \
+        "bip" if storage.startswith("SAMPLE") else "bsq"
     prefix = int(_num(kv.get("IMAGE.LINE_PREFIX_BYTES"), 0))
     suffix = int(_num(kv.get("IMAGE.LINE_SUFFIX_BYTES"), 0))
-    rowbytes = prefix + w * dt.itemsize * (nb if nb > 1 else 1) + suffix
-    need = offset + rowbytes * h
-    if len(body) < need:
-        body = body + b"\x00" * (need - len(body))
     if prefix or suffix:
-        rows = []
-        for y in range(h):
-            base = offset + y * rowbytes + prefix
-            rows.append(np.frombuffer(body, dt, w * nb, base))
-        arr = np.concatenate(rows)
+        # whole lines as bytes, then strip each line's prefix and suffix
+        rowbytes = prefix + w * nb * dt.itemsize + suffix
+        rows = raw_read(body, h, rowbytes, 1, np.uint8, "bsq", offset)
+        flat = np.ascontiguousarray(rows[:, prefix:rowbytes - suffix])
+        out = raw_layout(flat.view(dt).ravel(), h, w, nb, layout)
+        out = out.astype(dt.newbyteorder("="))
     else:
-        arr = np.frombuffer(body, dt, w * h * nb, offset)
-    out = _reshape_bands(
-        arr, h, w, nb, kv.get("IMAGE.BAND_STORAGE_TYPE", "BAND_SEQUENTIAL")
-    )
+        out = raw_read(body, h, w, nb, dt, layout, offset)
     meta: dict = {
         "scale": _num(kv.get("IMAGE.SCALING_FACTOR"), 1.0),
         "offset": _num(kv.get("IMAGE.OFFSET"), 0.0),
@@ -225,7 +212,7 @@ def pds_open(data: bytes, siblings: dict[str, bytes] | None = None,
             (yul + proj_offset_shift) * dim * 1.0, 0.0, -dim,
         )
         meta["map_projection_type"] = kv.get(pfx + "MAP_PROJECTION_TYPE", "")
-    return out.astype(dt.newbyteorder("=")), meta
+    return out, meta
 
 
 # ---------------------------------------------------------------------------
@@ -262,22 +249,16 @@ def isis2_open(data: bytes) -> tuple[np.ndarray, dict]:
     base = _ISIS2_TYPES.get(ctype)
     if base is None:
         raise ValueError(f"ISIS2 core type {ctype!r}")
-    dt = np.dtype(f"{base}{nbytes}")
-    total = w * h * nb
-    need = offset + total * dt.itemsize
-    if len(data) < need:
-        data = data + b"\x00" * (need - len(data))
-    arr = np.frombuffer(data, dt, total, offset)
     # axis order of CORE_ITEMS is (fastest..slowest); (SAMPLE,LINE,BAND)
     # means sample varies fastest -> BSQ
-    out = _reshape_bands(arr, h, w, nb, "BAND_SEQUENTIAL")
+    out = raw_read(data, h, w, nb, f"{base}{nbytes}", "bsq", offset)
     meta = {
         "base": _num(kv.get("QUBE.CORE_BASE"), 0.0),
         "multiplier": _num(kv.get("QUBE.CORE_MULTIPLIER"), 1.0),
         "nodata": _num(kv.get("QUBE.CORE_NULL")),
         "target": kv.get("QUBE.TARGET_NAME", ""),
     }
-    return out.astype(dt.newbyteorder("=")), meta
+    return out, meta
 
 
 # ---------------------------------------------------------------------------
@@ -295,7 +276,6 @@ def isis3_open(data: bytes, siblings: dict[str, bytes] | None = None
                ) -> tuple[np.ndarray, dict]:
     """ISIS3 cube (frmts/pds/isis3dataset.cpp): PVL IsisCube/Core with
     BandSequential or Tile format; detached cores via ^Core = file."""
-    head = data[:256].decode("latin-1", "replace")
     if "IsisCube" not in data[:4096].decode("latin-1", "replace"):
         raise ValueError("not an ISIS3 cube")
     kv = odl_parse(data.decode("latin-1", "replace"))
@@ -326,34 +306,17 @@ def isis3_open(data: bytes, siblings: dict[str, bytes] | None = None
         th = int(_num(kv.get(pfx + "TileLines"), h))
         ntx = (w + tw - 1) // tw
         nty = (h + th - 1) // th
-        tilesz = tw * th * dt.itemsize
-        need = start + ntx * nty * nb * tilesz
-        if len(body) < need:
-            body = body + b"\x00" * (need - len(body))
-        out = np.zeros((nb, nty * th, ntx * tw), dt)
-        pos = start
-        for b in range(nb):
-            for ty in range(nty):
-                for tx in range(ntx):
-                    tile = np.frombuffer(body, dt, tw * th, pos)
-                    out[b, ty * th:(ty + 1) * th, tx * tw:(tx + 1) * tw] = \
-                        tile.reshape(th, tw)
-                    pos += tilesz
-        out = out[:, :h, :w].transpose(1, 2, 0)
-        if nb == 1:
-            out = out[:, :, 0]
-        out = np.ascontiguousarray(out)
+        # band-major stream of row-major th x tw tiles
+        tiles = raw_read(body, nb * nty * ntx, th * tw, 1, dt, "bsq", start)
+        cube = tiles.reshape(nb, nty, ntx, th, tw).transpose(0, 1, 3, 2, 4)
+        cube = cube.reshape(nb, nty * th, ntx * tw)[:, :h, :w]
+        out = raw_layout(cube.ravel(), h, w, nb, "bsq")
     else:
-        total = w * h * nb
-        need = start + total * dt.itemsize
-        if len(body) < need:
-            body = body + b"\x00" * (need - len(body))
-        arr = np.frombuffer(body, dt, total, start)
-        out = _reshape_bands(arr, h, w, nb, "BAND_SEQUENTIAL")
+        out = raw_read(body, h, w, nb, dt, "bsq", start)
     meta = {
         "base": _num(kv.get(pfx + "Pixels.Base"), 0.0),
         "multiplier": _num(kv.get(pfx + "Pixels.Multiplier"), 1.0),
         "target": kv.get("IsisCube.Instrument.TargetName", ""),
         "format": fmt,
     }
-    return out.astype(dt.newbyteorder("=")), meta
+    return out, meta

@@ -30,6 +30,8 @@ import struct
 
 import numpy as np
 
+from gdal_spark.raster.rawband import raw_read, raw_write
+
 __all__ = [
     "lan_decode", "gsc_decode", "jdem_decode", "ctg_decode", "paux_decode",
     "doq1_decode", "doq2_decode", "mff_read", "hkv_read",
@@ -61,26 +63,23 @@ def lan_decode(data: bytes) -> tuple[np.ndarray, dict]:
     ulx, uly, pxw, pxh = struct.unpack(bo + "4f", data[112:128])
     gt = (ulx - pxw * 0.5, pxw, 0.0, uly + pxh * 0.5, 0.0, -pxh)
     meta = {"gt": gt, "coordsys": struct.unpack(bo + "h", data[88:90])[0]}
-    body = data[128:]
-    if pixtype == 1:  # 4-bit: rows of nbands half-width byte runs
-        half = w // 2 + (w & 1)
-        out = np.empty((h, w, nbands), dtype=np.uint8)
-        for y in range(h):
-            for b in range(nbands):
-                off = (y * w * nbands) // 2 + (b * w) // 2
-                row = np.frombuffer(body, np.uint8, half, off)
-                px = np.empty(half * 2, np.uint8)
-                px[0::2] = row >> 4
-                px[1::2] = row & 0x0F
-                out[y, :, b] = px[:w]
-    else:
+    if pixtype != 1:
+        # the LAN reader keeps the file's byte order in its output dtype
         dt = np.dtype(bo + ("i2" if pixtype == 2 else "u1"))
-        n = w * nbands
-        arr = np.frombuffer(body, dt, h * n).reshape(h, nbands, w)
-        out = np.ascontiguousarray(arr.transpose(0, 2, 1))
-    if nbands == 1:
-        out = out[:, :, 0]
-    return out, meta
+        out = raw_read(data, h, w, nbands, dt, "bil", 128, zero_fill=False)
+        return out.astype(dt, copy=False), meta
+    body = data[128:]  # 4-bit: rows of nbands half-width byte runs
+    half = w // 2 + (w & 1)
+    out = np.empty((h, w, nbands), dtype=np.uint8)
+    for y in range(h):
+        for b in range(nbands):
+            off = (y * w * nbands) // 2 + (b * w) // 2
+            row = np.frombuffer(body, np.uint8, half, off)
+            px = np.empty(half * 2, np.uint8)
+            px[0::2] = row >> 4
+            px[1::2] = row & 0x0F
+            out[y, :, b] = px[:w]
+    return (out[:, :, 0] if nbands == 1 else out), meta
 
 
 # ---------------------------------------------------------------------------
@@ -302,8 +301,8 @@ def doq1_decode(data: bytes) -> tuple[np.ndarray, dict]:
 def doq2_decode(data: bytes) -> tuple[np.ndarray, dict]:
     """DOQ2 new-style: BEGIN_USGS_DOQ_HEADER keyword block, then raw
     bytes. BAND_ORGANIZATION BIP => pixel-interleaved; BYTE_COUNT =
-    header skip. Truncated data is zero-padded (RawRasterBand reads of
-    rows past EOF fail per-block; whole rows present decode fine)."""
+    header skip. Truncated data reads as zeros through
+    `rawband.raw_read` (bounded by MAX_RAW_BYTES)."""
     if not data.startswith(b"BEGIN_USGS_DOQ_HEADER"):
         raise ValueError("not a DOQ2 file")
     # header is newline-separated keyword lines up to END_USGS_DOQ_HEADER
@@ -346,14 +345,10 @@ def doq2_decode(data: bytes) -> tuple[np.ndarray, dict]:
         raise ValueError("not a coherent DOQ2 file")
     nbands = n_content if n_content >= 2 else bpp
     pixsz = bpp * nbands if n_content >= 2 else bpp
-    body = data[skip:]
-    total = w * h * pixsz
-    if len(body) < total:  # tolerate truncated fixtures: pad with zeros
-        body = body + b"\x00" * (total - len(body))
-    arr = np.frombuffer(body, np.uint8, total).reshape(h, w, pixsz)
+    arr = raw_read(data, h, w, pixsz, np.uint8, "bip", skip)
     meta["gt"] = (ulx, res, 0.0, uly, 0.0, -res)
     meta["interleave"] = "BIP" if interleave == 4 else "BSQ"
-    return (arr[:, :, 0] if pixsz == 1 else arr), meta
+    return arr, meta
 
 
 def _doq2_tokens(line: str) -> list[str]:
@@ -386,7 +381,9 @@ def mff_read(hdr_text: str, band_files: dict[str, bytes]) -> tuple[list[np.ndarr
     """MFF: .hdr `KEY = VALUE` lines (IMAGE_LINES / LINE_SAMPLES /
     BYTE_ORDER LSB|MSB / tile_size_rows / tile_size_columns); band files
     keyed by extension: first letter b/i/j/r/x = type, digits = band
-    index. Tiled layout: row-major tiles, each tile_rows x tile_cols."""
+    index. Tiled layout: row-major tiles, each tile_rows x tile_cols.
+    Short band files read as zeros through `rawband.raw_read` (bounded by
+    MAX_RAW_BYTES)."""
     kv = {}
     for line in hdr_text.splitlines():
         if "=" in line:
@@ -405,28 +402,18 @@ def mff_read(hdr_text: str, band_files: dict[str, bytes]) -> tuple[list[np.ndarr
         tchar = ext[0].lower()
         if tchar not in _MFF_EXT_TYPES:
             continue
-        dt = np.dtype(bo + _MFF_EXT_TYPES[tchar])
+        dt = bo + _MFF_EXT_TYPES[tchar]
         raw = band_files[ext]
         if tiled:
             ntx = (w + tc - 1) // tc
             nty = (h + tr - 1) // tr
-            band = np.zeros((nty * tr, ntx * tc), dt)
-            tilesz = tr * tc * dt.itemsize
-            for ty in range(nty):
-                for tx in range(ntx):
-                    off = (ty * ntx + tx) * tilesz
-                    chunk = raw[off:off + tilesz]
-                    if len(chunk) < tilesz:
-                        chunk = chunk + b"\x00" * (tilesz - len(chunk))
-                    band[ty * tr:(ty + 1) * tr, tx * tc:(tx + 1) * tc] = \
-                        np.frombuffer(chunk, dt).reshape(tr, tc)
-            band = band[:h, :w]
+            tiles = raw_read(raw, nty * ntx, tr * tc, 1, dt, "bsq")
+            band = tiles.reshape(nty, ntx, tr, tc).transpose(0, 2, 1, 3)
+            band = np.ascontiguousarray(
+                band.reshape(nty * tr, ntx * tc)[:h, :w])
         else:
-            need = h * w * dt.itemsize
-            if len(raw) < need:
-                raw = raw + b"\x00" * (need - len(raw))
-            band = np.frombuffer(raw, dt, h * w).reshape(h, w)
-        bands.append(band.astype(dt.newbyteorder("=")))
+            band = raw_read(raw, h, w, 1, dt, "bsq")
+        bands.append(band)
     if not bands:
         raise ValueError("MFF: no band files found")
     meta = {k: v for k, v in kv.items()}
@@ -459,19 +446,12 @@ def hkv_read(attrib_text: str, image_data: bytes) -> tuple[np.ndarray, dict]:
         base = {8: "i1", 16: "i2", 32: "i4"}[bits]
     else:
         base = {8: "u1", 16: "u2", 32: "u4"}[bits]
-    dt = np.dtype(bo + base)
     inter = kv.get("channel.interleave", "pixel")
-    total = h * w * nb
-    arr = np.frombuffer(image_data, dt, total)
-    if inter == "pixel":
-        out = arr.reshape(h, w, nb)
-    elif inter == "sequential":
-        out = arr.reshape(nb, h, w).transpose(1, 2, 0)
-    else:
+    layout = {"pixel": "bip", "sequential": "bsq"}.get(inter)
+    if layout is None:
         raise ValueError(f"HKV interleave {inter!r} not supported")
-    if nb == 1:
-        out = out[:, :, 0]
-    return np.ascontiguousarray(out).astype(dt.newbyteorder("=")), kv
+    return raw_read(image_data, h, w, nb, bo + base, layout,
+                    zero_fill=False), kv
 
 
 # ---------------------------------------------------------------------------
@@ -852,7 +832,8 @@ def fast_read(header_text: str, files: dict[str, bytes], header_name: str
               ) -> tuple[list[np.ndarray], dict]:
     """EOSAT FAST: fixed-layout ASCII administrative record + raw band
     files. `files` maps sibling filenames to bytes (case preserved;
-    lookups are case-insensitive). Short band files zero-pad."""
+    lookups are case-insensitive). Short band files read as zeros through
+    `rawband.raw_read` (bounded by MAX_RAW_BYTES)."""
     header = header_text
     if "ACQUISITION DATE =" not in header[:1024]:
         raise ValueError("not a FAST header")
@@ -875,15 +856,7 @@ def fast_read(header_text: str, files: dict[str, bytes], header_name: str
         key = lower.get(name.lower())
         if key is None:
             continue
-        raw = files[key]
-        need = w * h * dt.itemsize
-        if len(raw) < need:
-            raw = raw + b"\x00" * (need - len(raw))
-        bands.append(
-            np.frombuffer(raw, dt, w * h).reshape(h, w).astype(
-                dt.newbyteorder("=")
-            )
-        )
+        bands.append(raw_read(files[key], h, w, 1, dt, "bsq"))
     if not bands:
         raise ValueError("FAST: no band files found")
     zone = int(_fast_value(header, "USGS MAP ZONE", 3) or 0)
@@ -984,18 +957,10 @@ def ehdr_decode(hdr_text: str, data: bytes, ext: str = "bil"
         base, nbits = ("i1" if pixtype == "S" else "u1"), 8
     else:
         raise ValueError(f"EHdr NBITS {nbits} not supported")
-    dt = np.dtype(bo + base)
     layout = kv.get("layout", "BIL").upper()
-    total = w * h * nbands
-    arr = np.frombuffer(data, dt, total)
-    if nbands == 1:
-        out = arr.reshape(h, w)
-    elif layout == "BIL":
-        out = arr.reshape(h, nbands, w).transpose(0, 2, 1)
-    elif layout == "BIP":
-        out = arr.reshape(h, w, nbands)
-    else:  # BSQ
-        out = arr.reshape(nbands, h, w).transpose(1, 2, 0)
+    out = raw_read(data, h, w, nbands, bo + base,
+                   layout if layout in ("BIL", "BIP") else "BSQ",
+                   zero_fill=False)
     meta: dict = {}
     if nodata is not None:
         meta["nodata"] = nodata
@@ -1008,7 +973,7 @@ def ehdr_decode(hdr_text: str, data: bytes, ext: str = "bil"
         elif "xllcorner" in kv:
             meta["gt"] = (float(kv["xllcorner"]), cx, 0.0,
                           float(kv["yllcorner"]) + cy * h, 0.0, -cy)
-    return np.ascontiguousarray(out).astype(dt.newbyteorder("=")), meta
+    return out, meta
 
 
 def ehdr_encode(arr: np.ndarray, gt: tuple | None = None,
@@ -1045,10 +1010,7 @@ def ehdr_encode(arr: np.ndarray, gt: tuple | None = None,
     ]
     if nodata is not None:
         lines.append(f"NODATA         {nodata:.8g}")
-    body = np.ascontiguousarray(
-        arr.transpose(0, 2, 1).astype(dt)
-    ).tobytes()
-    return "\n".join(lines) + "\n", body
+    return "\n".join(lines) + "\n", raw_write(arr, dt, "bil")
 
 
 # ---------------------------------------------------------------------------

@@ -25,6 +25,8 @@ from __future__ import annotations
 
 import numpy as np
 
+from gdal_spark.raster.rawband import raw_layout, raw_read, raw_write
+
 __all__ = ["vicar_label", "vicar_decode", "vicar_encode",
            "vicar_prefix_rows"]
 
@@ -251,18 +253,15 @@ def vicar_decode(data: bytes) -> tuple[np.ndarray, dict]:
     intfmt = str(label.get("INTFMT", "LOW")).upper()
     realfmt = str(label.get("REALFMT", "VAX")).upper()
 
-    if org == "BSQ":
-        n1, n2, n3 = ns, nl, nb
-    elif org == "BIL":
-        n1, n2, n3 = ns, nb, nl
-    else:  # BIP
-        n1, n2, n3 = nb, ns, nl
-    n_rec = n2 * n3
-    body = data[lblsize + recsize * nlb:]
-    want = recsize * n_rec
-    if len(body) < want:
-        body = body + b"\x00" * (want - len(body))
-    rec = np.frombuffer(body[:want], np.uint8).reshape(n_rec, recsize)
+    # records of N1 samples: BSQ/BIL records are image lines of one band,
+    # BIP records are one pixel's bands
+    if org in ("BSQ", "BIL"):
+        layout, n1, n_rec = org.lower(), ns, nl * nb
+    else:
+        layout, n1, n_rec = "bip", nb, nl * ns
+    # a short file reads as zeros (bounded by rawband.MAX_RAW_BYTES)
+    rec = raw_read(data, n_rec, recsize, 1, np.uint8, "bsq",
+                   lblsize + recsize * nlb)
     pix = np.ascontiguousarray(rec[:, nbb:nbb + n1 * isz])
 
     if fmt in ("REAL", "DOUB", "COMP", "COMPLEX"):
@@ -270,18 +269,8 @@ def vicar_decode(data: bytes) -> tuple[np.ndarray, dict]:
     else:
         bo = ">" if intfmt == "HIGH" else "<"
         flat = np.frombuffer(pix.tobytes(), bo + code, n_rec * n1)
-    cube = flat.reshape(n3, n2, n1)
-    if org == "BSQ":
-        arr = cube  # (nb, nl, ns)
-        arr = arr.transpose(1, 2, 0)
-    elif org == "BIL":
-        arr = cube.transpose(0, 2, 1)  # (nl, ns, nb)
-    else:
-        arr = cube  # (nl, ns, nb)
-    arr = np.ascontiguousarray(arr)
+    arr = raw_layout(flat, nl, ns, nb, layout)
     arr = arr.astype(arr.dtype.newbyteorder("="), copy=False)
-    if nb == 1:
-        arr = arr[:, :, 0]
 
     meta: dict = {"label": label, "format": fmt, "org": org}
     # nodata by format (VICAR_NULL1/2/3)
@@ -414,6 +403,5 @@ def vicar_encode(arr: np.ndarray, bltype: str = "",
             lblsize = cand
             break
     hdr = ("LBLSIZE=%d  " % lblsize + body).ljust(lblsize, " ")
-    pix = np.ascontiguousarray(
-        arr.transpose(2, 0, 1)).astype(arr.dtype.newbyteorder("<")).tobytes()
-    return hdr.encode("latin-1") + pix
+    return hdr.encode("latin-1") + raw_write(
+        arr, arr.dtype.newbyteorder("<"), "bsq")

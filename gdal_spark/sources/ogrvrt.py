@@ -95,11 +95,14 @@ def _wkb_from_wkt_col(col):
 
     from gdal_spark.functions.wkt import from_wkt
 
+    def one(v):
+        # from_wkt gives None for '... EMPTY': a NULL geometry
+        wkb = None if v is None else from_wkt(str(v))
+        return None if wkb is None else bytearray(wkb)
+
     @F.pandas_udf(T.BinaryType())
     def conv(s):
-        return pd.Series(
-            [None if v is None else bytearray(from_wkt(str(v))) for v in s]
-        )
+        return pd.Series([one(v) for v in s])
 
     return conv(col)
 

@@ -171,3 +171,22 @@ class TestUnionWarped:
             </OGRVRTLayer>
         </OGRVRTWarpedLayer></OGRVRTDataSource>""")
         assert "_errors" in out  # missing TargetSRS
+
+
+def test_wkt_geometry_field_empty_is_null(spark, tmp_path):
+    """A WKT field holding '... EMPTY' reads as a NULL geometry; the
+    other rows keep theirs."""
+    src = str(tmp_path / "wkt.parquet")
+    spark.createDataFrame(
+        [(1, "POINT (1 2)"), (2, "POINT EMPTY")], ["id", "geom_wkt"]
+    ).write.parquet(src)
+    xml = (
+        '<OGRVRTDataSource><OGRVRTLayer name="t">'
+        f'<SrcDataSource relativeToVRT="0">{src}</SrcDataSource>'
+        '<FID>id</FID><GeometryField encoding="WKT" field="geom_wkt"/>'
+        "</OGRVRTLayer></OGRVRTDataSource>"
+    )
+    rows = read_ogrvrt(spark, xml)["t"].orderBy("fid").collect()
+    assert [r["fid"] for r in rows] == [1, 2]
+    assert to_wkt(bytes(rows[0]["wkb"])) == "POINT (1 2)"
+    assert rows[1]["wkb"] is None

@@ -97,3 +97,37 @@ def test_classify_never_raises_on_hostile_bytes():
         assert C.classify_image(blob, fmt) in (
             "ok", "unsupported_codec", "corrupt",
         )
+
+
+def _png_16bit_palette() -> bytes:
+    """2x2 PNG declaring bit depth 16 with a palette: invalid by spec."""
+    import struct
+    import zlib
+
+    def chunk(tag: bytes, payload: bytes) -> bytes:
+        return (struct.pack(">I", len(payload)) + tag + payload
+                + struct.pack(">I", zlib.crc32(tag + payload)))
+
+    rows = b"".join(b"\x00" + bytes(4) for _ in range(2))
+    return (C.PNG_SIG
+            + chunk(b"IHDR", struct.pack(">IIBBBBB", 2, 2, 16, 3, 0, 0, 0))
+            + chunk(b"PLTE", bytes(range(6)))
+            + chunk(b"IDAT", zlib.compress(rows))
+            + chunk(b"IEND", b""))
+
+
+def test_png_header_checks_survive_optimized_mode():
+    """The PNG input checks are ValueErrors, not asserts that
+    `python -O` strips: the invalid PNG stays corrupt in both modes."""
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    data = _png_16bit_palette()
+    assert C.classify_image(data, "png") == C.STATUS_CORRUPT
+    code = ("import sys; from gdal_spark.functions import codecs as C; "
+            "print(C.classify_image(sys.stdin.buffer.read(), 'png'))")
+    root = Path(C.__file__).resolve().parents[2]
+    out = subprocess.run([sys.executable, "-O", "-c", code], input=data,
+                         capture_output=True, check=True, cwd=root)
+    assert out.stdout.decode().strip() == C.STATUS_CORRUPT
