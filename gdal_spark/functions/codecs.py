@@ -218,7 +218,8 @@ def qdct_encode(arr: np.ndarray, q: float = DEFAULT_Q) -> bytes:
 
 
 def qdct_decode(data: bytes) -> np.ndarray:
-    assert data[:4] == QDCT_MAGIC, "not QDCT"
+    if data[:4] != QDCT_MAGIC:
+        raise ValueError("not QDCT")
     w, h, c, q = struct.unpack(">IIBf", data[4:17])
     h8 = (h + 7) // 8 * 8
     w8 = (w + 7) // 8 * 8

@@ -110,7 +110,8 @@ def parse(buf: bytes) -> tuple[int, object]:
     """
     buf = bytes(buf)
     byte_order, gtype = struct.unpack_from("<BI", buf, 0)
-    assert byte_order == 1, "big-endian WKB not supported"
+    if byte_order != 1:
+        raise ValueError("big-endian WKB not supported")
     pos = 5
     if gtype == WKB_POINT_Z:
         return gtype, struct.unpack_from("<ddd", buf, pos)

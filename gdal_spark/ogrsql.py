@@ -573,30 +573,20 @@ def _wkb_geom_name(b: Column) -> Column:
 @F.pandas_udf(T.DoubleType())
 def _wkb_area(b: pd.Series) -> pd.Series:
     """OGR_GEOM_AREA: OGRSurface::get_Area — exterior minus holes,
-    summed over multipolygon parts; 0 for non-areal geometry.
-    Arrow-batched over the numpy shoelace kernel (functions/geom.py)."""
+    summed over multipolygon parts (geom.wkb_area); 0 for non-areal
+    geometry, NULL for NULL. Arrow-batched over the numpy shoelace
+    kernel (functions/geom.py)."""
     import pandas as pd
 
     from gdal_spark.functions import wkb as W
-    from gdal_spark.functions.geom import ring_area
-
-    def poly_area(rings):
-        if not rings:
-            return 0.0
-        a = abs(ring_area(rings[0]))
-        for hole in rings[1:]:
-            a -= abs(ring_area(hole))
-        return a
+    from gdal_spark.functions.geom import wkb_area
 
     def one(v):
         if v is None:
             return None
-        gtype, payload = W.parse(bytes(v))
-        base = gtype % 1000 if gtype >= 1000 else gtype & 0xFF
-        if base == 3:
-            return float(poly_area(payload))
-        if base == 6:
-            return float(sum(poly_area(r) for r in payload))
+        v = bytes(v)
+        if W.parse(v)[0] in (W.WKB_POLYGON, W.WKB_MULTIPOLYGON):
+            return wkb_area(v)
         return 0.0
 
     return pd.Series([one(v) for v in b], dtype="float64")

@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from gdal_spark.functions import cells as C
+from gdal_spark.ogrsql import _wkb_area
 
 _PAIR_GEOM_SCHEMA = T.StructType(
     [
@@ -284,15 +285,9 @@ def update(a: DataFrame, b: DataFrame, **kw) -> DataFrame:
         F.col("a_id"), F.lit(None).cast("long").alias("b_id"), "wkb", "area"
     )
     b_key = kw.get("b_key", "poly_id")
-    from gdal_spark.functions import geom as G
-
-    @F.pandas_udf(T.DoubleType())
-    def area_udf(wkb_col: pd.Series) -> pd.Series:
-        return wkb_col.map(lambda b_: G.wkb_area(bytes(b_)))
-
     b_rows = b.select(
         F.lit(None).cast("long").alias("a_id"),
         F.col(b_key).alias("b_id"), "wkb",
-        area_udf(F.col("wkb")).alias("area"),
+        _wkb_area(F.col("wkb")).alias("area"),
     )
     return rem_a.unionByName(b_rows)

@@ -28,6 +28,7 @@ from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
 from gdal_spark.functions import hilbert as HB
+from gdal_spark.ogrsql import _wkb_area
 from gdal_spark.queries.spatial_sql import (
     LON_SQL,
     LAT_SQL,
@@ -270,13 +271,6 @@ _DISSOLVE_ORACLE = f"""
 # --------------------------------------------------------------------------
 
 
-@pandas_udf(T.DoubleType())
-def _wkb_area_udf(wkb_col: pd.Series) -> pd.Series:
-    from gdal_spark.functions import geom
-
-    return pd.Series([geom.wkb_area(bytes(b)) for b in wkb_col])
-
-
 def ogr_special_fields(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SELECT FID, OGR_GEOM_AREA ... : FID carried as data (stable ids,
     not monotonically_increasing_id), area computed through the real
@@ -292,7 +286,7 @@ def ogr_special_fields(spark: SparkSession, sf_dir: str) -> DataFrame:
         box_wkb_udf(bx, by, bx + bw, by + bh).alias("wkb"),
     )
     return boxes.select(
-        "fid", "name", F.round(_wkb_area_udf("wkb"), 6).alias("ogr_geom_area")
+        "fid", "name", F.round(_wkb_area("wkb"), 6).alias("ogr_geom_area")
     )
 
 

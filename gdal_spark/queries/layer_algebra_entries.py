@@ -11,10 +11,10 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from gdal_spark import datagen
 from gdal_spark.functions import wkb as W
+from gdal_spark.ogrsql import _wkb_area
 from gdal_spark.operators import layer_algebra as LA
 from gdal_spark.queries.spatial_sql import box_wkb_udf
 
@@ -62,13 +62,7 @@ def layer_erase_clip_partition(spark: SparkSession, sf_dir: str) -> DataFrame:
     er = LA.erase(a, b, res=5).select("a_id", F.col("area").alias("erase_area"))
     cl = LA.clip(a, b, res=5).select("a_id", F.col("area").alias("clip_area"))
 
-    @F.pandas_udf(T.DoubleType())
-    def wkb_area(col: pd.Series) -> pd.Series:
-        from gdal_spark.functions import geom as G
-
-        return col.map(lambda buf: G.wkb_area(bytes(buf)))
-
-    base = a.select(F.col("poly_id").alias("a_id"), wkb_area(F.col("wkb")).alias("a_area"))
+    base = a.select(F.col("poly_id").alias("a_id"), _wkb_area(F.col("wkb")).alias("a_area"))
     out = (
         base.join(er, on="a_id", how="left")
         .join(cl, on="a_id", how="left")

@@ -180,20 +180,14 @@ _WKT_SCHEMA = T.StructType(
 @pandas_udf(_WKT_SCHEMA)
 def _wkb_to_wkt_udf(wkb_col: pd.Series) -> pd.DataFrame:
     """OGR_GEOMETRY (type name) + OGR_GEOM_WKT through the engine's real
-    WKB parse (ogrgeometry exportToWkt analog); integer-valued coords
-    print as integers so the text is engine-portable."""
-    from gdal_spark.functions import wkb as W
+    WKB parse and WKT writer (wkt.to_wkt, the ogrgeometry exportToWkt
+    analog); integer-valued coords print as integers so the text is
+    engine-portable."""
+    from gdal_spark.functions.wkt import to_wkt
 
-    def fmt(v: float) -> str:
-        return str(int(v)) if float(v).is_integer() else repr(float(v))
-
-    types, wkts = [], []
-    for b in wkb_col:
-        rings = W.polygon_rings(bytes(b))[0]
-        body = ",".join(f"{fmt(x)} {fmt(y)}" for x, y in rings[0])
-        types.append("POLYGON")
-        wkts.append(f"POLYGON (({body}))")
-    return pd.DataFrame({"gtype": types, "wkt": wkts})
+    wkts = [to_wkt(b) for b in wkb_col]
+    return pd.DataFrame({"gtype": [w.split(" ", 1)[0] for w in wkts],
+                         "wkt": wkts})
 
 
 def ogr_style_fields(spark: SparkSession, sf_dir: str) -> DataFrame:

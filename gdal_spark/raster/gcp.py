@@ -16,13 +16,20 @@ transformer rides the same mapInPandas warp stage as the CRS transforms
 (raster/warp.py) — fitting is O(n_gcps^3) once per image on the driver
 or per task, evaluation is O(pixels * n_gcps) for TPS and O(pixels) for
 polynomial.
+
+The GCP and RPC warps only supply coordinate callbacks, as GDAL's
+transformers do: the output grid comes from warp.suggested_output_grid,
+the pixel-center inverse map from warp._dst_to_src_pixels (both run with
+the identity geotransform, since the models' source side is pixel
+space) and the samples from kernels.gather.
 """
 
 from __future__ import annotations
 
-import math
-
 import numpy as np
+
+from gdal_spark.raster import warp as W
+from gdal_spark.raster.kernels import gather
 
 # number of monomial terms per order
 _TERMS = {1: 3, 2: 6, 3: 10}
@@ -158,24 +165,9 @@ class GCPTransformer:
         return apply_poly(self._inv, gx, gy, self.order)
 
 
-def suggested_output_grid_gcp(
-    tr: GCPTransformer, w: int, h: int, out_res: float | None = None
-) -> tuple[tuple, int, int]:
-    """Dst grid for a GCP-georeferenced image: forward-transform a 21x21
-    border sample of the pixel outline (the GDALSuggestedWarpOutput
-    strategy applied to the GCP model)."""
-    edge = np.linspace(0, 1, 21)
-    px = np.concatenate([edge * w, edge * w, np.zeros(21), np.full(21, float(w))])
-    py = np.concatenate([np.zeros(21), np.full(21, float(h)), edge * h, edge * h])
-    tx, ty = tr.pixel_to_geo(px, py)
-    xmin, xmax = float(tx.min()), float(tx.max())
-    ymin, ymax = float(ty.min()), float(ty.max())
-    if out_res is None:
-        out_res = math.sqrt((xmax - xmin) * (ymax - ymin) / (w * h))
-    out_w = max(1, int(round((xmax - xmin) / out_res)))
-    out_h = max(1, int(round((ymax - ymin) / out_res)))
-    dst_gt = (xmin, (xmax - xmin) / out_w, 0.0, ymax, 0.0, -(ymax - ymin) / out_h)
-    return dst_gt, out_w, out_h
+# the models' source "geo" space is pixel space itself: the identity
+# geotransform lets the warp grid estimator and inverse mapper run them
+_PIXEL_GT = (0.0, 1.0, 0.0, 0.0, 0.0, 1.0)
 
 
 def warp_array_gcp(
@@ -189,37 +181,11 @@ def warp_array_gcp(
     """gdalwarp with GCP georeferencing (-order n / -tps): inverse-map
     every dst pixel center through the fitted geo->pixel model, then
     gather. Returns (out, dst_gt)."""
-    from gdal_spark.raster import kernels as K
-
     tr = GCPTransformer(gcps, method)
     h, w = arr.shape[:2]
-    dst_gt, ow, oh = suggested_output_grid_gcp(tr, w, h, out_res)
-    xs = np.arange(ow) + 0.5
-    ys = np.arange(oh) + 0.5
-    PX, PY = np.meshgrid(xs, ys)
-    gx, gy = K.gt_pixel_to_geo(dst_gt, PX, PY)
-    spx, spy = tr.geo_to_pixel(gx, gy)
-    out = _gather_inverse(arr, spx - 0.5, spy - 0.5, resample, nodata)
-    return out, dst_gt
-
-
-def _gather_inverse(arr, spx, spy, resample, nodata):
-    """Shared inverse-map gather: sample src pixel coords (center-based)
-    with the requested kernel, nodata outside the source."""
-    from gdal_spark.raster import kernels as K
-
-    h, w = arr.shape[:2]
-    inside = (spx >= -0.5) & (spx <= w - 0.5) & (spy >= -0.5) & (spy <= h - 0.5)
-    if resample == "bilinear":
-        out = K._bilinear_gather(arr, spx, spy)
-    elif resample in K._FILTER_RADIUS:
-        out = K._kernel_gather(arr, spx, spy, resample)
-    else:
-        ix = np.round(spx).astype(np.int64).clip(0, w - 1)
-        iy = np.round(spy).astype(np.int64).clip(0, h - 1)
-        out = arr[iy, ix]
-    inside2 = inside[:, :, None] if arr.ndim == 3 else inside
-    return np.where(inside2, out, np.asarray(nodata, dtype=out.dtype))
+    dst_gt, ow, oh = W.suggested_output_grid(_PIXEL_GT, w, h, tr.pixel_to_geo, out_res)
+    spx, spy = W._dst_to_src_pixels(_PIXEL_GT, dst_gt, oh, ow, tr.geo_to_pixel)
+    return gather(arr, spx, spy, resample, nodata)[0], dst_gt
 
 
 def warp_array_rpc(
@@ -234,45 +200,25 @@ def warp_array_rpc(
 ):
     """gdalwarp with RPC georeferencing (-rpc [-to RPC_DEM=...]):
     orthorectification. Output grid either given (dst_gt + out_size
-    (w, h)) or suggested from a 21x21 border sample of the iterative
+    (w, h)) or suggested by warp.suggested_output_grid over the iterative
     pixel->lonlat forward model; every dst pixel center is inverse-mapped
     through the DIRECT rational evaluation (with per-point DEM heights,
     alg/gdal_rpc.cpp:1928-1953) and gathered. Returns (out, dst_gt)."""
-    from gdal_spark.raster import kernels as K
-    from gdal_spark.raster.rpc import RPCTransformer
+    from gdal_spark.raster.rpc import RPCTransformer, rpc_transform_point
 
     tr = RPCTransformer(rpc_md, **rpc_opts)
     h, w = arr.shape[:2]
     if dst_gt is None:
-        edge = np.linspace(0, 1, 21)
-        px = np.concatenate(
-            [edge * w, edge * w, np.zeros(21), np.full(21, float(w))]
-        )
-        py = np.concatenate(
-            [np.zeros(21), np.full(21, float(h)), edge * h, edge * h]
-        )
-        tx, ty = tr.pixel_to_lonlat(px, py)
-        xmin, xmax = float(tx.min()), float(tx.max())
-        ymin, ymax = float(ty.min()), float(ty.max())
-        if out_res is None:
-            out_res = math.sqrt((xmax - xmin) * (ymax - ymin) / (w * h))
-        ow = max(1, int(round((xmax - xmin) / out_res)))
-        oh = max(1, int(round((ymax - ymin) / out_res)))
-        dst_gt = (
-            xmin, (xmax - xmin) / ow, 0.0, ymax, 0.0, -(ymax - ymin) / oh,
-        )
+        dst_gt, ow, oh = W.suggested_output_grid(
+            _PIXEL_GT, w, h, tr.pixel_to_lonlat, out_res)
     else:
         ow, oh = out_size
-    xs = np.arange(ow) + 0.5
-    ys = np.arange(oh) + 0.5
-    PX, PY = np.meshgrid(xs, ys)
-    gx, gy = K.gt_pixel_to_geo(dst_gt, PX, PY)
-    from gdal_spark.raster.rpc import rpc_transform_point
 
-    heights, ok = tr.heights_at_lonlat(gx, gy)
-    spx, spy = rpc_transform_point(tr.rpc, gx, gy, heights)
-    # dst pixels without a DEM height become nodata (panSuccess=FALSE)
-    spx = np.where(ok, spx, -1e9)
-    spy = np.where(ok, spy, -1e9)
-    out = _gather_inverse(arr, spx - 0.5, spy - 0.5, resample, nodata)
-    return out, dst_gt
+    def lonlat_to_pixel(gx, gy):
+        heights, ok = tr.heights_at_lonlat(gx, gy)
+        spx, spy = rpc_transform_point(tr.rpc, gx, gy, heights)
+        # dst pixels without a DEM height become nodata (panSuccess=FALSE)
+        return np.where(ok, spx, -1e9), np.where(ok, spy, -1e9)
+
+    spx, spy = W._dst_to_src_pixels(_PIXEL_GT, dst_gt, oh, ow, lonlat_to_pixel)
+    return gather(arr, spx, spy, resample, nodata)[0], dst_gt

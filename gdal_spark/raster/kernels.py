@@ -194,6 +194,39 @@ def _kernel_gather(arr: np.ndarray, fx: np.ndarray, fy: np.ndarray, kernel: str)
     return out.astype(arr.dtype)
 
 
+def gather(
+    arr: np.ndarray, fx: np.ndarray, fy: np.ndarray, method: str,
+    nodata: float = 0.0,
+) -> tuple[np.ndarray, np.ndarray]:
+    """The inverse-map sampler of warp, GCP/RPC, update and vshift
+    (GDALWarpKernel's per-pixel gather, alg/gdalwarpkernel.cpp:1058).
+
+    fx/fy are fractional source pixel indices (integer k = center of
+    pixel k). ``method`` is "bilinear", a _FILTER_RADIUS kernel, or
+    nearest (round, then clip) for any other name. Returns (values,
+    inside): coordinates outside [-0.5, n - 0.5] read ``nodata``, and
+    ``inside`` is that 2-D validity mask.
+
+    Samplers that stay separate on purpose: vrt.render_warped_vrt (GWK
+    floor-nearest with an inside test on [0, w]), morph's nodata-aware
+    point sampler (interpolate_at_point_checked), the tiles/g2t.py
+    parity renderer (its tests need the reference fixtures), and
+    resample_convolution (GDAL's overview convolution, which
+    anti-aliases)."""
+    h, w = arr.shape[:2]
+    inside = (fx >= -0.5) & (fx <= w - 0.5) & (fy >= -0.5) & (fy <= h - 0.5)
+    if method == "bilinear":
+        out = _bilinear_gather(arr, fx, fy)
+    elif method in _FILTER_RADIUS:  # cubic / cubicspline / lanczos
+        out = _kernel_gather(arr, fx, fy, method)
+    else:
+        ix = np.round(fx).astype(np.int64).clip(0, w - 1)
+        iy = np.round(fy).astype(np.int64).clip(0, h - 1)
+        out = arr[iy, ix]
+    mask = inside[:, :, None] if arr.ndim == 3 else inside
+    return np.where(mask, out, np.asarray(nodata, dtype=out.dtype)), inside
+
+
 def resample_kernel(arr: np.ndarray, out_h: int, out_w: int, kernel: str) -> np.ndarray:
     """Filter-kernel resize (cubic/cubicspline/lanczos) at back-mapped
     output centers — the GWKResample taps for a scale transform."""
@@ -1256,12 +1289,7 @@ def _conv_filter(kernel: str, x: np.ndarray) -> np.ndarray:
     if kernel == "cubicspline":  # cubic B-spline, radius 2 (GWKBSpline)
         return _bspline(x)
     if kernel == "lanczos":
-        pix = np.pi * x
-        pixr = pix / 3.0
-        with np.errstate(invalid="ignore", divide="ignore"):
-            v = np.sin(pix) * np.sin(pixr) / (pix * pixr)
-        v = np.where(x == 0.0, 1.0, v)
-        return np.where(ax >= 3.0, 0.0, v)
+        return _lanczos(x)
     raise ValueError(f"unknown convolution kernel {kernel}")
 
 

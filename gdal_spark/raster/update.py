@@ -9,6 +9,10 @@ Spark-first shape: the paste window is computed from geotransforms
 and pastes independently, and overview refresh re-reduces only the
 affected aligned region — the distributed form ``update_tiles`` keys
 tiles by window intersection, no full-raster pass.
+
+Samples come from kernels.gather, the sampler the warp family shares
+(raster/warp.py); a multi-band source updates each band of a multi-band
+destination.
 """
 
 from __future__ import annotations
@@ -66,38 +70,27 @@ def update_raster(
         gx, gy = inv_geo_fn(gx, gy)
     spx, spy = K.gt_geo_to_pixel(tuple(src_gt), gx, gy)
     fx, fy = spx - 0.5, spy - 0.5
-    sh, sw = src.shape[:2]
-    inside = (fx >= -0.5) & (fx <= sw - 0.5) & (fy >= -0.5) & (fy <= sh - 0.5)
 
-    sf = src.astype(np.float64)
-    if resample == "bilinear":
-        vals = K._bilinear_gather(sf, fx, fy)
-    elif resample in K._FILTER_RADIUS:
-        vals = K._kernel_gather(sf, fx, fy, resample)
-    else:
-        ix = np.clip(np.round(fx).astype(int), 0, sw - 1)
-        iy = np.clip(np.round(fy).astype(int), 0, sh - 1)
-        vals = sf[iy, ix]
-
-    mask = inside
+    # (h, w, bands): 2-D masks broadcast over the bands, and each band
+    # keeps its own nodata test
+    sf = np.atleast_3d(src.astype(np.float64))
+    vals, inside = K.gather(sf, fx, fy, resample)
+    mask = inside[:, :, None]
     if src_nodata is not None:
-        near_ix = np.clip(np.round(fx).astype(int), 0, sw - 1)
-        near_iy = np.clip(np.round(fy).astype(int), 0, sh - 1)
-        mask = mask & (sf[near_iy, near_ix] != src_nodata)
+        mask = mask & (K.gather(sf, fx, fy, "near")[0] != src_nodata)
     if cutline_wkb is not None:
         from gdal_spark.functions.geom import points_in_wkb
 
         mask = mask & points_in_wkb(
             gx.ravel(), gy.ravel(), cutline_wkb
-        ).reshape(gx.shape)
+        ).reshape(gx.shape)[:, :, None]
 
     window = dst[y0:y1, x0:x1]
     if np.issubdtype(dst.dtype, np.integer):
         info = np.iinfo(dst.dtype)
         vals = np.clip(np.round(vals), info.min, info.max)
-    if dst.ndim == 3 and vals.ndim == 2:
-        vals = vals[:, :, None]
-        mask = mask[:, :, None]
+    if dst.ndim == 2:  # a multi-band source cannot squeeze into it
+        vals, mask = vals.squeeze(2), mask.squeeze(2)
     dst[y0:y1, x0:x1] = np.where(mask, vals.astype(dst.dtype), window)
     return dst, (x0, y0, x1, y1)
 

@@ -3,8 +3,10 @@
 handling).
 
 Semantics transcribed:
-  * the grid is resampled onto the source grid (near/bilinear/cubic —
-    the engine's gather kernels; GDAL warps with GRA_Bilinear default);
+  * the grid is resampled onto the source grid (near/bilinear/cubic
+    through kernels.gather, the warp family's one sampler, at the
+    source pixel centers warp._dst_to_src_pixels maps; GDAL warps with
+    GRA_Bilinear default);
   * grid nodata / off-extent cells fill with 0.0 normally, or -inf when
     ``error_on_missing`` (psWO->padfDstNoDataReal, :471-478), and a
     non-finite grid value raises at evaluation (IReadBlock:241-247);
@@ -39,34 +41,20 @@ def _resample_grid_to_src(
     """Sample the grid at every source pixel center. geo_fn maps source
     CRS coords -> grid CRS coords (identity when both share a CRS)."""
     from gdal_spark.raster import kernels as K
+    from gdal_spark.raster import warp as W
 
+    if resampling not in ("near", "bilinear", "cubic"):
+        raise ValueError(f"unknown resampling {resampling}")
     h, w = src_shape
-    ys, xs = np.mgrid[0:h, 0:w]
-    gx, gy = K.gt_pixel_to_geo(tuple(src_gt), xs + 0.5, ys + 0.5)
-    if geo_fn is not None:
-        gx, gy = geo_fn(gx, gy)
-    px, py = K.gt_geo_to_pixel(tuple(grid_gt), gx, gy)
-    fx, fy = px - 0.5, py - 0.5
+    fx, fy = W._dst_to_src_pixels(
+        grid_gt, src_gt, h, w, geo_fn or W.TRANSFORMS[None])
 
-    gh, gw = grid.shape[:2]
     g = grid.astype(np.float64)
     if grid_nodata is not None:
         g = np.where(g == grid_nodata, np.nan, g)
-
-    inside = (fx >= -0.5) & (fx <= gw - 0.5) & (fy >= -0.5) & (fy <= gh - 0.5)
-    if resampling == "near":
-        ix = np.clip(np.round(fx).astype(int), 0, gw - 1)
-        iy = np.clip(np.round(fy).astype(int), 0, gh - 1)
-        out = g[iy, ix]
-    elif resampling == "bilinear":
-        out = K._bilinear_gather(g, fx, fy)
-    elif resampling == "cubic":
-        out = K._kernel_gather(g, fx, fy, "cubic")
-    else:
-        raise ValueError(f"unknown resampling {resampling}")
     fill = -np.inf if error_on_missing else 0.0
-    out = np.where(inside & np.isfinite(out), out, fill)
-    return out
+    out, _ = K.gather(g, fx, fy, resampling, fill)
+    return np.where(np.isfinite(out), out, fill)
 
 
 def apply_vertical_shift(

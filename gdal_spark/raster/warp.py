@@ -1,13 +1,19 @@
 """Warp: reprojection + resampling (gdalwarp re-expressed).
 
 Kernel layer (numpy): inverse-mapping warp — for every destination pixel
-center, invert the CRS transform to a fractional source pixel, then
-nearest/bilinear gather (alg/gdalwarpkernel.cpp:1058 PerformWarp's exact
-dataflow, minus SIMD dispatch). The coordinate transform is evaluated
-either exactly (vectorized numpy — cheap here, unlike per-point PROJ
-calls) or on a coarse control grid with bilinear interpolation and an
-error bound — the GDALApproxTransformer strategy (alg/gdaltransformer.cpp:
-58-61, dfMaxError default 0.125 px).
+center, invert the CRS transform to a fractional source pixel
+(``_dst_to_src_pixels``), then sample it with ``kernels.gather``
+(alg/gdalwarpkernel.cpp:1058 PerformWarp's exact dataflow, minus SIMD
+dispatch). ``suggested_output_grid`` (GDALSuggestedWarpOutput) is the one
+output-grid estimator and ``_dst_to_src_pixels`` the one pixel-center
+inverse mapper: the GCP and RPC warps (raster/gcp.py) pass their
+pixel-space models through both with the identity geotransform, and
+update/vshift sample through the same ``kernels.gather``, just as GDAL's
+transformers only supply the coordinate callback. The coordinate
+transform is evaluated either exactly (vectorized numpy — cheap here,
+unlike per-point PROJ calls) or on a coarse control grid with bilinear
+interpolation and an error bound — the GDALApproxTransformer strategy
+(alg/gdaltransformer.cpp:58-61, dfMaxError default 0.125 px).
 
 Spark layer: a narrow mapInPandas over the images table — each image row
 warps independently (chunk ≡ row; GDAL's ChunkAndWarpImage memory-driven
@@ -171,20 +177,11 @@ def warp_array(
     mask). Pixels whose centers fall outside the cutline become nodata."""
     inv = get_inverse_transform(src_crs, dst_crs)
     spx, spy = _dst_to_src_pixels(src_gt, dst_gt, out_h, out_w, inv, approx_grid, max_err)
-    h, w = arr.shape[:2]
-    inside = (spx >= -0.5) & (spx <= w - 0.5) & (spy >= -0.5) & (spy <= h - 0.5)
+    out, inside = K.gather(arr, spx, spy, resample, nodata)
     if cutline is not None:
-        inside &= K.rasterize_rings(cutline, out_h, out_w, dst_gt)
-    if resample == "bilinear":
-        out = K._bilinear_gather(arr, spx, spy)
-    elif resample in K._FILTER_RADIUS:  # cubic / cubicspline / lanczos
-        out = K._kernel_gather(arr, spx, spy, resample)
-    else:
-        ix = np.round(spx).astype(np.int64).clip(0, w - 1)
-        iy = np.round(spy).astype(np.int64).clip(0, h - 1)
-        out = arr[iy, ix]
-    inside2 = inside[:, :, None] if arr.ndim == 3 else inside
-    out = np.where(inside2, out, np.asarray(nodata, dtype=out.dtype))
+        cut = K.rasterize_rings(cutline, out_h, out_w, dst_gt)
+        inside &= cut
+        out[~cut] = np.asarray(nodata, dtype=out.dtype)
     return (out, inside) if return_mask else out
 
 

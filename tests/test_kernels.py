@@ -32,6 +32,13 @@ def test_qdct_psnr_gate(i, h, w):
     assert quality.psnr(arr, dec) >= 40.0
 
 
+def test_qdct_decode_rejects_bad_magic():
+    """A wrong magic raises ValueError (an assert would vanish under -O)."""
+    blob = codecs.qdct_encode(datagen.make_pixels(1, 8, 8))
+    with pytest.raises(ValueError, match="QDCT"):
+        codecs.qdct_decode(b"XDCT" + blob[4:])
+
+
 def test_decode_registry_dispatch():
     arr = datagen.make_pixels(2, 64, 64)
     for fmt in ("png", "jpeg"):
@@ -135,6 +142,14 @@ def test_wkb_multipolygon():
     buf = W.write_multipolygon([p1, p2])
     assert len(W.polygon_rings(buf)) == 2
     assert W.bbox(buf) == (0.0, 0.0, 6.0, 6.0)
+
+
+def test_wkb_parse_rejects_big_endian():
+    """Big-endian WKB raises ValueError instead of being read as
+    little-endian when asserts are stripped."""
+    buf = b"\x00" + W.write_point(1.0, 2.0)[1:]
+    with pytest.raises(ValueError, match="big-endian"):
+        W.parse(buf)
 
 
 def test_pip_matches_matplotlib_free_bruteforce():

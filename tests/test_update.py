@@ -4,6 +4,7 @@ and bbox-limited overview refresh (overview_refresh.cpp semantics:
 cells outside the updated bbox stay stale)."""
 
 import numpy as np
+import pytest
 
 from gdal_spark.functions import wkb as W
 from gdal_spark.raster.kernels import block_reduce
@@ -84,3 +85,26 @@ def test_refresh_overviews_bbox_only():
     assert np.array_equal(fresh[2:4, 3:5], want_full[2:4, 3:5])
     # untouched overview cells keep their prior values
     assert np.array_equal(fresh[0, :], stale[0, :])
+
+
+@pytest.mark.parametrize("resample", ["near", "bilinear", "cubic", "lanczos"])
+@pytest.mark.parametrize("src_nodata", [None, 0])
+@pytest.mark.parametrize("dtype", [np.uint8, np.int16, np.float32])
+def test_update_multiband_equals_per_band(resample, src_nodata, dtype):
+    """A (h, w, 3) source updates each band of a (h, w, 3) destination
+    exactly as the single-band update of that band would."""
+    dst = (np.arange(8 * 8 * 3).reshape(8, 8, 3) % 251).astype(dtype)
+    src = (np.arange(4 * 4 * 3).reshape(4, 4, 3) * 7 % 200 + 20).astype(dtype)
+    src[1, 2, 1] = 0
+    dst_gt = [100.0, 1.0, 0.0, 50.0, 0.0, -1.0]
+    src_gt = [101.3, 1.2, 0.0, 48.9, 0.0, -1.1]
+    out, win = update_raster(dst, dst_gt, src, src_gt, resample=resample,
+                             src_nodata=src_nodata)
+    assert out.shape == dst.shape and out.dtype == dst.dtype
+    for b in range(3):
+        want, want_win = update_raster(dst[:, :, b], dst_gt, src[:, :, b],
+                                       src_gt, resample=resample,
+                                       src_nodata=src_nodata)
+        assert win == want_win
+        assert np.array_equal(out[:, :, b], want)
+    assert not np.array_equal(out, dst)

@@ -23,6 +23,10 @@ import pandas as pd
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
+# the Python workers import the package too: put the checkout on their
+# path, so the check runs from any working directory
+_old = os.environ.get("PYTHONPATH")
+os.environ["PYTHONPATH"] = REPO + (os.pathsep + _old if _old else "")
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part",
