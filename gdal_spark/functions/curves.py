@@ -225,7 +225,7 @@ def _curve_ring_points(buf, pos, step_deg):
 def linearize_wkb(buf: bytes, step_deg: float = DEFAULT_STEP_DEG) -> bytes:
     """Curved WKB -> linear WKB (reference: OGRGeometry::getLinear
     Geometry / OGRGeometryFactory::forceTo).  Linear inputs pass
-    through unchanged."""
+    through unchanged; 3-D curves keep Z (ISO 1002/1003/1005/1006)."""
     buf = bytes(buf)
     if not has_curve_geometry(buf):
         return buf
@@ -247,34 +247,26 @@ def linearize_wkb(buf: bytes, step_deg: float = DEFAULT_STEP_DEG) -> bytes:
             rings = []
             for _ in range(nrings):
                 ring, p2 = _curve_ring_points(buf, p2, step_deg)
-                rings.append(np.asarray(ring[:, :2], np.float64))
-            return W.write_polygon(rings), p2
-        if base == WKB_MULTICURVE:
-            (n,) = struct.unpack_from("<I", buf, p2)
-            p2 += 4
-            lines = []
-            for _ in range(n):
-                child, p2 = one(p2)
-                gt, payload = W.parse(child)
-                lines.append(np.asarray(payload)[:, :2])
-            return W.write_multilinestring(lines), p2
-        if base == WKB_MULTISURFACE:
-            (n,) = struct.unpack_from("<I", buf, p2)
-            p2 += 4
-            polys = []
-            for _ in range(n):
-                child, p2 = one(p2)
-                gt, payload = W.parse(child)
-                polys.append(payload)
-            return W.write_multipolygon(polys), p2
-        if base == W.WKB_GEOMETRYCOLLECTION:
+                rings.append(ring)
+            if ndim == 2:
+                return W.write_polygon(rings), p2
+            return struct.pack("<BII", 1, W.WKB_POLYGON + 1000, nrings) + b"".join(
+                struct.pack("<I", len(r)) + r.astype("<f8").tobytes()
+                for r in rings), p2
+        if base in (WKB_MULTICURVE, WKB_MULTISURFACE,
+                    W.WKB_GEOMETRYCOLLECTION):
             (n,) = struct.unpack_from("<I", buf, p2)
             p2 += 4
             children = []
             for _ in range(n):
                 child, p2 = one(p2)
                 children.append(child)
-            return W.write_collection(children), p2
+            if base == W.WKB_GEOMETRYCOLLECTION:
+                return W.write_collection(children), p2
+            # the linearized members are whole WKB geometries already
+            gt = (W.WKB_MULTILINESTRING if base == WKB_MULTICURVE
+                  else W.WKB_MULTIPOLYGON) + (1000 if ndim == 3 else 0)
+            return struct.pack("<BII", 1, gt, n) + b"".join(children), p2
         # linear child: measure and copy through
         if base == W.WKB_POINT:
             end = p2 + ndim * 8

@@ -9,6 +9,12 @@ math, not copied):
     452-521): horizontal-ray crossing test `(y1 <= y < y2) or
     (y2 <= y < y1)` with intersection-x comparison.
   * shoelace signed area (OGRLinearRing::get_Area semantics).
+  * polygon assembly, shared by every reader that builds polygons from
+    edges or loose rings: `build_rings` chains edges end to end
+    (OGRBuildPolygonFromEdges, ogr/ograssemblepolygon.cpp, best-effort
+    with auto-close) and `organize_polygons` nests rings into polygons
+    (OGRGeometryFactory::organizePolygons METHOD_NORMAL,
+    ogr/ogrgeometryfactory.cpp:2286-2450).
   * Sutherland-Hodgman clipping against axis-aligned boxes — the geometry
     backbone for per-tile rasterize/clip (GDAL delegates to GEOS; a box
     clip is all the tiling pipeline needs and is exactly vectorizable).
@@ -19,6 +25,8 @@ once per polygon, probe many points).
 """
 
 from __future__ import annotations
+
+import math
 
 import numpy as np
 
@@ -154,6 +162,115 @@ def polygon_area(rings: list[np.ndarray]) -> float:
     for hole in rings[1:]:
         area -= abs(ring_area(hole))
     return area
+
+
+def _close_enough(p, q, tol: float) -> tuple[bool, float]:
+    if tol == 0:
+        return p[0] == q[0] and p[1] == q[1], 0.0
+    dx, dy = abs(p[0] - q[0]), abs(p[1] - q[1])
+    if dx > tol or dy > tol:
+        return False, tol
+    d = math.hypot(dx, dy)
+    return d < tol, d
+
+
+def build_rings(edges: list, tol: float = 0.0) -> list[list]:
+    """Chain edges (point sequences, >= 2 points) end to end into closed
+    rings: OGRBuildPolygonFromEdges, best-effort with auto-close.
+
+    A ring starts at the first unused edge and grows by the unused edge
+    whose start or end (then reversed) lies nearest its open end within
+    `tol`; an exact match wins at once. A ring that stops short of its
+    start is closed: snapped when the ends are within `tol`, otherwise by
+    appending its first point, the very object it starts with (so with
+    tol == 0, `ring[-1] is ring[0]` marks the rings that assembly closed;
+    VFK reopens them by it, and tests/test_rings.py holds the mark).
+    Only x and y are compared; points keep their other ordinates.
+    """
+    todo = [e for e in edges if len(e) >= 2]
+    rings = []
+    while todo:
+        ring = list(todo.pop(0))
+        work = True
+        while not _close_enough(ring[0], ring[-1], 0)[0] and todo and work:
+            work = False
+            best = tol
+            bi, brev = -1, False
+            for i, e in enumerate(todo):
+                ok, d = _close_enough(e[0], ring[-1], best)
+                if ok:
+                    best, bi, brev = d, i, False
+                    if d == 0.0:
+                        break
+                ok, d = _close_enough(e[-1], ring[-1], best)
+                if ok:
+                    best, bi, brev = d, i, True
+                    if d == 0.0:
+                        break
+            if bi >= 0:
+                e = todo.pop(bi)
+                if brev:
+                    e = e[::-1]
+                if _close_enough(e[0], ring[-1], tol)[0]:
+                    e = e[1:]
+                ring.extend(e)
+                work = True
+        if not _close_enough(ring[0], ring[-1], tol)[0]:
+            ring.append(ring[0])
+        elif not _close_enough(ring[0], ring[-1], 0)[0]:
+            ring[-1] = ring[0]
+        rings.append(ring)
+    return rings
+
+
+def organize_polygons(rings: list, only_ccw: bool = False) -> list[list]:
+    """Nest rings into polygons [shell, hole, ...]: organizePolygons
+    METHOD_NORMAL.
+
+    Rings are visited by decreasing area. Ring i lies in ring j when j's
+    envelope covers i's and j strictly contains i's first vertex; of the
+    larger rings, the smallest such j wins. A ring inside a shell is its
+    hole; a ring inside a hole (an island) or inside nothing is a shell.
+    Overlapping rings whose envelopes do not nest all stay shells.
+
+    `only_ccw` is METHOD=ONLY_CCW, for shapefile and FileGDB parts, where
+    a clockwise ring is an exterior: a CW ring is always a shell and a
+    CCW ring can only be a hole of a CW ring. Parts with no CW ring at
+    all nest as METHOD_NORMAL.
+
+    Shells come out in input order, each followed by its holes in input
+    order. Rings may be arrays or point lists with extra ordinates; they
+    are returned as given.
+    """
+    n = len(rings)
+    if n == 1:
+        return [[rings[0]]]
+    xy = [np.asarray(r, np.float64)[:, :2] if isinstance(r, np.ndarray)
+          else np.array([(p[0], p[1]) for p in r], np.float64) for r in rings]
+    signed = np.array([ring_area(a) for a in xy])
+    order = np.argsort(-np.abs(signed), kind="stable")
+    can_hold = signed < 0 if only_ccw and (signed < 0).any() else np.ones(n, bool)
+    # envelopes and holder flags in visiting order, one contiguous array each
+    x0, y0, x1, y1 = np.array([(*xy[i].min(axis=0), *xy[i].max(axis=0))
+                               for i in order]).T.copy()
+    hold = can_hold[order]
+    encl: dict[int, int] = {}
+    for pos in range(1, n):
+        i = int(order[pos])
+        if only_ccw and signed[i] < 0:
+            continue
+        # larger rings whose envelope covers i's, nearest in size first
+        cand = np.flatnonzero(hold[:pos] & (x0[:pos] <= x0[pos]) & (y0[:pos] <= y0[pos])
+                              & (x1[pos] <= x1[:pos]) & (y1[pos] <= y1[:pos]))
+        for j in order[cand[::-1]].tolist():
+            if points_in_ring(xy[i][:1, 0], xy[i][:1, 1], xy[j])[0]:
+                if j not in encl:
+                    encl[i] = j
+                break
+    polys = {i: [r] for i, r in enumerate(rings) if i not in encl}
+    for i in sorted(encl):
+        polys[encl[i]].append(rings[i])
+    return list(polys.values())
 
 
 def wkb_area(wkb_buf: bytes) -> float:

@@ -371,36 +371,11 @@ def region_rings_flat(region: Region) -> list[np.ndarray]:
 
 
 def structure_rings(rings: list[np.ndarray]) -> list[list[np.ndarray]]:
-    """Even-odd ring list -> proper polygons [(exterior, holes...), ...]
-    by nesting depth: even depth = exterior, odd = hole of its smallest
-    containing exterior (supports island-in-lake nesting)."""
+    """Even-odd ring list -> proper polygons [(exterior, holes...), ...]:
+    slivers pruned, then nested by geom.organize_polygons (supports
+    island-in-lake nesting)."""
     rings = eo_prune(rings)
-    if not rings:
-        return []
-    info = []
-    for i, r in enumerate(rings):
-        depth = 0
-        containers = []
-        for j, other in enumerate(rings):
-            if i != j and _point_in(tuple(r[0]), other):
-                depth += 1
-                containers.append(j)
-        info.append((depth, containers, abs(G.ring_area(r))))
-    polys: dict[int, list[np.ndarray]] = {}
-    for i, (depth, _, _) in enumerate(info):
-        if depth % 2 == 0:
-            polys[i] = [rings[i]]
-    for i, (depth, containers, _) in enumerate(info):
-        if depth % 2 == 1:
-            # smallest containing exterior ring
-            ext = min(
-                (j for j in containers if j in polys),
-                key=lambda j: info[j][2],
-                default=None,
-            )
-            if ext is not None:
-                polys[ext].append(rings[i])
-    return list(polys.values())
+    return G.organize_polygons(rings) if rings else []
 
 
 # --------------------------------------------------------------------------

@@ -3,7 +3,9 @@
 Geometry travels through the engine as WKB bytes in BinaryType columns,
 exactly how OGR's Arrow path encodes it (ogr/ogrsf_frmts/generic/
 ogrlayerarrow.cpp — WKB geometry column in Arrow batches). Supported:
-Point, LineString, Polygon, MultiPolygon, little-endian, 2-D. Parsed
+Point, LineString, Polygon, MultiPolygon, little-endian, 2-D, and the
+ISO Z (type + 1000) Point, LineString, Polygon, MultiLineString and
+MultiPolygon. Parsed
 representation: list of rings, each an (N,2) float64 array (first ring
 exterior, rest holes); multipolygon -> list of such lists.
 """
@@ -19,6 +21,9 @@ WKB_LINESTRING = 2
 # ISO WKB 2.5D (type = 2D + 1000, ogr/ogrgeometry.cpp exportToWkb)
 WKB_POINT_Z = 1001
 WKB_LINESTRING_Z = 1002
+WKB_POLYGON_Z = 1003
+WKB_MULTILINESTRING_Z = 1005
+WKB_MULTIPOLYGON_Z = 1006
 WKB_POLYGON = 3
 WKB_MULTIPOINT = 4
 WKB_MULTILINESTRING = 5
@@ -89,16 +94,17 @@ def write_linestring(coords: np.ndarray) -> bytes:
     )
 
 
-def _read_polygon_body(buf: bytes, pos: int) -> tuple[list[np.ndarray], int]:
+def _read_polygon_body(buf: bytes, pos: int,
+                       nd: int = 2) -> tuple[list[np.ndarray], int]:
     (nrings,) = struct.unpack_from("<I", buf, pos)
     pos += 4
     rings = []
     for _ in range(nrings):
         (npts,) = struct.unpack_from("<I", buf, pos)
         pos += 4
-        ring = np.frombuffer(buf, dtype="<f8", count=npts * 2, offset=pos).reshape(npts, 2)
+        ring = np.frombuffer(buf, dtype="<f8", count=npts * nd, offset=pos).reshape(npts, nd)
         rings.append(np.asarray(ring, dtype=np.float64))
-        pos += npts * 16
+        pos += npts * nd * 8
     return rings, pos
 
 
@@ -106,41 +112,39 @@ def parse(buf: bytes) -> tuple[int, object]:
     """Parse WKB -> (geom_type, payload).
 
     payload: Point -> (x, y); LineString -> (N,2) array;
-    Polygon -> [rings]; MultiPolygon -> [[rings], ...].
+    Polygon -> [rings]; MultiPolygon -> [[rings], ...];
+    MultiLineString -> [lines]. The ISO Z kinds (Point, LineString,
+    Polygon, MultiLineString, MultiPolygon + 1000) keep their type code
+    and carry (x, y, z) tuples / (N,3) arrays.
     """
     buf = bytes(buf)
     byte_order, gtype = struct.unpack_from("<BI", buf, 0)
     if byte_order != 1:
         raise ValueError("big-endian WKB not supported")
     pos = 5
-    if gtype == WKB_POINT_Z:
-        return gtype, struct.unpack_from("<ddd", buf, pos)
-    if gtype == WKB_LINESTRING_Z:
+    if gtype in (WKB_POINT_Z, WKB_LINESTRING_Z, WKB_POLYGON_Z,
+                 WKB_MULTILINESTRING_Z, WKB_MULTIPOLYGON_Z):
+        nd, base = 3, gtype - 1000
+    else:
+        gtype = base = gtype & 0xFF  # strip EWKB dimension flag bits
+        nd = 2
+    if base == WKB_POINT:
+        return gtype, struct.unpack_from("<" + "d" * nd, buf, pos)
+    if base == WKB_LINESTRING:
         (npts,) = struct.unpack_from("<I", buf, pos)
         pos += 4
-        arr = np.frombuffer(
-            buf, dtype="<f8", count=npts * 3, offset=pos
-        ).reshape(npts, 3)
+        arr = np.frombuffer(buf, dtype="<f8", count=npts * nd, offset=pos).reshape(npts, nd)
         return gtype, np.asarray(arr)
-    gtype = gtype & 0xFF  # strip EWKB dimension flag bits
-    if gtype == WKB_POINT:
-        x, y = struct.unpack_from("<dd", buf, pos)
-        return gtype, (x, y)
-    if gtype == WKB_LINESTRING:
-        (npts,) = struct.unpack_from("<I", buf, pos)
-        pos += 4
-        arr = np.frombuffer(buf, dtype="<f8", count=npts * 2, offset=pos).reshape(npts, 2)
-        return gtype, np.asarray(arr)
-    if gtype == WKB_POLYGON:
-        rings, _ = _read_polygon_body(buf, pos)
+    if base == WKB_POLYGON:
+        rings, _ = _read_polygon_body(buf, pos, nd)
         return gtype, rings
-    if gtype == WKB_MULTIPOLYGON:
+    if base == WKB_MULTIPOLYGON:
         (npolys,) = struct.unpack_from("<I", buf, pos)
         pos += 4
         polys = []
         for _ in range(npolys):
             pos += 5  # inner byte-order + type
-            rings, pos = _read_polygon_body(buf, pos)
+            rings, pos = _read_polygon_body(buf, pos, nd)
             polys.append(rings)
         return gtype, polys
     if gtype == WKB_MULTIPOINT:
@@ -152,7 +156,7 @@ def parse(buf: bytes) -> tuple[int, object]:
             pts[i] = struct.unpack_from("<dd", buf, pos)
             pos += 16
         return gtype, pts
-    if gtype == WKB_MULTILINESTRING:
+    if base == WKB_MULTILINESTRING:
         (nlines,) = struct.unpack_from("<I", buf, pos)
         pos += 4
         lines = []
@@ -160,10 +164,10 @@ def parse(buf: bytes) -> tuple[int, object]:
             pos += 5
             (npts,) = struct.unpack_from("<I", buf, pos)
             pos += 4
-            arr = np.frombuffer(buf, dtype="<f8", count=npts * 2,
-                                offset=pos).reshape(npts, 2)
+            arr = np.frombuffer(buf, dtype="<f8", count=npts * nd,
+                                offset=pos).reshape(npts, nd)
             lines.append(np.asarray(arr))
-            pos += npts * 16
+            pos += npts * nd * 8
         return gtype, lines
     if gtype == WKB_GEOMETRYCOLLECTION:
         (ngeoms,) = struct.unpack_from("<I", buf, pos)
@@ -212,19 +216,23 @@ def _geom_length(buf: bytes, pos: int) -> int:
 
 
 def polygon_rings(buf: bytes) -> list[list[np.ndarray]]:
-    """Normalize Polygon/MultiPolygon WKB to a list of polygons (ring lists)."""
+    """Normalize Polygon/MultiPolygon WKB to a list of polygons (ring
+    lists). Z rings come back as their (N,2) x/y: the kernels are planar."""
     gtype, payload = parse(buf)
-    if gtype == WKB_POLYGON:
-        return [payload]
-    if gtype == WKB_MULTIPOLYGON:
-        return payload
-    raise ValueError(f"not a polygon: type {gtype}")
+    if gtype in (WKB_POLYGON, WKB_POLYGON_Z):
+        payload = [payload]
+    elif gtype not in (WKB_MULTIPOLYGON, WKB_MULTIPOLYGON_Z):
+        raise ValueError(f"not a polygon: type {gtype}")
+    if gtype > 1000:
+        return [[r[:, :2] for r in rings] for rings in payload]
+    return payload
 
 
 def bbox(buf: bytes) -> tuple[float, float, float, float]:
     gtype, payload = parse(buf)
+    gtype %= 1000  # the x/y extent of a Z geometry
     if gtype == WKB_POINT:
-        x, y = payload
+        x, y = payload[:2]
         return x, y, x, y
     if gtype == WKB_LINESTRING:
         return (

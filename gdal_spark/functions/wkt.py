@@ -11,7 +11,9 @@ OGR_GEOM_WKT field.
 
 Supported: POINT, LINESTRING, POLYGON, MULTIPOLYGON, MULTIPOINT,
 MULTILINESTRING, GEOMETRYCOLLECTION, 2-D, plus POINT Z / LINESTRING Z
-and EMPTY (-> None); curved ISO kinds (CIRCULARSTRING,
+and EMPTY (-> None); to_wkt also prints the POLYGON Z, MULTILINESTRING
+Z and MULTIPOLYGON Z that curves.linearize_wkb makes of 3-D curves.
+Curved ISO kinds (CIRCULARSTRING,
 COMPOUNDCURVE, CURVEPOLYGON, MULTICURVE, MULTISURFACE) parse to the
 curved WKB types of functions/curves.py (linearize with
 curves.linearize_wkb / SQL ST_CurveToLine).
@@ -31,31 +33,29 @@ def _fmt(v: float) -> str:
 
 
 def _ring_txt(ring: np.ndarray) -> str:
-    return "(" + ",".join(f"{_fmt(x)} {_fmt(y)}" for x, y in ring) + ")"
+    return "(" + ",".join(" ".join(map(_fmt, p)) for p in ring) + ")"
 
 
 def to_wkt(buf: bytes) -> str:
     """WKB -> WKT string."""
     gtype, payload = W.parse(bytes(buf))
-    if gtype == W.WKB_POINT:
-        x, y = payload
-        return f"POINT ({_fmt(x)} {_fmt(y)})"
-    if gtype == W.WKB_POINT_Z:
-        x, y, z = payload
-        return f"POINT Z ({_fmt(x)} {_fmt(y)} {_fmt(z)})"
-    if gtype == W.WKB_LINESTRING_Z:
-        body = ",".join(f"{_fmt(x)} {_fmt(y)} {_fmt(z)}" for x, y, z in payload)
-        return f"LINESTRING Z ({body})"
-    if gtype == W.WKB_LINESTRING:
-        return "LINESTRING " + _ring_txt(payload)
-    if gtype == W.WKB_POLYGON:
-        return "POLYGON (" + ",".join(_ring_txt(r) for r in payload) + ")"
-    if gtype == W.WKB_MULTIPOLYGON:
-        polys = ",".join(
+    kind = {W.WKB_POINT: "POINT", W.WKB_LINESTRING: "LINESTRING",
+            W.WKB_POLYGON: "POLYGON", W.WKB_MULTILINESTRING: "MULTILINESTRING",
+            W.WKB_MULTIPOLYGON: "MULTIPOLYGON"}.get(gtype % 1000)
+    if kind is None:
+        raise ValueError(f"unsupported geometry type {gtype}")
+    if gtype > 1000:
+        kind += " Z"
+    if kind.startswith("POINT"):
+        return f"{kind} ({' '.join(map(_fmt, payload))})"
+    if kind.startswith("LINESTRING"):
+        return f"{kind} " + _ring_txt(payload)
+    if kind.startswith("MULTIPOLYGON"):
+        return f"{kind} (" + ",".join(
             "(" + ",".join(_ring_txt(r) for r in rings) + ")" for rings in payload
-        )
-        return "MULTIPOLYGON (" + polys + ")"
-    raise ValueError(f"unsupported geometry type {gtype}")
+        ) + ")"
+    # POLYGON rings and MULTILINESTRING lines print alike
+    return f"{kind} (" + ",".join(_ring_txt(r) for r in payload) + ")"
 
 
 def _tuples(txt: str) -> list[list[float]]:

@@ -585,7 +585,7 @@ def _wkb_area(b: pd.Series) -> pd.Series:
         if v is None:
             return None
         v = bytes(v)
-        if W.parse(v)[0] in (W.WKB_POLYGON, W.WKB_MULTIPOLYGON):
+        if W.parse(v)[0] % 1000 in (W.WKB_POLYGON, W.WKB_MULTIPOLYGON):
             return wkb_area(v)
         return 0.0
 

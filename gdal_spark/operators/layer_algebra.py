@@ -62,13 +62,14 @@ def _region(wkb_buf: bytes):
 
 def _emit_wkb(region):
     """Region -> structured WKB + exact area, or (None, 0) if empty."""
+    from gdal_spark.functions import geom as G
     from gdal_spark.functions import polyclip as PC
     from gdal_spark.functions import wkb as W
 
     region = [
-        [p[0]] + [h for h in p[1:] if abs(_ring_area(h)) > 1e-12]
+        [p[0]] + [h for h in p[1:] if abs(G.ring_area(h)) > 1e-12]
         for p in region
-        if p and abs(_ring_area(p[0])) > 1e-12
+        if p and abs(G.ring_area(p[0])) > 1e-12
     ]
     if not region:
         return None, 0.0
@@ -77,12 +78,6 @@ def _emit_wkb(region):
         return None, 0.0
     buf = W.write_polygon(region[0]) if len(region) == 1 else W.write_multipolygon(region)
     return buf, float(area)
-
-
-def _ring_area(r):
-    from gdal_spark.functions import geom as G
-
-    return G.ring_area(r)
 
 
 def _candidates(

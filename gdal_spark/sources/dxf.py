@@ -37,6 +37,7 @@ import math
 import numpy as np
 import pandas as pd
 
+from gdal_spark.functions import geom as G
 from gdal_spark.sources import dxf_style as _ST
 
 
@@ -229,8 +230,9 @@ def _spline_points(codes: dict[int, list[str]]):
 
 
 # ---------------------------------------------------------------------------
-# HATCH (ogrdxf_hatch.cpp): boundary paths -> edges -> ring assembly
-# (ograssemblepolygon.cpp OGRBuildPolygonFromEdges) -> organizePolygons.
+# HATCH (ogrdxf_hatch.cpp): boundary paths -> edges; the rings are then
+# chained and nested by geom.build_rings (OGRBuildPolygonFromEdges) and
+# geom.organize_polygons (organizePolygons).
 
 
 class _Cursor:
@@ -469,119 +471,6 @@ def _hatch_edges_path(cur: _Cursor, elev: float, step: float):
     return edges
 
 
-def _close_enough(p, q, tol):
-    if tol == 0:
-        return p[0] == q[0] and p[1] == q[1], 0.0
-    dx, dy = abs(p[0] - q[0]), abs(p[1] - q[1])
-    if dx > tol or dy > tol:
-        return False, tol
-    d = math.hypot(dx, dy)
-    return d < tol, d
-
-
-def _build_rings(edges, tol):
-    """OGRBuildPolygonFromEdges (best-effort, auto-close) transcription."""
-    todo = [e for e in edges if len(e) >= 2]
-    rings = []
-    while todo:
-        ring = list(todo.pop(0))
-        work = True
-        while (
-            not _close_enough(ring[0], ring[-1], 0)[0] and todo and work
-        ):
-            work = False
-            best = tol
-            bi, brev = -1, False
-            for i, e in enumerate(todo):
-                ok, d = _close_enough(e[0], ring[-1], best)
-                if ok:
-                    best, bi, brev = d, i, False
-                    if d == 0.0:
-                        break
-                ok, d = _close_enough(e[-1], ring[-1], best)
-                if ok:
-                    best, bi, brev = d, i, True
-                    if d == 0.0:
-                        break
-            if bi >= 0:
-                e = todo.pop(bi)
-                if brev:
-                    e = e[::-1]
-                if _close_enough(e[0], ring[-1], tol)[0]:
-                    e = e[1:]
-                ring.extend(e)
-                work = True
-        ok0, _ = _close_enough(ring[0], ring[-1], tol)
-        exact = _close_enough(ring[0], ring[-1], 0)[0]
-        if not ok0:
-            ring.append(ring[0])
-        elif not exact:
-            ring[-1] = ring[0]
-        rings.append(ring)
-    return rings
-
-
-def _pt_in_ring(x, y, ring) -> bool:
-    inside = False
-    for i in range(len(ring) - 1):
-        x1, y1 = ring[i][0], ring[i][1]
-        x2, y2 = ring[i + 1][0], ring[i + 1][1]
-        if (y1 <= y) != (y2 <= y):
-            xi = x1 + (y - y1) * (x2 - x1) / (y2 - y1)
-            if x < xi:
-                inside = not inside
-    return inside
-
-
-def _organize_rings(rings):
-    """organizePolygons METHOD_NORMAL (ogrgeometryfactory.cpp:2286-2450):
-    sort by descending area; ring i can only be inside ring j if env(j)
-    fully contains env(i), area(j) >= area(i), and j strictly contains
-    i's start point; smallest such enclosure wins; enclosed-by-top-level
-    = hole, enclosed-by-hole = island (top-level again). Overlapping
-    same-size rings (envelopes not nested) all stay top-level."""
-    if len(rings) == 1:
-        return [(rings[0], [])]
-    n = len(rings)
-
-    def env(r):
-        xs = [q[0] for q in r]
-        ys = [q[1] for q in r]
-        return min(xs), min(ys), max(xs), max(ys)
-
-    def area(r):
-        s = 0.0
-        for i in range(len(r) - 1):
-            s += r[i][0] * r[i + 1][1] - r[i + 1][0] * r[i][1]
-        return abs(s) / 2.0
-
-    envs = [env(r) for r in rings]
-    areas = [area(r) for r in rings]
-    order = sorted(range(n), key=lambda i: -areas[i])
-    top = [True] * n
-    encl: list = [None] * n
-    for pos in range(1, n):
-        i = order[pos]
-        # candidate enclosures: larger-area rings by increasing area
-        for j in sorted(order[:pos], key=lambda k: areas[k]):
-            ei, ej = envs[i], envs[j]
-            if not (ej[0] <= ei[0] and ej[1] <= ei[1]
-                    and ei[2] <= ej[2] and ei[3] <= ej[3]):
-                continue
-            if areas[j] < areas[i]:
-                continue
-            if _pt_in_ring(rings[i][0][0], rings[i][0][1], rings[j]):
-                if top[j]:
-                    top[i] = False
-                    encl[i] = j
-                break
-    shells = {i: [] for i in range(n) if top[i]}
-    for i in range(n):
-        if not top[i] and encl[i] in shells:
-            shells[encl[i]].append(rings[i])
-    return [(rings[i], shells[i]) for i in sorted(shells)]
-
-
 def _poly_wkt(polys, want_z):
     def ring_s(r):
         return "(" + ",".join(
@@ -590,11 +479,9 @@ def _poly_wkt(polys, want_z):
         ) + ")"
 
     if len(polys) == 1:
-        shell, holes = polys[0]
-        return "POLYGON (" + ",".join(ring_s(r) for r in [shell] + holes) + ")"
+        return "POLYGON (" + ",".join(ring_s(r) for r in polys[0]) + ")"
     return "MULTIPOLYGON (" + ",".join(
-        "(" + ",".join(ring_s(r) for r in [shell] + holes) + ")"
-        for shell, holes in polys
+        "(" + ",".join(ring_s(r) for r in rings) + ")" for rings in polys
     ) + ")"
 
 
@@ -627,9 +514,9 @@ def _parse_hatch(pairs, step=4.0):
     xs = [p[0] for e in edges for p in e]
     ys = [p[1] for e in edges for p in e]
     tol = max(max(xs) - min(xs), max(ys) - min(ys)) * 1e-7
-    rings = _build_rings(edges, tol)
+    rings = G.build_rings(edges, tol)
     want_z = any(len(p) > 2 for e in edges for p in e)
-    return _poly_wkt(_organize_rings(rings), want_z)
+    return _poly_wkt(G.organize_polygons(rings), want_z)
 
 
 # ---------------------------------------------------------------------------
@@ -729,7 +616,7 @@ def _merge_wkts(wkts: list[str]) -> str | None:
         if any(len(p) > 2 for r in rings for p in r):
             return "MULTIPOLYGON (" + ",".join(
                 w[w.index("("):] for w in kept) + ")"
-        return _poly_wkt(_organize_rings(rings), want_z=False)
+        return _poly_wkt(G.organize_polygons(rings), want_z=False)
     if kinds == {"POINT"}:
         return "MULTIPOINT (" + ",".join(bodies) + ")"
     return "GEOMETRYCOLLECTION (" + ",".join(wkts) + ")"

@@ -22,14 +22,15 @@ an 80-column line format ``<5-char code><2-char len>:<value>``:
 
 Feature building follows ogredigeodatasource.cpp: points from
 FEA->PNO, (multi)linestrings from FEA->PAR, polygons from FEA->PFE
-with the PFE's arcs chained end-to-end into closed rings; the largest
-ring is the exterior, contained rings become holes (a simplified
-organizePolygons).
-"""
+with the PFE's arcs chained end-to-end into closed rings and nested into
+polygons by geom.build_rings and geom.organize_polygons (islands inside
+a hole become parts of their own)."""
 
 from __future__ import annotations
 
 import numpy as np
+
+from gdal_spark.functions import geom as G
 
 __all__ = ["EdigeoLot", "edigeo_open"]
 
@@ -294,9 +295,11 @@ class EdigeoLot:
             rings: list[np.ndarray] = []
             for pfe in pfe_ids:
                 arcs = [pars[p] for p in pfe_par.get(pfe, []) if p in pars]
-                rings.extend(_chain_rings(arcs))
+                rings += [np.array(r) for r in G.build_rings(arcs)]
             if rings:
-                make_feature(fea_id, ("Polygon", _organize(rings)))
+                # parts and holes keep this reader's largest-first order
+                rings.sort(key=lambda r: -abs(G.ring_area(r)))
+                make_feature(fea_id, ("Polygon", G.organize_polygons(rings)))
 
     def layer_features(self, name: str) -> list[dict]:
         """Features of the layer whose OBJ rid OR dictionary label
@@ -307,71 +310,6 @@ class EdigeoLot:
             if self.objects.get(desc["name_rid"]) == name:
                 return desc["features"]
         raise KeyError(name)
-
-
-def _chain_rings(arcs: list[np.ndarray]) -> list[np.ndarray]:
-    """Chain arcs end-to-end into closed rings (BuildPolygon)."""
-    todo = [a for a in arcs]
-    rings = []
-    max_join = len(todo)
-    while todo:
-        cur = list(map(tuple, todo.pop(0)))
-        n_iter = 0
-        while cur[-1] != cur[0] and n_iter < max_join:
-            found = False
-            for i, arc in enumerate(todo):
-                if tuple(arc[0]) == cur[-1]:
-                    cur.extend(map(tuple, arc[1:]))
-                elif tuple(arc[-1]) == cur[-1]:
-                    cur.extend(map(tuple, arc[::-1][1:]))
-                else:
-                    continue
-                todo.pop(i)
-                found = True
-                break
-            if not found:
-                break
-            n_iter += 1
-        if cur[-1] != cur[0]:
-            cur.append(cur[0])
-        rings.append(np.array(cur, np.float64))
-    return rings
-
-
-def _ring_area(r: np.ndarray) -> float:
-    x, y = r[:, 0], r[:, 1]
-    return 0.5 * abs(float(np.dot(x[:-1], y[1:]) - np.dot(x[1:], y[:-1])))
-
-
-def _point_in_ring(pt, ring) -> bool:
-    x, y = pt
-    inside = False
-    for i in range(len(ring) - 1):
-        x1, y1 = ring[i]
-        x2, y2 = ring[i + 1]
-        if (y1 > y) != (y2 > y):
-            xin = x1 + (y - y1) / (y2 - y1) * (x2 - x1)
-            if x < xin:
-                inside = not inside
-    return inside
-
-
-def _organize(rings: list[np.ndarray]) -> list[list[np.ndarray]]:
-    """Simplified organizePolygons: largest ring(s) exterior, contained
-    rings become holes. Returns [[exterior, holes...], ...]."""
-    order = sorted(range(len(rings)), key=lambda i: -_ring_area(rings[i]))
-    polys: list[list[np.ndarray]] = []
-    for i in order:
-        ring = rings[i]
-        placed = False
-        for poly in polys:
-            if _point_in_ring(ring[0], poly[0]):
-                poly.append(ring)
-                placed = True
-                break
-        if not placed:
-            polys.append([ring])
-    return polys
 
 
 def edigeo_open(thf_name: str, files: dict[str, str]) -> EdigeoLot:

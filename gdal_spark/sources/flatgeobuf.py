@@ -117,7 +117,8 @@ def _root(buf: bytes, base: int = 0) -> _Table:
 
 
 def parse_header(data: bytes) -> dict:
-    assert data[:3] == MAGIC and data[4:7] == MAGIC, "not a FlatGeobuf file"
+    if data[:3] != MAGIC or data[4:7] != MAGIC:
+        raise ValueError("not a FlatGeobuf file")
     hsize = struct.unpack_from("<I", data, 8)[0]
     t = _root(data[12:12 + hsize])
     cols = []

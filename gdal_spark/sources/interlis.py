@@ -18,8 +18,8 @@ the arc point and the next vertex.
 
 Area features get two geometries: the polygon assembled from the
 helper-table rings (smallest ring containing the feature's reference
-point; chained end-to-end like the reference polygonizer for
-non-overlapping boundaries) and the reference point itself.
+point; the helper lines are chained end-to-end by geom.build_rings) and
+the reference point itself.
 """
 
 from __future__ import annotations
@@ -29,6 +29,8 @@ import re
 import xml.etree.ElementTree as ET
 
 import numpy as np
+
+from gdal_spark.functions import geom as G
 
 __all__ = ["imd_parse", "itf_read"]
 
@@ -129,52 +131,6 @@ def _interp_arc(p0, pm, p1) -> list[tuple]:
         out.append((ux + r * math.cos(ang), uy + r * math.sin(ang)))
     out[-1] = (cx, cy)
     return out
-
-
-def _point_in_ring(pt, ring) -> bool:
-    x, y = pt
-    inside = False
-    for i in range(len(ring) - 1):
-        x1, y1 = ring[i]
-        x2, y2 = ring[i + 1]
-        if (y1 > y) != (y2 > y):
-            xin = x1 + (y - y1) / (y2 - y1) * (x2 - x1)
-            if x < xin:
-                inside = not inside
-    return inside
-
-
-def _ring_area(ring) -> float:
-    arr = np.asarray(ring)
-    x, y = arr[:, 0], arr[:, 1]
-    return 0.5 * abs(float(np.dot(x[:-1], y[1:]) - np.dot(x[1:], y[:-1])))
-
-
-def _chain_rings(lines: list[list[tuple]]) -> list[list[tuple]]:
-    todo = [list(ln) for ln in lines]
-    rings = []
-    while todo:
-        cur = todo.pop(0)
-        guard = len(todo) + 1
-        while cur[0] != cur[-1] and guard:
-            guard -= 1
-            hit = False
-            for i, ln in enumerate(todo):
-                if ln[0] == cur[-1]:
-                    cur.extend(ln[1:])
-                elif ln[-1] == cur[-1]:
-                    cur.extend(ln[::-1][1:])
-                else:
-                    continue
-                todo.pop(i)
-                hit = True
-                break
-            if not hit:
-                break
-        if cur[0] != cur[-1]:
-            cur.append(cur[0])
-        rings.append(cur)
-    return rings
 
 
 def itf_read(itf_text: str, imd_text: str) -> dict:
@@ -298,15 +254,18 @@ def itf_read(itf_text: str, imd_text: str) -> dict:
             if helper is None:
                 continue
             lines = [ln for row in helper for ln in row["lines"]]
-            rings = _chain_rings(lines)
+            rings = G.build_rings(lines)
+            arrs = [np.array(rg, np.float64) for rg in rings]
+            areas = [abs(G.ring_area(a)) for a in arrs]
             for f in feats:
                 g = f["geoms"].get(aname)
                 if g is None or g[0] != "Point":
                     continue
-                pt = g[1]
-                holding = [rg for rg in rings if _point_in_ring(pt, rg)]
+                px, py = [g[1][0]], [g[1][1]]
+                holding = [k for k, a in enumerate(arrs)
+                           if G.points_in_ring(px, py, a)[0]]
                 if holding:
-                    best = min(holding, key=_ring_area)
+                    best = rings[min(holding, key=areas.__getitem__)]
                     f["geoms"][aname + "_poly"] = ("Polygon", [best])
         layers[cls["layer"]] = feats
 

@@ -21,8 +21,8 @@ Reference semantics (re-derived, not ported):
     - geometryType esriGeometryPoint/Multipoint/Polyline/Polygon
     - geometry forms {x,y[,z[,m]]}, {points}, {paths}, {rings}
       with hasZ/hasM flags
-    - rings are organized into polygons by containment (holes nest
-      under the enclosing outer ring), always as MULTIPOLYGON
+    - rings are nested into polygons by geom.organize_polygons (the
+      reader's organizePolygons call), always as MULTIPOLYGON
     - esriFieldTypeDate attributes are epoch milliseconds (UTC)
 
 Both parsers accept trailing commas like the reference's json-c.
@@ -33,6 +33,8 @@ from __future__ import annotations
 import datetime
 import json
 import re
+
+from gdal_spark.functions import geom as G
 
 __all__ = ["topojson_layers", "esrijson_features", "esrijson_geom_wkt",
            "read_topojson", "read_esrijson"]
@@ -257,20 +259,6 @@ def _zm_tag(has_z, has_m):
     return ""
 
 
-def _ring_contains(ring, pt) -> bool:
-    x, y = pt
-    inside = False
-    n = len(ring)
-    for i in range(n):
-        x1, y1 = ring[i][0], ring[i][1]
-        x2, y2 = ring[(i + 1) % n][0], ring[(i + 1) % n][1]
-        if (y1 > y) != (y2 > y):
-            xi = x1 + (y - y1) / (y2 - y1) * (x2 - x1)
-            if xi > x:
-                inside = not inside
-    return inside
-
-
 def _eff_flags(geom: dict, pts, has_z: bool, has_m: bool
                ) -> tuple[bool, bool]:
     """hasZ/hasM come from the geometry object when present; otherwise a
@@ -341,17 +329,7 @@ def esrijson_geom_wkt(geom: dict, has_z: bool = False, has_m: bool = False
             return "POLYGON EMPTY"
         has_z, has_m = _eff_flags(
             geom, [p for r in rings for p in r], has_z, has_m)
-        polys: list[list] = []
-        for ring in rings:
-            placed = False
-            for poly in polys:
-                if _ring_contains(poly[0], (float(ring[0][0]),
-                                            float(ring[0][1]))):
-                    poly.append(ring)
-                    placed = True
-                    break
-            if not placed:
-                polys.append([ring])
+        polys = G.organize_polygons(rings)
         return "MULTIPOLYGON%s (%s)" % (
             _zm_tag(has_z, has_m),
             ",".join("(%s)" % ",".join(

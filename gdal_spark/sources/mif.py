@@ -38,6 +38,7 @@ import re
 import numpy as np
 import pandas as pd
 
+from gdal_spark.functions import geom as G
 from gdal_spark.functions.geomops import _rebuild_wkt
 
 
@@ -72,40 +73,13 @@ def _parse_mid_line(line: str, delim: str) -> list[str]:
     return out
 
 
-def _ring_contains(outer: np.ndarray, pt) -> bool:
-    x, y = pt
-    inside = False
-    for i in range(len(outer) - 1):
-        xa, ya = outer[i]
-        xb, yb = outer[i + 1]
-        if (ya > y) != (yb > y):
-            if x < xa + (y - ya) / (yb - ya) * (xb - xa):
-                inside = not inside
-    return inside
-
-
 def _region_to_geom(rings: list[np.ndarray]):
-    """mitab ring organization: outers with their contained holes."""
-    closed = []
-    for r in rings:
-        if len(r) and (r[0] != r[-1]).any():
-            r = np.vstack([r, r[0]])
-        closed.append(r)
-    if len(closed) == 1:
-        return "POLYGON", closed
-    outers: list[list[np.ndarray]] = []
-    for r in closed:
-        placed = False
-        for poly in outers:
-            if _ring_contains(poly[0], r[0]):
-                poly.append(r)
-                placed = True
-                break
-        if not placed:
-            outers.append([r])
-    if len(outers) == 1:
-        return "POLYGON", outers[0]
-    return "MULTIPOLYGON", outers
+    """mitab region: closed rings nested by geom.organize_polygons."""
+    polys = G.organize_polygons(
+        [_tab_close_ring(r) if len(r) else r for r in rings])
+    if len(polys) == 1:
+        return "POLYGON", polys[0]
+    return "MULTIPOLYGON", polys
 
 
 class _Lines:

@@ -297,7 +297,8 @@ def read_ogrvrt(spark: SparkSession, vrt: str,
             text = fh.read()
         base = base_dir or os.path.dirname(os.path.abspath(vrt))
     root = ET.fromstring(text)
-    assert root.tag == "OGRVRTDataSource", root.tag
+    if root.tag != "OGRVRTDataSource":
+        raise ValueError(f"not an OGR VRT: root element {root.tag}")
     out: dict[str, DataFrame] = {}
     errors: dict[str, str] = {}
     for el in root:

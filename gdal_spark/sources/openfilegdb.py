@@ -44,6 +44,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from gdal_spark.functions import geom as G
 from gdal_spark.functions import wkb as W
 
 FGFT_INT16, FGFT_INT32, FGFT_FLOAT32, FGFT_FLOAT64 = 0, 1, 2, 3
@@ -380,11 +381,10 @@ def decode_shape(buf: bytes, gf: dict) -> bytes | None:
                 W.write_linestring(p) for p in parts
             )
             return b"\x01" + struct.pack("<I", 5) + body
-        # polygon: shapefile ring-winding organization (outer = CW),
-        # reuse the shapefile reader's organizer
-        from gdal_spark.sources.vector_formats import _shp_rings_to_wkb
-
-        return _shp_rings_to_wkb(parts)
+        polys = G.organize_polygons(parts, only_ccw=True)
+        if len(polys) == 1:
+            return W.write_polygon(polys[0])
+        return W.write_multipolygon(polys)
     raise ValueError(f"unsupported shape type {base}")
 
 

@@ -21,6 +21,7 @@ Reference semantics (re-derived on top of the engine's ISO8211 reader):
 
 from __future__ import annotations
 
+from gdal_spark.functions import geom as G
 from gdal_spark.sources.iso8211 import parse_ddf
 from gdal_spark.sources.s57tables import ATTRIBUTES, OBJECT_CLASSES
 
@@ -257,28 +258,8 @@ def _geometry(prim, fspt, nodes, edges, node_is_3d) -> str | None:
                 return "LINESTRING (%s)" % _coords_wkt(runs[0])
             return "MULTILINESTRING (%s)" % ",".join(
                 "(%s)" % _coords_wkt(r) for r in runs)
-        rings: list[list[tuple]] = []
-        remaining = list(runs)
-        while remaining:
-            ring = list(remaining.pop(0))
-            progressing = True
-            while ring[0] != ring[-1] and progressing:
-                progressing = False
-                for i, r in enumerate(remaining):
-                    if r[0] == ring[-1]:
-                        ring.extend(r[1:])
-                    elif r[-1] == ring[-1]:
-                        ring.extend(r[-2::-1])
-                    else:
-                        continue
-                    remaining.pop(i)
-                    progressing = True
-                    break
-            if ring[0] != ring[-1]:
-                ring.append(ring[0])
-            rings.append(ring)
         return "POLYGON (%s)" % ",".join(
-            "(%s)" % _coords_wkt(r) for r in rings)
+            "(%s)" % _coords_wkt(r) for r in G.build_rings(runs))
     return None
 
 

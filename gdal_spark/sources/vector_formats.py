@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from gdal_spark.functions import geom as G
 from gdal_spark.functions import wkb as W
 from gdal_spark.functions import wkt as WT
 
@@ -339,42 +340,6 @@ SHP_POLYLINE = 3
 SHP_POLYGON = 5
 
 
-def _ring_signed_area(ring: np.ndarray) -> float:
-    x, y = ring[:, 0], ring[:, 1]
-    return 0.5 * float(np.sum(x[:-1] * y[1:] - x[1:] * y[:-1]))
-
-
-def _point_in_ring(pt: np.ndarray, ring: np.ndarray) -> bool:
-    x, y = pt
-    x0, y0 = ring[:-1, 0], ring[:-1, 1]
-    x1, y1 = ring[1:, 0], ring[1:, 1]
-    cond = (y0 <= y) != (y1 <= y)
-    with np.errstate(divide="ignore", invalid="ignore"):
-        xi = x0 + (y - y0) / (y1 - y0) * (x1 - x0)
-    return bool(np.sum(cond & (x < xi)) % 2)
-
-
-def _shp_rings_to_wkb(rings: list[np.ndarray]) -> bytes:
-    """Shapefile polygon parts -> WKB: outer rings are CW (negative
-    shoelace area, shape/shpopen.c convention); holes CCW, assigned to
-    the outer that contains their first vertex."""
-    outers = [r for r in rings if _ring_signed_area(r) < 0]
-    holes = [r for r in rings if _ring_signed_area(r) >= 0]
-    if not outers:  # degenerate: treat everything as one polygon
-        return W.write_polygon(rings)
-    polys = [[o] for o in outers]
-    for h in holes:
-        for p in polys:
-            if _point_in_ring(h[0], p[0]):
-                p.append(h)
-                break
-        else:
-            polys[0].append(h)
-    if len(polys) == 1:
-        return W.write_polygon(polys[0])
-    return W.write_multipolygon(polys)
-
-
 def _parse_shp_record(content: bytes) -> bytes | None:
     (stype,) = struct.unpack_from("<i", content, 0)
     if stype == 0:  # null shape
@@ -397,7 +362,10 @@ def _parse_shp_record(content: bytes) -> bytes | None:
             return W.write_linestring(rings[0]) if nparts == 1 else W.write_linestring(
                 np.vstack(rings)
             )
-        return _shp_rings_to_wkb(rings)
+        polys = G.organize_polygons(rings, only_ccw=True)
+        if len(polys) == 1:
+            return W.write_polygon(polys[0])
+        return W.write_multipolygon(polys)
     raise ValueError(f"unsupported shape type {stype}")
 
 
@@ -447,7 +415,8 @@ def read_shapefile(
     n = (len(idx) - 100) // 8
     offsets = np.frombuffer(idx, dtype=">i4", count=2 * n, offset=100).reshape(n, 2)
     nrec, hdr_len, rec_len, fields = _read_dbf_header(dbf)
-    assert nrec == n, f"shx/dbf record mismatch ({n} vs {nrec})"
+    if nrec != n:
+        raise ValueError(f"shx/dbf record mismatch ({n} vs {nrec})")
     if num_partitions is None:
         num_partitions = min(max(1, n // 2048), spark.sparkContext.defaultParallelism)
     splits = np.array_split(np.arange(n), num_partitions)
@@ -563,7 +532,7 @@ def _wkb_to_shp_parts(buf: bytes) -> tuple[int, list[np.ndarray]]:
             r = np.asarray(r, dtype=np.float64)
             if not np.array_equal(r[0], r[-1]):
                 r = np.vstack([r, r[:1]])
-            area = _ring_signed_area(r)
+            area = G.ring_area(r)
             # exterior must be CW (area<0), holes CCW (area>0)
             if (i == 0 and area > 0) or (i > 0 and area < 0):
                 r = r[::-1]
@@ -717,7 +686,8 @@ def _gpkg_unblob(blob: bytes) -> bytes | None:
     if blob is None:
         return None
     blob = bytes(blob)
-    assert blob[:2] == b"GP", "not a GeoPackage geometry blob"
+    if blob[:2] != b"GP":
+        raise ValueError("not a GeoPackage geometry blob")
     flags = blob[3]
     env = (flags >> 1) & 0b111
     env_len = {0: 0, 1: 32, 2: 48, 3: 48, 4: 64}[env]

@@ -27,6 +27,8 @@ from __future__ import annotations
 
 import numpy as np
 
+from gdal_spark.functions import geom as G
+
 __all__ = ["VFKFile", "vfk_read"]
 
 _GEOM_POINT = ("SOBR", "SPOL")
@@ -187,37 +189,12 @@ class VFKFile:
 
 
 def _assemble_rings(lines: list[np.ndarray]) -> list[np.ndarray]:
-    """Chain boundary lines end-to-end into closed rings
-    (AppendLineToRing semantics: a line joins a ring when either of
-    its endpoints matches the ring's open end, reversed as needed;
-    otherwise it starts a new ring). First ring is the exterior."""
-    todo = [np.asarray(ln, np.float64) for ln in lines]
-    rings: list[list] = []
-    cur: list | None = None
-    max_iter = 2 * len(todo) + 2
-    it = 0
-    while todo and it < max_iter:
-        it += 1
-        if cur is None:
-            cur = list(todo.pop(0))
-            continue
-        found = False
-        for k, ln in enumerate(todo):
-            if tuple(ln[0]) == tuple(cur[-1]):
-                cur.extend(map(tuple, ln[1:]))
-            elif tuple(ln[-1]) == tuple(cur[-1]):
-                cur.extend(map(tuple, ln[::-1][1:]))
-            else:
-                continue
-            todo.pop(k)
-            found = True
-            break
-        if not found or tuple(cur[0]) == tuple(cur[-1]):
-            rings.append(cur)
-            cur = None
-    if cur is not None:
-        rings.append(cur)
-    return [np.array(r, np.float64) for r in rings]
+    """Boundary lines chained end-to-end into rings (AppendLineToRing:
+    a line joins the ring whose open end one of its endpoints meets,
+    reversed as needed). First ring is the exterior; a chain that does
+    not close stays open."""
+    return [np.array(r[:-1] if r[-1] is r[0] else r, np.float64)
+            for r in G.build_rings(lines)]
 
 
 def _split(body: str) -> list[str]:

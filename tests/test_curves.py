@@ -169,6 +169,70 @@ def test_wkb_multicurve_and_multisurface():
     assert gt == W.WKB_MULTIPOLYGON and len(polys) == 2
 
 
+def test_wkb_curvepolygon_and_multicurve_keep_z():
+    arc = CV.write_circularstring([[1, 0, 7], [-1, 0, 8], [1, 0, 7]])
+    lin = CV.linearize_wkb(struct.pack("<BII", 1, 1010, 1) + arc, 45.0)
+    gtype, nrings, npts = struct.unpack_from("<III", lin, 1)
+    assert (gtype, nrings) == (1003, 1)
+    assert W._geom_length(lin, 0) == len(lin)
+    ring = np.frombuffer(lin, "<f8", npts * 3, 13).reshape(npts, 3)
+    assert (ring[0] == (1, 0, 7)).all() and (ring[-1] == (1, 0, 7)).all()
+    assert (ring[:, 2] == 7).all()
+
+    half = CV.write_circularstring([[1, 0, 7], [0, 1, 8], [-1, 0, 9]])
+    lin = CV.linearize_wkb(struct.pack("<BII", 1, 1011, 2) + half + arc, 45.0)
+    assert struct.unpack_from("<II", lin, 1) == (1005, 2)
+    assert W._geom_length(lin, 0) == len(lin)
+    gt, pts = W.parse(lin[9:])
+    assert gt == W.WKB_LINESTRING_Z and (pts[0, 2], pts[-1, 2]) == (7, 9)
+
+    ms = struct.pack("<BII", 1, 1012, 1) + struct.pack("<BII", 1, 1010, 1) + arc
+    lin = CV.linearize_wkb(ms, 45.0)
+    assert struct.unpack_from("<II", lin, 1) == (1006, 1)
+    assert struct.unpack_from("<I", lin, 10) == (1003,)
+    assert W._geom_length(lin, 0) == len(lin)
+
+
+def test_linearized_z_curves_reach_the_kernels():
+    """The Z WKB linearize_wkb emits parses and feeds to_wkt, the area,
+    bbox and PIP kernels, as the 2-D linearization of the same curve."""
+    from gdal_spark.functions import geom as G
+    from gdal_spark.functions import wkt as WT
+    from gdal_spark.sources.vector_formats import _gpkg_unblob
+
+    arc = CV.write_circularstring([[1, 0, 7], [-1, 0, 8], [1, 0, 7]])
+    arc2d = CV.write_circularstring([[1, 0], [-1, 0], [1, 0]])
+    flat45 = CV.linearize_wkb(struct.pack("<BII", 1, 10, 1) + arc2d, 45.0)
+    flat = CV.linearize_wkb(struct.pack("<BII", 1, 10, 1) + arc2d)
+    cpz = struct.pack("<BII", 1, 1010, 1) + arc
+    # a GeoPackage blob (little-endian header, no envelope) linearizes on
+    # read at the default step
+    blob = b"GP\x00\x01" + struct.pack("<i", 4326) + cpz
+    polys = [CV.linearize_wkb(cpz, 45.0), _gpkg_unblob(blob),
+             CV.linearize_wkb(struct.pack("<BII", 1, 1012, 1) + cpz, 45.0)]
+    for lin, flat in zip(polys, [flat45, flat, flat45]):
+        gt, payload = W.parse(lin)
+        assert gt in (W.WKB_POLYGON_Z, W.WKB_MULTIPOLYGON_Z)
+        ring = (payload if gt == W.WKB_POLYGON_Z else payload[0])[0]
+        assert ring.shape[1] == 3 and (ring[:, 2] == 7).all()
+        assert G.wkb_area(lin) == pytest.approx(G.wkb_area(flat), abs=1e-12)
+        assert G.wkb_area(lin) > 2.8
+        assert W.bbox(lin) == pytest.approx(W.bbox(flat), abs=1e-12)
+        assert G.points_in_wkb([0.0, 2.0], [0.0, 0.0], lin).tolist() == [
+            True, False]
+    assert WT.to_wkt(polys[0]).startswith("POLYGON Z ((1 0 7,")
+    assert WT.to_wkt(polys[2]).startswith("MULTIPOLYGON Z (((1 0 7,")
+
+    half = CV.write_circularstring([[1, 0, 7], [0, 1, 8], [-1, 0, 9]])
+    mc = CV.linearize_wkb(struct.pack("<BII", 1, 1011, 2) + half + arc, 45.0)
+    gt, lines = W.parse(mc)
+    assert gt == W.WKB_MULTILINESTRING_Z and [ln.shape[1] for ln in lines] == [
+        3, 3]
+    assert lines[0][-1].tolist() == [-1, 0, 9]
+    txt = WT.to_wkt(mc)
+    assert txt.startswith("MULTILINESTRING Z ((1 0 7,") and txt.count("(") == 3
+
+
 def test_linear_passthrough_identity():
     ls = W.write_linestring(np.array([[0, 0], [3, 4]], float))
     assert CV.linearize_wkb(ls) == ls

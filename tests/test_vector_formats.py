@@ -13,6 +13,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from gdal_spark.functions import geom as G
 from gdal_spark.functions import wkb as W
 from gdal_spark.functions import wkt as WT
 from gdal_spark.sources import vector_formats as VF
@@ -203,7 +204,7 @@ def test_shapefile_roundtrip_polygons_with_hole(spark, feats, tmp_path):
         assert len(ra) == len(rb) == 2  # exterior + hole survived
         # same area regardless of ring direction normalization
         for rr_a, rr_b in zip(ra, rb):
-            assert abs(abs(VF._ring_signed_area(rr_a)) - abs(VF._ring_signed_area(rr_b))) < 1e-9
+            assert abs(abs(G.ring_area(rr_a)) - abs(G.ring_area(rr_b))) < 1e-9
 
 
 def test_shapefile_multipolygon_ring_assembly():
@@ -211,8 +212,8 @@ def test_shapefile_multipolygon_ring_assembly():
     o1 = np.array([[0, 0], [0, 10], [10, 10], [10, 0], [0, 0]], float)  # CW (y-up)
     h1 = np.array([[2, 2], [4, 2], [4, 4], [2, 4], [2, 2]], float)  # CCW
     o2 = np.array([[20, 0], [20, 5], [25, 5], [25, 0], [20, 0]], float)
-    assert VF._ring_signed_area(o1) < 0 and VF._ring_signed_area(h1) > 0
-    wkb_buf = VF._shp_rings_to_wkb([o1, h1, o2])
+    assert G.ring_area(o1) < 0 and G.ring_area(h1) > 0
+    wkb_buf = W.write_multipolygon(G.organize_polygons([o1, h1, o2], only_ccw=True))
     polys = W.polygon_rings(wkb_buf)
     assert len(polys) == 2
     n_rings = sorted(len(p) for p in polys)
