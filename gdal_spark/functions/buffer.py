@@ -1,4 +1,4 @@
-"""Geometry buffering (Minkowski sum with a disc).
+r"""Geometry buffering (Minkowski sum with a disc).
 
 Reference parity: `gdal vector buffer` (apps/gdalalg_vector_buffer.cpp),
 OGRGeometry::Buffer -> GEOS Buffer. GEOS discretizes circular arcs with

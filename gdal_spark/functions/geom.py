@@ -182,10 +182,9 @@ def build_rings(edges: list, tol: float = 0.0) -> list[list]:
     whose start or end (then reversed) lies nearest its open end within
     `tol`; an exact match wins at once. A ring that stops short of its
     start is closed: snapped when the ends are within `tol`, otherwise by
-    appending its first point, the very object it starts with (so with
-    tol == 0, `ring[-1] is ring[0]` marks the rings that assembly closed;
-    VFK reopens them by it, and tests/test_rings.py holds the mark).
-    Only x and y are compared; points keep their other ordinates.
+    appending its first point. Points are not copied: a ring holds the
+    input point objects. Only x and y are compared; points keep their
+    other ordinates.
     """
     todo = [e for e in edges if len(e) >= 2]
     rings = []

@@ -228,27 +228,29 @@ def polygon_rings(buf: bytes) -> list[list[np.ndarray]]:
     return payload
 
 
+def _vertices(gtype: int, payload) -> list[np.ndarray]:
+    """Every vertex of a parsed geometry, as (N, >= 2) arrays."""
+    base = gtype % 1000
+    if base == WKB_POINT:
+        return [np.asarray([payload], np.float64)]
+    if base in (WKB_LINESTRING, WKB_MULTIPOINT):
+        return [payload]
+    if base in (WKB_POLYGON, WKB_MULTILINESTRING):
+        return list(payload)
+    if base == WKB_MULTIPOLYGON:
+        return [ring for rings in payload for ring in rings]
+    return [v for g, p in payload for v in _vertices(g, p)]  # collection
+
+
 def bbox(buf: bytes) -> tuple[float, float, float, float]:
-    gtype, payload = parse(buf)
-    gtype %= 1000  # the x/y extent of a Z geometry
-    if gtype == WKB_POINT:
-        x, y = payload[:2]
-        return x, y, x, y
-    if gtype == WKB_LINESTRING:
-        return (
-            float(payload[:, 0].min()),
-            float(payload[:, 1].min()),
-            float(payload[:, 0].max()),
-            float(payload[:, 1].max()),
-        )
-    polys = [payload] if gtype == WKB_POLYGON else payload
-    ext = np.vstack([rings[0] for rings in polys])
-    return (
-        float(ext[:, 0].min()),
-        float(ext[:, 1].min()),
-        float(ext[:, 0].max()),
-        float(ext[:, 1].max()),
-    )
+    """(minx, miny, maxx, maxy) over every vertex of every member; the
+    x/y extent of a Z geometry."""
+    xy = [v[:, :2] for v in _vertices(*parse(buf)) if len(v)]
+    if not xy:
+        raise ValueError("empty geometry has no extent")
+    xy = np.vstack(xy)
+    return (float(xy[:, 0].min()), float(xy[:, 1].min()),
+            float(xy[:, 0].max()), float(xy[:, 1].max()))
 
 
 def map_coords(buf: bytes, fn) -> bytes:

@@ -21,7 +21,8 @@ modalities a training-data pipeline carries:
 Distributed forms are mapInPandas over Arrow batches: one decode per
 row, no shuffle, no driver involvement. Reference analog for the
 multi-page layout: frmts/gtiff multi-IFD chains (gcore overview IFDs),
-parsed here by functions/tiff.py ``ifd_offsets`` / ``tiff_parse``.
+written by functions/tiff.py's strip writer and parsed by its
+``ifd_offsets`` / ``tiff_parse``.
 """
 
 from __future__ import annotations
@@ -32,21 +33,12 @@ import numpy as np
 import pandas as pd
 
 from gdal_spark.functions.tiff import (
-    T_BITS,
-    T_COMPRESSION,
-    T_LENGTH,
-    T_PHOTOMETRIC,
-    T_PLANAR,
-    T_ROWS_PER_STRIP,
-    T_SAMPLES,
-    T_STRIP_COUNTS,
-    T_STRIP_OFFSETS,
-    T_WIDTH,
+    T_SUBFILETYPE,
+    _pixels,
+    _write_strips,
     ifd_offsets,
     tiff_parse,
 )
-
-T_SUBFILETYPE = 254  # NewSubfileType: 2 = single page of a multi-page file
 
 
 # ---------------------------------------------------------------------------
@@ -163,80 +155,10 @@ def audio_features_tiles(df, frame_len: int = 64, bytes_col: str = "bytes"):
 
 def tiff_encode_seq(frames, rows_per_strip: int = 64) -> bytes:
     """List of uint8 (h, w) / (h, w, 3) frames -> one multi-page TIFF
-    (classic, little-endian, chained IFDs with NewSubfileType=2)."""
-    metas = []
-    pos = 8  # header
-    bodies = []
-    for a in frames:
-        a = np.asarray(a)
-        if a.dtype != np.uint8:
-            raise ValueError("frame writer supports uint8 only")
-        if a.ndim == 2:
-            a = a[:, :, None]
-        h, w, spp = a.shape
-        offs, cnts, strips = [], [], []
-        for y in range(0, h, rows_per_strip):
-            raw = a[y : y + rows_per_strip].tobytes()
-            offs.append(pos)
-            cnts.append(len(raw))
-            pos += len(raw)
-            strips.append(raw)
-        bodies.append(b"".join(strips))
-        metas.append((h, w, spp, offs, cnts))
-
-    def build(meta):
-        h, w, spp, offs, cnts = meta
-        return sorted(
-            [
-                (T_SUBFILETYPE, 4, 1, [2]),
-                (T_WIDTH, 4, 1, [w]),
-                (T_LENGTH, 4, 1, [h]),
-                (T_BITS, 3, spp, [8] * spp),
-                (T_COMPRESSION, 3, 1, [1]),
-                (T_PHOTOMETRIC, 3, 1, [2 if spp == 3 else 1]),
-                (T_STRIP_OFFSETS, 4, len(offs), offs),
-                (T_SAMPLES, 3, 1, [spp]),
-                (T_ROWS_PER_STRIP, 4, 1, [rows_per_strip]),
-                (T_STRIP_COUNTS, 4, len(cnts), cnts),
-                (T_PLANAR, 3, 1, [1]),
-            ]
-        )
-
-    # serialize per-frame overflow + IFD regions, chaining next pointers
-    regions = []
-    ifd_offs = []
-    for meta in metas:
-        entries = build(meta)
-        overflow = bytearray()
-        overflow_base = pos
-        packed = []
-        for tag, typ, cnt, vals in entries:
-            fmt = {3: "H", 4: "I"}[typ]
-            payload = struct.pack("<" + str(cnt) + fmt, *vals)
-            if len(payload) <= 4:
-                packed.append((tag, typ, cnt, payload.ljust(4, b"\0")))
-            else:
-                packed.append(
-                    (
-                        tag, typ, cnt,
-                        struct.pack("<I", overflow_base + len(overflow)),
-                    )
-                )
-                overflow += payload
-        ifd_off = overflow_base + len(overflow)
-        ifd_offs.append(ifd_off)
-        ifd = struct.pack("<H", len(packed))
-        for tag, typ, cnt, val4 in packed:
-            ifd += struct.pack("<HHI", tag, typ, cnt) + val4
-        regions.append((bytes(overflow), ifd))
-        pos = ifd_off + len(ifd) + 4  # + next-IFD pointer
-
-    out = [struct.pack("<2sHI", b"II", 42, ifd_offs[0])]
-    out.extend(bodies)
-    for i, (overflow, ifd) in enumerate(regions):
-        nxt = ifd_offs[i + 1] if i + 1 < len(regions) else 0
-        out.append(overflow + ifd + struct.pack("<I", nxt))
-    return b"".join(out)
+    (classic, little-endian, chained IFDs with NewSubfileType=2), laid
+    out by the TIFF strip writer."""
+    page = [(T_SUBFILETYPE, 4, 1, [2])]
+    return _write_strips([(_pixels(f), page) for f in frames], rows_per_strip)
 
 
 def video_meta(data: bytes) -> tuple[int, int, int]:

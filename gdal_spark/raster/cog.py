@@ -27,8 +27,14 @@ autotest/gcore/validate_cloud_optimized_geotiff.py:
 The distributed angle is the whole point of the format: `cog_tile_index`
 is a driver-side metadata read (IFDs only — at object-store scale one
 ranged GET), and `scan_cog_tiles` hands each Spark task only its tiles'
-(offset, nbytes) slices, decoding LZW/PackBits per task with zero full-file
+(offset, nbytes) slices, decoding each per task with zero full-file
 reads — the mapInPandas analog of GDAL's /vsicurl ranged tile fetches.
+
+As COG is a creation profile of the GTiff driver, this module keeps only
+the COG layout; the TIFF primitives are functions/tiff.py's: the header
+and IFD reader, the IFD writer (`_pack_ifd`), the tile encoder
+(`_encode_chunk`), and the chunk decoder and predictor that
+`decode_cog_tile` shares with strips and tiles of any TIFF.
 """
 
 from __future__ import annotations
@@ -39,34 +45,33 @@ from collections.abc import Iterator
 import numpy as np
 
 from gdal_spark.functions.tiff import (
-    T_BITS,
     T_COMPRESSION,
     T_JPEGTABLES,
     T_LENGTH,
-    T_PREDICTOR,
     T_PHOTOMETRIC,
-    T_PIXEL_SCALE,
-    T_PLANAR,
+    T_PREDICTOR,
     T_SAMPLES,
-    T_TIEPOINT,
+    T_SUBFILETYPE,
     T_TILE_COUNTS,
     T_TILE_L,
     T_TILE_OFFSETS,
     T_TILE_W,
     T_WIDTH,
     TiffError,
+    _chunk_to_samples,
+    _codec,
+    _decompress,
+    _encode_chunk,
+    _geo_entries,
+    _header,
+    _image_entries,
+    _pack_ifds,
+    _pixels,
     _read_ifd,
     ifd_offsets,
-    lzw_decode,
-    lzw_encode,
-    packbits_decode,
-    packbits_encode,
+    tiff_header,
     tiff_parse,
 )
-
-T_SUBFILETYPE = 254  # NewSubfileType: 1 = reduced-resolution (overview)
-
-_COMP = {"none": 1, "lzw": 5, "packbits": 32773, "deflate": 8}
 
 _GHOST_ITEMS = (
     "LAYOUT=IFDS_BEFORE_DATA\n"
@@ -88,60 +93,18 @@ def _overview_shapes(h: int, w: int, blocksize: int) -> list[tuple[int, int]]:
     return shapes
 
 
-def _tile_grid(arr: np.ndarray, ts: int) -> list[bytes]:
-    """Row-major ts x ts tiles, edge tiles zero-padded (libtiff pads
-    partial tiles to full tile size)."""
-    h, w = arr.shape[:2]
-    spp = 1 if arr.ndim == 2 else arr.shape[2]
-    a = arr if arr.ndim == 3 else arr[:, :, None]
+def _tile_grid(a: np.ndarray, ts: int) -> list[np.ndarray]:
+    """(h, w, spp) -> row-major ts x ts tiles, edge tiles zero-padded
+    (libtiff pads partial tiles to full tile size)."""
+    h, w, spp = a.shape
     tiles = []
     for ty in range(0, h, ts):
         for tx in range(0, w, ts):
             t = np.zeros((ts, ts, spp), dtype=a.dtype)
             sub = a[ty : ty + ts, tx : tx + ts]
             t[: sub.shape[0], : sub.shape[1]] = sub
-            tiles.append(t.tobytes())
+            tiles.append(t)
     return tiles
-
-
-_VAL_FMT = {3: "H", 4: "I", 12: "d", 16: "Q"}
-
-
-def _pack_ifd(
-    entries: list[tuple[int, int, int, list]],
-    ifd_off: int,
-    next_off: int,
-    big: bool = False,
-) -> bytes:
-    """Serialize one little-endian IFD at ``ifd_off``; values wider than
-    the inline slot go to an overflow block immediately after the entry
-    table. ``big`` = BigTIFF layout (8-byte counts/offsets, 20-byte
-    entries)."""
-    entries = sorted(entries)
-    n = len(entries)
-    inline = 8 if big else 4
-    overflow_base = ifd_off + _ifd_size(n, 0, big)
-    overflow = bytearray()
-    body = struct.pack("<Q", n) if big else struct.pack("<H", n)
-    head = "<HHQ" if big else "<HHI"
-    ptr = "<Q" if big else "<I"
-    for tag, typ, cnt, vals in entries:
-        payload = struct.pack("<" + str(cnt) + _VAL_FMT[typ], *vals)
-        if len(payload) <= inline:
-            body += struct.pack(head, tag, typ, cnt) + payload.ljust(inline, b"\0")
-        else:
-            body += struct.pack(head, tag, typ, cnt) + struct.pack(
-                ptr, overflow_base + len(overflow)
-            )
-            overflow += payload
-    body += struct.pack(ptr, next_off)
-    return bytes(body) + bytes(overflow)
-
-
-def _ifd_size(n_entries: int, overflow: int, big: bool = False) -> int:
-    if big:
-        return 8 + 20 * n_entries + 8 + overflow
-    return 2 + 12 * n_entries + 4 + overflow
 
 
 def write_cog(
@@ -168,43 +131,19 @@ def write_cog(
     """
     from gdal_spark.raster.kernels import block_reduce
 
-    a = np.asarray(arr)
-    if a.dtype != np.uint8:
-        raise TiffError("COG writer supports uint8 only")
+    a = _pixels(arr)
     if blocksize % 16:
         raise TiffError("COG block size must be a multiple of 16")
-    spp = 1 if a.ndim == 2 else a.shape[2]
-    comp = _COMP[compress]
-    if predictor not in (1, 2):
-        raise TiffError("COG writer supports predictor 1 or 2")
-    if predictor == 2 and comp not in (5, 8):
-        raise TiffError("predictor requires lzw or deflate")
+    spp = a.shape[2]
+    comp = _codec(compress, predictor)
 
     # level 0 = full res; levels[i>0] halved i times
     levels = [a]
     for _ in _overview_shapes(a.shape[0], a.shape[1], blocksize):
         levels.append(block_reduce(levels[-1], 2, 2, resampling))
-
-    def _compress(raw: bytes) -> bytes:
-        if predictor == 2:
-            # horizontal differencing per interleaved sample on the
-            # fixed blocksize x blocksize tile (frmts/gtiff PREDICTOR=2)
-            t = np.frombuffer(raw, np.uint8).reshape(
-                blocksize, blocksize, spp).copy()
-            t[:, 1:, :] -= t[:, :-1, :]
-            raw = t.tobytes()
-        if comp == 5:
-            return lzw_encode(raw)
-        if comp == 32773:
-            return packbits_encode(raw)
-        if comp == 8:
-            import zlib
-
-            return zlib.compress(raw, zlevel)
-        return raw
-
     tiles_per_level = [
-        [_compress(t) for t in _tile_grid(lv, blocksize)] for lv in levels
+        [_encode_chunk(t, comp, predictor, zlevel) for t in _tile_grid(lv, blocksize)]
+        for lv in levels
     ]
 
     if bigtiff == "auto":
@@ -213,89 +152,35 @@ def write_cog(
         big = a.nbytes + a.nbytes // 3 + (1 << 24) >= (1 << 32)
     else:
         big = bool(bigtiff)
-    off_typ = 16 if big else 4  # TileOffsets as LONG8 in BigTIFF
 
     # ---- ghost area ----
     ghost_head = f"GDAL_STRUCTURAL_METADATA_SIZE={len(_GHOST_ITEMS):06d} bytes\n"
     ghost = (ghost_head + _GHOST_ITEMS).encode("ascii")
     first_ifd = (16 if big else 8) + len(ghost)
 
-    # ---- IFD entry tables (values patched after layout) ----
-    def _entries(li: int, lv: np.ndarray) -> list[tuple[int, int, int, list]]:
-        h, w = lv.shape[:2]
-        ntiles = len(tiles_per_level[li])
-        e = [
-            (T_WIDTH, 4, 1, [w]),
-            (T_LENGTH, 4, 1, [h]),
-            (T_BITS, 3, spp, [8] * spp),
-            (T_COMPRESSION, 3, 1, [comp]),
-            (T_PHOTOMETRIC, 3, 1, [2 if spp == 3 else 1]),
-            (T_SAMPLES, 3, 1, [spp]),
-            (T_PLANAR, 3, 1, [1]),
+    # ---- IFD entry tables; the tile offsets are filled in after layout ----
+    tables, tile_offsets = [], []
+    for li, (lv, tiles) in enumerate(zip(levels, tiles_per_level)):
+        offs = [0] * len(tiles)
+        tile_offsets.append(offs)
+        tables.append(_image_entries(lv.shape[0], lv.shape[1], spp, comp, predictor) + [
             (T_TILE_W, 3, 1, [blocksize]),
             (T_TILE_L, 3, 1, [blocksize]),
-            (T_TILE_OFFSETS, off_typ, ntiles, [0] * ntiles),
-            (T_TILE_COUNTS, 4, ntiles, [len(t) for t in tiles_per_level[li]]),
-        ]
-        if predictor == 2:
-            e.append((T_PREDICTOR, 3, 1, [2]))
-        if li > 0:
-            e.append((T_SUBFILETYPE, 4, 1, [1]))
-        elif geotransform is not None:
-            gt = geotransform
-            if gt[2] or gt[4]:
-                raise TiffError("rotated geotransforms not supported")
-            e.append((T_PIXEL_SCALE, 12, 3, [gt[1], -gt[5], 0.0]))
-            e.append((T_TIEPOINT, 12, 6, [0.0, 0.0, 0.0, gt[0], gt[3], 0.0]))
-        return e
-
-    entry_tables = [_entries(i, lv) for i, lv in enumerate(levels)]
-
-    inline = 8 if big else 4
-
-    def _overflow_bytes(entries) -> int:
-        tot = 0
-        for _, typ, cnt, _ in entries:
-            sz = {3: 2, 4: 4, 12: 8, 16: 8}[typ] * cnt
-            if sz > inline:
-                tot += sz
-        return tot
-
-    ifd_offs = []
-    pos = first_ifd
-    for ents in entry_tables:
-        ifd_offs.append(pos)
-        pos += _ifd_size(len(ents), _overflow_bytes(ents), big)
+            (T_TILE_OFFSETS, 16 if big else 4, len(tiles), offs),  # LONG8 in BigTIFF
+            (T_TILE_COUNTS, 4, len(tiles), [len(t) for t in tiles]),
+        ] + ([(T_SUBFILETYPE, 4, 1, [1])] if li else _geo_entries(geotransform)))
+    pos = first_ifd + len(_pack_ifds(tables, first_ifd, big))
 
     # ---- imagery layout: smallest overview first, full res last ----
-    data_start = pos
-    tile_offsets: list[list[int]] = [[] for _ in levels]
     blobs = []
     for li in range(len(levels) - 1, -1, -1):
-        for t in tiles_per_level[li]:
-            leader = struct.pack("<I", len(t))
+        for i, t in enumerate(tiles_per_level[li]):
             trailer = t[-4:] if len(t) >= 4 else t.ljust(4, b"\0")
-            tile_offsets[li].append(pos + 4)
-            blobs.append(leader + t + trailer)
-            pos += 4 + len(t) + len(trailer)
-
-    for li, ents in enumerate(entry_tables):
-        for i, (tag, typ, cnt, vals) in enumerate(ents):
-            if tag == T_TILE_OFFSETS:
-                ents[i] = (tag, typ, cnt, tile_offsets[li])
-
-    if big:
-        out = bytearray(struct.pack("<2sHHHQ", b"II", 43, 8, 0, first_ifd))
-    else:
-        out = bytearray(struct.pack("<2sHI", b"II", 42, first_ifd))
-    out += ghost
-    for li, ents in enumerate(entry_tables):
-        nxt = ifd_offs[li + 1] if li + 1 < len(levels) else 0
-        out += _pack_ifd(ents, ifd_offs[li], nxt, big)
-    assert len(out) == data_start, (len(out), data_start)
-    for b in blobs:
-        out += b
-    return bytes(out)
+            tile_offsets[li][i] = pos + 4
+            blobs.append(struct.pack("<I", len(t)) + t + trailer)
+            pos += 8 + len(t)
+    return (_header(big, first_ifd) + ghost + _pack_ifds(tables, first_ifd, big)
+            + b"".join(blobs))
 
 
 # ---------------------------------------------------------------------------
@@ -307,10 +192,9 @@ def cog_info(data: bytes) -> dict:
     """Driver-side metadata read: ghost items + per-level tile map.
     Touches only the head of the file (header + ghost + IFD chain) — the
     object-store access pattern COG exists for."""
-    if data[:2] != b"II":
+    bo, big, _ = tiff_header(data)
+    if bo != "<":
         raise TiffError("COG reader expects little-endian TIFF")
-    (magic,) = struct.unpack_from("<H", data, 2)
-    big = magic == 43
     ghost: dict[str, str] = {}
     gpos = 16 if big else 8  # ghost sits right after the header
     if data[gpos : gpos + 30].startswith(b"GDAL_STRUCTURAL_METADATA_SIZE="):
@@ -321,8 +205,8 @@ def cog_info(data: bytes) -> dict:
                 k, v = line.split("=", 1)
                 ghost[k.strip()] = v.strip()
     lvls = []
-    for off in ifd_offsets(data, "<"):
-        tags = _read_ifd(data, "<", off, big=big)
+    for off in ifd_offsets(data):
+        tags = _read_ifd(data, bo, off, big=big)
 
         def one(tag, default=None):
             return tags[tag][1][0] if tag in tags else default
@@ -371,45 +255,10 @@ def decode_cog_tile(
     """Decode one tile from its ranged bytes alone (no other file access):
     (tile_h, tile_w, samples) uint8, padding included."""
     tw, tl, spp = lv["tile_w"], lv["tile_h"], lv["samples"]
-    need = tw * tl * spp
-    comp = lv["compression"]
-    if comp == 5:
-        raw = lzw_decode(chunk, need)
-    elif comp == 32773:
-        raw = packbits_decode(chunk, need)
-    elif comp in (8, 32946):  # Deflate / Adobe Deflate
-        import zlib
-
-        raw = zlib.decompress(chunk)[:need]
-    elif comp == 7:  # JPEG tile (tables spliced from the JPEGTables tag)
-        from gdal_spark.functions.jpeg import jpeg_decode
-
-        stream = chunk
-        jt = lv.get("jpeg_tables")
-        if jt and len(jt) > 4:
-            body = jt[2:]
-            if body[-2:] == b"\xff\xd9":
-                body = body[:-2]
-            stream = b"\xff\xd8" + body + chunk[2:]
-        arr = jpeg_decode(
-            stream,
-            force_color="rgb" if lv.get("photometric") == 2 else None)
-        raw = (arr[:, :, 0] if spp == 1 else arr).tobytes()
-    elif comp == 34925:  # LZMA
-        import lzma
-
-        raw = lzma.decompress(chunk)[:need]
-    elif comp == 1:
-        raw = chunk[:need]
-    else:
-        raise TiffError(f"unsupported COG compression {comp}")
-    if len(raw) < need:
-        raw = raw + b"\0" * (need - len(raw))
-    if lv.get("predictor", 1) == 2:
-        t = np.frombuffer(raw, np.uint8).reshape(tl, tw, spp)
-        t = np.cumsum(t.astype(np.int64), axis=1).astype(np.uint8)
-        raw = t.tobytes()
-    return np.frombuffer(raw, np.uint8, need).reshape(tl, tw, spp)
+    raw = _decompress(chunk, lv["compression"], tw * tl * spp, spp,
+                      lv.get("jpeg_tables"), lv.get("photometric", 1))
+    return _chunk_to_samples(raw, tl, tw, spp, np.dtype(np.uint8),
+                             lv.get("predictor", 1))
 
 
 # ---------------------------------------------------------------------------

@@ -16,7 +16,6 @@ column-wise scan, no driver involvement.
 
 from __future__ import annotations
 
-import struct
 
 import numpy as np
 
@@ -61,14 +60,11 @@ def _tiff_block(data: bytes, w: int, h: int) -> tuple[int, int]:
         T_TILE_L,
         T_TILE_W,
         _read_ifd,
-        ifd_offsets,
+        tiff_header,
     )
 
-    bo = "<" if data[:2] == b"II" else ">"
-    tags = _read_ifd(
-        data, bo, ifd_offsets(data, bo)[0],
-        big=struct.unpack_from(bo + "H", data, 2)[0] == 43,
-    )
+    bo, big, off = tiff_header(data)
+    tags = _read_ifd(data, bo, off, big)
     if T_TILE_W in tags:
         return tags[T_TILE_W][1][0], tags[T_TILE_L][1][0]
     rps = tags.get(T_ROWS_PER_STRIP, (4, [h]))[1][0]

@@ -81,18 +81,14 @@ def _decode(name: str, data: bytes) -> np.ndarray:
 
 def _tiff_colormap(data: bytes) -> np.ndarray | None:
     """TIFF ColorMap tag (320) -> (n, 3) uint8 palette, or None."""
-    import struct
-    bo = "<" if data[:2] == b"II" else ">"
-    (off,) = struct.unpack_from(bo + "I", data, 4)
-    (n,) = struct.unpack_from(bo + "H", data, off)
-    for k in range(n):
-        tag, typ, cnt, val = struct.unpack_from(
-            bo + "HHII", data, off + 2 + 12 * k)
-        if tag == 320:
-            vals = np.frombuffer(data, bo + "u2", cnt, val)
-            per = cnt // 3
-            return (vals.reshape(3, per).T // 257).astype(np.uint8)
-    return None
+    from gdal_spark.functions.tiff import _read_ifd, tiff_header
+
+    bo, big, off = tiff_header(data)
+    tags = _read_ifd(data, bo, off, big)
+    if 320 not in tags:
+        return None
+    vals = np.array(tags[320][1], np.uint16)
+    return (vals.reshape(3, -1).T // 257).astype(np.uint8)
 
 
 class KmlsoDataset:

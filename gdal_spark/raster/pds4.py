@@ -17,7 +17,6 @@ from __future__ import annotations
 
 import os
 import re
-import struct
 import xml.etree.ElementTree as ET
 
 import numpy as np
@@ -278,17 +277,11 @@ class PDS4Dataset:
                     a.shape[2] if a.ndim == 3 else 1)
         if self.image_kind == "tiff":
             # header-only: don't materialize a potentially huge payload
-            from gdal_spark.functions.tiff import _read_ifd
+            from gdal_spark.functions.tiff import _read_ifd, tiff_header
 
             data = open(self.image_file, "rb").read()
-            bo = "<" if data[:2] == b"II" else ">"
-            version = struct.unpack(bo + "H", data[2:4])[0]
-            if version == 43:  # BigTIFF
-                ifd_off = struct.unpack(bo + "Q", data[8:16])[0]
-                tags = _read_ifd(data, bo, ifd_off, big=True)
-            else:
-                ifd_off = struct.unpack(bo + "I", data[4:8])[0]
-                tags = _read_ifd(data, bo, ifd_off)
+            bo, big, off = tiff_header(data)
+            tags = _read_ifd(data, bo, off, big)
             return (tags[257][1][0], tags[256][1][0],
                     tags.get(277, (0, [1]))[1][0])
         raise ValueError("no image file area")

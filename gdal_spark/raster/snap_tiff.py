@@ -18,7 +18,6 @@ from __future__ import annotations
 
 import math
 import re
-import struct
 
 __all__ = ["snap_tiff_open", "SNAPTiff"]
 
@@ -30,18 +29,11 @@ _GEOKEY_DIR = 34735
 
 class SNAPTiff:
     def __init__(self, data: bytes):
-        from gdal_spark.functions.tiff import _read_ifd
+        from gdal_spark.functions.tiff import _read_ifd, tiff_header
 
-        if data[:2] == b"II":
-            bo = "<"
-        elif data[:2] == b"MM":
-            bo = ">"
-        else:
-            raise ValueError("not a TIFF")
-        version = struct.unpack(bo + "H", data[2:4])[0]
-        if version != 42:
+        bo, big, ifd_off = tiff_header(data)
+        if big:
             raise ValueError("not a classic TIFF")
-        ifd_off = struct.unpack(bo + "I", data[4:8])[0]
         tags = _read_ifd(data, bo, ifd_off)
         if _DIMAP_TAG not in tags:
             raise ValueError("not a SNAP BEAM-DIMAP TIFF")

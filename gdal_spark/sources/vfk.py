@@ -25,6 +25,8 @@ Geometry model (vfkdatablock.cpp:805-1130):
 
 from __future__ import annotations
 
+from collections import Counter
+
 import numpy as np
 
 from gdal_spark.functions import geom as G
@@ -192,9 +194,24 @@ def _assemble_rings(lines: list[np.ndarray]) -> list[np.ndarray]:
     """Boundary lines chained end-to-end into rings (AppendLineToRing:
     a line joins the ring whose open end one of its endpoints meets,
     reversed as needed). First ring is the exterior; a chain that does
-    not close stays open."""
-    return [np.array(r[:-1] if r[-1] is r[0] else r, np.float64)
-            for r in G.build_rings(lines)]
+    not close stays open. A chain closed itself when its last segment
+    ends an input line, in either direction (the first line's own first
+    segment, where the chain starts, does not count); otherwise
+    build_rings appended the closing point, and it is dropped again."""
+    def seg(a, b):
+        return (a[0], a[1], b[0], b[1])
+
+    ends = Counter()
+    for ln in lines:
+        if len(ln) >= 2:
+            ends[seg(ln[-2], ln[-1])] += 1
+            ends[seg(ln[1], ln[0])] += 1
+    out = []
+    for r in G.build_rings(lines):
+        last = seg(r[-2], r[-1])
+        closed = ends[last] > (last == seg(r[1], r[0]))
+        out.append(np.array(r if closed else r[:-1], np.float64))
+    return out
 
 
 def _split(body: str) -> list[str]:

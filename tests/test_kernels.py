@@ -144,6 +144,22 @@ def test_wkb_multipolygon():
     assert W.bbox(buf) == (0.0, 0.0, 6.0, 6.0)
 
 
+@pytest.mark.parametrize("txt,want", [
+    ("MULTILINESTRING ((0 0,1 1),(2 2,3 3))", (0.0, 0.0, 3.0, 3.0)),
+    ("MULTIPOINT ((5 -1),(2 7),(3 3))", (2.0, -1.0, 5.0, 7.0)),
+    ("GEOMETRYCOLLECTION (POINT (9 9),LINESTRING (0 1,2 -3),"
+     "POLYGON ((4 4,6 4,6 5,4 4)))", (0.0, -3.0, 9.0, 9.0)),
+    ("MULTIPOLYGON (((0 0,1 0,1 1,0 0)),((5 5,8 5,8 6,5 5)))",
+     (0.0, 0.0, 8.0, 6.0)),
+    ("LINESTRING Z (1 2 3,-4 5 6)", (-4.0, 2.0, 1.0, 5.0)),
+    ("POINT (3 4)", (3.0, 4.0, 3.0, 4.0)),
+])
+def test_wkb_bbox_covers_every_member(txt, want):
+    from gdal_spark.functions.wkt import from_wkt
+
+    assert W.bbox(from_wkt(txt)) == want
+
+
 def test_wkb_parse_rejects_big_endian():
     """Big-endian WKB raises ValueError instead of being read as
     little-endian when asserts are stripped."""

@@ -701,13 +701,34 @@ def test_build_rings_matches_reversed_edges():
 
 
 def test_build_rings_closes_open_chains_with_their_first_point():
-    # VFK tells the chains that assembly closed by this identity
     a = np.array([[0.0, 0.0], [10.0, 0.0]])
     b = np.array([[10.0, 10.0], [10.0, 0.0]])
     (ring,) = G.build_rings([a, b])
     assert len(ring) == 4 and ring[-1] is ring[0]
     (closed,) = G.build_rings([np.array(_sq(0, 0, 1), float)])
     assert closed[-1] is not closed[0]
+
+
+def test_build_rings_keeps_the_input_points():
+    a = [(0.0, 0.0), (10.0, 0.0), (10.0, 10.0)]
+    b = [(0.0, 10.0), (10.0, 10.0)]
+    (ring,) = G.build_rings([a, b])
+    assert ring == [(0.0, 0.0), (10.0, 0.0), (10.0, 10.0), (0.0, 10.0),
+                    (0.0, 0.0)]
+    inputs = {id(p) for p in a + b}
+    assert all(id(p) in inputs for p in ring)
+
+
+def test_vfk_tells_open_chains_from_closed_rings():
+    # an open chain, a lone 2-point line, and a ring that a 2-point line
+    # closes; only the last keeps its closing point
+    (rings,) = _vfk_par(
+        [[(0.0, 0.0), (10.0, 0.0)], [(10.0, 10.0), (10.0, 0.0)],
+         [(20.0, 0.0), (30.0, 0.0)],
+         [(40.0, 0.0), (50.0, 0.0), (50.0, 10.0)], [(50.0, 10.0), (40.0, 0.0)]])
+    assert [r.tolist() for r in rings] == [
+        [[0, 0], [10, 0], [10, 10]], [[20, 0], [30, 0]],
+        [[40, 0], [50, 0], [50, 10], [40, 0]]]
 
 
 def test_build_rings_tolerance_snaps_and_closes():
