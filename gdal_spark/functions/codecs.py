@@ -4,7 +4,10 @@ GDAL dispatches bytes to one of ~115 raster drivers via its driver registry
 (frmts/gdalallregister.cpp, gcore/gdaldrivermanager.cpp). Here the registry
 is a plain dict keyed by the `fmt` column, and decode/encode run inside
 Arrow-batched UDFs (mapInPandas), so each executor decodes its partition's
-rows without any driver-side involvement.
+rows without any driver-side involvement.  Where the bytes have to say
+what they are (tile stores, KML icons, mislabelled corpus rows),
+`codec_of` asks `sources/identify.identify_driver`, the one place that
+tests magic bytes, and maps its driver name through `DRIVER_CODEC`.
 
 This container has no Python image libraries (no Pillow/cv2), so the
 core formats are pure-numpy re-derivations.  Native libraries are bound
@@ -426,16 +429,25 @@ def encode_image(arr: np.ndarray, fmt: str) -> bytes:
 # degrade to this set dynamically when the system library is missing
 UNSUPPORTED_CODECS = {"jxl", "jp2"}
 
-_UNSUPPORTED_MAGIC = {
-    "webp": lambda h: h[:4] == b"RIFF" and h[8:12] == b"WEBP",
-    "avif": lambda h: h[4:8] == b"ftyp" and h[8:12] in (b"avif", b"avis"),
-    "heif": lambda h: h[4:8] == b"ftyp"
-    and h[8:12] in (b"heic", b"heix", b"hevc", b"hevx", b"mif1", b"msf1"),
-    "jxl": lambda h: h[:2] == b"\xff\x0a"
-    or h[:12] == b"\x00\x00\x00\x0cJXL \x0d\x0a\x87\x0a",
-    "jp2": lambda h: h[:12] == b"\x00\x00\x00\x0cjP  \x0d\x0a\x87\x0a"
-    or h[:4] == b"\xff\x4f\xff\x51",
+#: identify_driver's driver name -> codec key (a DECODERS key, or one of
+#: UNSUPPORTED_CODECS). The magic-byte tests live in identify alone.
+DRIVER_CODEC = {
+    "PNG": "png", "JPEG": "jpeg", "GTiff": "tiff", "BMP": "bmp",
+    "GIF": "gif", "PNM": "pnm", "TGA": "tga", "QDCT": "qdct",
+    "NITF": "nitf", "DTED": "dted", "WEBP": "webp", "LERC": "lerc",
+    "HEIF": "heif", "AVIF": "avif", "JPEGXL": "jxl", "JP2OpenJPEG": "jp2",
 }
+
+#: codecs whose magic alone quarantines a row labelled with an unknown fmt
+_QUARANTINE_MAGIC = UNSUPPORTED_CODECS | {"webp", "avif", "heif"}
+
+
+def codec_of(data: bytes) -> str | None:
+    """The codec key of ``data`` by its magic bytes, or None."""
+    from gdal_spark.sources.identify import identify_driver
+
+    return DRIVER_CODEC.get(identify_driver(data))
+
 
 #: decode_status values (stable contract for the quarantine column)
 STATUS_OK = "ok"
@@ -452,11 +464,10 @@ def classify_image(data: bytes, fmt: str) -> str:
     * fmt in UNSUPPORTED_CODECS: check the magic — a well-formed header
       is quarantined as unsupported_codec (the bytes are fine, the
       environment lacks the codec); a magic mismatch is corrupt.
-    * unknown fmt string: sniff the header against the
-      known-unsupported magics (a corpus row mislabeled but
-      recognizable is still quarantinable); otherwise corrupt.
+    * unknown fmt string: a WebP/AVIF/HEIF/JXL/JP2 magic (a corpus row
+      mislabeled but recognizable is still quarantinable) is
+      unsupported_codec; anything else is corrupt.
     """
-    h = bytes(data[:16])
     if fmt in DECODERS:
         try:
             decode_image(data, fmt)
@@ -480,14 +491,10 @@ def classify_image(data: bytes, fmt: str) -> str:
             # codec-internal errors decode_image does not normalize
             # (e.g. zlib.error on a truncated stream) — is 'corrupt'
             return STATUS_CORRUPT
+    sniffed = codec_of(data)
     if fmt in UNSUPPORTED_CODECS:
-        return (
-            STATUS_UNSUPPORTED if _UNSUPPORTED_MAGIC[fmt](h) else STATUS_CORRUPT
-        )
-    for sniff in _UNSUPPORTED_MAGIC.values():
-        if sniff(h):
-            return STATUS_UNSUPPORTED
-    return STATUS_CORRUPT
+        return STATUS_UNSUPPORTED if sniffed == fmt else STATUS_CORRUPT
+    return STATUS_UNSUPPORTED if sniffed in _QUARANTINE_MAGIC else STATUS_CORRUPT
 
 
 def classify_table(df, bytes_col: str = "bytes", fmt_col: str = "fmt",

@@ -28,22 +28,10 @@ import re
 
 import numpy as np
 
+from gdal_spark.functions.wkt import _split_groups
+
 _NUM = r"[-+]?[0-9]*\.?[0-9]+(?:[eE][-+]?[0-9]+)?"
 _PAIR_RE = re.compile(rf"({_NUM})\s+({_NUM})")
-
-
-def _split_groups(body: str) -> list[str]:
-    out, depth, start = [], 0, 0
-    for i, c in enumerate(body):
-        if c == "(":
-            if depth == 0:
-                start = i + 1
-            depth += 1
-        elif c == ")":
-            depth -= 1
-            if depth == 0:
-                out.append(body[start:i])
-    return out
 
 
 def _split_top(body: str) -> list[str]:

@@ -350,7 +350,7 @@ def _decompress(chunk: bytes, comp: int, nbytes: int, nsmp: int = 1,
     if comp == 50000:  # ZSTD (tif_zstd.c)
         from gdal_spark.functions.zstd import zstd_decompress
 
-        res = zstd_decompress(chunk)
+        res = zstd_decompress(chunk, max_output=nbytes)
         if not res:
             # a well-formed frame decoding to nothing for a
             # non-empty strip is corruption (byte_zstd_corrupted)

@@ -114,7 +114,7 @@ def mrf_codec_mod(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         from gdal_spark.functions.checksum import checksum_image
         from gdal_spark.functions.tiff import tiff_decode
-        from gdal_spark.sources.mrf import mrf_read
+        from gdal_spark.raster.mrf import mrf_read
 
         base = "/root/reference/autotest/gdrivers/data/mrf/"
         ref = tiff_decode(

@@ -100,15 +100,12 @@ def tpkx_conf(root_json: str | bytes) -> dict:
 
 
 def _decode_tile(blob: bytes, tsz: int) -> np.ndarray:
-    from gdal_spark.functions.codecs import png_decode
+    from gdal_spark.functions.codecs import codec_of, decode_image
 
-    if blob[:8] == b"\x89PNG\r\n\x1a\n":
-        arr = png_decode(blob)
-    elif blob[:3] == b"\xff\xd8\xff":
-        from gdal_spark.functions.jpeg import jpeg_decode
-        arr = jpeg_decode(blob)
-    else:
+    fmt = codec_of(blob)
+    if fmt not in ("png", "jpeg"):
         raise ValueError("unsupported tile format")
+    arr = decode_image(blob, fmt)
     if arr.ndim == 2:
         arr = arr[:, :, None]
     h, w, nb = arr.shape

@@ -25,6 +25,23 @@ def gt_pixel_to_geo(gt: tuple, px, py):
     return gt[0] + px * gt[1] + py * gt[2], gt[3] + px * gt[4] + py * gt[5]
 
 
+def gt_invert(gt) -> list:
+    """gt -> inverse geotransform (GDALInvGeoTransform,
+    alg/gdaltransformer.cpp); raises ValueError when singular."""
+    det = gt[1] * gt[5] - gt[2] * gt[4]
+    if det == 0.0:
+        raise ValueError("cannot invert geotransform")
+    inv_det = 1.0 / det
+    return [
+        (gt[2] * gt[3] - gt[0] * gt[5]) * inv_det,
+        gt[5] * inv_det,
+        -gt[2] * inv_det,
+        (-gt[1] * gt[3] + gt[0] * gt[4]) * inv_det,
+        -gt[4] * inv_det,
+        gt[1] * inv_det,
+    ]
+
+
 def gt_geo_to_pixel(gt: tuple, gx, gy):
     """Inverse affine (north-up fast path; general 2x2 inverse otherwise)."""
     det = gt[1] * gt[5] - gt[2] * gt[4]
@@ -215,6 +232,10 @@ def gather(
     anti-aliases)."""
     h, w = arr.shape[:2]
     inside = (fx >= -0.5) & (fx <= w - 0.5) & (fy >= -0.5) & (fy <= h - 0.5)
+    # outside (NaN included) reads nodata anyway; 0 keeps the integer
+    # casts below defined
+    fx = np.where(inside, fx, 0.0)
+    fy = np.where(inside, fy, 0.0)
     if method == "bilinear":
         out = _bilinear_gather(arr, fx, fy)
     elif method in _FILTER_RADIUS:  # cubic / cubicspline / lanczos

@@ -36,7 +36,8 @@ import zipfile
 
 import numpy as np
 
-from gdal_spark.functions.codecs import png_decode, png_encode
+from gdal_spark.functions.codecs import (codec_of, decode_image, png_decode,
+                                        png_encode)
 
 __all__ = ["kmlso_open", "kmlso_open_kmz", "kmlso_write", "KmlsoDataset"]
 
@@ -68,15 +69,10 @@ def _box(node) -> tuple | None:
 
 
 def _decode(name: str, data: bytes) -> np.ndarray:
-    if data[:8] == b"\x89PNG\r\n\x1a\n":
-        return png_decode(data)
-    if data[:3] == b"\xff\xd8\xff":
-        from gdal_spark.functions.jpeg import jpeg_decode
-        return jpeg_decode(data)
-    if data[:4] in (b"II*\x00", b"MM\x00*"):
-        from gdal_spark.functions.tiff import tiff_parse
-        return tiff_parse(data)[0]
-    raise ValueError(f"unsupported icon format for {name}")
+    fmt = codec_of(data)
+    if fmt not in ("png", "jpeg", "tiff"):
+        raise ValueError(f"unsupported icon format for {name}")
+    return decode_image(data, fmt)
 
 
 def _tiff_colormap(data: bytes) -> np.ndarray | None:
@@ -225,9 +221,9 @@ def kmlso_open(doc_name: str, files: dict[str, bytes]) -> KmlsoDataset:
 def _decode_keep_palette(name: str, data: bytes):
     """PNG palette images stay single-band + palette (GCI_PaletteIndex
     parity); everything else decodes normally."""
-    if data[:8] == b"\x89PNG\r\n\x1a\n":
+    fmt = codec_of(data)
+    if fmt == "png":
         import struct
-        import zlib as _z
         pos = 8
         ctype = None
         plte = None
@@ -250,12 +246,10 @@ def _decode_keep_palette(name: str, data: bytes):
             idx = np.array([lut[tuple(px)] for px in map(tuple, flat)],
                            np.uint8).reshape(rgb.shape[:2])
             return idx, plte
-    if data[:4] in (b"II*\x00", b"MM\x00*"):
-        img = _decode(name, data)
-        if img.ndim == 2:
-            return img, _tiff_colormap(data)
-        return img, None
-    return _decode(name, data), None
+    img = _decode(name, data)
+    if fmt == "tiff" and img.ndim == 2:
+        return img, _tiff_colormap(data)
+    return img, None
 
 
 def _pyramid_open(doc_name: str, files: dict[str, bytes], doc):

@@ -1,4 +1,5 @@
-"""MRF (Meta Raster Format) driver — read, write, uniform-scale pyramid.
+"""MRF (Meta Raster Format) driver — read, write, uniform-scale pyramid,
+distributed page scan.  The package's only MRF reader.
 
 Format facts transcribed (frmts/mrf — decode/layout re-derived, no code
 copied):
@@ -17,6 +18,8 @@ copied):
             .pjg, NONE .til, DEFLATE .pzp, TIF .ptf, LERC .lrc.
   pages     raw layout is row-major (y, x, c); NetByteOrder=on means
             big-endian payload for the endian-dependent NONE/DEFLATE.
+            PNG/JPEG/TIF pages decode through the codec registry
+            (functions/codecs.py decode_image).
   overviews mrf_overview.cpp ByFour kernels, transcribed exactly:
             NearByFour = top-left of each 2x2 (with NoData: first valid
             of TL,TR,BL,BR); AverageByFour = (2+a+b+c+d)/4 integer /
@@ -25,9 +28,11 @@ copied):
             sampled from the previous one on the padded page canvas.
 
 Parity: autotest/gdrivers/mrf.py — the static data/mrf fixtures
-(deflate/png/tif/none/jpeg byte.*) and the overview checksums 1087
-(NNB), 1117 (NNB+nodata), 1152 (AVG), 1164 (AVG+nodata), 93 (implicit
-level cascade) in tests/test_mrf.py.
+(none/tif/png/deflate/lerc/lerc_v1/jpeg byte.*, tests/test_mrf.py) and
+the overview checksums 1087 (NNB), 1117 (NNB+nodata), 1152 (AVG), 1164
+(AVG+nodata), 93 (implicit level cascade).  Writer, overview, page-scan
+and hand-built layouts (TIF pages, band-interleaved pages) are pinned
+in tests/test_codec_dispatch.py.
 """
 
 from __future__ import annotations
@@ -128,6 +133,11 @@ def mrf_info(mrf_path: str) -> dict:
     }
 
 
+# page compressions decoded by the codec registry; NONE, DEFLATE and LERC
+# pages are read here
+_PAGE_CODEC = {"PNG": "png", "PPNG": "png", "JPEG": "jpeg", "TIF": "tiff"}
+
+
 def _decode_page(blob: bytes, info: dict, psc: int) -> np.ndarray:
     """One page blob -> (psy, psx, psc) array."""
     psy, psx = info["psy"], info["psx"]
@@ -138,15 +148,9 @@ def _decode_page(blob: bytes, info: dict, psc: int) -> np.ndarray:
         bo = ">" if info["nbo"] else "<"
         arr = np.frombuffer(raw, bo + dt, psy * psx * psc)
         return arr.reshape(psy, psx, psc).astype(dt)
-    if comp in ("PNG", "PPNG"):
-        from gdal_spark.functions.codecs import png_decode
-        arr = png_decode(blob)
-    elif comp == "JPEG":
-        from gdal_spark.functions.jpeg import jpeg_decode
-        arr = jpeg_decode(blob)
-    elif comp == "TIF":
-        from gdal_spark.functions.tiff import tiff_parse
-        arr, _ = tiff_parse(blob)
+    if comp in _PAGE_CODEC:
+        from gdal_spark.functions.codecs import decode_image
+        arr = decode_image(blob, _PAGE_CODEC[comp])
     elif comp == "LERC":
         from gdal_spark.raster.lerc import lerc_strip_decode
         arr, mask, _ = lerc_strip_decode(blob)

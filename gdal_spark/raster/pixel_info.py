@@ -26,23 +26,8 @@ import math
 
 import numpy as np
 
+from gdal_spark.raster.kernels import gt_invert
 from gdal_spark.raster.morph import interpolate_at_point
-
-
-def _invert_gt(gt):
-    """gt -> inverse (GDALInvGeoTransform, alg/gdaltransformer.cpp)."""
-    det = gt[1] * gt[5] - gt[2] * gt[4]
-    if det == 0.0:
-        raise ValueError("cannot invert geotransform")
-    inv_det = 1.0 / det
-    return [
-        (gt[2] * gt[3] - gt[0] * gt[5]) * inv_det,
-        gt[5] * inv_det,
-        -gt[2] * inv_det,
-        (-gt[1] * gt[3] + gt[0] * gt[4]) * inv_det,
-        -gt[4] * inv_det,
-        gt[1] * inv_det,
-    ]
 
 
 def pixel_info(
@@ -69,7 +54,7 @@ def pixel_info(
     if pos_crs == "dataset":
         if gt is None:
             raise ValueError("'dataset' positions require a geotransform")
-        inv = _invert_gt(list(gt))
+        inv = gt_invert(gt)
     rows = []
     for x, y in positions:
         if pos_crs == "dataset":

@@ -44,6 +44,7 @@ from __future__ import annotations
 
 import numpy as np
 
+from gdal_spark.raster.kernels import gt_invert
 from gdal_spark.raster.morph import interpolate_at_point_checked
 
 
@@ -163,18 +164,7 @@ class RPCTransformer:
             if dem_gt is None:
                 raise ValueError("RPC_DEM requires the DEM geotransform")
             g = [float(v) for v in dem_gt]
-            det = g[1] * g[5] - g[2] * g[4]
-            if det == 0.0:
-                raise ValueError("cannot invert DEM geotransform")
-            inv_det = 1.0 / det
-            self._dem_inv_gt = [
-                (g[2] * g[3] - g[0] * g[5]) * inv_det,
-                g[5] * inv_det,
-                -g[2] * inv_det,
-                (-g[1] * g[3] + g[0] * g[4]) * inv_det,
-                -g[4] * inv_det,
-                g[1] * inv_det,
-            ]
+            self._dem_inv_gt = gt_invert(g)
             self._dem_gt = g
         self._wgs84_to_dem = None
         self._dem_srs = dem_srs
@@ -280,18 +270,9 @@ class RPCTransformer:
         gt[5] = (float(ln2) - float(ref_line)) / d
         gt[0] = float(ref_pixel) - gt[1] * ref_long - gt[2] * ref_lat
         gt[3] = float(ref_line) - gt[4] * ref_long - gt[5] * ref_lat
-        det = gt[1] * gt[5] - gt[2] * gt[4]
-        if abs(det) < 1e-15:
+        if abs(gt[1] * gt[5] - gt[2] * gt[4]) < 1e-15:
             raise ValueError("cannot invert RPC seed geotransform")
-        inv_det = 1.0 / det
-        self.pl_to_ll = [
-            (gt[2] * gt[3] - gt[0] * gt[5]) * inv_det,
-            gt[5] * inv_det,
-            -gt[2] * inv_det,
-            (-gt[1] * gt[3] + gt[0] * gt[4]) * inv_det,
-            -gt[4] * inv_det,
-            gt[1] * inv_det,
-        ]
+        self.pl_to_ll = gt_invert(gt)
 
     # -- direct: long/lat (+z above ground) -> pixel/line --------------------
     def lonlat_to_pixel(self, lon, lat, z=0.0):

@@ -46,9 +46,9 @@ from gdal_spark.raster import kernels as K
 
 def lonlat_to_meters_np(lon: np.ndarray, lat: np.ndarray):
     mx = lon * (ORIGIN_SHIFT / 180.0)
-    my = np.log(np.tan((90.0 + lat) * (math.pi / 360.0))) / (math.pi / 180.0) * (
-        ORIGIN_SHIFT / 180.0
-    )
+    with np.errstate(invalid="ignore", divide="ignore"):  # past a pole: NaN
+        my = np.log(np.tan((90.0 + lat) * (math.pi / 360.0))) / (
+            math.pi / 180.0) * (ORIGIN_SHIFT / 180.0)
     return mx, my
 
 

@@ -26,6 +26,11 @@ test, transcribed from that driver's Identify()/Open() header check:
   GeoJSON  leading '{' + "type" member  ogr/ogrsf_frmts/geojson
   QDCT  engine-native lossy format magic (functions/codecs.py)
 
+This is the package's only magic-byte table: the codec registry
+(functions/codecs.py ``codec_of``), the quarantine classifier and the
+MBTiles/GPKG, ESRIC and KML SuperOverlay tile decoders pick their
+decoder from this function's answer.
+
 Returns the reference driver short name, or None (GDALIdentifyDriver's
 "could not be identified"). A filename is optional and only consulted
 for the extension-gated formats (TGA without footer, MBTiles, CSV,

@@ -44,14 +44,13 @@ def longlat_to_mercator(lon: float, lat: float) -> tuple[float, float]:
 
 
 def _decode_tile(blob: bytes) -> np.ndarray:
-    """PNG/JPEG tile -> (h, w) or (h, w, bands) uint8 via magic sniff."""
-    from gdal_spark.functions.codecs import decode_image
+    """PNG/JPEG/WebP tile -> (h, w) or (h, w, bands) uint8."""
+    from gdal_spark.functions.codecs import codec_of, decode_image
 
-    if blob[:8] == b"\x89PNG\r\n\x1a\n":
-        return decode_image(blob, "png")
-    if blob[:2] == b"\xff\xd8":
-        return decode_image(blob, "jpeg")
-    raise ValueError("unknown tile format")
+    fmt = codec_of(blob)
+    if fmt not in ("png", "jpeg", "webp"):
+        raise ValueError("unknown tile format")
+    return decode_image(blob, fmt)
 
 
 def _tile_to_bands(tile: np.ndarray, band_count: int, tile_size: int):

@@ -46,6 +46,8 @@ from pyspark.sql import types as T
 
 from gdal_spark.functions import geom as G
 from gdal_spark.functions import wkb as W
+# protobuf-style varuints (filegdbtable.cpp ReadVarUInt)
+from gdal_spark.sources.mvt import _rvarint, _wvarint
 
 FGFT_INT16, FGFT_INT32, FGFT_FLOAT32, FGFT_FLOAT64 = 0, 1, 2, 3
 FGFT_STRING, FGFT_DATETIME, FGFT_OBJECTID, FGFT_GEOMETRY = 4, 5, 6, 7
@@ -65,18 +67,6 @@ _MPOINT_TYPES = {SHPT_MULTIPOINT, 18, 20, 28, 53}
 
 def _test_bit(buf: bytes, i: int) -> bool:
     return (buf[i >> 3] & (1 << (i & 7))) != 0
-
-
-def _rvu(buf, pos):
-    """protobuf-style varuint (filegdbtable.cpp ReadVarUInt)."""
-    val, shift = 0, 0
-    while True:
-        b = buf[pos]
-        pos += 1
-        val |= (b & 0x7F) << shift
-        if not b & 0x80:
-            return val, pos
-        shift += 7
 
 
 def _rvsigned(buf, pos, acc):
@@ -136,7 +126,7 @@ def parse_table_header(path: str) -> dict:
                 fld["width"] = struct.unpack_from("<i", buf, pos)[0]
                 flags = buf[pos + 4]
                 pos += 5
-                dlen, pos = _rvu(buf, pos)
+                dlen, pos = _rvarint(buf, pos)
             elif ftype in (FGFT_OBJECTID, FGFT_BINARY, FGFT_GUID,
                            FGFT_GLOBALID, FGFT_XML):
                 flags = buf[pos + 1]
@@ -261,15 +251,15 @@ def decode_row(buf: bytes, fields: list[dict], fid: int) -> dict:
         if t == FGFT_OBJECTID:
             out[f["name"]] = fid
         elif t in (FGFT_STRING, FGFT_XML):
-            ln, pos = _rvu(buf, pos)
+            ln, pos = _rvarint(buf, pos)
             out[f["name"]] = buf[pos : pos + ln].decode("utf-8")
             pos += ln
         elif t == FGFT_BINARY:
-            ln, pos = _rvu(buf, pos)
+            ln, pos = _rvarint(buf, pos)
             out[f["name"]] = bytes(buf[pos : pos + ln])
             pos += ln
         elif t == FGFT_GEOMETRY:
-            ln, pos = _rvu(buf, pos)
+            ln, pos = _rvarint(buf, pos)
             out[f["name"]] = decode_shape(buf[pos : pos + ln], f)
             pos += ln
         elif t == FGFT_INT16:
@@ -312,7 +302,7 @@ def decode_shape(buf: bytes, gf: dict) -> bytes | None:
     """FileGDB compressed shape buffer -> standard WKB (XY)."""
     if not buf:
         return None
-    gtype, pos = _rvu(buf, 0)
+    gtype, pos = _rvarint(buf, 0)
     base = gtype & 0xFF
     has_z = bool(gtype & EXT_Z) or base in (9, 10, 11, 15, 18, 19, 20)
     has_m = bool(gtype & EXT_M) or base in (21, 23, 25, 28)
@@ -324,17 +314,17 @@ def decode_shape(buf: bytes, gf: dict) -> bytes | None:
     if base in (31, 32, 54):  # multipatch: TIN surfaces, out of scope
         return None
     if base in _POINT_TYPES:
-        x, pos = _rvu(buf, pos)
-        y, pos = _rvu(buf, pos)
+        x, pos = _rvarint(buf, pos)
+        y, pos = _rvarint(buf, pos)
         if x == 0 or y == 0:
             return None
         return W.write_point((x - 1) / xs + xo, (y - 1) / ys + yo)
     if base in _MPOINT_TYPES:
-        npts, pos = _rvu(buf, pos)
+        npts, pos = _rvarint(buf, pos)
         if npts == 0:
             return None
         for _ in range(4):
-            _, pos = _rvu(buf, pos)
+            _, pos = _rvarint(buf, pos)
         pts = np.empty((npts, 2))
         dx = dy = 0
         for i in range(npts):
@@ -347,18 +337,18 @@ def decode_shape(buf: bytes, gf: dict) -> bytes | None:
         )
         return b"\x01" + struct.pack("<I", 4) + body
     if base in _LINE_TYPES or base in _POLY_TYPES:
-        npts, pos = _rvu(buf, pos)
+        npts, pos = _rvarint(buf, pos)
         if npts == 0:
             return None
-        nparts, pos = _rvu(buf, pos)
+        nparts, pos = _rvarint(buf, pos)
         ncurves = 0
         if has_curves:
-            ncurves, pos = _rvu(buf, pos)
+            ncurves, pos = _rvarint(buf, pos)
         for _ in range(4):  # bbox varuints
-            _, pos = _rvu(buf, pos)
+            _, pos = _rvarint(buf, pos)
         counts = []
         for _ in range(max(nparts - 1, 0)):
-            c, pos = _rvu(buf, pos)
+            c, pos = _rvarint(buf, pos)
             counts.append(c)
         counts.append(npts - sum(counts))
         dx = dy = 0
@@ -498,18 +488,6 @@ def read_openfilegdb(
 # ---------------------------------------------------------------------------
 
 
-def _wvu(v: int) -> bytes:
-    out = bytearray()
-    while True:
-        b = v & 0x7F
-        v >>= 7
-        if v:
-            out.append(b | 0x80)
-        else:
-            out.append(b)
-            return bytes(out)
-
-
 def _wvsigned_delta(v: int) -> bytes:
     """FileGDB signed varint (inverse of _rvsigned)."""
     neg = v < 0
@@ -561,7 +539,7 @@ def _field_desc(fields: list[dict], geom_type: int) -> bytes:
         elif f["type"] == FGFT_STRING:
             body += struct.pack("<i", f.get("width", 65536))
             body.append(flags)
-            body += _wvu(0)  # no default
+            body += _wvarint(0)  # no default
         elif f["type"] in (FGFT_OBJECTID, FGFT_BINARY, FGFT_GUID,
                            FGFT_GLOBALID, FGFT_XML):
             body += bytes([0, flags])
@@ -599,12 +577,12 @@ def _encode_row(fields: list[dict], values: dict) -> bytes:
             continue
         if t in (FGFT_STRING, FGFT_XML):
             enc = str(v).encode("utf-8")
-            body += _wvu(len(enc)) + enc
+            body += _wvarint(len(enc)) + enc
         elif t == FGFT_BINARY:
-            body += _wvu(len(v)) + bytes(v)
+            body += _wvarint(len(v)) + bytes(v)
         elif t == FGFT_GEOMETRY:
             shape = encode_shape(bytes(v), f)
-            body += _wvu(len(shape)) + shape
+            body += _wvarint(len(shape)) + shape
         elif t == FGFT_INT16:
             body += struct.pack("<h", int(v))
         elif t == FGFT_INT32:
@@ -635,7 +613,7 @@ def encode_shape(wkb_buf: bytes, gf: dict) -> bytes:
 
     if code == 1:
         px, py = parsed
-        return _wvu(SHPT_POINT) + _wvu(sx(px) + 1) + _wvu(sy(py) + 1)
+        return _wvarint(SHPT_POINT) + _wvarint(sx(px) + 1) + _wvarint(sy(py) + 1)
     if code == 2:
         pts = parsed
         parts = [np.asarray(pts)]
@@ -655,14 +633,15 @@ def encode_shape(wkb_buf: bytes, gf: dict) -> bytes:
         raise ValueError(f"unsupported WKB code {code} for gdb write")
     npts = sum(len(p) for p in parts)
     allp = np.vstack(parts)
-    out = bytearray(_wvu(base))
-    out += _wvu(npts)
-    out += _wvu(len(parts))
+    out = bytearray(_wvarint(base))
+    out += _wvarint(npts)
+    out += _wvarint(len(parts))
     vxmin, vymin = sx(allp[:, 0].min()), sy(allp[:, 1].min())
     vxmax, vymax = sx(allp[:, 0].max()), sy(allp[:, 1].max())
-    out += _wvu(vxmin) + _wvu(vymin) + _wvu(vxmax - vxmin) + _wvu(vymax - vymin)
+    out += (_wvarint(vxmin) + _wvarint(vymin) + _wvarint(vxmax - vxmin)
+            + _wvarint(vymax - vymin))
     for p in parts[:-1]:
-        out += _wvu(len(p))
+        out += _wvarint(len(p))
     dx = dy = 0
     for p in parts:
         for px, py in p:

@@ -1,4 +1,4 @@
-"""MRF (Meta Raster Format) reader tests — sources/mrf.py vs the
+"""MRF (Meta Raster Format) reader tests — raster/mrf.py vs the
 reference's committed per-compression fixture sets
 (autotest/gdrivers/data/mrf/{none,tif,png,deflate,lerc,lerc_v1,jpeg}):
 every lossless variant must reproduce byte.tif (cs 4672) bit-exact;
@@ -14,7 +14,7 @@ import pytest
 
 from gdal_spark.functions.checksum import checksum_image
 from gdal_spark.functions.tiff import tiff_decode
-from gdal_spark.sources.mrf import MRF_DATA_EXT, mrf_parse_meta, mrf_read
+from gdal_spark.raster.mrf import _EXT, mrf_info, mrf_read
 
 BASE = "/root/reference/autotest/gdrivers/data/mrf/"
 
@@ -53,31 +53,26 @@ def test_identify_mrf():
 
 
 def test_meta_parse():
-    meta = mrf_parse_meta(open(BASE + "lerc/byte.mrf", "rb").read())
-    assert meta["compression"] == "LERC"
-    assert meta["page_w"] == meta["page_h"] == 512
-    assert "bbox" in meta and "projection" in meta
+    meta = mrf_info(BASE + "lerc/byte.mrf")
+    assert meta["comp"] == "LERC"
+    assert meta["psx"] == meta["psy"] == 512
+    assert meta["bbox"] is not None and meta["projection"] is not None
     # PNG is the format default when <Compression> is absent
-    meta2 = mrf_parse_meta(open(BASE + "png/byte.mrf", "rb").read())
-    assert meta2["compression"] == "PNG"
+    meta2 = mrf_info(BASE + "png/byte.mrf")
+    assert meta2["comp"] == "PNG"
 
 
 def test_every_fixture_dir_covered():
     dirs = {p.split("/")[-2] for p in glob.glob(BASE + "*/byte.mrf")}
     assert dirs == {"none", "tif", "png", "deflate", "lerc", "lerc_v1",
                     "jpeg"}
-    assert set(MRF_DATA_EXT) >= {"NONE", "TIF", "PNG", "DEFLATE", "LERC",
-                                 "JPEG"}
+    assert set(_EXT) >= {"NONE", "TIF", "PNG", "DEFLATE", "LERC", "JPEG"}
 
 
 @pytest.mark.parametrize("kind", ["lerc", "lerc_v1"])
 def test_legacy_mrf_read_lerc(kind):
-    """Regression: the legacy raster/mrf.py reader's LERC branch must
-    keep working after lerc_decode was replaced by lerc_strip_decode
-    (it used to raise ImportError)."""
-    from gdal_spark.raster.mrf import mrf_read
-    from gdal_spark.functions.checksum import checksum_image
-
+    """Regression: the LERC branch must keep working after lerc_decode
+    was replaced by lerc_strip_decode (it used to raise ImportError)."""
     arr, _meta = mrf_read(BASE + kind + "/byte.mrf")
     band = arr[:, :, 0] if arr.ndim == 3 else arr
     assert list(checksum_image(band.astype(np.int64))) == [4672]

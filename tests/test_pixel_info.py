@@ -10,7 +10,8 @@ positions report no value, unscaled = raw * scale + offset.
 import numpy as np
 
 from gdal_spark.functions.tiff import tiff_encode
-from gdal_spark.raster.pixel_info import _invert_gt, pixel_info, pixel_info_tiles
+from gdal_spark.raster.kernels import gt_invert
+from gdal_spark.raster.pixel_info import pixel_info, pixel_info_tiles
 
 ARR = np.arange(20.0).reshape(4, 5)
 GT = [100.0, 2.0, 0.0, 50.0, 0.0, -2.0]  # px (c,l) -> X=100+2c, Y=50-2l
@@ -31,7 +32,7 @@ def test_dataset_crs_inverse_gt():
     assert abs(rows[0]["line"] - 1.2) < 1e-12
     assert rows[0]["band_1_raw_value"] == ARR[1, 2]
     # round-trip: inverse gt really inverts
-    inv = _invert_gt(GT)
+    inv = gt_invert(GT)
     x, y = 3.25, 2.75
     X = GT[0] + GT[1] * x + GT[2] * y
     Y = GT[3] + GT[4] * x + GT[5] * y

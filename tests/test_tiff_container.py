@@ -865,3 +865,38 @@ def test_truncated_deflate_strip_raises():
     chunk = zlib.compress(a.tobytes())
     with pytest.raises((TF.TiffError, zlib.error)):
         TF.tiff_parse(build(t, [chunk[: len(chunk) // 2]]))
+
+
+def _zstd_frame(blocks: list[tuple[int, bytes, int]]) -> bytes:
+    """A ZSTD frame (no content size, no checksum, 128 KB window) of
+    (block type, payload, block size) blocks."""
+    out = struct.pack("<IBB", 0xFD2FB528, 0, 7 << 3)
+    for i, (btype, payload, size) in enumerate(blocks):
+        head = (i == len(blocks) - 1) | (btype << 1) | (size << 3)
+        out += struct.pack("<I", head)[:3] + payload
+    return out
+
+
+def test_zstd_strip_reads():
+    a = pix(16, 16, 1, "u1")
+    t = base_tags(16, 16, 1, 8, comp=50000)
+    t[278] = (4, [16])
+    raw = a.tobytes()
+    buf = build(t, [_zstd_frame([(0, raw[:100], 100), (0, raw[100:], 156)])])
+    np.testing.assert_array_equal(TF.tiff_parse(buf)[0], a[:, :, 0])
+
+
+def test_zstd_bomb_is_bounded():
+    # 256 RLE blocks of 128 KB each: a 1030-byte frame that inflates to
+    # 32 MB, read as the one strip of a 16 x 16 image
+    frame = _zstd_frame([(1, b"\0", 1 << 17)] * 256)
+    assert len(frame) == 1030
+    t = base_tags(16, 16, 1, 8, comp=50000)
+    t[278] = (4, [16])
+    buf = build(t, [frame])
+
+    def read():
+        with pytest.raises(ValueError):
+            TF.tiff_parse(buf)
+
+    assert _peak(read) < 8 << 20

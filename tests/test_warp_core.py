@@ -27,6 +27,10 @@ from gdal_spark.raster import update as U
 from gdal_spark.raster import vshift as VS
 from gdal_spark.raster import warp as WP
 
+# a NaN or out-of-range coordinate cast to an integer index is
+# platform-defined; the sampler must not make one
+pytestmark = pytest.mark.filterwarnings("error::RuntimeWarning")
+
 METHODS = ("near", "bilinear", "cubic", "cubicspline", "lanczos", "average")
 DTYPES = ("u1", "i2", "f4")
 
@@ -1079,3 +1083,13 @@ def test_pinned_output(name):
 
 def test_every_case_is_pinned():
     assert sorted(PINNED) == sorted(CASES)
+
+
+@pytest.mark.parametrize("method", ["near", "bilinear", "cubic", "lanczos"])
+def test_gather_reads_nodata_at_nan_coords(method):
+    a = _pix(4, 5, 1, "f4")
+    fx = np.array([[np.nan, 1.0, 1e300]])
+    fy = np.array([[1.0, np.nan, 2.0]])
+    out, inside = K.gather(a, fx, fy, method, nodata=-9.0)
+    assert not inside.any()
+    np.testing.assert_array_equal(out, np.full((1, 3), -9.0, "f4"))
