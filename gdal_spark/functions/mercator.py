@@ -15,7 +15,13 @@ Conventions:
   * QuadKey digits: Microsoft quadtree over XYZ coordinates
     (gdal2tiles.py:518-530).
 
-The plain-Python twins (suffix `_py`) are the unit-test oracle.
+The plain-Python twins (suffix `_py`) are the unit-test oracle and the
+one tile grid of the driver-side tilers (gdal2tiles' profiles in
+`tiles/g2t.py`, the MVT/PMTiles and MBTiles drivers). The Web-Mercator
+twins take `tile_size` (default 256) like GlobalMercator(tile_size); the
+resolution at zoom z is 2*pi*6378137 / tile_size / 2^z. ZoomForPixelSize
+follows gdal2tiles' MAXZOOMLEVEL = 32: it tries zooms 0-31 and returns
+MAX_ZOOM = 31 when the pixel is finer than every zoom's resolution.
 """
 
 from __future__ import annotations
@@ -29,7 +35,7 @@ EARTH_RADIUS = 6378137.0
 TILE_SIZE = 256
 ORIGIN_SHIFT = 2.0 * math.pi * EARTH_RADIUS / 2.0  # 20037508.342789244
 INITIAL_RESOLUTION = 2.0 * math.pi * EARTH_RADIUS / TILE_SIZE  # 156543.033928...
-MAX_ZOOM = 29
+MAX_ZOOM = 31  # gdal2tiles.py MAXZOOMLEVEL - 1
 
 # --------------------------------------------------------------------------
 # Column-expression forms (the production path)
@@ -130,8 +136,8 @@ def quadkey_num(tx: Column, ty_tms: Column, zoom: int) -> Column:
 # --------------------------------------------------------------------------
 
 
-def resolution_py(zoom: int) -> float:
-    return INITIAL_RESOLUTION / (2**zoom)
+def resolution_py(zoom: int, tile_size: int = TILE_SIZE) -> float:
+    return 2.0 * math.pi * EARTH_RADIUS / tile_size / 2**zoom
 
 
 def lonlat_to_meters_py(lon: float, lat: float) -> tuple[float, float]:
@@ -147,11 +153,13 @@ def meters_to_lonlat_py(mx: float, my: float) -> tuple[float, float]:
     return lon, lat
 
 
-def meters_to_tile_py(mx: float, my: float, zoom: int) -> tuple[int, int]:
-    res = resolution_py(zoom)
+def meters_to_tile_py(
+    mx: float, my: float, zoom: int, tile_size: int = TILE_SIZE
+) -> tuple[int, int]:
+    res = resolution_py(zoom, tile_size)
     px = (mx + ORIGIN_SHIFT) / res
     py = (my + ORIGIN_SHIFT) / res
-    return int(math.ceil(px / float(TILE_SIZE)) - 1), int(math.ceil(py / float(TILE_SIZE)) - 1)
+    return int(math.ceil(px / float(tile_size)) - 1), int(math.ceil(py / float(tile_size)) - 1)
 
 
 def lonlat_to_tile_py(lon: float, lat: float, zoom: int) -> tuple[int, int]:
@@ -159,13 +167,15 @@ def lonlat_to_tile_py(lon: float, lat: float, zoom: int) -> tuple[int, int]:
     return meters_to_tile_py(mx, my, zoom)
 
 
-def tile_bounds_meters_py(tx: int, ty: int, zoom: int) -> tuple[float, float, float, float]:
-    res = resolution_py(zoom)
+def tile_bounds_meters_py(
+    tx: int, ty: int, zoom: int, tile_size: int = TILE_SIZE
+) -> tuple[float, float, float, float]:
+    res = resolution_py(zoom, tile_size)
     return (
-        tx * TILE_SIZE * res - ORIGIN_SHIFT,
-        ty * TILE_SIZE * res - ORIGIN_SHIFT,
-        (tx + 1) * TILE_SIZE * res - ORIGIN_SHIFT,
-        (ty + 1) * TILE_SIZE * res - ORIGIN_SHIFT,
+        tx * tile_size * res - ORIGIN_SHIFT,
+        ty * tile_size * res - ORIGIN_SHIFT,
+        (tx + 1) * tile_size * res - ORIGIN_SHIFT,
+        (ty + 1) * tile_size * res - ORIGIN_SHIFT,
     )
 
 
@@ -183,10 +193,11 @@ def quadkey_py(tx: int, ty_tms: int, zoom: int) -> str:
     return "".join(out)
 
 
-def zoom_for_pixel_size_py(pixel_size: float) -> int:
-    """Max zoom whose resolution is still >= pixel_size ('don't scale up')."""
+def zoom_for_pixel_size_py(pixel_size: float, tile_size: int = TILE_SIZE) -> int:
+    """Max zoom whose resolution is still >= pixel_size ('don't scale up'),
+    GlobalMercator.ZoomForPixelSize (gdal2tiles.py:492-498)."""
     for i in range(MAX_ZOOM + 1):
-        if pixel_size > resolution_py(i):
+        if pixel_size > resolution_py(i, tile_size):
             return max(0, i - 1)
     return MAX_ZOOM
 

@@ -1040,11 +1040,8 @@ def mvt_tile_roundtrip(spark, sf_dir):
 
     from pyspark.sql import types as T
 
-    from gdal_spark.sources.mvt import (
-        MERC_MAX,
-        read_mvt_tileset,
-        write_mvt_tiles,
-    )
+    from gdal_spark.functions.mercator import ORIGIN_SHIFT as MERC_MAX
+    from gdal_spark.sources.mvt import read_mvt_tileset, write_mvt_tiles
     from gdal_spark.sources.tables import load
 
     dim = 2 * MERC_MAX / 4  # zoom 2
@@ -1121,11 +1118,8 @@ def mvt_polygon_pyramid(spark, sf_dir):
 
     from pyspark.sql import types as T
 
-    from gdal_spark.sources.mvt import (
-        MERC_MAX,
-        read_mvt_tileset,
-        write_mvt_pyramid,
-    )
+    from gdal_spark.functions.mercator import ORIGIN_SHIFT as MERC_MAX
+    from gdal_spark.sources.mvt import read_mvt_tileset, write_mvt_pyramid
     from gdal_spark.sources.tables import load
 
     px = MERC_MAX / 4096  # zoom-1 pixel size
@@ -1380,7 +1374,8 @@ def pmtiles_roundtrip(spark, sf_dir):
     import re
     import tempfile
 
-    from gdal_spark.sources.mvt import MERC_MAX, write_mvt_tiles
+    from gdal_spark.functions.mercator import ORIGIN_SHIFT as MERC_MAX
+    from gdal_spark.sources.mvt import write_mvt_tiles
     from gdal_spark.sources.pmtiles import (
         read_pmtiles,
         tiles_from_mvt_tree,

@@ -29,8 +29,6 @@ import struct
 
 import numpy as np
 
-_EXPECTED_MARKER_OK = True
-
 
 def _getc(data, pos, no1):
     b = data[pos]

@@ -142,7 +142,6 @@ LEADER_FILE = 1
 IMAGRY_OPT_FILE = 2
 TRAILER_FILE = 3
 NULL_VOL_FILE = 4
-_FILE_COUNT = 5
 
 # companion-file naming conventions (sar_ceosdataset.cpp CeosExtension)
 _CEOS_EXTENSION = [

@@ -94,7 +94,8 @@ def parse_luts(text: str):
     luts, mins, maxs = [], [], []
     for line in text.strip().split("\n"):
         toks = line.split()
-        assert toks[0].endswith(":Band")
+        if len(toks) < 3 or not toks[0].endswith(":Band"):
+            raise ValueError(f"bad LUT line {line!r}: want N:Band min max v...")
         mins.append(float(toks[1].split(":")[0]))
         maxs.append(float(toks[2].split(":")[0]))
         luts.append(np.array([int(t) for t in toks[3:]], dtype=np.int32))

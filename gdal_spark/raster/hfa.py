@@ -453,8 +453,6 @@ def open_hfa(data: bytes) -> HFAFile:
 # (the layout contract of hfaopen.cpp HFACreateLL / hfaentry records)
 # ---------------------------------------------------------------------------
 
-_PIXEL_NAMES = ["u1", "u2", "u4", "u8", "s8", "u16", "s16", "u32", "s32",
-                "f32", "f64", "c64", "c128"]
 _NP_TO_EPT = {"uint8": 3, "int8": 4, "uint16": 5, "int16": 6, "uint32": 7,
               "int32": 8, "float32": 9, "float64": 10}
 

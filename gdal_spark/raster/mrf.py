@@ -56,7 +56,6 @@ _DT = {
     "Int64": "i8", "UInt64": "u8", "Float32": "f4", "Float64": "f8",
     "Float": "f4", "Double": "f8",
 }
-_DT_NAME = {v: k for k, v in list(_DT.items())[::-1]}
 _EXT = {"PNG": ".ppg", "PPNG": ".ppg", "JPEG": ".pjg", "NONE": ".til",
         "DEFLATE": ".pzp", "TIF": ".ptf", "LERC": ".lrc"}
 

@@ -22,7 +22,6 @@ import xml.etree.ElementTree as ET
 __all__ = ["georss_features", "georss_write", "read_georss"]
 
 _GEORSS_NS = "http://www.georss.org/georss"
-_ATOM_NS = "http://www.w3.org/2005/Atom"
 
 _MONTHS = {m: i + 1 for i, m in enumerate(
     ["Jan", "Feb", "Mar", "Apr", "May", "Jun",

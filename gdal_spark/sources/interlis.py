@@ -34,8 +34,6 @@ from gdal_spark.functions import geom as G
 
 __all__ = ["imd_parse", "itf_read"]
 
-_META = "{http://www.interlis.ch/INTERLIS2.3}"
-
 
 def _strip_ns(root):
     for el in root.iter():

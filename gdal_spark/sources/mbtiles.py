@@ -6,8 +6,8 @@ into a north-up raster whose grid follows the reference exactly —
 * bounds from the ``bounds`` metadata (lon/lat -> spherical mercator,
   northings clamped, ``MBTilesGetBounds``) or, with use_bounds=False,
   from the min/max tile numbers at max zoom;
-* geotransform/raster size per ``InitRaster``: res = 2*MAX_GM/256/2^z,
-  size = int(0.5 + extent/res);
+* geotransform/raster size per ``InitRaster``: res =
+  ``mercator.resolution_py(z, tile_size)``, size = int(0.5 + extent/res);
 * the raster is a pixel-shifted window of the global tile matrix
   (``ComputeTileAndPixelShifts``: shift = floor(0.5 + (origin -
   TMS_ORIGIN)/scale));
@@ -33,13 +33,13 @@ import sqlite3
 
 import numpy as np
 
-SPHERICAL_RADIUS = 6378137.0
-MAX_GM = SPHERICAL_RADIUS * math.pi  # 20037508.342789244
+from gdal_spark.functions import mercator as M
 
 
 def longlat_to_mercator(lon: float, lat: float) -> tuple[float, float]:
-    x = SPHERICAL_RADIUS * lon / 180 * math.pi
-    y = SPHERICAL_RADIUS * math.log(math.tan(math.pi / 4 + 0.5 * lat / 180 * math.pi))
+    # mbtilesdataset.cpp's operation order, not lonlat_to_meters_py's
+    x = M.EARTH_RADIUS * lon / 180 * math.pi
+    y = M.EARTH_RADIUS * math.log(math.tan(math.pi / 4 + 0.5 * lat / 180 * math.pi))
     return x, y
 
 
@@ -106,8 +106,8 @@ def _grid(path: str, zoom: int, use_bounds: bool, tile_size: int):
                         and minx <= maxx and miny <= maxy):
                     x0, y0 = longlat_to_mercator(minx, miny)
                     x1, y1 = longlat_to_mercator(maxx, maxy)
-                    y1 = min(y1, MAX_GM)
-                    y0 = max(y0, -MAX_GM)
+                    y1 = min(y1, M.ORIGIN_SHIFT)
+                    y0 = max(y0, -M.ORIGIN_SHIFT)
                     bounds = (x0, y0, x1, y1)
         if bounds is None:
             r = con.execute(
@@ -116,18 +116,18 @@ def _grid(path: str, zoom: int, use_bounds: bool, tile_size: int):
             ).fetchone()
             c0, c1, r0, r1 = r
 
-            def t2w(t):
-                return -MAX_GM + 2 * MAX_GM * (t / (1 << zoom))
+            def t2w(t):  # mbtilesdataset.cpp's tile-to-meters, kept for its order
+                return -M.ORIGIN_SHIFT + 2 * M.ORIGIN_SHIFT * (t / (1 << zoom))
 
             bounds = (t2w(c0), t2w(r0), t2w(c1 + 1), t2w(r1 + 1))
     finally:
         con.close()
-    res = 2 * MAX_GM / tile_size / (1 << zoom)
+    res = M.resolution_py(zoom, tile_size)
     w = int(0.5 + (bounds[2] - bounds[0]) / res)
     h = int(0.5 + (bounds[3] - bounds[1]) / res)
     gt = (bounds[0], res, 0.0, bounds[3], 0.0, -res)
-    shift_px_x = int(math.floor(0.5 + (gt[0] - (-MAX_GM)) / res))
-    shift_px_y = int(math.floor(0.5 + (gt[3] - MAX_GM) / -res))
+    shift_px_x = int(math.floor(0.5 + (gt[0] - (-M.ORIGIN_SHIFT)) / res))
+    shift_px_y = int(math.floor(0.5 + (gt[3] - M.ORIGIN_SHIFT) / -res))
     return gt, w, h, shift_px_x, shift_px_y
 
 
@@ -146,10 +146,10 @@ def read_mbtiles(
         f = 1 << (max(zooms) - z)
         w = max(1, int(0.5 + w / f))
         h = max(1, int(0.5 + h / f))
-        res = 2 * MAX_GM / tile_size / (1 << z)
+        res = M.resolution_py(z, tile_size)
         gt = (gt[0], res, 0.0, gt[3], 0.0, -res)
-        spx = int(math.floor(0.5 + (gt[0] + MAX_GM) / res))
-        spy = int(math.floor(0.5 + (gt[3] - MAX_GM) / -res))
+        spx = int(math.floor(0.5 + (gt[0] + M.ORIGIN_SHIFT) / res))
+        spy = int(math.floor(0.5 + (gt[3] - M.ORIGIN_SHIFT) / -res))
 
     out = np.zeros((h, w, band_count), np.uint8)
     n_rows = 1 << z

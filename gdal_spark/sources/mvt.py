@@ -32,13 +32,12 @@ pbf bytes locally.
 
 from __future__ import annotations
 
-import math
 import os
 import struct
 
 import numpy as np
 
-MERC_MAX = 20037508.342789244
+from gdal_spark.functions import mercator as M
 
 MOVETO, LINETO, CLOSEPATH = 1, 2, 7
 GEOM_POINT, GEOM_LINESTRING, GEOM_POLYGON = 1, 2, 3
@@ -310,9 +309,20 @@ def decode_geometry(
 
 
 def tile_geo(z: int, x: int, y: int) -> tuple[float, float, float, float]:
-    """WebMercator (top_x, top_y, dim_x, dim_y) of tile z/x/y."""
-    dim = 2 * MERC_MAX / (1 << z)
-    return -MERC_MAX + x * dim, MERC_MAX - y * dim, dim, dim
+    """WebMercator (top_x, top_y, dim_x, dim_y) of XYZ tile z/x/y."""
+    dim = M.resolution_py(z) * M.TILE_SIZE
+    return -M.ORIGIN_SHIFT + x * dim, M.ORIGIN_SHIFT - y * dim, dim, dim
+
+
+def _xyz_tile(x, y, dim: float):
+    """Column XYZ index of the tile holding (x, y), with S = ORIGIN_SHIFT:
+    floor((x + S) / dim), floor((S - y) / dim). This is the MVT writer's
+    rule, not gdal2tiles' ceil(p / 256) - 1: a point on a tile edge goes
+    to the tile right of or below it."""
+    from pyspark.sql import functions as F
+
+    return (F.floor((x + M.ORIGIN_SHIFT) / dim).cast("int"),
+            F.floor((M.ORIGIN_SHIFT - y) / dim).cast("int"))
 
 
 # ---------------------------------------------------------------------------
@@ -493,9 +503,7 @@ def write_mvt_tiles(
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
-    dim = 2 * MERC_MAX / (1 << zoom)
-    tx = F.floor((F.col(x_col) + MERC_MAX) / dim).cast("int")
-    ty = F.floor((MERC_MAX - F.col(y_col)) / dim).cast("int")
+    tx, ty = _xyz_tile(F.col(x_col), F.col(y_col), tile_geo(zoom, 0, 0)[2])
     tagged = df.withColumn("_tx", tx).withColumn("_ty", ty)
 
     sch = T.StructType([T.StructField("n", T.IntegerType())])
@@ -507,8 +515,7 @@ def write_mvt_tiles(
         import pandas as pd
 
         tzx, tzy = int(key[0]), int(key[1])
-        top_x = -MERC_MAX + tzx * dim
-        top_y = MERC_MAX - tzy * dim
+        top_x, top_y, dim, _ = tile_geo(zoom, tzx, tzy)
         feats = []
         for _, row in pdf.iterrows():
             px = int(round((row[x_col] - top_x) / dim * extent))
@@ -710,25 +717,13 @@ def write_mvt_pyramid(
     with_bbox = df.withColumn("_bb", bbox_udf(F.col(wkb_col)))
     covered = None
     for z in range(minzoom, maxzoom + 1):
-        dim = 2 * MERC_MAX / (1 << z)
+        dim = tile_geo(z, 0, 0)[2]
         pad = buffer_px * dim / extent
-        nmax = (1 << z) - 1
-        tx0 = F.greatest(
-            F.lit(0),
-            F.floor((F.col("_bb.xmin") - pad + MERC_MAX) / dim).cast("int"),
-        )
-        tx1 = F.least(
-            F.lit(nmax),
-            F.floor((F.col("_bb.xmax") + pad + MERC_MAX) / dim).cast("int"),
-        )
-        ty0 = F.greatest(
-            F.lit(0),
-            F.floor((MERC_MAX - (F.col("_bb.ymax") + pad)) / dim).cast("int"),
-        )
-        ty1 = F.least(
-            F.lit(nmax),
-            F.floor((MERC_MAX - (F.col("_bb.ymin") - pad)) / dim).cast("int"),
-        )
+        nmax = F.lit((1 << z) - 1)
+        tx0, ty0 = _xyz_tile(F.col("_bb.xmin") - pad, F.col("_bb.ymax") + pad, dim)
+        tx1, ty1 = _xyz_tile(F.col("_bb.xmax") + pad, F.col("_bb.ymin") - pad, dim)
+        tx0, ty0 = F.greatest(F.lit(0), tx0), F.greatest(F.lit(0), ty0)
+        tx1, ty1 = F.least(nmax, tx1), F.least(nmax, ty1)
         zdf = (
             with_bbox.withColumn("_tx", F.explode(F.sequence(tx0, tx1)))
             .withColumn("_ty", F.explode(F.sequence(ty0, ty1)))
@@ -740,9 +735,7 @@ def write_mvt_pyramid(
 
     def emit(key, pdf):
         z, tzx, tzy = int(key[0]), int(key[1]), int(key[2])
-        dim = 2 * MERC_MAX / (1 << z)
-        top_x = -MERC_MAX + tzx * dim
-        top_y = MERC_MAX - tzy * dim
+        top_x, top_y, dim, _ = tile_geo(z, tzx, tzy)
         feats = []
         for _, row in pdf.iterrows():
             tp = _tile_parts(

@@ -49,10 +49,6 @@ _TYPE_SQL = {
     "stringlist": "varchar[]",
 }
 
-_GTYPE_CODE = {"POINT": 1, "LINESTRING": 2, "POLYGON": 3,
-               "MULTIPOINT": 4, "MULTILINESTRING": 5, "MULTIPOLYGON": 6,
-               "GEOMETRYCOLLECTION": 7}
-
 
 def launder(name: str, ascii_mode: bool = False) -> str:
     """OGRPGCommonLaunderName: lowercase; '-' '#' and other punctuation

@@ -35,8 +35,8 @@ import zlib
 
 import numpy as np
 
+from gdal_spark.functions import mercator as M
 from gdal_spark.sources.mvt import (
-    MERC_MAX,
     _rvarint,
     _wvarint,
     decode_geometry,
@@ -464,14 +464,15 @@ def _build_root_leaves(
 
 
 def _merc_tile_lonlat_bounds(zxys: list[tuple[int, int, int]]) -> tuple:
+    # own inverse: meters_to_lonlat_py differs in the last bit at 1136/8214 z0-11 edges
     lons, lats = [], []
     for z, x, y in zxys:
         top_x, top_y, dim, _ = tile_geo(z, x, y)
         for mx in (top_x, top_x + dim):
-            lons.append(mx / MERC_MAX * 180.0)
+            lons.append(mx / M.ORIGIN_SHIFT * 180.0)
         for my in (top_y - dim, top_y):
             lat = np.degrees(
-                2.0 * np.arctan(np.exp(my / MERC_MAX * np.pi)) - np.pi / 2.0
+                2.0 * np.arctan(np.exp(my / M.ORIGIN_SHIFT * np.pi)) - np.pi / 2.0
             )
             lats.append(float(lat))
     return min(lons), min(lats), max(lons), max(lats)

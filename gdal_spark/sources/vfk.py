@@ -36,7 +36,6 @@ __all__ = ["VFKFile", "vfk_read"]
 _GEOM_POINT = ("SOBR", "SPOL")
 _GEOM_SBP = ("SBP", "SBPG")
 _GEOM_HP = ("HP", "DPM", "ZVB")
-_GEOM_POLY = ("PAR", "BUD")
 
 _CONT = "¤"  # currency sign continuation marker
 

@@ -37,9 +37,6 @@ class ZarrError(ValueError):
     pass
 
 
-_STDLIB_COMPRESSORS = {None, "gzip", "zlib", "lzma", "zstd"}
-
-
 def _decompress(blob: bytes, comp: dict | None) -> bytes:
     if comp is None:
         return blob

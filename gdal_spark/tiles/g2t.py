@@ -37,11 +37,9 @@ import math
 
 import numpy as np
 
+from gdal_spark.functions import mercator as M
 from gdal_spark.raster.kernels import block_reduce, geo_query
 
-EARTH = 6378137.0
-MSHIFT = math.pi * EARTH  # 20037508.342789244
-MAXZOOMLEVEL = 32
 MAX_LAT = 85.0511287798066
 
 
@@ -54,9 +52,9 @@ def webmerc_fwd(lon, lat):
     """deg -> meters; returns (x, y, ok). Poles map to +-inf -> not ok."""
     lon = np.asarray(lon, dtype=np.float64)
     lat = np.asarray(lat, dtype=np.float64)
-    x = EARTH * np.radians(lon)
+    x = M.EARTH_RADIUS * np.radians(lon)
     with np.errstate(divide="ignore", invalid="ignore", over="ignore"):
-        y = EARTH * np.log(np.tan(np.pi / 4 + np.radians(lat) / 2))
+        y = M.EARTH_RADIUS * np.log(np.tan(np.pi / 4 + np.radians(lat) / 2))
     ok = np.isfinite(y) & (np.abs(lat) < 90.0)
     return x, y, ok
 
@@ -65,8 +63,8 @@ def webmerc_inv(x, y):
     """meters -> deg."""
     x = np.asarray(x, dtype=np.float64)
     y = np.asarray(y, dtype=np.float64)
-    lon = np.degrees(x / EARTH)
-    lat = np.degrees(2.0 * np.arctan(np.exp(y / EARTH)) - np.pi / 2)
+    lon = np.degrees(x / M.EARTH_RADIUS)
+    lat = np.degrees(2.0 * np.arctan(np.exp(y / M.EARTH_RADIUS)) - np.pi / 2)
     return lon, lat
 
 
@@ -444,38 +442,9 @@ def warp_nearest_rgba(
 
 
 # --------------------------------------------------------------------------
-# gdal2tiles tiling (legacy mercator profile)
+# gdal2tiles tiling: the mercator, geodetic and raster profiles on
+# functions/mercator's tile grids
 # --------------------------------------------------------------------------
-
-
-def resolution(z: int, tile_size: int = 256) -> float:
-    return (2 * math.pi * EARTH / tile_size) / (2**z)
-
-
-def zoom_for_pixel_size(pixel_size: float, tile_size: int = 256) -> int:
-    for i in range(MAXZOOMLEVEL):
-        if pixel_size > resolution(i, tile_size):
-            return max(0, i - 1)
-    return MAXZOOMLEVEL - 1
-
-
-def tile_bounds(tx: int, ty: int, z: int, tile_size: int = 256):
-    res = resolution(z, tile_size)
-    return (
-        tx * tile_size * res - MSHIFT,
-        ty * tile_size * res - MSHIFT,
-        (tx + 1) * tile_size * res - MSHIFT,
-        (ty + 1) * tile_size * res - MSHIFT,
-    )
-
-
-def meters_to_tile(mx: float, my: float, z: int, tile_size: int = 256):
-    res = resolution(z, tile_size)
-    px = (mx + MSHIFT) / res
-    py = (my + MSHIFT) / res
-    tx = int(math.ceil(px / float(tile_size)) - 1)
-    ty = int(math.ceil(py / float(tile_size)) - 1)
-    return tx, ty
 
 
 def _rasterio_nearest(arr, rx, ry, rxs, rys, bw, bh):
@@ -546,6 +515,27 @@ def _base_tile_from_query(
     return dstile
 
 
+def _base_and_overview_tiles(
+    src_rgba: np.ndarray, src_gt, w: int, h: int, tminmax, tminz: int,
+    tmaxz: int, tile_size: int, tile_bounds,
+) -> dict:
+    """generate_base_tiles + generate_overview_tiles of the georeferenced
+    profiles: every tmaxz tile in tminmax through _base_tile_from_query at
+    querysize = 4 x tile_size, then _overview_pyramid down to tminz.
+    ``tile_bounds(tx, ty, tz)`` is the profile's tile grid."""
+    tilebands = src_rgba.shape[2]
+    tiles = {}
+    tminx, tminy, tmaxx, tmaxy = tminmax[tmaxz]
+    for ty in range(tmaxy, tminy - 1, -1):
+        for tx in range(tminx, tmaxx + 1):
+            tiles[(tmaxz, tx, ty)] = _base_tile_from_query(
+                src_rgba, src_gt, w, h, tile_bounds(tx, ty, tmaxz),
+                4 * tile_size, tile_size, tilebands,
+            )
+    _overview_pyramid(tiles, tminmax, tmaxz, tminz, tilebands, tile_size)
+    return tiles
+
+
 def gdal2tiles_geodetic(
     src: np.ndarray, src_gt, tminz: int | None = None,
     tmaxz: int | None = None, tile_size: int = 256,
@@ -557,55 +547,34 @@ def gdal2tiles_geodetic(
     Returns TMS-addressed tiles {(tz, tx, ty): rgba}."""
     if src.ndim == 2:
         src = src[:, :, None]
-    h, w, nb = src.shape
+    h, w = src.shape[:2]
     src_rgba = np.dstack([src, np.full((h, w), 255, np.uint8)])
-    res_fact = (180.0 if tmscompatible else 360.0) / tile_size
+    grid = (tmscompatible, tile_size)
 
     ominx, omaxx = src_gt[0], src_gt[0] + w * src_gt[1]
     omaxy, ominy = src_gt[3], src_gt[3] + h * src_gt[5]
 
-    def lonlat_to_tile(lon, lat, tz):
-        res = res_fact / 2**tz
-        px = (180 + lon) / res
-        py = (90 + lat) / res
-        return (int(math.ceil(px / tile_size) - 1),
-                int(math.ceil(py / tile_size) - 1))
-
     tminmax = {}
-    for tz in range(0, MAXZOOMLEVEL):
-        tminx, tminy = lonlat_to_tile(ominx, ominy, tz)
-        tmaxx, tmaxy = lonlat_to_tile(omaxx, omaxy, tz)
+    for tz in range(M.MAX_ZOOM + 1):
+        tminx, tminy = M.lonlat_to_tile_geodetic_py(ominx, ominy, tz, *grid)
+        tmaxx, tmaxy = M.lonlat_to_tile_geodetic_py(omaxx, omaxy, tz, *grid)
         tminx, tminy = max(0, tminx), max(0, tminy)
         tmaxx = min(2 ** (tz + 1) - 1, tmaxx)
         tmaxy = min(2**tz - 1, tmaxy)
         tminmax[tz] = (tminx, tminy, tmaxx, tmaxy)
 
-    def zoom_for(ps):
-        for i in range(MAXZOOMLEVEL):
-            if ps > res_fact / 2**i:
-                return max(0, i - 1)
-        return MAXZOOMLEVEL - 1
-
     if tminz is None:
-        tminz = zoom_for(src_gt[1] * max(w, h) / float(tile_size))
+        tminz = M.geodetic_zoom_for_pixel_size_py(
+            src_gt[1] * max(w, h) / float(tile_size), *grid
+        )
     if tmaxz is None:
-        tmaxz = max(tminz, zoom_for(src_gt[1]))
+        tmaxz = max(tminz, M.geodetic_zoom_for_pixel_size_py(src_gt[1], *grid))
     tminz = min(tminz, tmaxz)
 
-    querysize = 4 * tile_size
-    tiles = {}
-    tminx, tminy, tmaxx, tmaxy = tminmax[tmaxz]
-    res = res_fact / 2**tmaxz
-    for ty in range(tmaxy, tminy - 1, -1):
-        for tx in range(tminx, tmaxx + 1):
-            b = (tx * tile_size * res - 180, ty * tile_size * res - 90,
-                 (tx + 1) * tile_size * res - 180,
-                 (ty + 1) * tile_size * res - 90)
-            tiles[(tmaxz, tx, ty)] = _base_tile_from_query(
-                src_rgba, src_gt, w, h, b, querysize, tile_size, nb + 1
-            )
-    _overview_pyramid(tiles, tminmax, tmaxz, tminz, nb + 1, tile_size)
-    return tiles
+    return _base_and_overview_tiles(
+        src_rgba, src_gt, w, h, tminmax, tminz, tmaxz, tile_size,
+        lambda tx, ty, tz: M.tile_bounds_geodetic_py(tx, ty, tz, *grid),
+    )
 
 
 def gdal2tiles_raster(
@@ -669,7 +638,7 @@ def gdal2tiles_mercator(
     """
     if src.ndim == 2:
         src = src[:, :, None]
-    h, w, nb = src.shape
+    h, w = src.shape[:2]
 
     # reproject_dataset: geographic source beyond the mercator square ->
     # forced outputBounds (gdal2tiles.py:1056-1087)
@@ -692,7 +661,6 @@ def gdal2tiles_mercator(
     else:
         dst_gt, out_w, out_h = suggested_warp_output(src_gt, w, h)
     warped = warp_nearest_rgba(src, src_gt, dst_gt, out_w, out_h)
-    tilebands = nb + 1
 
     ominx = dst_gt[0]
     omaxx = dst_gt[0] + out_w * dst_gt[1]
@@ -700,60 +668,22 @@ def gdal2tiles_mercator(
     ominy = dst_gt[3] + out_h * dst_gt[5]
 
     tminmax = {}
-    for tz in range(0, MAXZOOMLEVEL):
-        tminx, tminy = meters_to_tile(ominx, ominy, tz, tile_size)
-        tmaxx, tmaxy = meters_to_tile(omaxx, omaxy, tz, tile_size)
+    for tz in range(M.MAX_ZOOM + 1):
+        tminx, tminy = M.meters_to_tile_py(ominx, ominy, tz, tile_size)
+        tmaxx, tmaxy = M.meters_to_tile_py(omaxx, omaxy, tz, tile_size)
         tminx, tminy = max(0, tminx), max(0, tminy)
         tmaxx, tmaxy = min(2**tz - 1, tmaxx), min(2**tz - 1, tmaxy)
         tminmax[tz] = (tminx, tminy, tmaxx, tmaxy)
 
     if tminz is None:
-        tminz = zoom_for_pixel_size(
+        tminz = M.zoom_for_pixel_size_py(
             dst_gt[1] * max(out_w, out_h) / float(tile_size), tile_size
         )
     if tmaxz is None:
-        tmaxz = max(tminz, zoom_for_pixel_size(dst_gt[1], tile_size))
+        tmaxz = max(tminz, M.zoom_for_pixel_size_py(dst_gt[1], tile_size))
     tminz = min(tminz, tmaxz)
 
-    querysize = 4 * tile_size
-    tiles = {}
-
-    # base tiles at tmaxz
-    tminx, tminy, tmaxx, tmaxy = tminmax[tmaxz]
-    for ty in range(tmaxy, tminy - 1, -1):
-        for tx in range(tminx, tmaxx + 1):
-            b = tile_bounds(tx, ty, tmaxz, tile_size)
-            (rx, ry, rxs, rys), (wxo, wyo, wxs, wys) = geo_query(
-                dst_gt, out_w, out_h, b[0], b[3], b[2], b[1],
-                querysize=querysize,
-            )
-            dstile = np.zeros((tile_size, tile_size, tilebands), np.uint8)
-            if rxs and rys and wxs and wys:
-                data = _rasterio_nearest(warped, rx, ry, rxs, rys, wxs, wys)
-                if tile_size == querysize:
-                    dstile[wyo:wyo + wys, wxo:wxo + wxs] = data
-                else:
-                    query = np.zeros((querysize, querysize, tilebands),
-                                     np.uint8)
-                    query[wyo:wyo + wys, wxo:wxo + wxs] = data
-                    dstile = _scale_query_to_tile(query, tile_size)
-            tiles[(tmaxz, tx, ty)] = dstile
-
-    # overview tiles down to tminz (create_overview_tile)
-    for tz in range(tmaxz - 1, tminz - 1, -1):
-        tminx, tminy, tmaxx, tmaxy = tminmax[tz]
-        for ty in range(tmaxy, tminy - 1, -1):
-            for tx in range(tminx, tmaxx + 1):
-                query = np.zeros((2 * tile_size, 2 * tile_size, tilebands),
-                                 np.uint8)
-                for cy in range(ty * 2, ty * 2 + 2):
-                    for cx in range(tx * 2, tx * 2 + 2):
-                        child = tiles.get((tz + 1, cx, cy))
-                        if child is None:
-                            continue
-                        posx = 0 if cx % 2 == 0 else tile_size
-                        posy = tile_size if cy % 2 == 0 else 0
-                        query[posy:posy + tile_size,
-                              posx:posx + tile_size] = child
-                tiles[(tz, tx, ty)] = _scale_query_to_tile(query, tile_size)
-    return tiles
+    return _base_and_overview_tiles(
+        warped, dst_gt, out_w, out_h, tminmax, tminz, tmaxz, tile_size,
+        lambda tx, ty, tz: M.tile_bounds_meters_py(tx, ty, tz, tile_size),
+    )

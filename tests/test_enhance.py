@@ -3,6 +3,7 @@ apply semantics, config round trip, and the reference's own rgbsmall.tif
 through this engine's TIFF decoder."""
 
 import numpy as np
+import pytest
 
 from gdal_spark.raster.enhance import (
     default_histogram_byte,
@@ -58,6 +59,14 @@ def test_config_roundtrip():
     luts, mins, maxs = parse_luts(txt)
     assert len(luts) == 2 and (luts[0] == lut).all()
     assert mins == [-0.5, -0.5] and maxs == [255.5, 255.5]
+
+
+def test_parse_luts_names_bad_line():
+    txt = "1:Band -0.5:ScaleMin 255.5:ScaleMax 0 1\n\n2:Band 0:ScaleMin\n"
+    with pytest.raises(ValueError, match="bad LUT line ''"):
+        parse_luts(txt)
+    with pytest.raises(ValueError, match="bad LUT line '2:Band 0:ScaleMin'"):
+        parse_luts(txt.replace("\n\n", "\n"))
 
 
 def test_rgbsmall_through_engine_tiff():

@@ -10,17 +10,17 @@ import os
 import numpy as np
 import pytest
 
+from gdal_spark.functions import mercator
 from gdal_spark.functions.checksum import checksum_image
 from gdal_spark.tiles import g2t
 
 SMALL_WORLD = "/root/reference/autotest/gdrivers/data/small_world.tif"
-pytestmark = pytest.mark.skipif(
-    not os.path.exists(SMALL_WORLD), reason="reference data absent"
-)
 
 
 @pytest.fixture(scope="module")
 def world():
+    if not os.path.exists(SMALL_WORLD):
+        pytest.skip("reference data absent")
     from gdal_spark.functions.tiff import tiff_parse
 
     arr, md = tiff_parse(open(SMALL_WORLD, "rb").read())
@@ -98,7 +98,7 @@ def test_warp_output_for_bounds_known_extent_res(world):
     3857) and the 10x10 36.01-degree case = 13x13 with psx
     3082693.591198345 (gdal2tiles/test_reproject_dataset.py)."""
     _, gt = world
-    M = g2t.MSHIFT
+    M = mercator.ORIGIN_SHIFT
     te_gt, tw, th = g2t.warp_output_for_bounds(gt, 400, 200, (-M, -M, M, M))
     assert (tw, th) == (388, 388)
     assert te_gt[1] == pytest.approx(103286.12547829507, abs=1e-6)

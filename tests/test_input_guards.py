@@ -1,6 +1,6 @@
 """Checks on outside input raise ValueError, not asserts that
 ``python -O`` strips (shapefile .shx/.dbf count, GeoPackage blob magic,
-FlatGeobuf magic, OGR VRT root element)."""
+FlatGeobuf magic, OGR VRT root element, gdalenhance LUT lines)."""
 
 from __future__ import annotations
 
@@ -11,6 +11,7 @@ from pathlib import Path
 
 import pytest
 
+from gdal_spark.raster import enhance
 from gdal_spark.sources import flatgeobuf, ogrvrt
 from gdal_spark.sources import vector_formats as VF
 
@@ -34,8 +35,18 @@ def _vrt_root(tmp: Path):
     ogrvrt.read_ogrvrt(None, "<OGRVRTLayer/>")
 
 
+def _lut_blank_line(tmp: Path):
+    enhance.parse_luts("1:Band -0.5:ScaleMin 255.5:ScaleMax 0 1\n\n"
+                       "2:Band -0.5:ScaleMin 255.5:ScaleMax 0 1\n")
+
+
+def _lut_band_tag(tmp: Path):
+    enhance.parse_luts("1 -0.5:ScaleMin 255.5:ScaleMax 0 1\n")
+
+
 GUARDS = {f.__name__: f for f in (_shx_dbf_mismatch, _gpkg_blob_magic,
-                                  _fgb_magic, _vrt_root)}
+                                  _fgb_magic, _vrt_root, _lut_blank_line,
+                                  _lut_band_tag)}
 
 
 def raised(tmp: Path) -> list[str]:

@@ -12,11 +12,12 @@ from gdal_spark.functions.checksum import checksum
 from gdal_spark.sources import mbtiles as MB
 
 DATA = "/root/reference/autotest/gdrivers/data/mbtiles"
-pytestmark = pytest.mark.skipif(
+needs_reference = pytest.mark.skipif(
     not os.path.isdir(DATA), reason="reference data absent"
 )
 
 
+@needs_reference
 def test_world_l1_parity():
     """test_mbtiles_2 (USE_BOUNDS=NO): 4 bands, full 512x512 tile grid,
     the reference's exact geotransform, band + overview checksums."""
@@ -35,6 +36,7 @@ def test_world_l1_parity():
     assert [checksum(ovr[i]) for i in range(3)] == [16642, 15772, 10029]
 
 
+@needs_reference
 def test_byte_parity():
     """test_mbtiles_5 shape (the byte.mbtiles fixture): bounds-metadata
     clip to 19x19 at zoom 11, gray+alpha with BAND_COUNT=2, exact
@@ -76,6 +78,7 @@ def test_write_read_roundtrip(tmp_path):
     assert np.array_equal(np.moveaxis(ovr, 0, 2), tiles[(0, 0, 0)])
 
 
+@needs_reference
 def test_distributed_tile_scan(spark):
     df = MB.read_mbtiles_tiles(
         spark, os.path.join(DATA, "world_l1.mbtiles")
@@ -94,6 +97,7 @@ def test_distributed_tile_scan(spark):
 # ---------------------------------------------------------------------------
 
 
+@needs_reference
 def test_gpkg_raster_byte_parity():
     """autotest/gdrivers/gpkg.py test_gpkg_45: byte.gpkg reads as the
     20x20 contents-bounds window of the zoom-0 tile, checksum 4672."""

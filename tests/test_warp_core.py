@@ -11,11 +11,24 @@ its exception type and message. The pins were recorded before these
 callers were moved onto one sampler (``kernels.gather``) and one
 output-grid estimator (``warp.suggested_output_grid``), and must not
 move.
+
+The GCP fits solve least squares through numpy's OpenBLAS, which picks a
+kernel per CPU (DYNAMIC_ARCH); the kernels round differently, so a fitted
+geotransform moves in its last bits from one CPU to another while the
+warped pixels stay the same. The ``gcp_*`` pins are therefore computed in
+one child interpreter started with OpenBLAS' Prescott kernel and compared
+exactly, and ``test_gcp_host_blas_matches_portable`` holds the host's own
+kernel to the same pixels and to geotransforms within 1e-12 relative.
 """
 
 from __future__ import annotations
 
 import hashlib
+import os
+import pickle
+import subprocess
+import sys
+from pathlib import Path
 
 import numpy as np
 import pytest
@@ -61,12 +74,15 @@ def _feed(h, obj) -> None:
         h.update(repr(obj).encode())
 
 
-def _digest(fn) -> str:
-    h = hashlib.sha256()
+def _outcome(fn):
     try:
-        out = fn()
+        return fn()
     except Exception as exc:  # a pinned raise
-        out = ("raises", type(exc).__name__, str(exc))
+        return ("raises", type(exc).__name__, str(exc))
+
+
+def _digest(out) -> str:
+    h = hashlib.sha256()
     _feed(h, out)
     return h.hexdigest()[:16]
 
@@ -1076,9 +1092,42 @@ PINNED = {
 }
 
 
+GCP_CASES = sorted(n for n in CASES if n.startswith("gcp_"))
+
+
+def gcp_outcomes() -> dict:
+    return {name: _outcome(CASES[name]) for name in GCP_CASES}
+
+
+@pytest.fixture(scope="module")
+def portable_gcp() -> dict:
+    """gcp_* outcomes from a child interpreter on OpenBLAS' Prescott
+    kernel; the variable must be set before numpy loads."""
+    env = dict(os.environ, OPENBLAS_CORETYPE="Prescott")
+    code = ("import pickle, sys, tests.test_warp_core as t; "
+            "pickle.dump(t.gcp_outcomes(), sys.stdout.buffer)")
+    out = subprocess.run([sys.executable, "-c", code], env=env, check=True,
+                         capture_output=True, cwd=Path(__file__).parents[1])
+    return pickle.loads(out.stdout)
+
+
 @pytest.mark.parametrize("name", sorted(CASES))
-def test_pinned_output(name):
-    assert _digest(CASES[name]) == PINNED[name]
+def test_pinned_output(name, request):
+    if name in GCP_CASES:
+        out = request.getfixturevalue("portable_gcp")[name]
+    else:
+        out = _outcome(CASES[name])
+    assert _digest(out) == PINNED[name]
+
+
+@pytest.mark.parametrize("name", GCP_CASES)
+def test_gcp_host_blas_matches_portable(name, portable_gcp):
+    want, got = portable_gcp[name], _outcome(CASES[name])
+    if isinstance(want[0], str):  # a pinned raise
+        assert got == want
+        return
+    assert _digest(got[0]) == _digest(want[0])
+    np.testing.assert_allclose(got[1], want[1], rtol=1e-12, atol=0)
 
 
 def test_every_case_is_pinned():
