@@ -15,6 +15,9 @@ a cell equi-join prunes to co-located partitions.
 
 from __future__ import annotations
 
+import math
+
+import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -146,3 +149,60 @@ def with_footprint_cells(
 
 def pack_cell_py(res: int, tx: int, ty: int) -> int:
     return (res << RES_SHIFT) | (tx << TX_SHIFT) | ty
+
+
+# Relative widening of each bbox edge before the driver-side cover. numpy's
+# log/tan may differ from the JVM's in the last ulp (about 1e-14 degrees), so
+# a bbox edge on a tile boundary could otherwise land one tile inside the
+# JVM's; widened, it can only gain a candidate cell, never lose one.
+COVER_EPS = 1e-9
+
+
+def cover_cells_np(
+    lon_min: np.ndarray, lat_min: np.ndarray, lon_max: np.ndarray,
+    lat_max: np.ndarray, res: int,
+) -> tuple[np.ndarray, np.ndarray]:
+    """Vectorised driver-side twin of `cover_cells` over arrays of bboxes:
+    (row, cell) int64 arrays, one entry per cell covering row's bbox.
+
+    Conservative: each bbox is widened by COVER_EPS (relative, at least
+    COVER_EPS degrees) and tile indices are clamped as `lonlat_cell` clamps
+    them, so the cover is a superset of the JVM cover of the same bbox. At
+    lat <= -90 and past 90 the JVM's log is NULL, which the clamp turns
+    into the top tile row; such a bbox covers up to that row here too. A
+    NaN bbox covers nothing.
+    """
+    n = (1 << res) - 1
+    res_m = M.resolution_py(res)
+
+    def tile(merc):
+        t = np.ceil((merc + M.ORIGIN_SHIFT) / res_m / float(M.TILE_SIZE)) - 1
+        return np.clip(np.nan_to_num(t), 0, n).astype(np.int64)
+
+    def mx(lon):
+        return np.clip(lon, -180.0, 180.0) * (M.ORIGIN_SHIFT / 180.0)
+
+    def my(lat):
+        # past +-89 degrees every res saturates at the polar tile row
+        lat = np.clip(lat, -89.0, 89.0)
+        return (np.log(np.tan((90.0 + lat) * (math.pi / 360.0)))
+                / (math.pi / 180.0) * (M.ORIGIN_SHIFT / 180.0))
+
+    def widen(v, sign):
+        return v + sign * COVER_EPS * np.maximum(1.0, np.abs(v))
+
+    # an inverted bbox covers its tile range too (F.sequence counts down)
+    lon0, lon1, lat0, lat1 = (np.asarray(v, dtype=np.float64)
+                              for v in (lon_min, lon_max, lat_min, lat_max))
+    x0, x1 = widen(np.minimum(lon0, lon1), -1), widen(np.maximum(lon0, lon1), 1)
+    y0, y1 = widen(np.minimum(lat0, lat1), -1), widen(np.maximum(lat0, lat1), 1)
+    ok = ~(np.isnan(x0) | np.isnan(y0) | np.isnan(x1) | np.isnan(y1))
+    tx0, tx1, ty0, ty1 = tile(mx(x0)), tile(mx(x1)), tile(my(y0)), tile(my(y1))
+    ty1 = np.where((y0 <= -90.0) | (y1 > 90.0), n, ty1)
+    ny = ty1 - ty0 + 1
+    count = np.where(ok, (tx1 - tx0 + 1) * ny, 0)
+    row = np.repeat(np.arange(len(count)), count)
+    k = np.arange(len(row)) - np.repeat(np.cumsum(count) - count, count)
+    tx = tx0[row] + k // ny[row]
+    ty = ty0[row] + k % ny[row]
+    return row, (np.int64(res) << RES_SHIFT) | (tx << TX_SHIFT) | ty

@@ -7,8 +7,8 @@ ogrlayer.cpp:5385) for the 100 TB regime:
   ------------------------------------  --------------------------------
   nested loop over input layer          cell equi-join (shuffle or
                                         broadcast on the packed cell key)
-  envelope pre-filter on method extent  bbox column conjunction BEFORE the
-  (ogrlayer.cpp:4004)                   exact phase (Catalyst-visible)
+  envelope pre-filter on method extent  bbox column conjunction in the
+  (ogrlayer.cpp:4004)                   join condition (Catalyst-visible)
   prepared geometries per filter        edges prepared ONCE per polygon
   (ogrlayer.cpp:3919)                   (prepared_edges), probed by an
                                         unrolled codegen parity expression
@@ -26,8 +26,12 @@ Predicates:
     each polygon's non-horizontal edges become flat `_e{i}_{ylo,yhi,x1,y1,sl}`
     double columns and the crossing parity is one unrolled expression
     (`parity_predicate`) that Catalyst evaluates inside a join condition.
-      - broadcast path: the driver prepares the edges; the edge table is a
-        second broadcast join on the polygon key, parity in its condition.
+      - broadcast path: the driver builds the whole polygon side as ONE
+        local table, a row per (polygon, covering cell) carrying the bbox
+        and the flat edge slots (`_local_build_side`, cells from
+        `cells.cover_cells_np`). The plan has a single BroadcastHashJoin
+        over a LocalTableScan, with the envelope and the parity in its
+        condition: no Generate, no broadcast job, no second join.
       - shuffle path: a pandas UDF prepares the edges on the polygon side
         (O(polygons) rows); the flat columns ride the cell join and parity
         is evaluated in the cell-join condition.
@@ -41,10 +45,12 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+import pyarrow as pa
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
+from pyspark.sql.pandas.types import to_arrow_type
 
 from gdal_spark.functions import cells as C
 from gdal_spark.functions import geom
@@ -92,20 +98,21 @@ def edges_array_udf(wkb_col: pd.Series) -> pd.Series:
     return pd.Series([prepared_edges(bytes(buf)) for buf in wkb_col])
 
 
-def parity_predicate(cx, cy, n_edges: int):
+def parity_predicate(cx: str, cy: str, n_edges: int) -> Column:
     """Crossing parity over edge slots 0..n_edges-1 as a fully-unrolled,
-    branch-free codegen expression. Half-open crossing rule of
-    OGRLinearRing::isPointInRing (ogr/ogrlinearring.cpp:452-521): for a
-    non-horizontal edge, (y1<=y<y2 or y2<=y<y1) == (ylo<=y<yhi), and
-    x < x-intersection. A polygon with fewer edges leaves its last slots
-    NULL: `hit` is then NULL and the WHEN yields 0."""
-    parity = F.lit(0)
-    for i in range(n_edges):
-        ylo, yhi, x1, y1, sl = (F.col(f"_e{i}_{f}") for f in _EDGE_FIELDS)
-        hit = (ylo <= cy) & (cy < yhi) & (cx < x1 + (cy - y1) * sl)
-        bit = F.when(hit, F.lit(1)).otherwise(F.lit(0))
-        parity = bit if i == 0 else parity + bit
-    return parity % 2 == 1
+    branch-free codegen expression, parsed from ONE SQL string (one py4j
+    call, however many edges); `cx`/`cy` are SQL expressions of the probe
+    point. Half-open crossing rule of OGRLinearRing::isPointInRing
+    (ogr/ogrlinearring.cpp:452-521): for a non-horizontal edge,
+    (y1<=y<y2 or y2<=y<y1) == (ylo<=y<yhi), and x < x-intersection. A
+    polygon with fewer edges leaves its last slots NULL: the hit is then
+    NULL and the CASE yields 0."""
+    bits = [
+        f"CASE WHEN _e{i}_ylo <= {cy} AND {cy} < _e{i}_yhi"
+        f" AND {cx} < _e{i}_x1 + ({cy} - _e{i}_y1) * _e{i}_sl THEN 1 ELSE 0 END"
+        for i in range(n_edges)
+    ]
+    return F.expr(f"({' + '.join(bits) or '0'}) % 2 = 1")
 
 
 def _per_polygon(kernel, keys: pd.Series, wkb_of, *cols: pd.Series) -> pd.Series:
@@ -155,6 +162,57 @@ def box_intersects_by_id_udf(poly_map: dict):
     return fn
 
 
+def _local_build_side(
+    polygons: DataFrame,
+    res: int,
+    predicate: str,
+    poly_key: str,
+    poly_bbox: tuple[str, str, str, str],
+    keep_wkb: bool,
+) -> tuple[DataFrame, int, dict]:
+    """The broadcast path's polygon side, made on the driver as ONE local
+    table: a row per (polygon, covering cell) with the polygon's columns,
+    its `cell` (C.cover_cells_np) and, for center_within, its prepared
+    edges in the flat `_e{i}_*` slots, NULL past its last edge. One
+    createDataFrame call; Spark broadcasts it from a LocalTableScan, with
+    no job. `wkb` rides only for the pip_udf fallback or keep_wkb.
+
+    Returns the table, the unrolled edge count and {poly key: wkb}."""
+    # collect(), not toArrow(): a local polygon relation collects with no job
+    rows = polygons.collect()
+
+    def col(name):
+        return [r[name] for r in rows]
+
+    wkbs = [bytes(b) for b in col("wkb")]
+    poly_map = dict(zip(col(poly_key), wkbs))
+    row, cells = C.cover_cells_np(
+        *(np.array(col(c), dtype=np.float64) for c in poly_bbox), res)
+
+    n_edges, edges = 0, []
+    if predicate == "center_within":
+        edges = [prepared_edges(buf) for buf in wkbs]
+        n_edges = max(map(len, edges), default=0)
+    fields = [f for f in polygons.schema.fields
+              if f.name != "wkb" or keep_wkb or n_edges > UNROLL_MAX_EDGES]
+    cols = {f.name: pa.array(col(f.name), to_arrow_type(f.dataType)).take(row)
+            for f in fields}
+    fields.append(T.StructField("cell", T.LongType(), False))
+    cols["cell"] = cells
+    if 0 < n_edges <= UNROLL_MAX_EDGES:
+        slots = np.zeros((len(edges), n_edges, len(_EDGE_FIELDS)))
+        for p, es in enumerate(edges):
+            if es:
+                slots[p, : len(es)] = es
+        slots, live = slots[row], np.array([len(es) for es in edges])[row]
+        for i in range(n_edges):
+            for j, f in enumerate(_EDGE_FIELDS):
+                cols[f"_e{i}_{f}"] = pa.array(slots[:, i, j], mask=live <= i)
+                fields.append(T.StructField(f"_e{i}_{f}", T.DoubleType()))
+    spark = polygons.sparkSession
+    return spark.createDataFrame(pa.table(cols), T.StructType(fields)), n_edges, poly_map
+
+
 def spatial_join(
     left: DataFrame,
     polygons: DataFrame,
@@ -171,14 +229,15 @@ def spatial_join(
 ) -> DataFrame:
     """Join `left` rows (bbox'd) to polygons (wkb + bbox) they hit.
 
-    Returns left rows + matching polygon key columns (inner, 1:N across
+    Returns left rows + matching polygon columns (inner, 1:N across
     polygons, each pair exactly once).
 
     broadcast_polygons: True = force broadcast (dims <= ~64MB: no shuffle
-    at all; the driver prepares the polygon side once); False = no hint —
-    the cell join is planned as a shuffle join, optionally salted `salt`
-    ways for hot cells, though Catalyst/AQE may still broadcast the
-    polygon side when it is under spark.sql.autoBroadcastJoinThreshold.
+    at all; the driver builds the polygon side once, as one local table);
+    False = no hint — the cell join is planned as a shuffle join,
+    optionally salted `salt` ways for hot cells, though Catalyst/AQE may
+    still broadcast the polygon side when it is under
+    spark.sql.autoBroadcastJoinThreshold.
 
     Exactly-once pairs WITHOUT a dedup shuffle:
       * center_within probes a point, which lies in exactly one cell —
@@ -188,6 +247,7 @@ def spatial_join(
         corner of the two bboxes' intersection (a point both cover sets
         contain) — the standard reference-point rule, evaluated as a
         Catalyst column filter instead of dropDuplicates.
+    Either way a polygon has each cell at most once on the build side.
     """
     if predicate not in ("center_within", "intersects"):
         raise ValueError(f"unknown predicate {predicate!r}")
@@ -197,78 +257,67 @@ def spatial_join(
         left = left.select(*dict.fromkeys([left_key, *left_bbox, *carry]))
         polygons = polygons.select(*dict.fromkeys([poly_key, *poly_bbox, "wkb"]))
 
-    # broadcast path: the polygon dim is driver-sized anyway, so the driver
-    # prepares it once (closure / edge table) and wkb stays out of the join
-    poly_map: dict | None = None
-    if broadcast_polygons:
-        poly_map = {
-            r[0]: bytes(r[1]) for r in polygons.select(poly_key, "wkb").collect()
-        }
-    n_edges = 0
-    if predicate == "center_within":
-        if poly_map is not None:
-            edges = {pid: prepared_edges(buf) for pid, buf in poly_map.items()}
-            n_edges = max(map(len, edges.values()), default=0)
-        else:
-            # shuffle path: edges prepared once per polygon row; one cheap
-            # agg over the polygon side sizes the unrolled expression
-            polygons = polygons.withColumn("edges", edges_array_udf(F.col("wkb")))
-            n_edges = int(polygons.select(F.max(F.size("edges"))).first()[0] or 0)
-    fallback = predicate == "center_within" and n_edges > UNROLL_MAX_EDGES
-
-    wkb_dim: DataFrame | None = None
-    if fallback:
-        # pip_udf reads the WKB on either path
-        polygons = polygons.drop("edges")
-    elif poly_map is not None:
-        if keep_wkb:
-            wkb_dim = polygons.select(poly_key, "wkb")
-        polygons = polygons.drop("wkb")
-    elif predicate == "center_within":
-        # Flatten the prepared edges to SCALAR double columns on the
-        # polygon side BEFORE the pair explosion. A condition over
-        # array<array<double>> re-extracts ~5*n_edges nested elements per
-        # CANDIDATE PAIR, measured 4x slower end-to-end (BENCH/SKEW.md
-        # fixture). F.get past the array end is NULL: a NULL slot.
-        flat = [
-            F.get(F.col("edges"), i).getItem(j).alias(f"_e{i}_{f}")
-            for i in range(n_edges)
-            for j, f in enumerate(_EDGE_FIELDS)
-        ]
-        keep = [c for c in polygons.columns
-                if c != "edges" and (keep_wkb or c != "wkb")]
-        polygons = polygons.select(*keep, *flat)
-
     lx0, ly0, lx1, ly1 = (F.col(c) for c in left_bbox)
+    # the probe point as SQL, for the one-string parity expression
+    cx_sql, cy_sql = (f"((`{a}` + `{b}`) / 2.0D)"
+                      for a, b in (left_bbox[0::2], left_bbox[1::2]))
+    cx, cy = F.expr(cx_sql), F.expr(cy_sql)
     if predicate == "center_within":
-        lc = left.withColumn(
-            "cell", C.lonlat_cell((lx0 + lx1) / 2.0, (ly0 + ly1) / 2.0, res)
-        )
+        lc = left.withColumn("cell", C.lonlat_cell(cx, cy, res))
     else:
         lc = C.with_footprint_cells(left, res, *left_bbox)
-    pc = C.with_footprint_cells(polygons, res, *poly_bbox)
 
-    if salt > 1 and not broadcast_polygons:
-        # replicate each polygon-cell row `salt` ways; probes pick one slot
-        pc = pc.withColumn("_salt", F.explode(F.sequence(F.lit(0), F.lit(salt - 1))))
-        lc = lc.withColumn("_salt", F.pmod(F.xxhash64(F.col(left_key)), F.lit(salt)))
-        join_keys = ["cell", "_salt"]
-    else:
-        join_keys = ["cell"]
-
+    salted = salt > 1 and not broadcast_polygons
+    poly_map: dict | None = None
     if broadcast_polygons:
-        pc = F.broadcast(pc)
-
-    cand = lc.join(pc, on=join_keys, how="inner")
+        # the polygon dim is driver-sized anyway: cells, edges and the
+        # exact-kernel closure are prepared once on the driver
+        pc, n_edges, poly_map = _local_build_side(
+            polygons, res, predicate, poly_key, poly_bbox, keep_wkb)
+        cand = lc.join(F.broadcast(pc), on="cell")
+        fallback = n_edges > UNROLL_MAX_EDGES
+    else:
+        n_edges = 0
+        if predicate == "center_within":
+            # edges prepared once per polygon row; one cheap agg over the
+            # polygon side sizes the unrolled expression
+            polygons = polygons.withColumn("edges", edges_array_udf(F.col("wkb")))
+            n_edges = int(polygons.select(F.max(F.size("edges"))).first()[0] or 0)
+        fallback = n_edges > UNROLL_MAX_EDGES
+        if fallback:
+            # pip_udf reads the WKB
+            polygons = polygons.drop("edges")
+        elif predicate == "center_within":
+            # Flatten the prepared edges to SCALAR double columns on the
+            # polygon side BEFORE the pair explosion. A condition over
+            # array<array<double>> re-extracts ~5*n_edges nested elements
+            # per CANDIDATE PAIR, measured 4x slower end-to-end
+            # (BENCH/SKEW.md fixture). F.get past the array end is NULL: a
+            # NULL slot.
+            flat = [
+                F.get(F.col("edges"), i).getItem(j).alias(f"_e{i}_{f}")
+                for i in range(n_edges)
+                for j, f in enumerate(_EDGE_FIELDS)
+            ]
+            keep = [c for c in polygons.columns
+                    if c != "edges" and (keep_wkb or c != "wkb")]
+            polygons = polygons.select(*keep, *flat)
+        pc = C.with_footprint_cells(polygons, res, *poly_bbox)
+        join_keys = ["cell"]
+        if salted:
+            # replicate each polygon-cell row `salt` ways; probes pick one slot
+            pc = pc.withColumn("_salt", F.explode(F.sequence(F.lit(0), F.lit(salt - 1))))
+            lc = lc.withColumn("_salt", F.pmod(F.xxhash64(F.col(left_key)), F.lit(salt)))
+            join_keys.append("_salt")
+        cand = lc.join(pc, on=join_keys, how="inner")
 
     # phase 1: envelope conjunction (Catalyst-visible, codegen'd)
     px0, py0, px1, py1 = (F.col(c) for c in poly_bbox)
     cand = cand.filter((lx0 <= px1) & (px0 <= lx1) & (ly0 <= py1) & (py0 <= ly1))
 
-    # phase 2: exact kernel
+    # phase 2: exact kernel; Catalyst moves a codegen'd filter into the
+    # cell join's condition
     if predicate == "center_within":
-        cx = (lx0 + lx1) / 2.0
-        cy = (ly0 + ly1) / 2.0
         if fallback:
             # polygons too wide to unroll: Arrow-batched numpy kernel
             cand = cand.filter(pip_udf(cx, cy, F.col("wkb")))
@@ -276,22 +325,7 @@ def spatial_join(
                 cand = cand.drop("wkb")
         else:
             names = [f"_e{i}_{f}" for i in range(n_edges) for f in _EDGE_FIELDS]
-            if poly_map is not None:
-                # the edge table joins on the polygon key; Catalyst moves
-                # the parity filter into that BroadcastHashJoin's condition
-                rows = [
-                    (pid, *(v for e in es for v in e),
-                     *[None] * (len(names) - 5 * len(es)))
-                    for pid, es in edges.items()
-                ]
-                schema = ", ".join([f"{poly_key} long", *(f"{n} double" for n in names)])
-                key_t = dict(cand.dtypes)[poly_key]
-                edges_df = polygons.sparkSession.createDataFrame(rows, schema)
-                cand = cand.join(
-                    F.broadcast(edges_df.withColumn(poly_key, F.col(poly_key).cast(key_t))),
-                    on=poly_key,
-                )
-            cand = cand.filter(parity_predicate(cx, cy, n_edges)).drop(*names)
+            cand = cand.filter(parity_predicate(cx_sql, cy_sql, n_edges)).drop(*names)
     else:
         # reference-point dedup BEFORE the exact kernel: evaluate the UDF
         # once per pair, not once per shared cell
@@ -303,12 +337,7 @@ def spatial_join(
             exact = box_intersects_udf(lx0, ly0, lx1, ly1, F.col("wkb"))
         cand = cand.filter(exact)
 
-    drop = ["cell"] + (["_salt"] if salt > 1 and not broadcast_polygons else [])
-    cand = cand.drop(*drop)
-    if wkb_dim is not None:
-        # geometry re-attached AFTER filtering: only final pairs pay for it
-        cand = cand.join(F.broadcast(wkb_dim), on=poly_key)
-    return cand
+    return cand.drop("cell", *(["_salt"] if salted else []))
 
 
 def count_per_polygon(joined: DataFrame, poly_key: str = "poly_id") -> DataFrame:

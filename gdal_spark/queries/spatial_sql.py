@@ -157,8 +157,10 @@ NATION_BOX_SQL = """
 
 def cell_pip_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Points (from lineitem keys) x nation boxes through the REAL
-    cell-partitioned spatial join (cover_cells + bbox prefilter + exact
-    ray-casting PIP UDF + pair dedup)."""
+    cell-partitioned spatial join on its broadcast path: one local build
+    table of (box, covering cell) rows, and one broadcast hash join whose
+    condition holds the bbox prefilter and the exact ray-casting parity
+    (codegen'd, no Python UDF)."""
     li = load(spark, sf_dir, "lineitem")
     # synthetic lineitem repeats (orderkey, linenumber) pairs -> dedup the
     # derived key so pt_id is a real key on both engines. Dedup on the ONE

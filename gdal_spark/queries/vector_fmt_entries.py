@@ -1370,7 +1370,6 @@ def pmtiles_roundtrip(spark, sf_dir):
     clustered single-file archive (Hilbert tile ids, varint directories,
     gzip tile payloads), then read back with per-task byte-range reads.
     Same closed form as the MVT oracle — the archive must be lossless."""
-    import json as _json
     import re
     import tempfile
 

@@ -37,8 +37,9 @@ def ntv2_encode(arr: np.ndarray, gt, name: str = "SYNTH",
     [lat_shift, lon_shift, lat_acc, lon_acc] in arc-seconds; gt in
     degrees with the half-cell shift exactly as ntv2_decode returns."""
     a = np.asarray(arr, np.float32)
-    h, w, nb = a.shape
-    assert nb == 4
+    if a.ndim != 3 or a.shape[2] != 4:
+        raise ValueError(f"NTv2 grid must be (h, w, 4), got {a.shape}")
+    h, w, _ = a.shape
     long_inc = gt[1] * 3600.0
     lat_inc = -gt[5] * 3600.0
     w_long_e = gt[0] * 3600.0 + long_inc * 0.5   # east-positive node edge

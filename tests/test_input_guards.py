@@ -1,6 +1,7 @@
 """Checks on outside input raise ValueError, not asserts that
 ``python -O`` strips (shapefile .shx/.dbf count, GeoPackage blob magic,
-FlatGeobuf magic, OGR VRT root element, gdalenhance LUT lines)."""
+FlatGeobuf magic, OGR VRT root element, gdalenhance LUT lines, NTv2
+grid band count)."""
 
 from __future__ import annotations
 
@@ -9,9 +10,10 @@ import subprocess
 import sys
 from pathlib import Path
 
+import numpy as np
 import pytest
 
-from gdal_spark.raster import enhance
+from gdal_spark.raster import enhance, shiftgrids
 from gdal_spark.sources import flatgeobuf, ogrvrt
 from gdal_spark.sources import vector_formats as VF
 
@@ -44,9 +46,14 @@ def _lut_band_tag(tmp: Path):
     enhance.parse_luts("1 -0.5:ScaleMin 255.5:ScaleMax 0 1\n")
 
 
+def _ntv2_bands(tmp: Path):
+    # a 3-band grid: the writer's records hold 4 floats per node
+    shiftgrids.ntv2_encode(np.zeros((2, 2, 3)), (0.0, 1.0, 0.0, 2.0, 0.0, -1.0))
+
+
 GUARDS = {f.__name__: f for f in (_shx_dbf_mismatch, _gpkg_blob_magic,
                                   _fgb_magic, _vrt_root, _lut_blank_line,
-                                  _lut_band_tag)}
+                                  _lut_band_tag, _ntv2_bands)}
 
 
 def raised(tmp: Path) -> list[str]:

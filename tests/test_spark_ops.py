@@ -208,6 +208,148 @@ def test_spatial_join_pair_dedup_across_cells(spark):
     assert a == b
 
 
+def _subtree(lines: list[str], i: int) -> list[str]:
+    """Plan line i and the lines of the operators under it."""
+    def depth(line):
+        return len(line) - len(line.lstrip(" :+-"))
+
+    out = [lines[i]]
+    for line in lines[i + 1:]:
+        if depth(line) <= depth(lines[i]):
+            break
+        out.append(line)
+    return out
+
+
+@pytest.mark.parametrize("predicate", ["center_within", "intersects"])
+def test_broadcast_join_build_side_is_one_local_table(spark, predicate):
+    """The broadcast path plans ONE BroadcastHashJoin whose build side is a
+    LocalTableScan (no Generate, no Scan ExistingRDD, so no broadcast job
+    and no second join to an edge table); center_within's parity sits in
+    that join's condition."""
+    imgs = datagen.with_footprint(datagen.images_df(spark, 100, with_pixels=False))
+    polys = datagen.polygons_df(spark, 8)
+    j = SJ.spatial_join(imgs, polys, res=5, predicate=predicate,
+                        broadcast_polygons=True)
+    lines = j._jdf.queryExecution().executedPlan().toString().splitlines()
+    joins = [line for line in lines if "BroadcastHashJoin" in line]
+    assert len(joins) == 1
+    (bx,) = [i for i, line in enumerate(lines) if "BroadcastExchange" in line]
+    build = _subtree(lines, bx)
+    assert "LocalTableScan" in build[-1]
+    assert not any("Generate" in line or "ExistingRDD" in line for line in build)
+    if predicate == "center_within":
+        assert "CASE WHEN" in joins[0] and "% 2) = 1)" in joins[0]
+
+
+def _tile_edges(res: int) -> tuple[np.ndarray, np.ndarray]:
+    """lon and lat of every res-`res` tile boundary."""
+    k = np.arange((1 << res) + 1)
+    lons = -180.0 + 360.0 * k / (1 << res)
+    size = M.resolution_py(res) * M.TILE_SIZE
+    lats = np.array([M.meters_to_lonlat_py(0.0, -M.ORIGIN_SHIFT + t * size)[1]
+                     for t in k])
+    return lons, lats
+
+
+def test_cover_cells_np_is_superset_of_jvm_cover(spark):
+    """The driver cover holds every cell of the JVM cover of the same
+    bbox, and at most one tile ring more, at res 0-12: random bboxes,
+    bbox edges exactly on tile edges, lon +-180, lat +-85.0511 and +-90."""
+    rng = np.random.default_rng(7)
+    rows = []
+    for res in range(13):
+        tile_deg = 360.0 / (1 << res)
+        lons, lats = _tile_edges(res)
+        for _ in range(40):
+            x0, y0 = rng.uniform(-180, 180), rng.uniform(-85, 85)
+            w, h = rng.uniform(0, 3) * tile_deg, rng.uniform(0, 3) * tile_deg / 2
+            rows.append((res, x0, y0, min(x0 + w, 180.0), min(y0 + h, 85.0)))
+        for _ in range(30):
+            a, b = rng.integers(0, len(lons), 2)
+            c, d = rng.integers(0, len(lats), 2)
+            rows.append((res, lons[min(a, b)], lats[min(c, d)],
+                         lons[min(max(a, b), min(a, b) + 2)],
+                         lats[min(max(c, d), min(c, d) + 2)]))
+        step = min(tile_deg, 1.0)
+        for x0, y0, x1, y1 in [
+            (-180.0, -10.0, -180.0 + step, -10.0 + step),
+            (180.0 - step, 10.0, 180.0, 10.0 + step),
+            (-180.0, -85.0511, 180.0, -85.0511),
+            (0.0, 85.0511, step, 85.0511),
+            (-step, 85.0511 - step, 0.0, 90.0),
+            (0.0, -90.0, step, -90.0 + step),
+            (-180.0, -90.0, 180.0, 90.0),
+        ]:
+            rows.append((res, x0, y0, x1, y1))
+    pdf = pd.DataFrame(rows, columns=["res", "x0", "y0", "x1", "y1"])
+    pdf["id"] = np.arange(len(pdf))
+    df = spark.createDataFrame(pdf)
+    jvm = df.filter(F.lit(False)).select("id", F.lit(0).cast("long").alias("cell"))
+    for res in range(13):
+        cc = C.cover_cells(F.col("x0"), F.col("y0"), F.col("x1"), F.col("y1"), res)
+        jvm = jvm.unionByName(df.filter(F.col("res") == res).select(
+            "id", F.explode(cc).alias("cell")))
+    got: dict[int, set[int]] = {}
+    for r in jvm.collect():
+        got.setdefault(r.id, set()).add(r.cell)
+    checked = 0
+    for res in range(13):
+        sub = pdf[pdf["res"] == res]
+        row, cells = C.cover_cells_np(sub["x0"], sub["y0"], sub["x1"], sub["y1"], res)
+        ids = sub["id"].to_numpy()[row]
+        for i in sub["id"]:
+            mine = cells[ids == i]
+            assert len(set(mine)) == len(mine)
+            ref = got.get(i, set())
+            box = pdf.iloc[i].tolist()
+            assert ref <= set(mine.tolist()), box
+            if ref and -90.0 < box[2] and box[4] < 90.0:
+                # the JVM's NULL past the poles aside: one tile ring more
+                for key in (lambda c: c >> C.TX_SHIFT & C.COORD_MASK,
+                            lambda c: c & C.COORD_MASK):
+                    a, b = key(mine), key(np.array(sorted(ref)))
+                    assert b.min() - 1 <= a.min() and a.max() <= b.max() + 1, box
+                checked += 1
+    assert checked > 13 * 60
+
+
+def test_center_within_on_tile_boundaries(spark):
+    """Image centres exactly on res-5 tile boundaries, polygons whose
+    bboxes (and edges) lie on them too: broadcast == shuffle ==
+    geom.points_in_wkb."""
+    res = 5
+    lons, lats = _tile_edges(res)
+    lons, lats = lons[10:20], lats[14:20]
+    px, py = (a.ravel() for a in np.meshgrid(lons, lats))
+    imgs = spark.createDataFrame(
+        pd.DataFrame({"image_id": [f"p{i}" for i in range(len(px))],
+                      "lon_min": px, "lat_min": py, "lon_max": px, "lat_max": py}))
+    polys = [
+        [np.array([[lons[1], lats[1]], [lons[4], lats[1]],
+                   [lons[4], lats[3]], [lons[1], lats[3]]])],
+        [np.array([[lons[3], lats[2]], [lons[8], lats[0]], [lons[6], lats[5]]])],
+        [np.array([[lons[0], lats[0]], [lons[9], lats[0]],
+                   [lons[9], lats[5]], [lons[0], lats[5]]]),
+         np.array([[lons[2], lats[1]], [lons[5], lats[1]],
+                   [lons[5], lats[4]], [lons[2], lats[4]]])],
+    ]
+    rows = []
+    for i, rings in enumerate(polys):
+        buf = wkb.write_polygon(rings)
+        rows.append((i, buf, *wkb.bbox(buf)))
+    pp = pd.DataFrame(rows, columns=["poly_id", "wkb", "xmin", "ymin", "xmax", "ymax"])
+    polys_df = spark.createDataFrame(
+        pp, "poly_id long, wkb binary, xmin double, ymin double, xmax double, ymax double")
+    exp = {int(r.poly_id): int(geom.points_in_wkb(px, py, r.wkb).sum())
+           for r in pp.itertuples()}
+    assert all(exp.values())
+    for broadcast in (True, False):
+        j = SJ.spatial_join(imgs, polys_df, res=res, broadcast_polygons=broadcast)
+        got = {r.poly_id: r.n_images for r in SJ.count_per_polygon(j).collect()}
+        assert got == exp, broadcast
+
+
 # ---------------------------------------------------------------- kNN
 
 

@@ -14,8 +14,9 @@ sys.path.insert(0, REPO)
 
 NOTES = {
     "cell_pip_join": (
-        "flagship: broadcast polygon dim + codegen ray-casting PIP fused "
-        "into the join condition; one scan stage, no Python boundary"
+        "flagship: one local build table (polygon x cell, bbox, edge slots) "
+        "broadcast to one hash join whose condition holds the envelope and "
+        "the codegen ray-casting parity; no Python boundary"
     ),
     "tile_assignment": "pure-Column tile math; single hash aggregate",
     "dedup_exact": (
