@@ -19,8 +19,9 @@ SF0001 = "/root/testdata/sf0.001"
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: cell-indexed point-in-polygon spatial join + per-polygon
     counts over sf0.001 (points derived from lineitem, boxes from nation),
-    exercising cover_cells explode, bbox prefilter, vectorized ray-casting
-    PIP UDF, and aggregation."""
+    exercising the driver-built (polygon, cell, edge-slot) table broadcast
+    to one hash join whose condition holds the bbox prefilter and the
+    codegen ray-casting parity, and aggregation."""
     from gdal_spark.queries.spatial_sql import cell_pip_join
 
     return cell_pip_join(spark, SF0001)

@@ -49,13 +49,20 @@ def cell_ty(cell: Column) -> Column:
     return cell.bitwiseAND(F.lit(COORD_MASK))
 
 
+def _tile(lon: Column, lat: Column, res: int) -> tuple[Column, Column]:
+    """(tx, ty) of a lon/lat point at `res`, clamped to the grid. A latitude
+    below -89 (past the Mercator limit at every res) is raised to -89
+    first: at -90 and below Spark's ln is NULL, which the clamp would turn
+    into the TOP row. NaN and NULL latitudes pass through as they are."""
+    lat = F.when(lat < F.lit(-89.0), F.lit(-89.0)).otherwise(lat)
+    n = F.lit((1 << res) - 1)
+    return tuple(F.greatest(F.lit(0), F.least(n, t))
+                 for t in M.lonlat_to_tile(lon, lat, res))
+
+
 def lonlat_cell(lon: Column, lat: Column, res: int) -> Column:
     """Cell id containing a lon/lat point at resolution `res`."""
-    tx, ty = M.lonlat_to_tile(lon, lat, res)
-    n = (1 << res) - 1
-    tx = F.greatest(F.lit(0), F.least(F.lit(n), tx))
-    ty = F.greatest(F.lit(0), F.least(F.lit(n), ty))
-    return pack_cell(res, tx, ty)
+    return pack_cell(res, *_tile(lon, lat, res))
 
 
 def parent_cell(cell: Column, levels: int = 1) -> Column:
@@ -77,13 +84,8 @@ def cover_cells(
     Mirrors GTI tile-index extent intersection
     (frmts/gti/gdaltileindexdataset.cpp) as pure Column sequences.
     """
-    n = (1 << res) - 1
-    txmin, tymin = M.lonlat_to_tile(lon_min, lat_min, res)
-    txmax, tymax = M.lonlat_to_tile(lon_max, lat_max, res)
-    txmin = F.greatest(F.lit(0), F.least(F.lit(n), txmin))
-    txmax = F.greatest(F.lit(0), F.least(F.lit(n), txmax))
-    tymin = F.greatest(F.lit(0), F.least(F.lit(n), tymin))
-    tymax = F.greatest(F.lit(0), F.least(F.lit(n), tymax))
+    txmin, tymin = _tile(lon_min, lat_min, res)
+    txmax, tymax = _tile(lon_max, lat_max, res)
     txs = F.sequence(txmin, txmax)
     tys = F.sequence(tymin, tymax)
     # cross product of tx × ty as a flat array of packed cells
@@ -167,9 +169,7 @@ def cover_cells_np(
 
     Conservative: each bbox is widened by COVER_EPS (relative, at least
     COVER_EPS degrees) and tile indices are clamped as `lonlat_cell` clamps
-    them, so the cover is a superset of the JVM cover of the same bbox. At
-    lat <= -90 and past 90 the JVM's log is NULL, which the clamp turns
-    into the top tile row; such a bbox covers up to that row here too. A
+    them, so the cover is a superset of the JVM cover of the same bbox. A
     NaN bbox covers nothing.
     """
     n = (1 << res) - 1
@@ -198,7 +198,6 @@ def cover_cells_np(
     y0, y1 = widen(np.minimum(lat0, lat1), -1), widen(np.maximum(lat0, lat1), 1)
     ok = ~(np.isnan(x0) | np.isnan(y0) | np.isnan(x1) | np.isnan(y1))
     tx0, tx1, ty0, ty1 = tile(mx(x0)), tile(mx(x1)), tile(my(y0)), tile(my(y1))
-    ty1 = np.where((y0 <= -90.0) | (y1 > 90.0), n, ty1)
     ny = ty1 - ty0 + 1
     count = np.where(ok, (tx1 - tx0 + 1) * ny, 0)
     row = np.repeat(np.arange(len(count)), count)

@@ -20,25 +20,29 @@ ogrlayer.cpp:5385) for the 100 TB regime:
   -                                     skew: hot cells salted S ways +
                                         AQE skew-join as backstop
 
+One polygon build side, whichever join runs (`_build_side`): a row per
+(polygon, covering cell) with the polygon's columns, its `cell`
+(`cells.cover_cells_np`) and, for center_within, its prepared edges in
+flat `_e{i}_{ylo,yhi,x1,y1,sl}` double slots, NULL past its last edge.
+Broadcast or shuffle only decides where that table is built:
+  - broadcast: once on the driver, from the collected polygons, into one
+    createDataFrame; the plan is one BroadcastHashJoin over a
+    LocalTableScan (no Generate, no broadcast job, no second join).
+  - shuffle: per Arrow batch in one `mapInArrow` over the polygons, after
+    one aggregate over them has sized the edge slots.
+Either way the envelope and the exact kernel are filters that Catalyst
+evaluates in the cell join's condition where it can.
+
 Predicates:
   * center_within — image footprint center inside polygon (ray casting,
-    ogrlinearring.cpp:452 semantics). The exact phase stays in the JVM:
-    each polygon's non-horizontal edges become flat `_e{i}_{ylo,yhi,x1,y1,sl}`
-    double columns and the crossing parity is one unrolled expression
-    (`parity_predicate`) that Catalyst evaluates inside a join condition.
-      - broadcast path: the driver builds the whole polygon side as ONE
-        local table, a row per (polygon, covering cell) carrying the bbox
-        and the flat edge slots (`_local_build_side`, cells from
-        `cells.cover_cells_np`). The plan has a single BroadcastHashJoin
-        over a LocalTableScan, with the envelope and the parity in its
-        condition: no Generate, no broadcast job, no second join.
-      - shuffle path: a pandas UDF prepares the edges on the polygon side
-        (O(polygons) rows); the flat columns ride the cell join and parity
-        is evaluated in the cell-join condition.
-    Polygons wider than UNROLL_MAX_EDGES fall back to `pip_udf`, an
-    Arrow-batched numpy kernel over the WKB, on both paths.
-  * intersects    — image footprint box intersects polygon exactly
-                    (box clip non-empty), Arrow-batched per distinct polygon
+    ogrlinearring.cpp:452 semantics), kept in the JVM: the crossing
+    parity over the edge slots is one unrolled expression
+    (`parity_predicate`). Polygons wider than UNROLL_MAX_EDGES get no
+    slots and fall back to `pip_udf`, an Arrow-batched numpy kernel over
+    the WKB.
+  * intersects    — image footprint box intersects polygon exactly (box
+    clip non-empty): `box_intersects_udf` over the WKB, Arrow-batched per
+    distinct polygon.
 """
 
 from __future__ import annotations
@@ -92,10 +96,10 @@ def prepared_edges(buf: bytes) -> list[list[float]]:
     return edges
 
 
-@pandas_udf(T.ArrayType(T.ArrayType(T.DoubleType())))
-def edges_array_udf(wkb_col: pd.Series) -> pd.Series:
-    """prepared_edges per polygon row (shuffle path)."""
-    return pd.Series([prepared_edges(bytes(buf)) for buf in wkb_col])
+@pandas_udf(T.LongType())
+def edge_count_udf(wkb_col: pd.Series) -> pd.Series:
+    """len(prepared_edges) per polygon row: sizes the shuffle path's slots."""
+    return wkb_col.map(lambda buf: len(prepared_edges(bytes(buf))))
 
 
 def parity_predicate(cx: str, cy: str, n_edges: int) -> Column:
@@ -115,23 +119,23 @@ def parity_predicate(cx: str, cy: str, n_edges: int) -> Column:
     return F.expr(f"({' + '.join(bits) or '0'}) % 2 = 1")
 
 
-def _per_polygon(kernel, keys: pd.Series, wkb_of, *cols: pd.Series) -> pd.Series:
+def _per_polygon(kernel, wkb_col: pd.Series, *cols: pd.Series) -> pd.Series:
     """kernel(*cols, wkb) once per distinct polygon in the Arrow batch, so
     each polygon is parsed/prepared once and probed with numpy arrays
-    (prepared-geometry pattern). `wkb_of` maps a batch key to its WKB."""
+    (prepared-geometry pattern)."""
     arrs = [c.to_numpy(dtype=np.float64) for c in cols]
-    out = np.zeros(len(keys), dtype=bool)
-    codes, uniques = pd.factorize(keys)
-    for u, key in enumerate(uniques):
+    out = np.zeros(len(wkb_col), dtype=bool)
+    codes, uniques = pd.factorize(wkb_col)
+    for u, buf in enumerate(uniques):
         m = codes == u
-        out[m] = kernel(*(a[m] for a in arrs), wkb_of(key))
+        out[m] = kernel(*(a[m] for a in arrs), bytes(buf))
     return pd.Series(out)
 
 
 @pandas_udf(T.BooleanType())
 def pip_udf(px: pd.Series, py: pd.Series, wkb_col: pd.Series) -> pd.Series:
     """Vectorized point-in-polygon over a WKB column."""
-    return _per_polygon(geom.points_in_wkb, wkb_col, bytes, px, py)
+    return _per_polygon(geom.points_in_wkb, wkb_col, px, py)
 
 
 @pandas_udf(T.BooleanType())
@@ -141,76 +145,39 @@ def box_intersects_udf(
     """Exact box-polygon intersection over a WKB column
     (geom.boxes_intersect_wkb decision ladder; the per-row clip runs only
     for edge-crossing-without-containment leftovers)."""
-    return _per_polygon(geom.boxes_intersect_wkb, wkb_col, bytes, xmin, ymin, xmax, ymax)
+    return _per_polygon(geom.boxes_intersect_wkb, wkb_col, xmin, ymin, xmax, ymax)
 
 
-def box_intersects_by_id_udf(poly_map: dict):
-    """Exact box-polygon intersection keyed by polygon id — polygons ship
-    ONCE per worker in the UDF closure (the dimension is already
-    driver-collected for the broadcast join)."""
-
-    @pandas_udf(T.BooleanType())
-    def fn(
-        xmin: pd.Series, ymin: pd.Series, xmax: pd.Series, ymax: pd.Series,
-        pid: pd.Series,
-    ) -> pd.Series:
-        return _per_polygon(
-            geom.boxes_intersect_wkb, pid, lambda k: poly_map[int(k)],
-            xmin, ymin, xmax, ymax,
-        )
-
-    return fn
-
-
-def _local_build_side(
-    polygons: DataFrame,
+def _build_side(
+    polys: pa.Table,
     res: int,
-    predicate: str,
-    poly_key: str,
     poly_bbox: tuple[str, str, str, str],
-    keep_wkb: bool,
-) -> tuple[DataFrame, int, dict]:
-    """The broadcast path's polygon side, made on the driver as ONE local
-    table: a row per (polygon, covering cell) with the polygon's columns,
-    its `cell` (C.cover_cells_np) and, for center_within, its prepared
-    edges in the flat `_e{i}_*` slots, NULL past its last edge. One
-    createDataFrame call; Spark broadcasts it from a LocalTableScan, with
-    no job. `wkb` rides only for the pip_udf fallback or keep_wkb.
-
-    Returns the table, the unrolled edge count and {poly key: wkb}."""
-    # collect(), not toArrow(): a local polygon relation collects with no job
-    rows = polygons.collect()
-
-    def col(name):
-        return [r[name] for r in rows]
-
-    wkbs = [bytes(b) for b in col("wkb")]
-    poly_map = dict(zip(col(poly_key), wkbs))
-    row, cells = C.cover_cells_np(
-        *(np.array(col(c), dtype=np.float64) for c in poly_bbox), res)
-
-    n_edges, edges = 0, []
-    if predicate == "center_within":
-        edges = [prepared_edges(buf) for buf in wkbs]
-        n_edges = max(map(len, edges), default=0)
-    fields = [f for f in polygons.schema.fields
-              if f.name != "wkb" or keep_wkb or n_edges > UNROLL_MAX_EDGES]
-    cols = {f.name: pa.array(col(f.name), to_arrow_type(f.dataType)).take(row)
-            for f in fields}
-    fields.append(T.StructField("cell", T.LongType(), False))
+    keep: list[str],
+    n_slots: int,
+    edges: list[list[list[float]]] | None = None,
+) -> pa.Table:
+    """The polygon side of the cell join, on both paths: a row per
+    (polygon, covering cell) with the `keep` columns of `polys`, its
+    `cell` (C.cover_cells_np) and, when n_slots > 0, its prepared edges in
+    the flat `_e{i}_*` slots 0..n_slots-1, NULL past its last edge.
+    `edges` are the polygons' prepared_edges if the caller has them;
+    otherwise they are prepared from `polys["wkb"]`."""
+    row, cells = C.cover_cells_np(*(polys[c].to_numpy() for c in poly_bbox), res)
+    cols = {c: polys[c].take(row) for c in keep}
     cols["cell"] = cells
-    if 0 < n_edges <= UNROLL_MAX_EDGES:
-        slots = np.zeros((len(edges), n_edges, len(_EDGE_FIELDS)))
+    if n_slots:
+        if edges is None:
+            edges = [prepared_edges(buf) for buf in polys["wkb"].to_pylist()]
+        slots = np.zeros((len(edges), n_slots, len(_EDGE_FIELDS)))
         for p, es in enumerate(edges):
             if es:
                 slots[p, : len(es)] = es
-        slots, live = slots[row], np.array([len(es) for es in edges])[row]
-        for i in range(n_edges):
+        live = np.array([len(es) for es in edges], dtype=np.int64)[row]
+        slots = slots[row]
+        for i in range(n_slots):
             for j, f in enumerate(_EDGE_FIELDS):
                 cols[f"_e{i}_{f}"] = pa.array(slots[:, i, j], mask=live <= i)
-                fields.append(T.StructField(f"_e{i}_{f}", T.DoubleType()))
-    spark = polygons.sparkSession
-    return spark.createDataFrame(pa.table(cols), T.StructType(fields)), n_edges, poly_map
+    return pa.table(cols)
 
 
 def spatial_join(
@@ -262,47 +229,50 @@ def spatial_join(
     cx_sql, cy_sql = (f"((`{a}` + `{b}`) / 2.0D)"
                       for a, b in (left_bbox[0::2], left_bbox[1::2]))
     cx, cy = F.expr(cx_sql), F.expr(cy_sql)
-    if predicate == "center_within":
+    center = predicate == "center_within"
+    if center:
         lc = left.withColumn("cell", C.lonlat_cell(cx, cy, res))
     else:
         lc = C.with_footprint_cells(left, res, *left_bbox)
 
-    salted = salt > 1 and not broadcast_polygons
-    poly_map: dict | None = None
+    # edges are prepared once per polygon; their widest count sizes the slots
+    edges = None
     if broadcast_polygons:
-        # the polygon dim is driver-sized anyway: cells, edges and the
-        # exact-kernel closure are prepared once on the driver
-        pc, n_edges, poly_map = _local_build_side(
-            polygons, res, predicate, poly_key, poly_bbox, keep_wkb)
-        cand = lc.join(F.broadcast(pc), on="cell")
-        fallback = n_edges > UNROLL_MAX_EDGES
+        # collect(), not toArrow(): a local polygon relation collects with no job
+        rows = polygons.collect()
+        edges = [prepared_edges(bytes(r["wkb"])) for r in rows] if center else []
+        n_edges = max(map(len, edges), default=0)
+    elif center:
+        n_edges = int(polygons.select(F.max(edge_count_udf("wkb"))).first()[0] or 0)
     else:
         n_edges = 0
-        if predicate == "center_within":
-            # edges prepared once per polygon row; one cheap agg over the
-            # polygon side sizes the unrolled expression
-            polygons = polygons.withColumn("edges", edges_array_udf(F.col("wkb")))
-            n_edges = int(polygons.select(F.max(F.size("edges"))).first()[0] or 0)
-        fallback = n_edges > UNROLL_MAX_EDGES
-        if fallback:
-            # pip_udf reads the WKB
-            polygons = polygons.drop("edges")
-        elif predicate == "center_within":
-            # Flatten the prepared edges to SCALAR double columns on the
-            # polygon side BEFORE the pair explosion. A condition over
-            # array<array<double>> re-extracts ~5*n_edges nested elements
-            # per CANDIDATE PAIR, measured 4x slower end-to-end
-            # (BENCH/SKEW.md fixture). F.get past the array end is NULL: a
-            # NULL slot.
-            flat = [
-                F.get(F.col("edges"), i).getItem(j).alias(f"_e{i}_{f}")
-                for i in range(n_edges)
-                for j, f in enumerate(_EDGE_FIELDS)
-            ]
-            keep = [c for c in polygons.columns
-                    if c != "edges" and (keep_wkb or c != "wkb")]
-            polygons = polygons.select(*keep, *flat)
-        pc = C.with_footprint_cells(polygons, res, *poly_bbox)
+    fallback = n_edges > UNROLL_MAX_EDGES
+    n_slots = 0 if fallback else n_edges
+    # wkb rides the join only for a kernel that reads it, or on request
+    wkb_rides = not center or fallback or keep_wkb
+    fields = [f for f in polygons.schema.fields if f.name != "wkb" or wkb_rides]
+    keep = [f.name for f in fields]
+    schema = T.StructType([
+        *fields, T.StructField("cell", T.LongType(), False),
+        *(T.StructField(f"_e{i}_{f}", T.DoubleType())
+          for i in range(n_slots) for f in _EDGE_FIELDS),
+    ])
+
+    salted = salt > 1 and not broadcast_polygons
+    if broadcast_polygons:
+        polys = pa.table({f.name: pa.array([r[f.name] for r in rows],
+                                           to_arrow_type(f.dataType))
+                          for f in fields})
+        pc = polygons.sparkSession.createDataFrame(
+            _build_side(polys, res, poly_bbox, keep, n_slots, edges), schema)
+        cand = lc.join(F.broadcast(pc), on="cell")
+    else:
+        def build(batches):
+            for b in batches:
+                yield from _build_side(pa.Table.from_batches([b]), res, poly_bbox,
+                                       keep, n_slots).to_batches()
+
+        pc = polygons.mapInArrow(build, schema)
         join_keys = ["cell"]
         if salted:
             # replicate each polygon-cell row `salt` ways; probes pick one slot
@@ -317,27 +287,20 @@ def spatial_join(
 
     # phase 2: exact kernel; Catalyst moves a codegen'd filter into the
     # cell join's condition
-    if predicate == "center_within":
-        if fallback:
-            # polygons too wide to unroll: Arrow-batched numpy kernel
-            cand = cand.filter(pip_udf(cx, cy, F.col("wkb")))
-            if not keep_wkb:
-                cand = cand.drop("wkb")
-        else:
-            names = [f"_e{i}_{f}" for i in range(n_edges) for f in _EDGE_FIELDS]
-            cand = cand.filter(parity_predicate(cx_sql, cy_sql, n_edges)).drop(*names)
-    else:
+    if not center:
         # reference-point dedup BEFORE the exact kernel: evaluate the UDF
         # once per pair, not once per shared cell
         ref_cell = C.lonlat_cell(F.greatest(lx0, px0), F.greatest(ly0, py0), res)
         cand = cand.filter(F.col("cell") == ref_cell)
-        if poly_map is not None:
-            exact = box_intersects_by_id_udf(poly_map)(lx0, ly0, lx1, ly1, F.col(poly_key))
-        else:
-            exact = box_intersects_udf(lx0, ly0, lx1, ly1, F.col("wkb"))
-        cand = cand.filter(exact)
+        cand = cand.filter(box_intersects_udf(lx0, ly0, lx1, ly1, F.col("wkb")))
+    elif fallback:
+        # polygons too wide to unroll: Arrow-batched numpy kernel
+        cand = cand.filter(pip_udf(cx, cy, F.col("wkb")))
+    else:
+        cand = cand.filter(parity_predicate(cx_sql, cy_sql, n_slots))
 
-    return cand.drop("cell", *(["_salt"] if salted else []))
+    hidden = schema.names[len(keep):] + (["_salt"] if salted else [])
+    return cand.drop(*hidden, *([] if keep_wkb or not wkb_rides else ["wkb"]))
 
 
 def count_per_polygon(joined: DataFrame, poly_key: str = "poly_id") -> DataFrame:

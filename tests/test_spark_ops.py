@@ -175,10 +175,16 @@ def test_spatial_join_center_within(spark, polyset, broadcast, salt):
     assert got == exp
 
 
-def test_spatial_join_intersects(spark):
+@pytest.mark.parametrize("keep_wkb", [False, True])
+@pytest.mark.parametrize("broadcast,salt", _PIP_PATHS)
+def test_spatial_join_intersects(spark, broadcast, salt, keep_wkb):
+    """Exact intersects counts on every path; the polygon `wkb` is in the
+    output iff keep_wkb, whichever path ran."""
     imgs = datagen.with_footprint(datagen.images_df(spark, 200, with_pixels=False))
     polys = datagen.polygons_df(spark, 12)
-    j = SJ.spatial_join(imgs, polys, res=5, predicate="intersects", broadcast_polygons=True)
+    j = SJ.spatial_join(imgs, polys, res=5, predicate="intersects",
+                        broadcast_polygons=broadcast, salt=salt, keep_wkb=keep_wkb)
+    assert ("wkb" in j.columns) == keep_wkb
     got = {r.poly_id: r.n_images for r in SJ.count_per_polygon(j).collect()}
 
     fp = datagen.footprint_np(np.arange(200))
@@ -242,6 +248,30 @@ def test_broadcast_join_build_side_is_one_local_table(spark, predicate):
         assert "CASE WHEN" in joins[0] and "% 2) = 1)" in joins[0]
 
 
+def test_shuffle_join_build_side_is_one_map_in_arrow(spark):
+    """The shuffle path builds the polygon side with the broadcast path's
+    builder: under its exchange sits ONE MapInArrow (no Generate explode,
+    no ArrowEvalPython edge UDF), and center_within's parity sits in the
+    sort-merge join's condition."""
+    imgs = datagen.with_footprint(datagen.images_df(spark, 100, with_pixels=False))
+    polys = datagen.polygons_df(spark, 8)
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        j = SJ.spatial_join(imgs, polys, res=5, broadcast_polygons=False)
+        lines = j._jdf.queryExecution().executedPlan().toString().splitlines()
+    finally:
+        spark.conf.set(key, old)
+    (join,) = [line for line in lines if "SortMergeJoin" in line]
+    assert "CASE WHEN" in join and "% 2) = 1)" in join
+    sides = [_subtree(lines, i) for i, line in enumerate(lines)
+             if "Exchange hashpartitioning(cell" in line]
+    (build,) = [s for s in sides if any("MapInArrow" in line for line in s)]
+    assert sum("MapInArrow" in line for line in build) == 1
+    assert not any("Generate" in line or "ArrowEvalPython" in line for line in build)
+
+
 def _tile_edges(res: int) -> tuple[np.ndarray, np.ndarray]:
     """lon and lat of every res-`res` tile boundary."""
     k = np.arange((1 << res) + 1)
@@ -279,7 +309,8 @@ def test_cover_cells_np_is_superset_of_jvm_cover(spark):
             (0.0, 85.0511, step, 85.0511),
             (-step, 85.0511 - step, 0.0, 90.0),
             (0.0, -90.0, step, -90.0 + step),
-            (-180.0, -90.0, 180.0, 90.0),
+            # the whole world covers all 4**res cells: coarse res only
+            *([(-180.0, -90.0, 180.0, 90.0)] if res <= 6 else []),
         ]:
             rows.append((res, x0, y0, x1, y1))
     pdf = pd.DataFrame(rows, columns=["res", "x0", "y0", "x1", "y1"])
@@ -304,14 +335,28 @@ def test_cover_cells_np_is_superset_of_jvm_cover(spark):
             ref = got.get(i, set())
             box = pdf.iloc[i].tolist()
             assert ref <= set(mine.tolist()), box
-            if ref and -90.0 < box[2] and box[4] < 90.0:
-                # the JVM's NULL past the poles aside: one tile ring more
+            if ref:
+                # one tile ring more at most
                 for key in (lambda c: c >> C.TX_SHIFT & C.COORD_MASK,
                             lambda c: c & C.COORD_MASK):
                     a, b = key(mine), key(np.array(sorted(ref)))
                     assert b.min() - 1 <= a.min() and a.max() <= b.max() + 1, box
                 checked += 1
     assert checked > 13 * 60
+
+
+def test_polar_latitudes_key_the_bottom_row(spark):
+    """At lat <= -90 Spark's ln is NULL; the cell of such a point is still
+    the bottom tile row (ty 0), like lat -89.5, and a NaN latitude keeps
+    its cell. A bbox from lat -90 covers only the rows it reaches."""
+    df = spark.createDataFrame(
+        [(-90.0,), (-91.0,), (-89.5,), (float("nan"),)], "lat double")
+    cells = [r.c for r in df.select(
+        C.lonlat_cell(F.lit(10.0), F.col("lat"), 3).alias("c")).collect()]
+    assert [c & C.COORD_MASK for c in cells] == [0, 0, 0, 0]
+    (box,) = spark.range(1).select(C.cover_cells(
+        F.lit(0.0), F.lit(-90.0), F.lit(1.0), F.lit(-89.0), 1).alias("c")).collect()
+    assert {c & C.COORD_MASK for c in box.c} == {0}
 
 
 def test_center_within_on_tile_boundaries(spark):
