@@ -51,10 +51,17 @@ def cell_ty(cell: Column) -> Column:
 
 def _tile(lon: Column, lat: Column, res: int) -> tuple[Column, Column]:
     """(tx, ty) of a lon/lat point at `res`, clamped to the grid. A latitude
-    below -89 (past the Mercator limit at every res) is raised to -89
-    first: at -90 and below Spark's ln is NULL, which the clamp would turn
-    into the TOP row. NaN and NULL latitudes pass through as they are."""
-    lat = F.when(lat < F.lit(-89.0), F.lit(-89.0)).otherwise(lat)
+    past +-89 (the Mercator limit at every res) is brought to +-89 first,
+    as cover_cells_np does: at -90 and below Spark's ln is NULL, which the
+    clamp would turn into the TOP row, and past +90 tan's 360-degree
+    period lands it on an ordinary row again. NaN and NULL latitudes pass
+    through as they are (Spark orders NaN above 89). A longitude below
+    -180 is raised to -180: far enough below it (-inf, say) the tile's
+    ceil saturates at Long.MinValue and its `- 1` overflows under ANSI."""
+    lat = (F.when(lat < F.lit(-89.0), F.lit(-89.0))
+           .when((lat > F.lit(89.0)) & ~F.isnan(lat), F.lit(89.0))
+           .otherwise(lat))
+    lon = F.when(lon < F.lit(-180.0), F.lit(-180.0)).otherwise(lon)
     n = F.lit((1 << res) - 1)
     return tuple(F.greatest(F.lit(0), F.least(n, t))
                  for t in M.lonlat_to_tile(lon, lat, res))

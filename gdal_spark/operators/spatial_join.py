@@ -23,7 +23,9 @@ ogrlayer.cpp:5385) for the 100 TB regime:
 One polygon build side, whichever join runs (`_build_side`): a row per
 (polygon, covering cell) with the polygon's columns, its `cell`
 (`cells.cover_cells_np`) and, for center_within, its prepared edges in
-flat `_e{i}_{ylo,yhi,x1,y1,sl}` double slots, NULL past its last edge.
+flat `_e{i}_{ylo,yhi,x1,y1,sl}` double slots. Past its last edge every
+slot holds SENTINEL_EDGE, which no probe crosses, so the slots are
+non-nullable and the join condition reads them with no null checks.
 Broadcast or shuffle only decides where that table is built:
   - broadcast: once on the driver, from the collected polygons, into one
     createDataFrame; the plan is one BroadcastHashJoin over a
@@ -61,18 +63,25 @@ from gdal_spark.functions import geom
 from gdal_spark.functions import wkb as W
 
 # Widest polygon, in non-horizontal edges, whose parity is unrolled into
-# codegen; wider polygons take pip_udf. Process-tree CPU seconds per pass,
-# unrolled vs pip_udf (local[4] on a 4-vCPU host, 100k datagen images,
-# 300 star polygons of K edges, passes 2-3 of two runs, results equal to
-# the geom.points_in_wkb oracle):
-#   K=32: broadcast  9.2-12.6 vs 7.9-8.9;  shuffle 12.0-15.4 vs  8.1-11.6
-#   K=48: broadcast 10.6-16.0 vs 7.9-11.4; shuffle 16.6-19.3 vs 10.4-13.4
-# pip_udf wins at both, so the cap sits at the bottom of the 32-64 range.
-# Below 32 the unrolled cost is set by HotSpot's 8000-byte huge-method
-# limit (a cliff at 12 edges), which this cap does not try to tune.
+# codegen; wider polygons take pip_udf. Process-tree CPU seconds per warm
+# pass on the broadcast path, unrolled vs pip_udf (local[4] on a 4-vCPU
+# host, 100k datagen images, 300 star polygons of K edges at res 6,
+# passes 3-5 of two runs, results equal to the geom.points_in_wkb oracle):
+#   K=11: 3.4-5.0;   K=12: 3.4-5.0 vs 5.8-6.9
+#   K=13-16: 16.6-21.4 (one run each);   K=20-24: 5.8-6.9 (one run each)
+#   K=32: 6.8-7.4 vs 7.0-8.2;   K=48 (one run): 8.5-10.1 vs 8.0-9.5
+# The two are level at 32 and pip_udf leads at 48, so the cap stays at 32.
+# Below it, unrolled costs 4-5x as much at 13-16 edges as at 12 or 20-24
+# (the window of HotSpot's 8000-byte huge-method limit), which this cap
+# does not try to tune.
 UNROLL_MAX_EDGES = 32
 
 _EDGE_FIELDS = ("ylo", "yhi", "x1", "y1", "sl")
+# (ylo, yhi, x1, y1, sl) of every slot past a polygon's last edge. Spark
+# orders -inf below every double and NaN above every double, so the hit's
+# `cy < -inf` is false for finite, +-inf and NaN cy alike, and a NULL cy
+# makes the CASE yield 0: the sentinel never counts, for any probe.
+SENTINEL_EDGE = (np.inf, -np.inf, 0.0, 0.0, 0.0)
 
 
 def prepared_edges(buf: bytes) -> list[list[float]]:
@@ -109,8 +118,8 @@ def parity_predicate(cx: str, cy: str, n_edges: int) -> Column:
     point. Half-open crossing rule of OGRLinearRing::isPointInRing
     (ogr/ogrlinearring.cpp:452-521): for a non-horizontal edge,
     (y1<=y<y2 or y2<=y<y1) == (ylo<=y<yhi), and x < x-intersection. A
-    polygon with fewer edges leaves its last slots NULL: the hit is then
-    NULL and the CASE yields 0."""
+    polygon with fewer edges has SENTINEL_EDGE in its last slots: `cy <
+    -inf` is false for every cy, so the CASE yields 0."""
     bits = [
         f"CASE WHEN _e{i}_ylo <= {cy} AND {cy} < _e{i}_yhi"
         f" AND {cx} < _e{i}_x1 + ({cy} - _e{i}_y1) * _e{i}_sl THEN 1 ELSE 0 END"
@@ -159,8 +168,8 @@ def _build_side(
     """The polygon side of the cell join, on both paths: a row per
     (polygon, covering cell) with the `keep` columns of `polys`, its
     `cell` (C.cover_cells_np) and, when n_slots > 0, its prepared edges in
-    the flat `_e{i}_*` slots 0..n_slots-1, NULL past its last edge.
-    `edges` are the polygons' prepared_edges if the caller has them;
+    the flat `_e{i}_*` slots 0..n_slots-1, SENTINEL_EDGE past its last
+    edge. `edges` are the polygons' prepared_edges if the caller has them;
     otherwise they are prepared from `polys["wkb"]`."""
     row, cells = C.cover_cells_np(*(polys[c].to_numpy() for c in poly_bbox), res)
     cols = {c: polys[c].take(row) for c in keep}
@@ -168,15 +177,14 @@ def _build_side(
     if n_slots:
         if edges is None:
             edges = [prepared_edges(buf) for buf in polys["wkb"].to_pylist()]
-        slots = np.zeros((len(edges), n_slots, len(_EDGE_FIELDS)))
+        slots = np.tile(SENTINEL_EDGE, (len(edges), n_slots, 1))
         for p, es in enumerate(edges):
             if es:
                 slots[p, : len(es)] = es
-        live = np.array([len(es) for es in edges], dtype=np.int64)[row]
         slots = slots[row]
         for i in range(n_slots):
             for j, f in enumerate(_EDGE_FIELDS):
-                cols[f"_e{i}_{f}"] = pa.array(slots[:, i, j], mask=live <= i)
+                cols[f"_e{i}_{f}"] = pa.array(slots[:, i, j])
     return pa.table(cols)
 
 
@@ -254,7 +262,7 @@ def spatial_join(
     keep = [f.name for f in fields]
     schema = T.StructType([
         *fields, T.StructField("cell", T.LongType(), False),
-        *(T.StructField(f"_e{i}_{f}", T.DoubleType())
+        *(T.StructField(f"_e{i}_{f}", T.DoubleType(), False)
           for i in range(n_slots) for f in _EDGE_FIELDS),
     ])
 

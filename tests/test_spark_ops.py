@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
@@ -115,10 +116,22 @@ def _star(cx, cy, n, r_out, r_in):
     return np.c_[cx + r * np.cos(ang), cy + r * np.sin(ang)]
 
 
+def _polys_pdf(polys):
+    """poly_id, wkb and bbox columns of a list of ring lists."""
+    rows = []
+    for i, rings in enumerate(polys):
+        buf = wkb.write_polygon(rings)
+        rows.append((i, buf, *wkb.bbox(buf)))
+    return pd.DataFrame(rows, columns=["poly_id", "wkb", "xmin", "ymin", "xmax", "ymax"])
+
+
+_POLY_DDL = "poly_id long, wkb binary, xmin double, ymin double, xmax double, ymax double"
+
+
 def _pip_polygons(polyset):
     """Polygon sets around the unroll cap: `over_cap`'s widest polygon
     exceeds it (the pip_udf fallback); `at_cap`'s widest has exactly the
-    cap, so the shorter ones leave NULL edge slots."""
+    cap, so the shorter ones are padded with the sentinel edge."""
     if polyset == "datagen":
         return datagen.polygons_pdf(16)
     cap = SJ.UNROLL_MAX_EDGES
@@ -136,11 +149,7 @@ def _pip_polygons(polyset):
             [_star(40, 30, 9, 35, 20), _star(40, 30, 5, 12, 6)],  # holed
             [np.array([[75.0, -55], [125, -55], [125, -5], [75, -5]])],
         ]
-    rows = []
-    for i, rings in enumerate(polys):
-        buf = wkb.write_polygon(rings)
-        rows.append((i, buf, *wkb.bbox(buf)))
-    pp = pd.DataFrame(rows, columns=["poly_id", "wkb", "xmin", "ymin", "xmax", "ymax"])
+    pp = _polys_pdf(polys)
     widest = max(len(SJ.prepared_edges(b)) for b in pp["wkb"])
     assert (widest > cap) if polyset == "over_cap" else (widest == cap)
     return pp
@@ -162,9 +171,7 @@ def test_spatial_join_center_within(spark, polyset, broadcast, salt):
     imgs = datagen.with_footprint(datagen.images_df(spark, 300, with_pixels=False))
     pp = _pip_polygons(polyset)
     polys = spark.createDataFrame(
-        pp[["poly_id", "wkb", "xmin", "ymin", "xmax", "ymax"]],
-        "poly_id long, wkb binary, xmin double, ymin double, xmax double, ymax double",
-    )
+        pp[["poly_id", "wkb", "xmin", "ymin", "xmax", "ymax"]], _POLY_DDL)
     j = SJ.spatial_join(
         imgs, polys, res=5, predicate="center_within",
         broadcast_polygons=broadcast, salt=salt,
@@ -272,6 +279,76 @@ def test_shuffle_join_build_side_is_one_map_in_arrow(spark):
     assert not any("Generate" in line or "ArrowEvalPython" in line for line in build)
 
 
+def test_build_side_pads_edge_slots_with_the_sentinel(spark):
+    """Slots past a polygon's last edge hold the sentinel edge (ylo +inf,
+    yhi -inf), never NULL, and the broadcast plan's LocalRelation marks
+    every edge slot non-nullable."""
+    pp = _polys_pdf([[np.array([[0.0, 0], [10, 0], [10, 10], [0, 10]])],
+                     [_star(20, 20, 9, 5, 2.5)]])
+    n_box, n_star = (len(SJ.prepared_edges(b)) for b in pp["wkb"])
+    assert (n_box, n_star) == (2, 9)
+    out = SJ._build_side(pa.Table.from_pandas(pp), 3, ("xmin", "ymin", "xmax", "ymax"),
+                         ["poly_id"], n_star)
+    slots = [c for c in out.column_names if c.startswith("_e")]
+    assert len(slots) == n_star * len(SJ._EDGE_FIELDS)
+    assert [out[c].null_count for c in slots] == [0] * len(slots)
+    box = out["poly_id"].to_numpy() == 0
+    assert box.any() and not box.all()
+    for i in range(n_star):
+        ylo, yhi = (out[f"_e{i}_{f}"].to_numpy() for f in ("ylo", "yhi"))
+        padded = (ylo[box] == np.inf) & (yhi[box] == -np.inf)
+        assert padded.all() if i >= n_box else not padded.any()
+        assert np.isfinite(ylo[~box]).all() and np.isfinite(yhi[~box]).all()
+
+    imgs = datagen.with_footprint(datagen.images_df(spark, 50, with_pixels=False))
+    j = SJ.spatial_join(imgs, spark.createDataFrame(pp, _POLY_DDL), res=3,
+                        broadcast_polygons=True)
+    leaves = j._jdf.queryExecution().optimizedPlan().collectLeaves()
+    (local,) = [leaves.apply(i) for i in range(leaves.size())
+                if leaves.apply(i).nodeName() == "LocalRelation"]
+    attrs = [local.output().apply(k) for k in range(local.output().size())]
+    edge = {a.name(): a.nullable() for a in attrs if a.name().startswith("_e")}
+    assert sorted(edge) == sorted(slots)
+    assert not any(edge.values())
+
+
+@pytest.mark.parametrize("broadcast,salt", _PIP_PATHS)
+def test_non_finite_probes_never_cross_the_sentinel(spark, broadcast, salt):
+    """Probes whose centre is NaN, +-inf or NULL, in cells where polygons
+    shorter than the widest one are probed through their padded slots,
+    give no pair on any path; finite probes still match
+    geom.points_in_wkb."""
+    inf, nan = float("inf"), float("nan")
+    pp = _polys_pdf([
+        [np.array([[-179.0, -80], [179, -80], [179, 80], [-179, 80]])],  # 2 edges
+        [np.array([[-40.0, -30], [40, -20], [0, 50]])],  # 3 edges
+        [_star(12, 44, 9, 20, 10)],  # 9 edges: 9 slots
+    ])
+    assert [len(SJ.prepared_edges(b)) for b in pp["wkb"]] == [2, 3, 9]
+    odd = [  # (lon_min, lat_min, lon_max, lat_max) whose centre is not finite
+        (-inf, 10.0, inf, 10.0), (10.0, -inf, 10.0, inf), (-inf, -inf, inf, inf),
+        (0.0, 10.0, inf, 10.0), (-inf, 10.0, 0.0, 10.0),
+        (10.0, 0.0, 10.0, inf), (10.0, -inf, 10.0, 0.0),
+        (nan, 10.0, nan, 10.0), (10.0, nan, 10.0, nan),
+        (None, 10.0, None, 10.0), (10.0, None, 10.0, None), (None, None, None, None),
+    ]
+    gx, gy = (a.ravel() for a in np.meshgrid(np.linspace(-170, 170, 18),
+                                             np.linspace(-75, 75, 11)))
+    rows = [(f"odd{i}", *b) for i, b in enumerate(odd)]
+    rows += [(f"pt{i}", x, y, x, y)
+             for i, (x, y) in enumerate(zip(gx.tolist(), gy.tolist()))]
+    imgs = spark.createDataFrame(
+        rows, "image_id string, lon_min double, lat_min double, lon_max double, lat_max double")
+    j = SJ.spatial_join(imgs, spark.createDataFrame(pp, _POLY_DDL), res=3,
+                        broadcast_polygons=broadcast, salt=salt)
+    got = {(r.image_id, r.poly_id) for r in j.select("image_id", "poly_id").collect()}
+    exp = {(f"pt{i}", int(r.poly_id))
+           for r in pp.itertuples()
+           for i in np.flatnonzero(geom.points_in_wkb(gx, gy, r.wkb))}
+    assert {p for _, p in exp} == {0, 1, 2}
+    assert got == exp
+
+
 def _tile_edges(res: int) -> tuple[np.ndarray, np.ndarray]:
     """lon and lat of every res-`res` tile boundary."""
     k = np.arange((1 << res) + 1)
@@ -285,7 +362,8 @@ def _tile_edges(res: int) -> tuple[np.ndarray, np.ndarray]:
 def test_cover_cells_np_is_superset_of_jvm_cover(spark):
     """The driver cover holds every cell of the JVM cover of the same
     bbox, and at most one tile ring more, at res 0-12: random bboxes,
-    bbox edges exactly on tile edges, lon +-180, lat +-85.0511 and +-90."""
+    bbox edges exactly on tile edges, lon +-180, lat +-85.0511, +-90 and
+    past +-90."""
     rng = np.random.default_rng(7)
     rows = []
     for res in range(13):
@@ -309,6 +387,12 @@ def test_cover_cells_np_is_superset_of_jvm_cover(spark):
             (0.0, 85.0511, step, 85.0511),
             (-step, 85.0511 - step, 0.0, 90.0),
             (0.0, -90.0, step, -90.0 + step),
+            # latitudes past +-90 clamp to the polar rows, as in cover_cells_np
+            (0.0, 85.0, step, 91.0),
+            (0.0, 91.0, step, 180.0),
+            (-step, 269.0, 0.0, 300.0),
+            (0.0, 300.0, step, 400.0),
+            (0.0, -400.0, step, -91.0),
             # the whole world covers all 4**res cells: coarse res only
             *([(-180.0, -90.0, 180.0, 90.0)] if res <= 6 else []),
         ]:
@@ -359,6 +443,21 @@ def test_polar_latitudes_key_the_bottom_row(spark):
     assert {c & C.COORD_MASK for c in box.c} == {0}
 
 
+def test_out_of_range_coordinates_key_the_edge_tiles(spark):
+    """A latitude past +90 keys the top tile row (ty 7 at res 3) whatever
+    tan's 360-degree period would give, and a longitude past +-180, however
+    far (-inf, whose tile would overflow a long, included), keys the edge
+    column, as cover_cells_np clips them; a NaN latitude still keys ty 0."""
+    inf, nan = float("inf"), float("nan")
+    pts = [(10.0, v) for v in (89.0, 90.0, 91.0, 180.0, 269.0, 300.0, 400.0, nan)]
+    pts += [(v, 10.0) for v in (-inf, -1e300, -540.0, -180.0, 180.0, 540.0, 1e300, inf)]
+    df = spark.createDataFrame(pts, "lon double, lat double")
+    cells = [r.c for r in df.select(
+        C.lonlat_cell(F.col("lon"), F.col("lat"), 3).alias("c")).collect()]
+    assert [c & C.COORD_MASK for c in cells[:8]] == [7] * 7 + [0]
+    assert [c >> C.TX_SHIFT & C.COORD_MASK for c in cells[8:]] == [0] * 4 + [7] * 4
+
+
 def test_center_within_on_tile_boundaries(spark):
     """Image centres exactly on res-5 tile boundaries, polygons whose
     bboxes (and edges) lie on them too: broadcast == shuffle ==
@@ -379,13 +478,8 @@ def test_center_within_on_tile_boundaries(spark):
          np.array([[lons[2], lats[1]], [lons[5], lats[1]],
                    [lons[5], lats[4]], [lons[2], lats[4]]])],
     ]
-    rows = []
-    for i, rings in enumerate(polys):
-        buf = wkb.write_polygon(rings)
-        rows.append((i, buf, *wkb.bbox(buf)))
-    pp = pd.DataFrame(rows, columns=["poly_id", "wkb", "xmin", "ymin", "xmax", "ymax"])
-    polys_df = spark.createDataFrame(
-        pp, "poly_id long, wkb binary, xmin double, ymin double, xmax double, ymax double")
+    pp = _polys_pdf(polys)
+    polys_df = spark.createDataFrame(pp, _POLY_DDL)
     exp = {int(r.poly_id): int(geom.points_in_wkb(px, py, r.wkb).sum())
            for r in pp.itertuples()}
     assert all(exp.values())
