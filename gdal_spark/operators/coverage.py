@@ -268,7 +268,10 @@ def overlap_pairs(df: DataFrame, cell: float) -> DataFrame:
     pairs sharing a cell are deduped by the reference-cell rule, no
     dropDuplicates shuffle); the exact area uses the slab-sweep
     inclusion-exclusion kernel, immune to shared-edge degeneracies.
-    `cell` should be on the order of a typical polygon diameter."""
+    `cell` should be on the order of a typical polygon diameter. The grid
+    is planar, not spatial_join's: coverage coordinates may be in any CRS,
+    and the Web-Mercator cell key clamps at +-180/+-89 degrees, so
+    projected coordinates would all fall into one cell."""
     box_schema = T.StructType(
         [
             T.StructField("poly_id", T.LongType()),

@@ -5,16 +5,20 @@ The reference runs a nested loop per input feature with an envelope
 pre-filter, per-row spatial-filter pushdown and prepared geometries,
 emitting pairwise GEOS results. Here:
 
-  candidates  = cell equi-join + bbox conjunction (operators/spatial_join
-                candidate machinery — same two-phase filter)
+  candidates  = spatial_join's intersects path (operators/spatial_join):
+                A's bbox probes B's one polygon build side through the
+                cell join, envelope filter, reference-point rule and
+                exact box test there; broadcast_b picks its path
   kernels     = even-odd ring algebra over Greiner-Hormann clips
                 (functions/polyclip) inside Arrow-batched UDFs
   remainders  = groupBy(feature).collect of intersecting method features,
                 then A △ (A ∩ ∪B) — the "minus all matches" second loop
                 of Union/Erase (ogrlayer.cpp:5803ff) as one aggregation
 
-Output geometry is structured Polygon/MultiPolygon WKB (nesting resolved
-via structure_rings), so downstream PIP/area/rasterize read it natively.
+Both layers are (poly_id, wkb, xmin, ymin, xmax, ymax) frames; output
+rows name their features a_id / b_id. Output geometry is structured
+Polygon/MultiPolygon WKB (nesting resolved via structure_rings), so
+downstream PIP/area/rasterize read it natively.
 
 Semantics notes vs the reference:
   * PROMOTE_TO_MULTI is implicit (multi output whenever >1 part).
@@ -26,14 +30,13 @@ from __future__ import annotations
 
 from collections.abc import Iterator
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from gdal_spark.functions import cells as C
 from gdal_spark.ogrsql import _wkb_area
+from gdal_spark.operators import spatial_join as SJ
 
 _PAIR_GEOM_SCHEMA = T.StructType(
     [
@@ -80,58 +83,33 @@ def _emit_wkb(region):
     return buf, float(area)
 
 
-def _candidates(
-    a: DataFrame, b: DataFrame, res: int,
-    a_key: str, b_key: str, broadcast_b: bool,
-) -> DataFrame:
-    """Cell-join candidate pairs with bbox conjunction (two-phase filter
-    phase 1); each (a,b) pair exactly once."""
-    ac = a.select(
-        F.col(a_key).alias("a_id"), F.col("wkb").alias("a_wkb"),
-        F.col("xmin").alias("axmin"), F.col("ymin").alias("aymin"),
-        F.col("xmax").alias("axmax"), F.col("ymax").alias("aymax"),
-    ).withColumn(
-        "cell",
-        F.explode(C.cover_cells(F.col("axmin"), F.col("aymin"),
-                                F.col("axmax"), F.col("aymax"), res)),
+def _candidates(a: DataFrame, b: DataFrame, res: int, broadcast_b: bool) -> DataFrame:
+    """(a_id, a_wkb, b_id, b_wkb) candidate pairs, each exactly once:
+    spatial_join's intersects path with A's bbox as the probe box and B
+    as the polygon side. A pair its exact box test drops has an empty
+    A ∩ B, which every op below would drop anyway."""
+    probe = a.select(
+        F.col("poly_id").alias("a_id"), F.col("wkb").alias("a_wkb"),
+        F.col("xmin").alias("lon_min"), F.col("ymin").alias("lat_min"),
+        F.col("xmax").alias("lon_max"), F.col("ymax").alias("lat_max"),
     )
-    bc = b.select(
-        F.col(b_key).alias("b_id"), F.col("wkb").alias("b_wkb"),
-        F.col("xmin").alias("bxmin"), F.col("ymin").alias("bymin"),
-        F.col("xmax").alias("bxmax"), F.col("ymax").alias("bymax"),
-    ).withColumn(
-        "cell",
-        F.explode(C.cover_cells(F.col("bxmin"), F.col("bymin"),
-                                F.col("bxmax"), F.col("bymax"), res)),
-    )
-    if broadcast_b:
-        bc = F.broadcast(bc)
-    # exactly-once pairs WITHOUT a dedup shuffle: a pair discovered in
-    # several shared cells is kept only in the cell containing the
-    # lower-left corner of the bbox intersection (reference-point rule,
-    # same as spatial_join's intersects path — a Column filter, not dropDuplicates)
-    ref_cell = C.lonlat_cell(
-        F.greatest(F.col("axmin"), F.col("bxmin")),
-        F.greatest(F.col("aymin"), F.col("bymin")),
-        res,
-    )
-    return (
-        ac.join(bc, on="cell")
-        .filter(
-            (F.col("axmin") <= F.col("bxmax")) & (F.col("bxmin") <= F.col("axmax"))
-            & (F.col("aymin") <= F.col("bymax")) & (F.col("bymin") <= F.col("aymax"))
-        )
-        .filter(F.col("cell") == ref_cell)
-        .drop("cell")
+    polys = b.select(F.col("poly_id").alias("b_id"), "wkb", "xmin", "ymin", "xmax", "ymax")
+    return SJ.spatial_join(
+        probe, polys, res=res, predicate="intersects",
+        broadcast_polygons=broadcast_b, keep_wkb=True,
+    ).select("a_id", "a_wkb", "b_id", F.col("wkb").alias("b_wkb"))
+
+
+def _matches(a: DataFrame, b: DataFrame, res: int, broadcast_b: bool) -> DataFrame:
+    """(a_id, a_wkb, b_wkbs): each A feature with every B feature it meets."""
+    return _candidates(a, b, res, broadcast_b).groupBy("a_id").agg(
+        F.first("a_wkb").alias("a_wkb"), F.collect_list("b_wkb").alias("b_wkbs")
     )
 
 
-def intersection(
-    a: DataFrame, b: DataFrame, res: int = 5,
-    a_key: str = "poly_id", b_key: str = "poly_id", broadcast_b: bool = True,
-) -> DataFrame:
+def intersection(a: DataFrame, b: DataFrame, res: int = 5, broadcast_b: bool = True) -> DataFrame:
     """Pairwise A ∩ B pieces (ogrlayer.cpp:5385 core loop)."""
-    pairs = _candidates(a, b, res, a_key, b_key, broadcast_b)
+    pairs = _candidates(a, b, res, broadcast_b)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from gdal_spark.functions import polyclip as PC
@@ -151,18 +129,13 @@ def intersection(
     return pairs.mapInPandas(run, _PAIR_GEOM_SCHEMA)
 
 
-def _minus_all(
-    a: DataFrame, b: DataFrame, res: int, a_key: str, b_key: str, broadcast_b: bool,
-) -> DataFrame:
-    """A features minus the union of ALL intersecting B features —
-    the remainder loop of Union/Erase (ogrlayer.cpp:5803ff, :7846).
-    Non-matching A features pass through unchanged (left join)."""
-    pairs = _candidates(a, b, res, a_key, b_key, broadcast_b)
-    matches = pairs.groupBy("a_id").agg(
-        F.first("a_wkb").alias("a_wkb"), F.collect_list("b_wkb").alias("b_wkbs")
-    )
+def erase(a: DataFrame, b: DataFrame, res: int = 5, broadcast_b: bool = True) -> DataFrame:
+    """A minus the union of ALL intersecting B features (ogrlayer.cpp:7846)
+    — the remainder loop of Union/Erase (ogrlayer.cpp:5803ff). Non-matching
+    A features pass through unchanged."""
+    matches = _matches(a, b, res, broadcast_b)
     lone = (
-        a.select(F.col(a_key).alias("a_id"), F.col("wkb").alias("a_wkb"))
+        a.select(F.col("poly_id").alias("a_id"), F.col("wkb").alias("a_wkb"))
         .join(matches.select("a_id"), on="a_id", how="left_anti")
         .withColumn("b_wkbs", F.array().cast("array<binary>"))
     )
@@ -186,16 +159,7 @@ def _minus_all(
     return allrows.mapInPandas(run, _FEAT_GEOM_SCHEMA)
 
 
-def erase(a: DataFrame, b: DataFrame, **kw) -> DataFrame:
-    """A minus B coverage (ogrlayer.cpp:7846)."""
-    kw.setdefault("res", 5)
-    kw.setdefault("a_key", "poly_id")
-    kw.setdefault("b_key", "poly_id")
-    kw.setdefault("broadcast_b", True)
-    return _minus_all(a, b, kw["res"], kw["a_key"], kw["b_key"], kw["broadcast_b"])
-
-
-def clip(a: DataFrame, b: DataFrame, **kw) -> DataFrame:
+def clip(a: DataFrame, b: DataFrame, res: int = 5, broadcast_b: bool = True) -> DataFrame:
     """A clipped to B coverage, keeping A attrs (ogrlayer.cpp:7537).
 
     A ∩ ∪Bi is assembled as disjoint pieces A∩B1, A∩(B2∖B1),
@@ -203,14 +167,7 @@ def clip(a: DataFrame, b: DataFrame, **kw) -> DataFrame:
     free of the shared-boundary degeneracies an A∖(A∖∪B) formulation
     would create. O(k²) in matches per feature (k is small: features
     overlapping one input feature)."""
-    kw.setdefault("res", 5)
-    kw.setdefault("a_key", "poly_id")
-    kw.setdefault("b_key", "poly_id")
-    kw.setdefault("broadcast_b", True)
-    pairs = _candidates(a, b, kw["res"], kw["a_key"], kw["b_key"], kw["broadcast_b"])
-    matches = pairs.groupBy("a_id").agg(
-        F.first("a_wkb").alias("a_wkb"), F.collect_list("b_wkb").alias("b_wkbs")
-    )
+    matches = _matches(a, b, res, broadcast_b)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from gdal_spark.functions import polyclip as PC
@@ -236,53 +193,44 @@ def clip(a: DataFrame, b: DataFrame, **kw) -> DataFrame:
     return matches.mapInPandas(run, _FEAT_GEOM_SCHEMA)
 
 
-def identity(a: DataFrame, b: DataFrame, **kw) -> DataFrame:
+def _remainder(
+    a: DataFrame, b: DataFrame, res: int, broadcast_b: bool, of_b: bool = False,
+) -> DataFrame:
+    """erase(a, b) as (a_id, b_id, wkb, area) rows with a NULL b_id — or,
+    with of_b (the layers passed swapped), filed under b_id with a NULL
+    a_id."""
+    ids = (F.col("a_id"), F.lit(None).cast("long"))
+    a_id, b_id = ids[::-1] if of_b else ids
+    return erase(a, b, res, broadcast_b).select(
+        a_id.alias("a_id"), b_id.alias("b_id"), "wkb", "area"
+    )
+
+
+def identity(a: DataFrame, b: DataFrame, res: int = 5, broadcast_b: bool = True) -> DataFrame:
     """A split by B (ogrlayer.cpp:6770): A∩B pieces + A remainders."""
-    inter = intersection(a, b, **kw)
-    rem = erase(a, b, **kw).withColumn("b_id", F.lit(None).cast("long"))
-    return inter.unionByName(rem.select("a_id", "b_id", "wkb", "area"))
-
-
-def union_layers(a: DataFrame, b: DataFrame, **kw) -> DataFrame:
-    """ogrlayer.cpp:5803: A∩B pieces + A-minus-B + B-minus-A."""
-    inter = intersection(a, b, **kw)
-    rem_a = erase(a, b, **kw).select(
-        F.col("a_id"), F.lit(None).cast("long").alias("b_id"), "wkb", "area"
+    return intersection(a, b, res, broadcast_b).unionByName(
+        _remainder(a, b, res, broadcast_b)
     )
-    kw_swap = dict(kw)
-    kw_swap["a_key"], kw_swap["b_key"] = (
-        kw.get("b_key", "poly_id"), kw.get("a_key", "poly_id"),
-    )
-    rem_b = erase(b, a, **kw_swap).select(
-        F.lit(None).cast("long").alias("a_id"), F.col("a_id").alias("b_id"), "wkb", "area"
-    )
-    return inter.unionByName(rem_a).unionByName(rem_b)
 
 
-def sym_difference(a: DataFrame, b: DataFrame, **kw) -> DataFrame:
+def sym_difference(a: DataFrame, b: DataFrame, res: int = 5, broadcast_b: bool = True) -> DataFrame:
     """A △ B pieces (ogrlayer.cpp:6340): both remainders, no overlap."""
-    rem_a = erase(a, b, **kw).select(
-        F.col("a_id"), F.lit(None).cast("long").alias("b_id"), "wkb", "area"
+    return _remainder(a, b, res, broadcast_b).unionByName(
+        _remainder(b, a, res, broadcast_b, of_b=True)
     )
-    kw_swap = dict(kw)
-    kw_swap["a_key"], kw_swap["b_key"] = (
-        kw.get("b_key", "poly_id"), kw.get("a_key", "poly_id"),
-    )
-    rem_b = erase(b, a, **kw_swap).select(
-        F.lit(None).cast("long").alias("a_id"), F.col("a_id").alias("b_id"), "wkb", "area"
-    )
-    return rem_a.unionByName(rem_b)
 
 
-def update(a: DataFrame, b: DataFrame, **kw) -> DataFrame:
+def union_layers(a: DataFrame, b: DataFrame, res: int = 5, broadcast_b: bool = True) -> DataFrame:
+    """ogrlayer.cpp:5803: A∩B pieces + A-minus-B + B-minus-A."""
+    return intersection(a, b, res, broadcast_b).unionByName(
+        sym_difference(a, b, res, broadcast_b)
+    )
+
+
+def update(a: DataFrame, b: DataFrame, res: int = 5, broadcast_b: bool = True) -> DataFrame:
     """B patches over A (ogrlayer.cpp:7188): A-minus-B + all B."""
-    rem_a = erase(a, b, **kw).select(
-        F.col("a_id"), F.lit(None).cast("long").alias("b_id"), "wkb", "area"
-    )
-    b_key = kw.get("b_key", "poly_id")
     b_rows = b.select(
-        F.lit(None).cast("long").alias("a_id"),
-        F.col(b_key).alias("b_id"), "wkb",
+        F.lit(None).cast("long").alias("a_id"), F.col("poly_id").alias("b_id"), "wkb",
         _wkb_area(F.col("wkb")).alias("area"),
     )
-    return rem_a.unionByName(b_rows)
+    return _remainder(a, b, res, broadcast_b).unionByName(b_rows)

@@ -52,41 +52,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from gdal_spark.sources.mvt import _rvarint, _zz_dec
+from gdal_spark.sources.mvt import _fields, _packed_u32, _rvarint, _zz_dec
 
 # ---------------------------------------------------------------------------
-# protobuf primitives (reuses the MVT varint machinery)
+# protobuf primitives (the MVT field walker and varint readers)
 # ---------------------------------------------------------------------------
-
-
-def _pb_fields(buf: bytes):
-    pos = 0
-    while pos < len(buf):
-        tag, pos = _rvarint(buf, pos)
-        fno, wt = tag >> 3, tag & 7
-        if wt == 0:
-            v, pos = _rvarint(buf, pos)
-            yield fno, v
-        elif wt == 2:
-            ln, pos = _rvarint(buf, pos)
-            yield fno, buf[pos : pos + ln]
-            pos += ln
-        elif wt == 5:
-            yield fno, buf[pos : pos + 4]
-            pos += 4
-        elif wt == 1:
-            yield fno, buf[pos : pos + 8]
-            pos += 8
-        else:
-            raise ValueError(f"unsupported wire type {wt}")
-
-
-def _packed_varints(buf: bytes) -> list[int]:
-    out, pos = [], 0
-    while pos < len(buf):
-        v, pos = _rvarint(buf, pos)
-        out.append(v)
-    return out
 
 
 def _packed_sint_delta(buf: bytes) -> list[int]:
@@ -115,7 +85,7 @@ def scan_block_index(path: str) -> list[tuple[str, int, int]]:
             (hlen,) = struct.unpack(">i", head)
             bh = fh.read(hlen)
             btype, dsize = "", 0
-            for fno, v in _pb_fields(bh):
+            for fno, _, v in _fields(bh):
                 if fno == 1:
                     btype = v.decode()
                 elif fno == 3:
@@ -127,7 +97,7 @@ def scan_block_index(path: str) -> list[tuple[str, int, int]]:
 
 def _inflate_blob(data: bytes) -> bytes:
     raw = None
-    for fno, v in _pb_fields(data):
+    for fno, _, v in _fields(data):
         if fno == 1:
             raw = v
         elif fno == 3:
@@ -142,9 +112,9 @@ def parse_primitive_block(data: bytes) -> dict:
     strings: list[str] = []
     groups = []
     gran, lat_off, lon_off = 100, 0, 0
-    for fno, v in _pb_fields(data):
+    for fno, _, v in _fields(data):
         if fno == 1:
-            strings = [s.decode("utf-8") for f, s in _pb_fields(v) if f == 1]
+            strings = [s.decode("utf-8") for f, _, s in _fields(v) if f == 1]
         elif fno == 2:
             groups.append(v)
         elif fno == 17:
@@ -159,17 +129,17 @@ def parse_primitive_block(data: bytes) -> dict:
 
     nodes, ways, rels = [], [], []
     for g in groups:
-        for fno, v in _pb_fields(g):
+        for fno, _, v in _fields(g):
             if fno == 1:  # plain Node
                 nid = lat = lon = 0
                 keys = vals = []
-                for f2, v2 in _pb_fields(v):
+                for f2, _, v2 in _fields(v):
                     if f2 == 1:
                         nid = _zz_dec(v2) if isinstance(v2, int) else 0
                     elif f2 == 2:
-                        keys = _packed_varints(v2)
+                        keys = _packed_u32(v2)
                     elif f2 == 3:
-                        vals = _packed_varints(v2)
+                        vals = _packed_u32(v2)
                     elif f2 == 8:
                         lat = _zz_dec(v2)
                     elif f2 == 9:
@@ -181,7 +151,7 @@ def parse_primitive_block(data: bytes) -> dict:
             elif fno == 2:  # DenseNodes
                 ids = lats = lons = []
                 kv = []
-                for f2, v2 in _pb_fields(v):
+                for f2, _, v2 in _fields(v):
                     if f2 == 1:
                         ids = _packed_sint_delta(v2)
                     elif f2 == 8:
@@ -189,7 +159,7 @@ def parse_primitive_block(data: bytes) -> dict:
                     elif f2 == 9:
                         lons = _packed_sint_delta(v2)
                     elif f2 == 10:
-                        kv = _packed_varints(v2)
+                        kv = _packed_u32(v2)
                 tag_iter = iter(kv)
                 for nid, la, lo in zip(ids, lats, lons):
                     tags = {}
@@ -209,13 +179,13 @@ def parse_primitive_block(data: bytes) -> dict:
             elif fno == 3:  # Way
                 wid = 0
                 keys = vals = refs = []
-                for f2, v2 in _pb_fields(v):
+                for f2, _, v2 in _fields(v):
                     if f2 == 1:
                         wid = v2
                     elif f2 == 2:
-                        keys = _packed_varints(v2)
+                        keys = _packed_u32(v2)
                     elif f2 == 3:
-                        vals = _packed_varints(v2)
+                        vals = _packed_u32(v2)
                     elif f2 == 8:
                         refs = _packed_sint_delta(v2)
                 tags = {strings[k]: strings[w] for k, w in zip(keys, vals)}
@@ -223,19 +193,19 @@ def parse_primitive_block(data: bytes) -> dict:
             elif fno == 4:  # Relation
                 rid = 0
                 keys = vals = roles = mids = mtypes = []
-                for f2, v2 in _pb_fields(v):
+                for f2, _, v2 in _fields(v):
                     if f2 == 1:
                         rid = v2
                     elif f2 == 2:
-                        keys = _packed_varints(v2)
+                        keys = _packed_u32(v2)
                     elif f2 == 3:
-                        vals = _packed_varints(v2)
+                        vals = _packed_u32(v2)
                     elif f2 == 8:
-                        roles = _packed_varints(v2)
+                        roles = _packed_u32(v2)
                     elif f2 == 9:
                         mids = _packed_sint_delta(v2)
                     elif f2 == 10:
-                        mtypes = _packed_varints(v2)
+                        mtypes = _packed_u32(v2)
                 tags = {strings[k]: strings[w] for k, w in zip(keys, vals)}
                 members = [
                     (int(t), int(m), strings[r])

@@ -29,6 +29,12 @@ NOTES = {
         "benchmark grams broadcast to the training scan; one shuffle for "
         "the per-doc count"
     ),
+    "layer_intersection": (
+        "layer algebra's candidates are spatial_join's intersects path: B as "
+        "one local build table (polygon x cell) broadcast to one hash join "
+        "holding the envelope and the reference-point rule, then the exact "
+        "box test and the clip kernel in Arrow-batched Python"
+    ),
 }
 
 _OP_RE = re.compile(
