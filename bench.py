@@ -44,8 +44,7 @@ def flagship_pipeline(spark, n_images: int, n_polys: int):
     imgs = datagen.with_footprint(datagen.images_df(spark, n_images, with_pixels=False))
     polys = datagen.polygons_df(spark, n_polys)
     joined = SJ.spatial_join(
-        imgs, polys, res=6, predicate="center_within", broadcast_polygons=True,
-        carry=[],
+        imgs, polys, res=6, predicate="center_within", carry=[],
     )
     counts = SJ.count_per_polygon(joined)
 

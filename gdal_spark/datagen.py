@@ -12,7 +12,7 @@ Geo-footprints are NOT stored: the engine derives them from image_id via
 the closed-form in `footprint_expr` (both numpy and Column twins below) —
 this plays the role of the geotransform metadata a real corpus would carry.
 A Zipf-ish hot cluster (every 5th image inside one 1°x1° box) exercises
-skew/salting, per FIXTURES.md §1.
+hot-cell skew, per FIXTURES.md §1.
 """
 
 from __future__ import annotations

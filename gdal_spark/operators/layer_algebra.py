@@ -8,7 +8,8 @@ emitting pairwise GEOS results. Here:
   candidates  = spatial_join's intersects path (operators/spatial_join):
                 A's bbox probes B's one polygon build side through the
                 cell join, envelope filter, reference-point rule and
-                exact box test there; broadcast_b picks its path
+                exact box test there, and its choice of broadcast
+                or shuffle
   kernels     = even-odd ring algebra over Greiner-Hormann clips
                 (functions/polyclip) inside Arrow-batched UDFs
   remainders  = groupBy(feature).collect of intersecting method features,
@@ -83,7 +84,7 @@ def _emit_wkb(region):
     return buf, float(area)
 
 
-def _candidates(a: DataFrame, b: DataFrame, res: int, broadcast_b: bool) -> DataFrame:
+def _candidates(a: DataFrame, b: DataFrame, res: int) -> DataFrame:
     """(a_id, a_wkb, b_id, b_wkb) candidate pairs, each exactly once:
     spatial_join's intersects path with A's bbox as the probe box and B
     as the polygon side. A pair its exact box test drops has an empty
@@ -95,21 +96,20 @@ def _candidates(a: DataFrame, b: DataFrame, res: int, broadcast_b: bool) -> Data
     )
     polys = b.select(F.col("poly_id").alias("b_id"), "wkb", "xmin", "ymin", "xmax", "ymax")
     return SJ.spatial_join(
-        probe, polys, res=res, predicate="intersects",
-        broadcast_polygons=broadcast_b, keep_wkb=True,
+        probe, polys, res=res, predicate="intersects", keep_wkb=True,
     ).select("a_id", "a_wkb", "b_id", F.col("wkb").alias("b_wkb"))
 
 
-def _matches(a: DataFrame, b: DataFrame, res: int, broadcast_b: bool) -> DataFrame:
+def _matches(a: DataFrame, b: DataFrame, res: int) -> DataFrame:
     """(a_id, a_wkb, b_wkbs): each A feature with every B feature it meets."""
-    return _candidates(a, b, res, broadcast_b).groupBy("a_id").agg(
+    return _candidates(a, b, res).groupBy("a_id").agg(
         F.first("a_wkb").alias("a_wkb"), F.collect_list("b_wkb").alias("b_wkbs")
     )
 
 
-def intersection(a: DataFrame, b: DataFrame, res: int = 5, broadcast_b: bool = True) -> DataFrame:
+def intersection(a: DataFrame, b: DataFrame, res: int = 5) -> DataFrame:
     """Pairwise A ∩ B pieces (ogrlayer.cpp:5385 core loop)."""
-    pairs = _candidates(a, b, res, broadcast_b)
+    pairs = _candidates(a, b, res)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from gdal_spark.functions import polyclip as PC
@@ -129,11 +129,11 @@ def intersection(a: DataFrame, b: DataFrame, res: int = 5, broadcast_b: bool = T
     return pairs.mapInPandas(run, _PAIR_GEOM_SCHEMA)
 
 
-def erase(a: DataFrame, b: DataFrame, res: int = 5, broadcast_b: bool = True) -> DataFrame:
+def erase(a: DataFrame, b: DataFrame, res: int = 5) -> DataFrame:
     """A minus the union of ALL intersecting B features (ogrlayer.cpp:7846)
     — the remainder loop of Union/Erase (ogrlayer.cpp:5803ff). Non-matching
     A features pass through unchanged."""
-    matches = _matches(a, b, res, broadcast_b)
+    matches = _matches(a, b, res)
     lone = (
         a.select(F.col("poly_id").alias("a_id"), F.col("wkb").alias("a_wkb"))
         .join(matches.select("a_id"), on="a_id", how="left_anti")
@@ -159,7 +159,7 @@ def erase(a: DataFrame, b: DataFrame, res: int = 5, broadcast_b: bool = True) ->
     return allrows.mapInPandas(run, _FEAT_GEOM_SCHEMA)
 
 
-def clip(a: DataFrame, b: DataFrame, res: int = 5, broadcast_b: bool = True) -> DataFrame:
+def clip(a: DataFrame, b: DataFrame, res: int = 5) -> DataFrame:
     """A clipped to B coverage, keeping A attrs (ogrlayer.cpp:7537).
 
     A ∩ ∪Bi is assembled as disjoint pieces A∩B1, A∩(B2∖B1),
@@ -167,7 +167,7 @@ def clip(a: DataFrame, b: DataFrame, res: int = 5, broadcast_b: bool = True) -> 
     free of the shared-boundary degeneracies an A∖(A∖∪B) formulation
     would create. O(k²) in matches per feature (k is small: features
     overlapping one input feature)."""
-    matches = _matches(a, b, res, broadcast_b)
+    matches = _matches(a, b, res)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from gdal_spark.functions import polyclip as PC
@@ -193,44 +193,34 @@ def clip(a: DataFrame, b: DataFrame, res: int = 5, broadcast_b: bool = True) -> 
     return matches.mapInPandas(run, _FEAT_GEOM_SCHEMA)
 
 
-def _remainder(
-    a: DataFrame, b: DataFrame, res: int, broadcast_b: bool, of_b: bool = False,
-) -> DataFrame:
+def _remainder(a: DataFrame, b: DataFrame, res: int, of_b: bool = False) -> DataFrame:
     """erase(a, b) as (a_id, b_id, wkb, area) rows with a NULL b_id — or,
     with of_b (the layers passed swapped), filed under b_id with a NULL
     a_id."""
     ids = (F.col("a_id"), F.lit(None).cast("long"))
     a_id, b_id = ids[::-1] if of_b else ids
-    return erase(a, b, res, broadcast_b).select(
-        a_id.alias("a_id"), b_id.alias("b_id"), "wkb", "area"
-    )
+    return erase(a, b, res).select(a_id.alias("a_id"), b_id.alias("b_id"), "wkb", "area")
 
 
-def identity(a: DataFrame, b: DataFrame, res: int = 5, broadcast_b: bool = True) -> DataFrame:
+def identity(a: DataFrame, b: DataFrame, res: int = 5) -> DataFrame:
     """A split by B (ogrlayer.cpp:6770): A∩B pieces + A remainders."""
-    return intersection(a, b, res, broadcast_b).unionByName(
-        _remainder(a, b, res, broadcast_b)
-    )
+    return intersection(a, b, res).unionByName(_remainder(a, b, res))
 
 
-def sym_difference(a: DataFrame, b: DataFrame, res: int = 5, broadcast_b: bool = True) -> DataFrame:
+def sym_difference(a: DataFrame, b: DataFrame, res: int = 5) -> DataFrame:
     """A △ B pieces (ogrlayer.cpp:6340): both remainders, no overlap."""
-    return _remainder(a, b, res, broadcast_b).unionByName(
-        _remainder(b, a, res, broadcast_b, of_b=True)
-    )
+    return _remainder(a, b, res).unionByName(_remainder(b, a, res, of_b=True))
 
 
-def union_layers(a: DataFrame, b: DataFrame, res: int = 5, broadcast_b: bool = True) -> DataFrame:
+def union_layers(a: DataFrame, b: DataFrame, res: int = 5) -> DataFrame:
     """ogrlayer.cpp:5803: A∩B pieces + A-minus-B + B-minus-A."""
-    return intersection(a, b, res, broadcast_b).unionByName(
-        sym_difference(a, b, res, broadcast_b)
-    )
+    return intersection(a, b, res).unionByName(sym_difference(a, b, res))
 
 
-def update(a: DataFrame, b: DataFrame, res: int = 5, broadcast_b: bool = True) -> DataFrame:
+def update(a: DataFrame, b: DataFrame, res: int = 5) -> DataFrame:
     """B patches over A (ogrlayer.cpp:7188): A-minus-B + all B."""
     b_rows = b.select(
         F.lit(None).cast("long").alias("a_id"), F.col("poly_id").alias("b_id"), "wkb",
         _wkb_area(F.col("wkb")).alias("area"),
     )
-    return _remainder(a, b, res, broadcast_b).unionByName(b_rows)
+    return _remainder(a, b, res).unionByName(b_rows)

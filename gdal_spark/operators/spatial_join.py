@@ -17,8 +17,14 @@ ogrlayer.cpp:5385) for the 100 TB regime:
                                         (keep the pair only in the one cell
                                         containing the intersection-bbox
                                         corner) — a filter, not a shuffle
-  -                                     skew: hot cells salted S ways +
-                                        AQE skew-join as backstop
+  -                                     skew: AQE's skew-join split of
+                                        hot-cell partitions (session.py);
+                                        salting was measured and removed
+                                        (BENCH/SKEW.md)
+
+The join picks its own path from Spark's size estimate of the polygon
+side: broadcast when it is at most spark.sql.autoBroadcastJoinThreshold,
+the test Spark's JoinSelection applies to a join side; shuffle otherwise.
 
 One polygon build side, whichever join runs (`_build_side`): a row per
 (polygon, covering cell) with the polygon's columns, its `cell`
@@ -82,6 +88,11 @@ _EDGE_FIELDS = ("ylo", "yhi", "x1", "y1", "sl")
 # `cy < -inf` is false for finite, +-inf and NaN cy alike, and a NULL cy
 # makes the CASE yield 0: the sentinel never counts, for any probe.
 SENTINEL_EDGE = (np.inf, -np.inf, 0.0, 0.0, 0.0)
+
+# probe box columns of `left`, bbox columns and key of `polygons`
+LEFT_BBOX = ("lon_min", "lat_min", "lon_max", "lat_max")
+POLY_BBOX = ("xmin", "ymin", "xmax", "ymax")
+POLY_KEY = "poly_id"
 
 
 def prepared_edges(buf: bytes) -> list[list[float]]:
@@ -160,7 +171,6 @@ def box_intersects_udf(
 def _build_side(
     polys: pa.Table,
     res: int,
-    poly_bbox: tuple[str, str, str, str],
     keep: list[str],
     n_slots: int,
     edges: list[list[list[float]]] | None = None,
@@ -171,7 +181,7 @@ def _build_side(
     the flat `_e{i}_*` slots 0..n_slots-1, SENTINEL_EDGE past its last
     edge. `edges` are the polygons' prepared_edges if the caller has them;
     otherwise they are prepared from `polys["wkb"]`."""
-    row, cells = C.cover_cells_np(*(polys[c].to_numpy() for c in poly_bbox), res)
+    row, cells = C.cover_cells_np(*(polys[c].to_numpy() for c in POLY_BBOX), res)
     cols = {c: polys[c].take(row) for c in keep}
     cols["cell"] = cells
     if n_slots:
@@ -188,31 +198,38 @@ def _build_side(
     return pa.table(cols)
 
 
+def _fits_broadcast(df: DataFrame) -> bool:
+    """Spark's JoinSelection test for broadcasting a join side: the
+    optimized plan's size estimate is in [0, autoBroadcastJoinThreshold],
+    the threshold read as Spark parses it (`10MB` works, -1 never
+    broadcasts). Runs no job."""
+    size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    conf = df.sparkSession._jsparkSession.sessionState().conf()
+    return 0 <= size <= conf.autoBroadcastJoinThreshold()
+
+
 def spatial_join(
     left: DataFrame,
     polygons: DataFrame,
     res: int = 7,
     predicate: str = "center_within",
-    left_bbox: tuple[str, str, str, str] = ("lon_min", "lat_min", "lon_max", "lat_max"),
-    poly_bbox: tuple[str, str, str, str] = ("xmin", "ymin", "xmax", "ymax"),
     left_key: str = "image_id",
-    poly_key: str = "poly_id",
-    broadcast_polygons: bool = False,
-    salt: int = 0,
+    broadcast_polygons: bool | None = None,
     carry: list[str] | None = None,
     keep_wkb: bool = False,
 ) -> DataFrame:
-    """Join `left` rows (bbox'd) to polygons (wkb + bbox) they hit.
+    """Join `left` rows (LEFT_BBOX'd) to polygons (POLY_KEY, wkb,
+    POLY_BBOX) they hit.
 
     Returns left rows + matching polygon columns (inner, 1:N across
     polygons, each pair exactly once).
 
-    broadcast_polygons: True = force broadcast (dims <= ~64MB: no shuffle
-    at all; the driver builds the polygon side once, as one local table);
-    False = no hint — the cell join is planned as a shuffle join,
-    optionally salted `salt` ways for hot cells, though Catalyst/AQE may
-    still broadcast the polygon side when it is under
-    spark.sql.autoBroadcastJoinThreshold.
+    broadcast_polygons: None (default) = True exactly when
+    _fits_broadcast(polygons), Spark's own size test. True = broadcast:
+    the driver builds the polygon side once, as one local table. False =
+    the shuffle path: the polygon side is built per Arrow batch, and hot
+    cells are split by AQE's skew join (session.py); salting them was
+    measured and removed (BENCH/SKEW.md).
 
     Exactly-once pairs WITHOUT a dedup shuffle:
       * center_within probes a point, which lies in exactly one cell —
@@ -229,19 +246,21 @@ def spatial_join(
     if carry is not None:
         # prune to keys + bbox + requested pass-throughs BEFORE the join:
         # every column kept here rides every candidate pair
-        left = left.select(*dict.fromkeys([left_key, *left_bbox, *carry]))
-        polygons = polygons.select(*dict.fromkeys([poly_key, *poly_bbox, "wkb"]))
+        left = left.select(*dict.fromkeys([left_key, *LEFT_BBOX, *carry]))
+        polygons = polygons.select(POLY_KEY, *POLY_BBOX, "wkb")
+    if broadcast_polygons is None:
+        broadcast_polygons = _fits_broadcast(polygons)
 
-    lx0, ly0, lx1, ly1 = (F.col(c) for c in left_bbox)
+    lx0, ly0, lx1, ly1 = (F.col(c) for c in LEFT_BBOX)
     # the probe point as SQL, for the one-string parity expression
     cx_sql, cy_sql = (f"((`{a}` + `{b}`) / 2.0D)"
-                      for a, b in (left_bbox[0::2], left_bbox[1::2]))
+                      for a, b in (LEFT_BBOX[0::2], LEFT_BBOX[1::2]))
     cx, cy = F.expr(cx_sql), F.expr(cy_sql)
     center = predicate == "center_within"
     if center:
         lc = left.withColumn("cell", C.lonlat_cell(cx, cy, res))
     else:
-        lc = C.with_footprint_cells(left, res, *left_bbox)
+        lc = C.with_footprint_cells(left, res, *LEFT_BBOX)
 
     # edges are prepared once per polygon; their widest count sizes the slots
     edges = None
@@ -266,31 +285,23 @@ def spatial_join(
           for i in range(n_slots) for f in _EDGE_FIELDS),
     ])
 
-    salted = salt > 1 and not broadcast_polygons
     if broadcast_polygons:
         polys = pa.table({f.name: pa.array([r[f.name] for r in rows],
                                            to_arrow_type(f.dataType))
                           for f in fields})
         pc = polygons.sparkSession.createDataFrame(
-            _build_side(polys, res, poly_bbox, keep, n_slots, edges), schema)
+            _build_side(polys, res, keep, n_slots, edges), schema)
         cand = lc.join(F.broadcast(pc), on="cell")
     else:
         def build(batches):
             for b in batches:
-                yield from _build_side(pa.Table.from_batches([b]), res, poly_bbox,
-                                       keep, n_slots).to_batches()
+                yield from _build_side(pa.Table.from_batches([b]), res, keep,
+                                       n_slots).to_batches()
 
-        pc = polygons.mapInArrow(build, schema)
-        join_keys = ["cell"]
-        if salted:
-            # replicate each polygon-cell row `salt` ways; probes pick one slot
-            pc = pc.withColumn("_salt", F.explode(F.sequence(F.lit(0), F.lit(salt - 1))))
-            lc = lc.withColumn("_salt", F.pmod(F.xxhash64(F.col(left_key)), F.lit(salt)))
-            join_keys.append("_salt")
-        cand = lc.join(pc, on=join_keys, how="inner")
+        cand = lc.join(polygons.mapInArrow(build, schema), on="cell")
 
     # phase 1: envelope conjunction (Catalyst-visible, codegen'd)
-    px0, py0, px1, py1 = (F.col(c) for c in poly_bbox)
+    px0, py0, px1, py1 = (F.col(c) for c in POLY_BBOX)
     cand = cand.filter((lx0 <= px1) & (px0 <= lx1) & (ly0 <= py1) & (py0 <= ly1))
 
     # phase 2: exact kernel; Catalyst moves a codegen'd filter into the
@@ -307,9 +318,9 @@ def spatial_join(
     else:
         cand = cand.filter(parity_predicate(cx_sql, cy_sql, n_slots))
 
-    hidden = schema.names[len(keep):] + (["_salt"] if salted else [])
+    hidden = schema.names[len(keep):]
     return cand.drop(*hidden, *([] if keep_wkb or not wkb_rides else ["wkb"]))
 
 
-def count_per_polygon(joined: DataFrame, poly_key: str = "poly_id") -> DataFrame:
-    return joined.groupBy(poly_key).agg(F.count(F.lit(1)).alias("n_images"))
+def count_per_polygon(joined: DataFrame) -> DataFrame:
+    return joined.groupBy(POLY_KEY).agg(F.count(F.lit(1)).alias("n_images"))

@@ -192,7 +192,7 @@ def zonal_pixel_boxes(spark: SparkSession, sf_dir: str) -> DataFrame:
         (kd + 10.5 / 16).alias("xmax"), F.lit(40.0 + 12.5 / 16).alias("ymax"),
     ).withColumn("wkb", box_wkb_udf("xmin", "ymin", "xmax", "ymax"))
 
-    out = Z.zonal_stats(imgs, polys, res=4, broadcast_polygons=True)
+    out = Z.zonal_stats(imgs, polys, res=4)
     return out.select(
         "poly_id", "zcount",
         F.round("zmin", 4).alias("zmin"), F.round("zmax", 4).alias("zmax"),

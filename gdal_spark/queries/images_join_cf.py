@@ -92,9 +92,7 @@ def _join(spark, sf_dir, predicate: str, half: float) -> DataFrame:
 
     imgs = _image_footprints(spark, sf_dir, half)
     polys = _box_polys(spark, sf_dir)
-    j = SJ.spatial_join(
-        imgs, polys, res=5, predicate=predicate, broadcast_polygons=True
-    )
+    j = SJ.spatial_join(imgs, polys, res=5, predicate=predicate)
     return (
         j.groupBy("poly_id")
         .agg(F.count(F.lit(1)).alias("n_images"))

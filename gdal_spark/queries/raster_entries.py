@@ -75,7 +75,7 @@ def images_spatial_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     imgs = datagen.with_footprint(datagen.images_df(spark, 512, with_pixels=False))
     polys = datagen.polygons_df(spark, N_POLYGONS)
     return SJ.count_per_polygon(
-        SJ.spatial_join(imgs, polys, res=5, predicate="center_within", broadcast_polygons=True)
+        SJ.spatial_join(imgs, polys, res=5, predicate="center_within")
     ).orderBy("poly_id")
 
 
@@ -84,7 +84,7 @@ def images_intersects_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     Intersection pair enumeration, ogrlayer.cpp:5385 semantics)."""
     imgs = datagen.with_footprint(datagen.images_df(spark, 256, with_pixels=False))
     polys = datagen.polygons_df(spark, N_POLYGONS)
-    j = SJ.spatial_join(imgs, polys, res=5, predicate="intersects", broadcast_polygons=True)
+    j = SJ.spatial_join(imgs, polys, res=5, predicate="intersects")
     return j.groupBy("poly_id").agg(F.count(F.lit(1)).alias("n_images")).orderBy("poly_id")
 
 

@@ -355,7 +355,7 @@ def zonal_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         datagen.images_df(spark, 24, with_pixels=True, size_cap=64)
     )
     polys = datagen.polygons_df(spark, 8)
-    return Z.zonal_stats(imgs, polys, res=4, broadcast_polygons=True)
+    return Z.zonal_stats(imgs, polys, res=4)
 
 
 def tile_pyramid_z8(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -185,8 +185,6 @@ def cell_pip_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         res=4,
         predicate="center_within",
         left_key="pt_id",
-        poly_key="poly_id",
-        broadcast_polygons=True,
     )
     return joined.groupBy("poly_id").agg(F.count(F.lit(1)).alias("n_points"))
 

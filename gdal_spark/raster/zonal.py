@@ -44,17 +44,13 @@ def _luma(arr: np.ndarray) -> np.ndarray:
     return 0.299 * arr[:, :, 0] + 0.587 * arr[:, :, 1] + 0.114 * arr[:, :, 2]
 
 
-def zonal_stats(images: DataFrame, polygons: DataFrame, res: int = 5,
-                broadcast_polygons: bool = False) -> DataFrame:
+def zonal_stats(images: DataFrame, polygons: DataFrame, res: int = 5) -> DataFrame:
     """images: canonical table + footprint cols; polygons: poly_id/wkb/bbox.
 
     Returns (poly_id, zcount, zmin, zmax, zmean, zstd) over the pixels of
     every image whose footprint intersects each polygon.
     """
-    pairs = SJ.spatial_join(
-        images, polygons, res=res, predicate="intersects",
-        broadcast_polygons=broadcast_polygons, keep_wkb=True,
-    )
+    pairs = SJ.spatial_join(images, polygons, res=res, predicate="intersects", keep_wkb=True)
 
     def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from gdal_spark.functions import codecs, wkb as W

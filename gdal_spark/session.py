@@ -34,9 +34,9 @@ def get_session(
     """Create (or fetch) a SparkSession with engine defaults.
 
     AQE is on (runtime coalesce + skew-join split — our answer to dense
-    H3 cells at 100 TB alongside explicit salting), Arrow is on (every
-    pixel/geometry kernel crosses via Arrow batches), session TZ pinned
-    to UTC so DuckDB-oracle comparisons are stable.
+    cells; salting was measured and removed, BENCH/SKEW.md), Arrow is on
+    (every pixel/geometry kernel crosses via Arrow batches), session TZ
+    pinned to UTC so DuckDB-oracle comparisons are stable.
     """
     master = master or os.environ.get("SPARK_GRAFT_MASTER", "local[*]")
     driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem()

@@ -14,7 +14,7 @@ from gdal_spark.functions import polyclip as PC
 from gdal_spark.functions import wkb as W
 from gdal_spark.operators import layer_algebra as LA
 from gdal_spark.raster import kernels as K
-from test_spark_ops import _subtree
+from test_spark_ops import _subtree, broadcast_threshold
 
 NA, NB = 12, 10
 GRID = 72
@@ -42,6 +42,14 @@ def ab(spark):
     a = datagen.polygons_df(spark, NA).select("poly_id", "wkb", "xmin", "ymin", "xmax", "ymax")
     b = spark.createDataFrame(_shifted_polys(NB))
     return a.cache(), b.cache()
+
+
+@pytest.fixture(params=[None, "-1"], ids=["broadcast", "shuffle"])
+def threshold(spark, request):
+    """spark.sql.autoBroadcastJoinThreshold for the test: the session's
+    (spatial_join broadcasts B) or -1 (it takes the shuffle path)."""
+    with broadcast_threshold(spark, request.param):
+        yield request.param
 
 
 def _flat(wkb_buf):
@@ -83,10 +91,12 @@ def _brute_pairs(a_pdf, b_pdf):
 
 
 class TestIntersection:
-    @pytest.mark.parametrize("broadcast_b", [True, False], ids=["broadcast", "shuffle"])
-    def test_pairs_and_masks(self, spark, ab, broadcast_b):
+    def test_pairs_and_masks(self, spark, ab, threshold):
         a, b = ab
-        got = LA.intersection(a, b, res=5, broadcast_b=broadcast_b).toPandas()
+        inter = LA.intersection(a, b, res=5)
+        plan = inter._jdf.queryExecution().executedPlan().toString()
+        assert ("BroadcastHashJoin" in plan) == (threshold is None)
+        got = inter.toPandas()
         a_pdf = a.toPandas()
         b_pdf = b.toPandas()
         want = _brute_pairs(a_pdf, b_pdf)
@@ -105,9 +115,10 @@ class TestIntersection:
             assert r.area > 0
 
     def test_broadcast_plan_is_one_local_table_join(self, spark, ab):
-        """broadcast_b pairs the layers through spatial_join's broadcast
-        path: ONE BroadcastHashJoin whose build side is B as a
-        LocalTableScan, with no Generate under the BroadcastExchange."""
+        """At the session's broadcast threshold the layers pair through
+        spatial_join's broadcast path: ONE BroadcastHashJoin whose build
+        side is B as a LocalTableScan, with no Generate under the
+        BroadcastExchange."""
         a, b = ab
         lines = (LA.intersection(a, b, res=5)._jdf.queryExecution()
                  .executedPlan().toString().splitlines())
@@ -119,12 +130,11 @@ class TestIntersection:
 
 
 class TestEraseClip:
-    @pytest.mark.parametrize("broadcast_b", [True, False], ids=["broadcast", "shuffle"])
-    def test_erase_masks_and_partition(self, spark, ab, broadcast_b):
+    def test_erase_masks_and_partition(self, spark, ab, threshold):
         a, b = ab
-        er = {r.a_id: r for r in LA.erase(a, b, res=5, broadcast_b=broadcast_b)
+        er = {r.a_id: r for r in LA.erase(a, b, res=5)
               .toPandas().itertuples(index=False)}
-        cl = {r.a_id: r for r in LA.clip(a, b, res=5, broadcast_b=broadcast_b)
+        cl = {r.a_id: r for r in LA.clip(a, b, res=5)
               .toPandas().itertuples(index=False)}
         a_pdf = a.toPandas()
         b_pdf = b.toPandas()
@@ -153,44 +163,41 @@ class TestEraseClip:
 
 
 class TestCompositeOps:
-    @pytest.mark.parametrize("broadcast_b", [True, False], ids=["broadcast", "shuffle"])
-    def test_identity_union_symdiff_update_row_structure(self, spark, ab, broadcast_b):
+    def test_identity_union_symdiff_update_row_structure(self, spark, ab, threshold):
         a, b = ab
-        n_inter = LA.intersection(a, b, res=5, broadcast_b=broadcast_b).count()
-        n_er_a = LA.erase(a, b, res=5, broadcast_b=broadcast_b).count()
+        n_inter = LA.intersection(a, b, res=5).count()
+        n_er_a = LA.erase(a, b, res=5).count()
         n_er_b = LA.erase(
             b.select("poly_id", "wkb", "xmin", "ymin", "xmax", "ymax"), a, res=5,
-            broadcast_b=broadcast_b,
         ).count()
 
-        ident = LA.identity(a, b, res=5, broadcast_b=broadcast_b).toPandas()
+        ident = LA.identity(a, b, res=5).toPandas()
         assert len(ident) == n_inter + n_er_a
         assert ident["b_id"].isna().sum() == n_er_a
 
-        un = LA.union_layers(a, b, res=5, broadcast_b=broadcast_b).toPandas()
+        un = LA.union_layers(a, b, res=5).toPandas()
         assert len(un) == n_inter + n_er_a + n_er_b
 
-        sd = LA.sym_difference(a, b, res=5, broadcast_b=broadcast_b).toPandas()
+        sd = LA.sym_difference(a, b, res=5).toPandas()
         assert len(sd) == n_er_a + n_er_b
 
-        up = LA.update(a, b, res=5, broadcast_b=broadcast_b).toPandas()
+        up = LA.update(a, b, res=5).toPandas()
         assert len(up) == n_er_a + NB
         # update total area = erase(A,B) + all B areas
         b_area = sum(G.wkb_area(bytes(r.wkb)) for r in _shifted_polys(NB).itertuples(index=False))
-        er_area = LA.erase(a, b, res=5, broadcast_b=broadcast_b).toPandas()["area"].sum()
+        er_area = LA.erase(a, b, res=5).toPandas()["area"].sum()
         assert up["area"].sum() == pytest.approx(er_area + b_area, rel=1e-9)
 
-    @pytest.mark.parametrize("broadcast_b", [True, False], ids=["broadcast", "shuffle"])
-    def test_union_piece_accounting_and_b_side_erase(self, spark, ab, broadcast_b):
+    def test_union_piece_accounting_and_b_side_erase(self, spark, ab, threshold):
         """union rows = inter + eraseA + eraseB pieces exactly (GDAL's
         Union emits exactly these three groups, ogrlayer.cpp:5803); plus
         a brute mask check of the B-side remainder."""
         a, b = ab
-        un = LA.union_layers(a, b, res=5, broadcast_b=broadcast_b).toPandas()
-        inter = LA.intersection(a, b, res=5, broadcast_b=broadcast_b).toPandas()
-        er_a = LA.erase(a, b, res=5, broadcast_b=broadcast_b).toPandas()
+        un = LA.union_layers(a, b, res=5).toPandas()
+        inter = LA.intersection(a, b, res=5).toPandas()
+        er_a = LA.erase(a, b, res=5).toPandas()
         b_sel = b.select("poly_id", "wkb", "xmin", "ymin", "xmax", "ymax")
-        er_b = LA.erase(b_sel, a, res=5, broadcast_b=broadcast_b).toPandas()
+        er_b = LA.erase(b_sel, a, res=5).toPandas()
         assert un["area"].sum() == pytest.approx(
             inter["area"].sum() + er_a["area"].sum() + er_b["area"].sum(), rel=1e-9
         )

@@ -127,7 +127,7 @@ class TestZonal:
     def test_vs_numpy(self, spark):
         imgs = datagen.with_footprint(datagen.images_df(spark, 16, with_pixels=True, size_cap=64))
         polys = datagen.polygons_df(spark, 8)
-        got = Z.zonal_stats(imgs, polys, res=4, broadcast_polygons=True).toPandas()
+        got = Z.zonal_stats(imgs, polys, res=4).toPandas()
         got = got.set_index("poly_id").sort_index()
 
         # oracle: brute force over every (image, polygon)

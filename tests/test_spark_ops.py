@@ -3,6 +3,8 @@ oracle, kNN paths, driver-contract integrity."""
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 import numpy as np
 import pandas as pd
 import pyarrow as pa
@@ -155,26 +157,41 @@ def _pip_polygons(polyset):
     return pp
 
 
-_PIP_PATHS = [(True, 0), (False, 0), (False, 4)]
+# broadcast_polygons forced each way; the ids keep the `-0` suffix they
+# had when a salt count was part of them
+_PIP_PATHS = [pytest.param(b, id=f"{b}-0") for b in (True, False)]
+
+
+@contextmanager
+def broadcast_threshold(spark, value):
+    """spark.sql.autoBroadcastJoinThreshold set to `value` (None: left as
+    it is) inside the block."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    if value is not None:
+        spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
 
 
 @pytest.mark.parametrize(
-    "polyset,broadcast,salt",
-    [pytest.param("datagen", b, s, id=f"{b}-{s}") for b, s in _PIP_PATHS]
+    "polyset,broadcast",
+    [pytest.param("datagen", b, id=f"{b}-0") for b in (True, False)]
     + [
-        pytest.param(p, b, s, id=f"{p}-{b}-{s}")
+        pytest.param(p, b, id=f"{p}-{b}-0")
         for p in ("over_cap", "at_cap")
-        for b, s in _PIP_PATHS
+        for b in (True, False)
     ],
 )
-def test_spatial_join_center_within(spark, polyset, broadcast, salt):
+def test_spatial_join_center_within(spark, polyset, broadcast):
     imgs = datagen.with_footprint(datagen.images_df(spark, 300, with_pixels=False))
     pp = _pip_polygons(polyset)
     polys = spark.createDataFrame(
         pp[["poly_id", "wkb", "xmin", "ymin", "xmax", "ymax"]], _POLY_DDL)
     j = SJ.spatial_join(
-        imgs, polys, res=5, predicate="center_within",
-        broadcast_polygons=broadcast, salt=salt,
+        imgs, polys, res=5, predicate="center_within", broadcast_polygons=broadcast,
     )
     got = {r.poly_id: r.n_images for r in SJ.count_per_polygon(j).collect()}
     exp = _expected_pip_counts(300, pp)
@@ -183,14 +200,14 @@ def test_spatial_join_center_within(spark, polyset, broadcast, salt):
 
 
 @pytest.mark.parametrize("keep_wkb", [False, True])
-@pytest.mark.parametrize("broadcast,salt", _PIP_PATHS)
-def test_spatial_join_intersects(spark, broadcast, salt, keep_wkb):
+@pytest.mark.parametrize("broadcast", _PIP_PATHS)
+def test_spatial_join_intersects(spark, broadcast, keep_wkb):
     """Exact intersects counts on every path; the polygon `wkb` is in the
     output iff keep_wkb, whichever path ran."""
     imgs = datagen.with_footprint(datagen.images_df(spark, 200, with_pixels=False))
     polys = datagen.polygons_df(spark, 12)
     j = SJ.spatial_join(imgs, polys, res=5, predicate="intersects",
-                        broadcast_polygons=broadcast, salt=salt, keep_wkb=keep_wkb)
+                        broadcast_polygons=broadcast, keep_wkb=keep_wkb)
     assert ("wkb" in j.columns) == keep_wkb
     got = {r.poly_id: r.n_images for r in SJ.count_per_polygon(j).collect()}
 
@@ -236,47 +253,46 @@ def _subtree(lines: list[str], i: int) -> list[str]:
 
 @pytest.mark.parametrize("predicate", ["center_within", "intersects"])
 def test_broadcast_join_build_side_is_one_local_table(spark, predicate):
-    """The broadcast path plans ONE BroadcastHashJoin whose build side is a
-    LocalTableScan (no Generate, no Scan ExistingRDD, so no broadcast job
-    and no second join to an edge table); center_within's parity sits in
-    that join's condition."""
+    """The broadcast path, forced or picked by default (2000 polygons are
+    far under the session's broadcast threshold), plans ONE
+    BroadcastHashJoin whose build side is a LocalTableScan (no Generate,
+    no Scan ExistingRDD, so no broadcast job and no second join to an
+    edge table); center_within's parity sits in that join's condition."""
     imgs = datagen.with_footprint(datagen.images_df(spark, 100, with_pixels=False))
-    polys = datagen.polygons_df(spark, 8)
-    j = SJ.spatial_join(imgs, polys, res=5, predicate=predicate,
-                        broadcast_polygons=True)
-    lines = j._jdf.queryExecution().executedPlan().toString().splitlines()
-    joins = [line for line in lines if "BroadcastHashJoin" in line]
-    assert len(joins) == 1
-    (bx,) = [i for i, line in enumerate(lines) if "BroadcastExchange" in line]
-    build = _subtree(lines, bx)
-    assert "LocalTableScan" in build[-1]
-    assert not any("Generate" in line or "ExistingRDD" in line for line in build)
-    if predicate == "center_within":
-        assert "CASE WHEN" in joins[0] and "% 2) = 1)" in joins[0]
+    polys = datagen.polygons_df(spark, 2000)
+    for broadcast in (True, None):
+        j = SJ.spatial_join(imgs, polys, res=5, predicate=predicate,
+                            broadcast_polygons=broadcast)
+        lines = j._jdf.queryExecution().executedPlan().toString().splitlines()
+        joins = [line for line in lines if "BroadcastHashJoin" in line]
+        assert len(joins) == 1, broadcast
+        (bx,) = [i for i, line in enumerate(lines) if "BroadcastExchange" in line]
+        build = _subtree(lines, bx)
+        assert "LocalTableScan" in build[-1]
+        assert not any("Generate" in line or "ExistingRDD" in line for line in build)
+        if predicate == "center_within":
+            assert "CASE WHEN" in joins[0] and "% 2) = 1)" in joins[0]
 
 
 def test_shuffle_join_build_side_is_one_map_in_arrow(spark):
-    """The shuffle path builds the polygon side with the broadcast path's
-    builder: under its exchange sits ONE MapInArrow (no Generate explode,
-    no ArrowEvalPython edge UDF), and center_within's parity sits in the
+    """The shuffle path, forced or picked by default under a -1 broadcast
+    threshold, builds the polygon side with the broadcast path's builder:
+    under its exchange sits ONE MapInArrow (no Generate explode, no
+    ArrowEvalPython edge UDF), and center_within's parity sits in the
     sort-merge join's condition."""
     imgs = datagen.with_footprint(datagen.images_df(spark, 100, with_pixels=False))
-    polys = datagen.polygons_df(spark, 8)
-    key = "spark.sql.autoBroadcastJoinThreshold"
-    old = spark.conf.get(key)
-    spark.conf.set(key, "-1")
-    try:
-        j = SJ.spatial_join(imgs, polys, res=5, broadcast_polygons=False)
-        lines = j._jdf.queryExecution().executedPlan().toString().splitlines()
-    finally:
-        spark.conf.set(key, old)
-    (join,) = [line for line in lines if "SortMergeJoin" in line]
-    assert "CASE WHEN" in join and "% 2) = 1)" in join
-    sides = [_subtree(lines, i) for i, line in enumerate(lines)
-             if "Exchange hashpartitioning(cell" in line]
-    (build,) = [s for s in sides if any("MapInArrow" in line for line in s)]
-    assert sum("MapInArrow" in line for line in build) == 1
-    assert not any("Generate" in line or "ArrowEvalPython" in line for line in build)
+    polys = datagen.polygons_df(spark, 2000)
+    for broadcast in (False, None):
+        with broadcast_threshold(spark, "-1"):
+            j = SJ.spatial_join(imgs, polys, res=5, broadcast_polygons=broadcast)
+            lines = j._jdf.queryExecution().executedPlan().toString().splitlines()
+        (join,) = [line for line in lines if "SortMergeJoin" in line]
+        assert "CASE WHEN" in join and "% 2) = 1)" in join
+        sides = [_subtree(lines, i) for i, line in enumerate(lines)
+                 if "Exchange hashpartitioning(cell" in line]
+        (build,) = [s for s in sides if any("MapInArrow" in line for line in s)]
+        assert sum("MapInArrow" in line for line in build) == 1
+        assert not any("Generate" in line or "ArrowEvalPython" in line for line in build)
 
 
 def test_build_side_pads_edge_slots_with_the_sentinel(spark):
@@ -287,8 +303,7 @@ def test_build_side_pads_edge_slots_with_the_sentinel(spark):
                      [_star(20, 20, 9, 5, 2.5)]])
     n_box, n_star = (len(SJ.prepared_edges(b)) for b in pp["wkb"])
     assert (n_box, n_star) == (2, 9)
-    out = SJ._build_side(pa.Table.from_pandas(pp), 3, ("xmin", "ymin", "xmax", "ymax"),
-                         ["poly_id"], n_star)
+    out = SJ._build_side(pa.Table.from_pandas(pp), 3, ["poly_id"], n_star)
     slots = [c for c in out.column_names if c.startswith("_e")]
     assert len(slots) == n_star * len(SJ._EDGE_FIELDS)
     assert [out[c].null_count for c in slots] == [0] * len(slots)
@@ -312,8 +327,8 @@ def test_build_side_pads_edge_slots_with_the_sentinel(spark):
     assert not any(edge.values())
 
 
-@pytest.mark.parametrize("broadcast,salt", _PIP_PATHS)
-def test_non_finite_probes_never_cross_the_sentinel(spark, broadcast, salt):
+@pytest.mark.parametrize("broadcast", _PIP_PATHS)
+def test_non_finite_probes_never_cross_the_sentinel(spark, broadcast):
     """Probes whose centre is NaN, +-inf or NULL, in cells where polygons
     shorter than the widest one are probed through their padded slots,
     give no pair on any path; finite probes still match
@@ -340,7 +355,7 @@ def test_non_finite_probes_never_cross_the_sentinel(spark, broadcast, salt):
     imgs = spark.createDataFrame(
         rows, "image_id string, lon_min double, lat_min double, lon_max double, lat_max double")
     j = SJ.spatial_join(imgs, spark.createDataFrame(pp, _POLY_DDL), res=3,
-                        broadcast_polygons=broadcast, salt=salt)
+                        broadcast_polygons=broadcast)
     got = {(r.image_id, r.poly_id) for r in j.select("image_id", "poly_id").collect()}
     exp = {(f"pt{i}", int(r.poly_id))
            for r in pp.itertuples()

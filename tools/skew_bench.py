@@ -1,20 +1,19 @@
-"""Skew ablation: hot-cell spatial join through the SHUFFLE path,
-salted vs unsalted, AQE skew-join on/off, per exact-kernel flavour.
+"""Skew ablation: hot-cell spatial join through the SHUFFLE path, AQE
+skew-join on/off, per exact-kernel flavour.
 
 Usage:
-  python tools/skew_bench.py [cores] [n] [salt] [kernel] [aqe]
+  python tools/skew_bench.py [cores] [n] [kernel] [aqe]
       one measurement, prints a RESULT line
   python tools/skew_bench.py --matrix [cores] [n]
-      runs the full {salt 0,8} x {aqe on,off} x {kernel codegen,arrow}
-      grid in subprocesses and rewrites BENCH/SKEW.md
+      runs the {kernel codegen,arrow} x {aqe on,off} grid RUNS times,
+      each cell in its own subprocess, and rewrites
+      BENCH/SKEW.md's table, keeping its hand-kept `## ` sections
 
 Fixture skew: every 5th image lands in one 1x1-degree box (datagen
 HOT_LON0/HOT_LAT0), and ~1/7 of polygons overlap it, so one cell holds
-~40% of all candidate pairs — the Zipfian-cell scenario of the north
-rule.  Salting replicates the polygon-cell rows S ways and hashes
-probes across the replicas (spatial_join salt param); AQE skew-join
-(spark.sql.adaptive.skewJoin.enabled) is the runtime backstop that
-splits oversized partitions after the map stage.
+~40% of all candidate pairs — the Zipfian-cell scenario.  AQE skew-join
+(spark.sql.adaptive.skewJoin.enabled) splits oversized partitions after
+the map stage; it is the only hot-cell handling spatial_join has.
 
 kernel=codegen is the production JVM unrolled-parity PIP (pair cost a
 few ns); kernel=arrow forces pip_udf, the Arrow-batched Python fallback
@@ -30,9 +29,12 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+SKEW_MD = os.path.join(REPO, "BENCH", "SKEW.md")
+# runs per grid cell, interleaved across the grid: two show the spread
+RUNS = 2
 
 
-def run_one(cores: str, n: int, salt: int, kernel: str, aqe: str) -> None:
+def run_one(cores: str, n: int, kernel: str, aqe: str) -> None:
     from gdal_spark import datagen
     from gdal_spark.operators import spatial_join as SJ
     from gdal_spark.session import get_session
@@ -51,63 +53,57 @@ def run_one(cores: str, n: int, salt: int, kernel: str, aqe: str) -> None:
         polys = datagen.polygons_df(spark, 2000)
         return SJ.spatial_join(
             imgs, polys, res=6, predicate="center_within",
-            broadcast_polygons=False, salt=salt, carry=[])
+            broadcast_polygons=False, carry=[])
 
     run(2000).count()  # warmup
     t0 = time.time()
     cnt = run(n).count()
-    print(f"RESULT kernel={kernel} salt={salt} aqe={aqe} cores={cores} "
+    print(f"RESULT kernel={kernel} aqe={aqe} cores={cores} "
           f"n={n} sec={time.time() - t0:.2f} rows={cnt}", flush=True)
     spark.stop()
 
 
 def matrix(cores: str, n: int) -> None:
-    rows = []
-    for kernel in ("codegen", "arrow"):
-        for salt in (0, 8):
-            for aqe in ("on", "off"):
-                cmd = [sys.executable, os.path.abspath(__file__), cores,
-                       str(n), str(salt), kernel, aqe]
-                out = subprocess.run(cmd, capture_output=True, text=True,
-                                     cwd=REPO)
-                line = [ln for ln in out.stdout.splitlines()
-                        if ln.startswith("RESULT")]
-                print(line[0] if line else f"FAILED: {out.stderr[-400:]}")
-                if line:
-                    kv = dict(p.split("=") for p in line[0].split()[1:])
-                    rows.append(kv)
+    grid = [(k, a) for k in ("codegen", "arrow") for a in ("on", "off")]
+    secs = {g: [] for g in grid}
+    rows = {g: set() for g in grid}
+    for _ in range(RUNS):
+        for kernel, aqe in grid:
+            cmd = [sys.executable, os.path.abspath(__file__), cores,
+                   str(n), kernel, aqe]
+            out = subprocess.run(cmd, capture_output=True, text=True,
+                                 cwd=REPO)
+            line = [ln for ln in out.stdout.splitlines()
+                    if ln.startswith("RESULT")]
+            print(line[0] if line else f"FAILED: {out.stderr[-400:]}")
+            kv = dict(p.split("=") for p in line[0].split()[1:]) if line else {}
+            secs[kernel, aqe].append(kv.get("sec", "failed"))
+            rows[kernel, aqe].add(kv.get("rows", "failed"))
     md = [
-        "# Skew ablation (committed evidence for the north rule's "
-        "explicit skew handling)",
+        "# Skew ablation: hot cell on the spatial join's shuffle path",
         "",
-        f"Hot-cell spatial join, shuffle path, local[{cores}], "
-        f"n={n:,} images / 2,000 polygons; one H3-res6 cell holds ~40% "
-        "of candidate pairs (datagen hot box).",
+        f"Hot-cell spatial join, shuffle path, local[{cores}] on a "
+        f"{os.cpu_count()}-CPU host, n={n:,} images / 2,000 polygons; one "
+        "res-6 cell holds ~40% of candidate pairs (datagen hot box). "
+        f"Seconds of the timed count, {RUNS} runs per cell, runs "
+        "interleaved across the grid (`python tools/skew_bench.py "
+        f"--matrix {cores} {n}`).",
         "",
-        "| kernel | salt | AQE skew-join | sec | rows |",
-        "|---|---|---|---|---|",
+        "| kernel | AQE skew-join | sec per run | rows |",
+        "|---|---|---|---|",
     ]
-    for r in rows:
-        md.append(f"| {r['kernel']} | {r['salt']} | {r['aqe']} | "
-                  f"{r['sec']} | {r['rows']} |")
-    md += [
-        "",
-        "Reading: with the production JVM codegen kernel (flat-column",
-        "parity in the join condition — the round-3 fix that removed the",
-        "per-pair nested-array extraction, 45.9s -> 3.9s on this",
-        "fixture) the per-pair cost is a few ns and the hot partition is",
-        "not the critical path at this scale.  With an expensive",
-        "per-pair kernel (arrow rows — the stand-in for heavy geometry /",
-        "Python predicates) salting the hot cell recovers 10-20% here",
-        "and more as per-pair cost grows; AQE skew-join splitting is the",
-        "runtime backstop for partitions past",
-        "skewedPartitionThresholdInBytes.  Both knobs ship in",
-        "spatial_join(salt=S) and session AQE defaults.",
-    ]
-    path = os.path.join(REPO, "BENCH", "SKEW.md")
-    with open(path, "w") as fh:
-        fh.write("\n".join(md) + "\n")
-    print(f"wrote {path}")
+    for kernel, aqe in grid:
+        md.append(f"| {kernel} | {aqe} | {', '.join(secs[kernel, aqe])} | "
+                  f"{', '.join(sorted(rows[kernel, aqe]))} |")
+    kept = ""
+    if os.path.exists(SKEW_MD):
+        with open(SKEW_MD) as fh:
+            text = fh.read()
+        if "\n## " in text:
+            kept = text[text.index("\n## "):]
+    with open(SKEW_MD, "w") as fh:
+        fh.write("\n".join(md) + "\n" + kept)
+    print(f"wrote {SKEW_MD}")
 
 
 def main():
@@ -118,10 +114,9 @@ def main():
         return
     cores = sys.argv[1] if len(sys.argv) > 1 else "16"
     n = int(sys.argv[2]) if len(sys.argv) > 2 else 500_000
-    salt = int(sys.argv[3]) if len(sys.argv) > 3 else 0
-    kernel = sys.argv[4] if len(sys.argv) > 4 else "codegen"
-    aqe = sys.argv[5] if len(sys.argv) > 5 else "on"
-    run_one(cores, n, salt, kernel, aqe)
+    kernel = sys.argv[3] if len(sys.argv) > 3 else "codegen"
+    aqe = sys.argv[4] if len(sys.argv) > 4 else "on"
+    run_one(cores, n, kernel, aqe)
 
 
 if __name__ == "__main__":
