@@ -41,6 +41,20 @@ Broadcast or shuffle only decides where that table is built:
 Either way the envelope and the exact kernel are filters that Catalyst
 evaluates in the cell join's condition where it can.
 
+The probe box is made non-nullable before anything reads it: a NULL
+minimum (lon_min, lat_min) becomes NaN, a NULL maximum -inf. From a
+nullable box Catalyst infers isnotnull filters out of the join condition
+and pushes them through every Project to the scan, rewriting each column
+as the expression that computes it, so a computed footprint (datagen's,
+say) would be evaluated again in that filter for every probe. Spark
+orders NaN above every double, so `NaN <= xmax` and `xmin <= -inf` are
+false against every finite polygon bbox: a box with a NULL edge fails
+the envelope, as a comparison with NULL does. NaN and -inf both key tile
+column or row 0, so a box with NULL edges covers at most the tiles
+between 0 and its finite edges (an all-NULL box: cell (0, 0) alone);
++inf for a NULL minimum would invert the box, and cover_cells' sequences
+would count down across whole rows and columns.
+
 Predicates:
   * center_within — image footprint center inside polygon (ray casting,
     ogrlinearring.cpp:452 semantics), kept in the JVM: the crossing
@@ -248,6 +262,9 @@ def spatial_join(
         # every column kept here rides every candidate pair
         left = left.select(*dict.fromkeys([left_key, *LEFT_BBOX, *carry]))
         polygons = polygons.select(POLY_KEY, *POLY_BBOX, "wkb")
+    # a non-nullable probe box (module docstring): no isnotnull to infer
+    left = left.withColumns({c: F.coalesce(F.col(c), F.lit(np.nan if i < 2 else -np.inf))
+                             for i, c in enumerate(LEFT_BBOX)})
     if broadcast_polygons is None:
         broadcast_polygons = _fits_broadcast(polygons)
 

@@ -12,6 +12,7 @@ from gdal_spark.sources.bucketing import (
     join_exchange_count,
     write_bucketed,
 )
+from conftest import broadcast_threshold
 
 
 @pytest.fixture(scope="module")
@@ -33,8 +34,7 @@ def tables(spark):
 
 def test_bucketed_join_has_no_exchange(spark, tables):
     # broadcast would trivially avoid the shuffle; force the merge path
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
+    with broadcast_threshold(spark, "-1"):
         j = bucketed_join(spark, "b_images", "b_cells", "cell")
         assert_no_join_exchange(j)
         got = j.agg(F.sum(F.col("v") * F.col("w")).alias("s")).collect()[0].s
@@ -45,25 +45,17 @@ def test_bucketed_join_has_no_exchange(spark, tables):
             .collect()[0][0]
         )
         assert got == want
-    finally:
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
 
 
 def test_unbucketed_join_shuffles(spark, tables):
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
+    with broadcast_threshold(spark, "-1"):
         a = spark.table("b_images").select("image_id", "cell", "v")
         plain = a.repartition(8)  # strips the bucket distribution
         j = plain.join(spark.table("b_cells"), "cell")
         assert join_exchange_count(j) > 0
-    finally:
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
 
 
 def test_bucketed_groupby_is_shuffle_free(spark, tables):
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
+    with broadcast_threshold(spark, "-1"):
         g = spark.table("b_images").groupBy("cell").agg(F.sum("v").alias("s"))
         assert join_exchange_count(g) == 0
-    finally:
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")

@@ -14,7 +14,8 @@ from gdal_spark.functions import polyclip as PC
 from gdal_spark.functions import wkb as W
 from gdal_spark.operators import layer_algebra as LA
 from gdal_spark.raster import kernels as K
-from test_spark_ops import _subtree, broadcast_threshold
+from conftest import broadcast_threshold
+from test_spark_ops import _subtree
 
 NA, NB = 12, 10
 GRID = 72

@@ -3,8 +3,6 @@ oracle, kNN paths, driver-contract integrity."""
 
 from __future__ import annotations
 
-from contextlib import contextmanager
-
 import numpy as np
 import pandas as pd
 import pyarrow as pa
@@ -18,6 +16,7 @@ from gdal_spark.functions import mercator as M
 from gdal_spark.functions import wkb
 from gdal_spark.operators import knn as KNN
 from gdal_spark.operators import spatial_join as SJ
+from conftest import broadcast_threshold
 
 # ---------------------------------------------------------------- cells
 
@@ -162,20 +161,6 @@ def _pip_polygons(polyset):
 _PIP_PATHS = [pytest.param(b, id=f"{b}-0") for b in (True, False)]
 
 
-@contextmanager
-def broadcast_threshold(spark, value):
-    """spark.sql.autoBroadcastJoinThreshold set to `value` (None: left as
-    it is) inside the block."""
-    key = "spark.sql.autoBroadcastJoinThreshold"
-    old = spark.conf.get(key)
-    if value is not None:
-        spark.conf.set(key, value)
-    try:
-        yield
-    finally:
-        spark.conf.set(key, old)
-
-
 @pytest.mark.parametrize(
     "polyset,broadcast",
     [pytest.param("datagen", b, id=f"{b}-0") for b in (True, False)]
@@ -295,6 +280,26 @@ def test_shuffle_join_build_side_is_one_map_in_arrow(spark):
         assert not any("Generate" in line or "ArrowEvalPython" in line for line in build)
 
 
+@pytest.mark.parametrize("broadcast", _PIP_PATHS)
+@pytest.mark.parametrize("predicate", ["center_within", "intersects"])
+def test_probe_side_has_no_inferred_null_filter(spark, predicate, broadcast):
+    """The probe box is non-nullable, so Catalyst infers no
+    isnotnull(bbox) filter from the join condition: the probe side of the
+    join has no Filter re-evaluating datagen's computed footprint, and no
+    isnotnull over a probe bbox column is left anywhere in the plan."""
+    imgs = datagen.with_footprint(datagen.images_df(spark, 100, with_pixels=False))
+    polys = datagen.polygons_df(spark, 50)
+    j = SJ.spatial_join(imgs, polys, res=5, predicate=predicate,
+                        broadcast_polygons=broadcast)
+    lines = j._jdf.queryExecution().executedPlan().toString().splitlines()
+    (join,) = [i for i, line in enumerate(lines)
+               if "BroadcastHashJoin" in line or "SortMergeJoin" in line]
+    probe = _subtree(lines, join + 1)
+    assert any("Range" in line for line in probe)
+    assert not any("Filter" in line or "isnotnull" in line for line in probe)
+    assert not any(f"isnotnull({c}#" in line for line in lines for c in SJ.LEFT_BBOX)
+
+
 def test_build_side_pads_edge_slots_with_the_sentinel(spark):
     """Slots past a polygon's last edge hold the sentinel edge (ylo +inf,
     yhi -inf), never NULL, and the broadcast plan's LocalRelation marks
@@ -327,6 +332,18 @@ def test_build_side_pads_edge_slots_with_the_sentinel(spark):
     assert not any(edge.values())
 
 
+def _padded_polys():
+    """A world box, a triangle and a star: 2, 3 and 9 edges, so the two
+    shorter ones are probed through sentinel-padded slots."""
+    pp = _polys_pdf([
+        [np.array([[-179.0, -80], [179, -80], [179, 80], [-179, 80]])],
+        [np.array([[-40.0, -30], [40, -20], [0, 50]])],
+        [_star(12, 44, 9, 20, 10)],
+    ])
+    assert [len(SJ.prepared_edges(b)) for b in pp["wkb"]] == [2, 3, 9]
+    return pp
+
+
 @pytest.mark.parametrize("broadcast", _PIP_PATHS)
 def test_non_finite_probes_never_cross_the_sentinel(spark, broadcast):
     """Probes whose centre is NaN, +-inf or NULL, in cells where polygons
@@ -334,12 +351,7 @@ def test_non_finite_probes_never_cross_the_sentinel(spark, broadcast):
     give no pair on any path; finite probes still match
     geom.points_in_wkb."""
     inf, nan = float("inf"), float("nan")
-    pp = _polys_pdf([
-        [np.array([[-179.0, -80], [179, -80], [179, 80], [-179, 80]])],  # 2 edges
-        [np.array([[-40.0, -30], [40, -20], [0, 50]])],  # 3 edges
-        [_star(12, 44, 9, 20, 10)],  # 9 edges: 9 slots
-    ])
-    assert [len(SJ.prepared_edges(b)) for b in pp["wkb"]] == [2, 3, 9]
+    pp = _padded_polys()
     odd = [  # (lon_min, lat_min, lon_max, lat_max) whose centre is not finite
         (-inf, 10.0, inf, 10.0), (10.0, -inf, 10.0, inf), (-inf, -inf, inf, inf),
         (0.0, 10.0, inf, 10.0), (-inf, 10.0, 0.0, 10.0),
@@ -360,6 +372,48 @@ def test_non_finite_probes_never_cross_the_sentinel(spark, broadcast):
     exp = {(f"pt{i}", int(r.poly_id))
            for r in pp.itertuples()
            for i in np.flatnonzero(geom.points_in_wkb(gx, gy, r.wkb))}
+    assert {p for _, p in exp} == {0, 1, 2}
+    assert got == exp
+
+
+@pytest.mark.parametrize("broadcast", _PIP_PATHS)
+@pytest.mark.parametrize("predicate", ["center_within", "intersects"])
+def test_null_edged_probes_give_no_pair(spark, predicate, broadcast):
+    """Probe boxes with one, two or all four edges NULL, whose other edges
+    lie inside polygons covering the cells they key, give no pair for
+    either predicate on either path; finite probes still match their
+    oracle (geom.points_in_wkb for center_within, geom.clip_wkb_to_box for
+    intersects)."""
+    pp = _padded_polys()
+    nulled = [  # (lon_min, lat_min, lon_max, lat_max) with a NULL edge
+        (None, 10.0, 10.5, 10.5), (10.0, None, 10.5, 10.5),
+        (10.0, 10.0, None, 10.5), (10.0, 10.0, 10.5, None),
+        (None, None, 10.5, 10.5), (10.0, 10.0, None, None),
+        (None, 10.0, None, 10.5), (10.0, None, 10.5, None),
+        (None, 44.0, 12.5, None), (12.0, None, None, 44.5),
+        (None, -79.5, -178.5, -79.0), (None, None, None, None),
+    ]
+    gx, gy = (a.ravel() for a in np.meshgrid(np.linspace(-170, 170, 18),
+                                             np.linspace(-75, 75, 11)))
+    half = 0.0 if predicate == "center_within" else 1.5
+    boxes = [(x - half, y - half, x + half, y + half)
+             for x, y in zip(gx.tolist(), gy.tolist())]
+    rows = [(f"null{i}", *b) for i, b in enumerate(nulled)]
+    rows += [(f"pt{i}", *b) for i, b in enumerate(boxes)]
+    imgs = spark.createDataFrame(
+        rows, "image_id string, lon_min double, lat_min double, lon_max double, lat_max double")
+    j = SJ.spatial_join(imgs, spark.createDataFrame(pp, _POLY_DDL), res=3,
+                        predicate=predicate, broadcast_polygons=broadcast)
+    got = {(r.image_id, r.poly_id) for r in j.select("image_id", "poly_id").collect()}
+    if predicate == "center_within":
+        exp = {(f"pt{i}", int(r.poly_id))
+               for r in pp.itertuples()
+               for i in np.flatnonzero(geom.points_in_wkb(gx, gy, r.wkb))}
+    else:
+        exp = {(f"pt{i}", int(r.poly_id))
+               for r in pp.itertuples()
+               for i, b in enumerate(boxes)
+               if geom.clip_wkb_to_box(r.wkb, *b) is not None}
     assert {p for _, p in exp} == {0, 1, 2}
     assert got == exp
 

@@ -16,7 +16,10 @@ NOTES = {
     "cell_pip_join": (
         "flagship: one local build table (polygon x cell, bbox, edge slots) "
         "broadcast to one hash join whose condition holds the envelope and "
-        "the codegen ray-casting parity; no Python boundary"
+        "the codegen ray-casting parity; no Python boundary. The probe box "
+        "is non-nullable, so no inferred isnotnull Filter re-computes the "
+        "points below the distinct exchange and the FileScan has no "
+        "DataFilters"
     ),
     "tile_assignment": "pure-Column tile math; single hash aggregate",
     "dedup_exact": (
